@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** Locale-pinned decimal formatting: the artifact is parsed as JSON, so
@@ -28,15 +27,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules", GraftSession.ExcludedOptimizerRules)
-      .config("spark.sql.streaming.checkpointFileManagerClass", GraftSession.LocalCheckpointManager)
-      .config("spark.hadoop.fs.file.impl", GraftSession.LocalFsImpl)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.trim.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the session (codegen, file listing, executor threads, JIT of the
     // scan/join/agg/window machinery) with one tiny scan per table plus a

@@ -11,6 +11,11 @@ import org.apache.spark.sql.SparkSession
   *  - shuffle partitions sized to the machine locally (a cluster deployment
   *    overrides with cores×executors, or leaves AQE to coalesce);
   *  - UTC session time (oracle parity + sane event-time semantics);
+  *  - the AQE runtime rule [[plans.SingleTaskSort]]: a global sort whose
+  *    input is materialized shuffle stages of at most
+  *    `spark.sql.adaptive.coalescePartitions.minPartitionSize` bytes runs
+  *    as one local sort, without the range-sampling job and range shuffle
+  *    (off with `spark.sql.adaptive.optimizer.excludedRules`);
   *  - graft native functions registered for SQL use.
   *
   * Session-wide conf side effect to know about: [[Tables]] sets
@@ -67,6 +72,7 @@ object GraftSession {
       .config("spark.sql.streaming.checkpointFileManagerClass", LocalCheckpointManager)
       .config("spark.hadoop.fs.file.impl", LocalFsImpl)
       .config("spark.ui.enabled", "false")
+      .withExtensions(_.injectRuntimeOptimizerRule(plans.SingleTaskSort))
 
   def getOrCreate(): SparkSession = {
     val spark = builder().getOrCreate()

@@ -1,20 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Mirrors the driver's t1 smoke: run SparkEntry.entry on sf0.001 and
   * assert rows > 0. Usage: sbt "runMain graft.Smoke". */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules", GraftSession.ExcludedOptimizerRules)
-      .config("spark.sql.streaming.checkpointFileManagerClass", GraftSession.LocalCheckpointManager)
-      .config("spark.hadoop.fs.file.impl", GraftSession.LocalFsImpl)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     val n = df.count()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Local iteration harness for the streaming-gate cost diet: times each
   * named gate N times warm in one JVM so harness-overhead changes are
@@ -13,15 +12,7 @@ object StreamProbe {
       "q103_late_redelivery_screen", "q105_stream_observe",
       "q67_stream_outer_join", "q95_stream_semi_join",
       "g08_stream_trips", "q85_stream_chained_agg")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules", GraftSession.ExcludedOptimizerRules)
-      .config("spark.sql.streaming.checkpointFileManagerClass", GraftSession.LocalCheckpointManager)
-      .config("spark.hadoop.fs.file.impl", GraftSession.LocalFsImpl)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // GRAFT_PROBE_PROGRESS=1: dump each micro-batch's duration breakdown
     if (sys.env.contains("GRAFT_PROBE_PROGRESS"))
@@ -45,19 +36,18 @@ object StreamProbe {
     // one JVM (rep1@2, rep1@8, rep2@2, ...) so A/B comparisons are immune
     // to the load drift that order-separated runs pick up.
     val shardsList = sys.env.get("GRAFT_PROBE_SHARDS")
-      .map(_.split(",").toSeq).getOrElse(Seq.empty)
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Seq.empty)
     names.foreach { n =>
       if (shardsList.nonEmpty) {
         val reps = 3
         val times = scala.collection.mutable.Map.empty[String, Vector[Double]]
           .withDefaultValue(Vector.empty)
-        for (_ <- 1 to reps; sh <- shardsList) {
+        try for (_ <- 1 to reps; sh <- shardsList) {
           sys.props("graft.stream.shuffle.partitions") = sh
           val t0 = System.nanoTime()
           SparkEntry.queries(n)(spark, sfDir).count()
           times(sh) = times(sh) :+ (System.nanoTime() - t0) / 1e9
-        }
-        sys.props.remove("graft.stream.shuffle.partitions")
+        } finally sys.props.remove("graft.stream.shuffle.partitions")
         shardsList.foreach { sh =>
           val ts = times(sh)
           println(f"$n%-32s shards=$sh%-3s ${ts.map(t => f"$t%.2f").mkString(" ")} median=${ts.sorted.apply(reps / 2)}%.2f")

@@ -4,9 +4,14 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Vector math over `array<float>` / `array<double>` columns, built from
-  * codegen'd Catalyst builtins (`zip_with` + `aggregate`) rather than Scala
-  * UDFs, so the expressions stay inside whole-stage codegen and survive
-  * column pruning / predicate pushdown analysis.
+  * Catalyst higher-order builtins (`zip_with` + `aggregate`) rather than
+  * Scala UDFs, so the expressions stay visible to column pruning /
+  * predicate pushdown analysis. They are NOT compiled by whole-stage
+  * codegen: `ZipWith`, `ArrayAggregate` and `ArrayTransform` are
+  * `CodegenFallback`, so the generated code of the enclosing operator calls
+  * back into the interpreted `eval` per row, and each lambda runs
+  * interpreted per element. Hot paths use the native kernels instead
+  * (e.g. [[SquaredL2]]).
   *
   * Used by the similarity-search operators (SURVEY.md §2.6) over
   * `embeddings.embedding` (64-dim float vectors).

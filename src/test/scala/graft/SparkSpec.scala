@@ -10,16 +10,7 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules", GraftSession.ExcludedOptimizerRules)
-      .config("spark.sql.streaming.checkpointFileManagerClass", GraftSession.LocalCheckpointManager)
-      .config("spark.hadoop.fs.file.impl", GraftSession.LocalFsImpl)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder("local[8]", 8).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

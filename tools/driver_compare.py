@@ -2,8 +2,8 @@
 """Faithful emulator of the driver's correctness gate (CORRECTNESS_r{N}.json):
 loads the Spark parquet dump and the DuckDB oracle result as *pandas*
 DataFrames, sorts columns by name, sorts rows by all columns, and compares a
-per-cell stringified hash. This reproduces the pandas dtype coercions the
-fetchall-based tools/compare_oracle.py hides (DuckDB HUGEINT -> float64,
+per-cell stringified hash. This reproduces the pandas dtype coercions a
+fetchall-based comparison would hide (DuckDB HUGEINT -> float64,
 arrays -> unhashable numpy.ndarray, etc.).
 
 Usage: driver_compare.py <sfDir> <verifyOutDir> [query ...]
