@@ -172,12 +172,8 @@ object AmplifySf {
       require(m.startsWith("heaps"), s"unknown vocab mode '$m' (heaps[:beta])")
       m.split(':').lift(1).map(_.toDouble).getOrElse(0.8)
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     amplify(spark, src, dst, factor.toInt, vocabBeta = vocabBeta)
     Tables.all.foreach { t =>

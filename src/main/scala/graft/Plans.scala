@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan audit: prints the formatted plan for representative
   * queries so scan pushdown (PushedFilters), column pruning (ReadSchema),
   * join strategies and codegen spans can be inspected per round.
@@ -9,13 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Plans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules", GraftSession.ExcludedOptimizerRules)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.001"
     val names = if (args.nonEmpty) args.toSeq

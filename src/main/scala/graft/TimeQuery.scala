@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Micro-timing for single queries: runs each named query twice (cold+warm)
   * at the given sfDir. Usage: runMain graft.TimeQuery <sfDir> <name> [name...] */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules", GraftSession.ExcludedOptimizerRules)
-      .config("spark.hadoop.fs.file.impl", GraftSession.LocalFsImpl)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val metrics = new BenchMetrics
     spark.sparkContext.addSparkListener(metrics)

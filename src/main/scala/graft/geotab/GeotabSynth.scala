@@ -965,18 +965,9 @@ object GeotabSynth {
       col("tsec") <= maxT / 3,
       col("tsec") > maxT / 3 && col("tsec") <= 2 * maxT / 3,
       col("tsec") > 2 * maxT / 3)
-    new java.io.File(s"$out/in").mkdirs()
-    val now = System.currentTimeMillis()
-    cuts.zipWithIndex.foreach { case (cond, i) =>
-      val slice = s"$out/slice$i"
-      pings.filter(cond).coalesce(1).write.parquet(slice)
-      val part = new java.io.File(slice).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dst = new java.io.File(s"$out/in/f$i.parquet")
-      java.nio.file.Files.copy(part.toPath, dst.toPath)
-      // the file source picks up oldest-modified first: pin arrival order
-      dst.setLastModified(now - (3 - i) * 60000L)
-    }
+    // the file source picks up oldest-modified first: arrival order
+    graft.streaming.StreamGate.over(spark, outDir)
+      .arriveSlices(cuts.map(c => pings.filter(c)))
     val stream = spark.readStream
       .schema("deviceId STRING, tsec BIGINT, speed DOUBLE")
       .option("maxFilesPerTrigger", "1")
@@ -988,9 +979,9 @@ object GeotabSynth {
       stopSpeed = 1.0, watermarkDelay = "10 minutes",
       idleTimeoutMs = Long.MaxValue / 4)
     // fixture-scale state-store sizing: one store instance per shuffle
-    // partition per micro-batch; see SessionGates.StreamShuffleParts
+    // partition per micro-batch; see StreamGate.shards
     graft.ops.ExportOps.withConf(spark, "spark.sql.shuffle.partitions",
-      graft.ops.SessionGates.StreamShuffleParts) {
+      graft.streaming.StreamGate.shards()) {
       val q = trips.toDF().writeStream.format("parquet")
         .option("path", s"$out/data").option("checkpointLocation", s"$out/ckpt")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

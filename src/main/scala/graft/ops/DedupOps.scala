@@ -1648,13 +1648,11 @@ object DedupOps {
     * duality for the ingestion-dedup stage, gated like e03 gates the
     * export stage. No watermark needed: the join is stateless per
     * micro-batch (static side re-planned per batch, nothing buffered). */
-  private def d20(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_sdedup", d)
-    ExportOps.withScratchCleanup(out) {
-    new java.io.File(out, "in").mkdirs()
-    ExportOps.stageTable(d, "documents", new java.io.File(out, "in"))
+  private def d20(s: SparkSession, d: String): DataFrame =
+    graft.streaming.StreamGate(s, "graft_sdedup", d) { g =>
+    ExportOps.stageTable(d, "documents", new java.io.File(g.in))
     val schema = s.read.parquet(s"$d/documents.parquet").schema
-    val stream = s.readStream.schema(schema).parquet(s"$out/in")
+    val stream = g.readIn(schema, oneFilePerBatch = false)
     val isNew = col("doc_id") % 5 === 4
     val copies = stream.filter(col("doc_id") % 40 === 0)
       .select((col("doc_id") + 200000L).as("doc_id"), col("text"))
@@ -1667,18 +1665,9 @@ object DedupOps {
     val screened = incoming.join(existing, Seq("th"), "left")
       .select(col("doc_id"),
         when(col("is_dup"), "exact_dup").otherwise("kept").as("status"))
-    val q = screened.writeStream
-      .format("parquet")
-      .option("path", s"$out/data")
-      .option("checkpointLocation", s"$out/ckpt")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val landed = s.read.parquet(s"$out/data")
-    ExportOps.localizeAndDrop(landed, out, "doc_id")
+    g.drainParquet(screened, shards = None)
+    g.localizeAndDrop(s.read.parquet(g.data), "doc_id")
     }
-  }
 
   /** c01: the curation pipeline end-to-end — the composition an LLM data
     * pipeline actually ships: every document gets the FIRST failing stage

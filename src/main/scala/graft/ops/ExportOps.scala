@@ -78,9 +78,11 @@ object ExportOps {
     * previous value (or unsetting) afterwards — the save/set/restore
     * pattern every streaming gate needs for `nanosAsLong` /
     * `shuffle.partitions`, centralized so a restore cannot be forgotten
-    * (q58 leaked exactly this conf before round 7). */
+    * (q58 leaked exactly this conf before round 7). "Previous" is the
+    * explicitly set value: `getOption` answers a registered conf's
+    * default, so testing it would pin the default instead of unsetting. */
   def withConf[T](s: SparkSession, key: String, value: String)(body: => T): T = {
-    val prev = s.conf.getOption(key)
+    val prev = s.conf.getAll.get(key)
     s.conf.set(key, value)
     try body
     finally prev match {

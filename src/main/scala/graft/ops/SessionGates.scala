@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.streaming.StreamGate
 
 /** Oracle gates for the native `session_window` operator, batch and
   * streaming (SURVEY.md §2.5 time windows; the reference's scheduled
@@ -24,58 +25,17 @@ import graft.Tables
   * `MergingSessionsIterator`'s `start < end` merge test.
   *
   * Every file-source gate below streams parquet the ENGINE wrote (the
-  * normalized [[graft.Tables]] view landed via [[onePartFile]]), never the
-  * raw fixture file: the fixture's physical ts encoding has already changed
-  * once (raw nanos longs → TIMESTAMP(MICROS)), and staging the normalized
-  * frame makes the micro-batch arithmetic — splits, sentinels, watermarks —
+  * normalized [[graft.Tables]] view staged by
+  * [[graft.streaming.StreamGate]]), never the raw fixture file: the
+  * fixture's physical ts encoding has already changed once (raw nanos
+  * longs → TIMESTAMP(MICROS)), and staging the normalized frame makes
+  * the micro-batch arithmetic — splits, sentinels, watermarks —
   * encoding-independent. All event-time arithmetic runs in epoch-µs longs
   * (`unix_micros`), TimestampType's native grain.
   */
 object SessionGates {
 
   private val GapMs = 300000L
-
-  /** Fixture-scale state-store partition count for the streaming gates'
-    * micro-batch harnesses (the r11 verdict's cost-diet item): every
-    * stateful operator opens one state-store instance PER shuffle
-    * partition PER micro-batch, and at gate scale (10³-10⁴ rows) those
-    * instance open/commit round-trips — not data — dominate wall time.
-    * Two partitions keep every multi-instance property observable (state
-    * is still key-partitioned, co-partitioning still proven, restart
-    * recovery still reloads per-partition stores) at a quarter of the
-    * prior 8-instance fixed cost; at production scale
-    * `spark.sql.shuffle.partitions` is sized to load, exactly as the
-    * serving-table `nPart` note on q98 says. */
-  /** Overridable via -Dgraft.stream.shuffle.partitions so the
-    * partition-invariance sweep (PartitionInvarianceSpec) can vary the
-    * STATE shard count, not just the session default — the sweep's claim
-    * is that results are a pure function of the data at any parallelism. */
-  private[graft] def StreamShuffleParts: String =
-    sys.props.getOrElse("graft.stream.shuffle.partitions", "2")
-
-  /** The q89 exception to [[StreamShuffleParts]]: the timer gate's
-    * addBatch is CPU-bound REAL work (per-session timer
-    * registration/firing over every session in the corpus — ~per-event
-    * processor cost, not per-instance fixed cost), so it WANTS
-    * parallelism where the other gates only pay instance overhead:
-    * at sf0.1 its median reads 11.7 s on 2 partitions, 8.2 s on 8
-    * (probe-measured; 16 buys only 0.6 s more against over-sharding the
-    * small SFs). Exactly the "size partitions to load" note made
-    * concrete: partition count follows the operator's work profile, not
-    * a global constant. */
-  private[graft] def TimerShuffleParts: String =
-    sys.props.getOrElse("graft.stream.shuffle.partitions", "8")
-
-  /** [[TimerShuffleParts]], corpus-sized (r16): past the bench SF the
-    * per-event processor cost dominates even the 8-way split (the sf1
-    * point read 27 s of addBatch on a quarter of the machine), so the
-    * timer gate takes the full local[32] width once the events corpus
-    * outgrows the over-sharding concern the 8-way probe measured.
-    * Results are partition-count-invariant (state is key-partitioned;
-    * the session set is a deterministic function of the events), so this
-    * only moves wall time. */
-  private[graft] def timerShufflePartsFor(s: SparkSession, d: String): String =
-    if (eventCount(s, d) > 200000L) "32" else TimerShuffleParts
 
   /** Events row count, memoized per fixture dir (parquet footer
     * metadata — one cheap job, shared across gates and reps). */
@@ -119,79 +79,20 @@ object SessionGates {
         unix_millis(col("session_window.end")).as("session_end_ms"),
         col("n_events"))
 
-  /** Writes `df` as exactly ONE parquet file and returns it — the arrival
-    * unit the file-source gates copy into their input dirs. One file per
-    * intended micro-batch: multiple part files would split a batch under
-    * `maxFilesPerTrigger=1` and collide on fixed target names. */
-  /** JVM-wide memo of STAGED INPUT FILES keyed by the frame's
-    * canonicalized logical plan (r18 verdict item 6, streaming cost diet
-    * phase 2): every staged frame is a deterministic pure function of the
-    * read-only fixture (slices/sentinels of [[graft.Tables]] with literal
-    * bounds derived from fixture stats), so re-running the coalesce(1)
-    * batch write per gate invocation — ~30 call sites × bench reps — is
-    * pure recompute, the [[SimilarityOps]] memoLocal discipline applied
-    * to fixture staging. The cached artifact is the written parquet FILE;
-    * [[arriveAs]] still COPIES it into each gate's own watched in/ dir
-    * with the gate's mtime stamps, so arrival order, checkpoint isolation
-    * and scratch cleanup are untouched — only the harness-side staging
-    * job is shared. The key is (sorted backing files, canonicalized
-    * plan) — the file list carries the fixture dir explicitly because
-    * canonicalization normalizes scan paths away, so SF dirs could
-    * otherwise alias. Cache lives until JVM exit
-    * (shutdown hook removes the files); bounded by the distinct staged
-    * frames (~40), each a one-part gate-scale parquet. */
-  private val stagedParts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]
-  // unique slice-dir suffix: stage names repeat across gates ("f0",
-  // "events") and suites run in parallel — a size()-derived name could
-  // collide when two different frames stage concurrently
-  private val stagedSeq = new java.util.concurrent.atomic.AtomicLong
-  private lazy val stagedBase: java.io.File = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_staged_").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
-    }))
-    dir
-  }
+  /** One watermark-advancing event (user_id -1) in the events schema:
+    * the q58 sentinel and the q67 purchase/click pair. */
+  private def sentinelRow(ev: DataFrame, id: Long, tsMicros: Long,
+                          eventType: String): DataFrame =
+    ev.limit(1).select(
+      lit(id).as("event_id"),
+      timestamp_micros(lit(tsMicros)).as("ts"),
+      lit(-1L).as("user_id"), lit(eventType).as("event_type"),
+      lit(0.0).as("value"), lit("{}").as("props"))
 
-  /** `out` (the gate's scratch dir) is accepted and intentionally unused
-    * since the staging memo: the staged file now lives in [[stagedBase]]
-    * so it can outlive any single gate's withScratchCleanup. Kept so the
-    * ~30 call sites read unchanged. */
-  private def onePartFile(df: DataFrame, out: java.io.File,
-                          stage: String): java.io.File = {
-    // canonicalized plans NORMALIZE AWAY the scan path (verified: the
-    // events relation canonicalizes identically for every fixture dir),
-    // so the key must carry the backing files explicitly or a JVM
-    // staging two SFs would serve the first dir's file for the second.
-    // semanticHash + schema DDL, not canonicalized.toString (r19 ADVICE):
-    // treeString truncates node fields at spark.sql.debug.maxToStringFields
-    // (default 25), so two distinct wide-projection plans could RENDER
-    // identically and alias to one cached file; the semantic hash sees
-    // every field, and the schema DDL guards the (unlikely) hash collision
-    // class that matters most — same-shape plans with different columns
-    val key = df.inputFiles.sorted.mkString(",") + "|" +
-      df.queryExecution.analyzed.canonicalized.semanticHash() + "|" +
-      df.schema.toDDL
-    stagedParts.computeIfAbsent(key, _ => {
-      val slice = new java.io.File(stagedBase,
-        s"stage_${stage}_${stagedSeq.getAndIncrement()}")
-      df.coalesce(1).write.parquet(slice.getPath)
-      slice.listFiles().filter(_.getName.endsWith(".parquet")).head
-    })
-  }
-
-  /** Lands `part` in the gate's watched `in/` dir under `name`, mtime-
-    * stamped so the file source replays arrival order (oldest first). */
-  private def arriveAs(part: java.io.File, out: java.io.File, name: String,
-                       mtime: Long): Unit = {
-    val dst = new java.io.File(out, s"in/$name.parquet")
-    java.nio.file.Files.copy(part.toPath, dst.toPath)
-    dst.setLastModified(mtime)
-  }
+  /** `ev` split into the two time-ordered halves at epoch-µs `mid`. */
+  private def splitAt(ev: DataFrame, mid: Long): Seq[DataFrame] =
+    Seq(unix_micros(col("ts")) <= mid, unix_micros(col("ts")) > mid)
+      .map(c => ev.filter(c))
 
   /** q57: native session_window as a batch aggregation. One hash shuffle
     * on user_id, sessions merged per-partition — no window function, no
@@ -210,48 +111,27 @@ object SessionGates {
     * session to the parquet sink. This is the production flush pattern for
     * bounded replays of unbounded pipelines — no `complete` mode, no
     * state-peeking. */
-  private def q58(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_sessions", d)
-    ExportOps.withScratchCleanup(out) {
-    new java.io.File(out, "in").mkdirs()
+  private def q58(s: SparkSession, d: String): DataFrame =
+    StreamGate(s, "graft_sessions", d) { g =>
     val ev = Tables(s, d, "events") // ts: TimestampType, µs grain
     val maxMicros = eventTsStats(s, d)._2
-    val now = System.currentTimeMillis()
-    arriveAs(onePartFile(ev, out, "events"), out, "events", now - 120000L)
-    arriveAs(onePartFile(
-      ev.limit(1).select(
-        lit(-1L).as("event_id"),
-        timestamp_micros(lit(maxMicros + 7200L * 1000000L)).as("ts"),
-        lit(-1L).as("user_id"),
-        lit("sentinel").as("event_type"),
-        lit(0.0).as("value"),
-        lit("{}").as("props")), out, "sentinel"), out, "sentinel",
-      now - 60000L)
-    val stream = s.readStream.schema(ev.schema).parquet(s"$out/in")
+    g.arrive(ev, "events")
+    g.arrive(sentinelRow(ev, -1L, maxMicros + 7200L * 1000000L, "sentinel"),
+      "sentinel")
+    val stream = g.readIn(ev.schema, oneFilePerBatch = false)
       .select(col("user_id"),
         timestamp_millis(unix_millis(col("ts"))).as("tsm"))
       .withWatermark("tsm", "10 minutes")
     // The streaming aggregation's state partition count is pinned by the
     // checkpoint at first start; every partition costs a state store
     // instance PER MICRO-BATCH (this query runs two: data + watermark
-    // flush). 8 stores cover the fixture's user cardinality; at real
-    // scale this knob is sized to state volume, not set to the batch
-    // shuffle default. The conf is held for the query's whole (serial)
-    // lifetime and restored before anything else runs.
-    ExportOps.withConf(s, "spark.sql.shuffle.partitions", StreamShuffleParts) {
-      val q = sessionAgg(stream).writeStream
-        .format("parquet")
-        .option("path", s"$out/data")
-        .option("checkpointLocation", s"$out/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    // flush). At real scale this knob is sized to state volume, not set
+    // to the batch shuffle default; the harness holds it for the query's
+    // whole (serial) lifetime and restores it before anything else runs.
+    g.drainParquet(sessionAgg(stream))
+    val landed = s.read.parquet(g.data).filter(col("user_id") >= 0)
+    g.localizeAndDrop(landed, "user_id", "session_start_ms")
     }
-    val landed = s.read.parquet(s"$out/data").filter(col("user_id") >= 0)
-    ExportOps.localizeAndDrop(landed, out, "user_id", "session_start_ms")
-    }
-  }
 
   /** q118: DYNAMIC-GAP session windows — `session_window`'s expression-
     * gap form, the policy surface the fixed-gap gates (q57/q58) never
@@ -290,23 +170,13 @@ object SessionGates {
     * with the identical integer bin (`cents div 64`) and cutoff
     * (`k·cum >= m·n`) arithmetic, so a dropped or double-merged bin
     * moves the hash. */
-  private def q119(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_streamquant", d)
-    ExportOps.withConf(s, "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-    ExportOps.withScratchCleanup(out) {
-      new java.io.File(out, "in").mkdirs()
+  private def q119(s: SparkSession, d: String): DataFrame =
+    StreamGate(s, "graft_streamquant", d, StreamGate.RocksDb) { g =>
       val ev = Tables(s, d, "events")
       val mid = { val st = eventTsStats(s, d); (st._1 + st._2) / 2 }
-      val now = System.currentTimeMillis()
-      Seq(unix_micros(col("ts")) <= mid, unix_micros(col("ts")) > mid)
-        .zipWithIndex.foreach { case (cond, i) =>
-          arriveAs(onePartFile(ev.filter(cond), out, s"f$i"), out, s"f$i",
-            now - (2 - i) * 60000L)
-        }
+      g.arriveSlices(splitAt(ev, mid))
       import s.implicits._
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
+      val stream = g.readIn(ev.schema)
         .select(col("event_type"),
           expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
         .as[graft.streaming.TypedCents]
@@ -314,20 +184,9 @@ object SessionGates {
         .transformWithState(new graft.streaming.QuantileSketchProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(),
           org.apache.spark.sql.streaming.OutputMode.Append())
-      ExportOps.withConf(s, "spark.sql.shuffle.partitions", StreamShuffleParts) {
-        val q = emits.toDF().writeStream.format("parquet")
-          .option("path", s"$out/data")
-          .option("checkpointLocation", s"$out/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      val landed = s.read.parquet(s"$out/data")
-      ExportOps.localizeAndDrop(landed, out, "event_type", "n_total")
+      g.drainParquet(emits.toDF())
+      g.localizeAndDrop(s.read.parquet(g.data), "event_type", "n_total")
     }
-    }
-  }
 
   /** q85: CHAINED stateful aggregations in ONE streaming query — Spark
     * 4's multiple-stateful-operators-in-append surface, which none of the
@@ -341,24 +200,14 @@ object SessionGates {
     * cascade (q83's serving-grain discipline, kept incremental): at 100
     * TB/day the minute grain never materializes to storage, only its
     * running partials live in state. */
-  private def q85(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_chain", d)
-    ExportOps.withScratchCleanup(out) {
-      new java.io.File(out, "in").mkdirs()
+  private def q85(s: SparkSession, d: String): DataFrame =
+    StreamGate(s, "graft_chain", d) { g =>
       val ev = Tables(s, d, "events")
       val maxMicros = eventTsStats(s, d)._2
-      val now = System.currentTimeMillis()
-      arriveAs(onePartFile(ev, out, "events"), out, "events", now - 120000L)
-      arriveAs(onePartFile(
-        ev.limit(1).select(
-          lit(-1L).as("event_id"),
-          timestamp_micros(lit(maxMicros + 7200L * 1000000L)).as("ts"),
-          lit(-1L).as("user_id"),
-          lit("sentinel").as("event_type"),
-          lit(0.0).as("value"),
-          lit("{}").as("props")), out, "sentinel"), out, "sentinel",
-        now - 60000L)
-      val stream = s.readStream.schema(ev.schema).parquet(s"$out/in")
+      g.arrive(ev, "events")
+      g.arrive(sentinelRow(ev, -1L, maxMicros + 7200L * 1000000L, "sentinel"),
+        "sentinel")
+      val stream = g.readIn(ev.schema, oneFilePerBatch = false)
         .select(col("user_id"),
           timestamp_millis(unix_millis(col("ts"))).as("tsm"))
         .withWatermark("tsm", "10 minutes")
@@ -373,19 +222,10 @@ object SessionGates {
         .select(col("user_id"),
           unix_millis(col("window.start")).as("w_start_ms"),
           col("peak_minute"), col("active_minutes"), col("n_events"))
-      ExportOps.withConf(s, "spark.sql.shuffle.partitions", StreamShuffleParts) {
-        val q = tenMinute.writeStream.format("parquet")
-          .option("path", s"$out/data")
-          .option("checkpointLocation", s"$out/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      val landed = s.read.parquet(s"$out/data").filter(col("user_id") >= 0)
-      ExportOps.localizeAndDrop(landed, out, "user_id", "w_start_ms")
+      g.drainParquet(tenMinute)
+      val landed = s.read.parquet(g.data).filter(col("user_id") >= 0)
+      g.localizeAndDrop(landed, "user_id", "w_start_ms")
     }
-  }
 
   /** q112: COMPLETE output mode — the last cell of the streaming
     * output-mode matrix (append: q58 and the join/sessionization gates;
@@ -404,43 +244,26 @@ object SessionGates {
     * the raw table. Returns the served frame + the non-empty trigger
     * count (spec pins >= 2 — a single-trigger run wouldn't prove the
     * rewrite-every-trigger contract). */
-  private[ops] def q112Harness(s: SparkSession, d: String): (DataFrame, Int) = {
-    val out = ExportOps.scratchDir("graft_complete", d)
-    ExportOps.withScratchCleanup(out) {
-      new java.io.File(out, "in").mkdirs()
+  private[ops] def q112Harness(s: SparkSession, d: String): (DataFrame, Int) =
+    StreamGate(s, "graft_complete", d) { g =>
       val ev = Tables(s, d, "events")
-      val mid = eventTsStats(s, d)._3.toLong
-      val now = System.currentTimeMillis()
-      Seq(unix_micros(col("ts")) <= mid, unix_micros(col("ts")) > mid)
-        .zipWithIndex.foreach { case (cond, i) =>
-          arriveAs(onePartFile(ev.filter(cond), out, s"f$i"), out, s"f$i",
-            now - (2 - i) * 60000L)
-        }
-      val ranked = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
+      g.arriveSlices(splitAt(ev, eventTsStats(s, d)._3.toLong))
+      val ranked = g.readIn(ev.schema)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
             .as("sum_cents"))
         .orderBy(col("n").desc, col("event_type").asc)
         .limit(3)
-      var triggers = 0
-      ExportOps.withConf(s, "spark.sql.shuffle.partitions", StreamShuffleParts) {
-        val q = ranked.writeStream.format("memory").queryName("graft_q112")
-          .option("checkpointLocation", s"$out/ckpt")
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try {
-          q.processAllAvailable()
-          triggers = q.recentProgress.count(_.numInputRows > 0)
-        } finally q.stop()
+      val triggers = g.drain(ranked.writeStream.format("memory")
+        .queryName("graft_q112").outputMode("complete")) { q =>
+        q.processAllAvailable()
+        q.recentProgress.count(_.numInputRows > 0)
       }
-      (ExportOps.localize(s.sql(
+      (g.localizeAndDrop(s.sql(
         "SELECT event_type, n, sum_cents FROM graft_q112 " +
           "ORDER BY n DESC, event_type")), triggers)
     }
-  }
 
   private def q112(s: SparkSession, d: String): DataFrame =
     q112Harness(s, d)._1
@@ -458,42 +281,24 @@ object SessionGates {
     * a single-batch degenerate join. Timestamps truncate to ms before the
     * join (the q57/q58 move) so the interval compare is engine-identical;
     * the landed pairs hash-match a DuckDB self-join oracle. */
-  private def q62(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_ssjoin", d)
-    ExportOps.withScratchCleanup(out) {
-      new java.io.File(out, "in").mkdirs()
+  private def q62(s: SparkSession, d: String): DataFrame =
+    StreamGate(s, "graft_ssjoin", d) { g =>
       val ev = Tables(s, d, "events")
       // any split point yields the same join result; the mean just makes
       // both micro-batches non-trivial
-      val mid = eventTsStats(s, d)._3.toLong
-      val now = System.currentTimeMillis()
-      Seq(unix_micros(col("ts")) <= mid, unix_micros(col("ts")) > mid)
-        .zipWithIndex.foreach { case (cond, i) =>
-          arriveAs(onePartFile(ev.filter(cond), out, s"f$i"), out, s"f$i",
-            now - (2 - i) * 60000L) // arrival order
-        }
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
+      g.arriveSlices(splitAt(ev, eventTsStats(s, d)._3.toLong))
+      val stream = g.readIn(ev.schema)
         .select(col("event_id"), col("user_id"), col("event_type"),
           timestamp_millis(unix_millis(col("ts"))).as("ts"))
       val joined = graft.streaming.EventStreams.purchasesWithClicks(stream)
-      // StreamShuffleParts state stores per side per micro-batch (see note)
-      ExportOps.withConf(s, "spark.sql.shuffle.partitions", StreamShuffleParts) {
-        val q = joined.writeStream.format("parquet")
-          .option("path", s"$out/data")
-          .option("checkpointLocation", s"$out/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      val landed = s.read.parquet(s"$out/data")
+      // StreamGate.shards() state stores per side per micro-batch
+      g.drainParquet(joined)
+      val landed = s.read.parquet(g.data)
         .select(col("purchase_id"), col("uid"),
           unix_millis(col("purchase_ts")).as("purchase_ms"),
           col("click_id"), unix_millis(col("click_ts")).as("click_ms"))
-      ExportOps.localizeAndDrop(landed, out, "purchase_id", "click_id")
+      g.localizeAndDrop(landed, "purchase_id", "click_id")
     }
-  }
 
   /** q95: the LEFT-SEMI leg of the stream-stream join family — "which
     * purchases had at least one click in the preceding 30 minutes",
@@ -509,39 +314,20 @@ object SessionGates {
     * against batch-1 emissions; the landed set hash-matches a DuckDB
     * EXISTS oracle. Same bounded-state argument as q62: both sides
     * watermarked, the interval bounds event time on both ends. */
-  private def q95(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_sssemi", d)
-    ExportOps.withScratchCleanup(out) {
-      new java.io.File(out, "in").mkdirs()
+  private def q95(s: SparkSession, d: String): DataFrame =
+    StreamGate(s, "graft_sssemi", d) { g =>
       val ev = Tables(s, d, "events")
-      val mid = eventTsStats(s, d)._3.toLong
-      val now = System.currentTimeMillis()
-      Seq(unix_micros(col("ts")) <= mid, unix_micros(col("ts")) > mid)
-        .zipWithIndex.foreach { case (cond, i) =>
-          arriveAs(onePartFile(ev.filter(cond), out, s"f$i"), out, s"f$i",
-            now - (2 - i) * 60000L)
-        }
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
+      g.arriveSlices(splitAt(ev, eventTsStats(s, d)._3.toLong))
+      val stream = g.readIn(ev.schema)
         .select(col("event_id"), col("user_id"), col("event_type"),
           timestamp_millis(unix_millis(col("ts"))).as("ts"))
-      val joined = graft.streaming.EventStreams
-        .purchasesWithClicks(stream, joinType = "left_semi")
-      ExportOps.withConf(s, "spark.sql.shuffle.partitions", StreamShuffleParts) {
-        val q = joined.writeStream.format("parquet")
-          .option("path", s"$out/data")
-          .option("checkpointLocation", s"$out/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      val landed = s.read.parquet(s"$out/data")
+      g.drainParquet(graft.streaming.EventStreams
+        .purchasesWithClicks(stream, joinType = "left_semi"))
+      val landed = s.read.parquet(g.data)
         .select(col("purchase_id"), col("uid"),
           unix_millis(col("purchase_ts")).as("purchase_ms"))
-      ExportOps.localizeAndDrop(landed, out, "purchase_id")
+      g.localizeAndDrop(landed, "purchase_id")
     }
-  }
 
   /** q98: UPDATE output mode + an upsert serving sink — the third leg of
     * the output-mode matrix (every other gate emits APPEND; COMPLETE
@@ -567,47 +353,31 @@ object SessionGates {
     * overflows Long at ~5 400 events/user, an ANSI-mode abort the oracle
     * would not mirror — the bounded offset pushes that to ~4.8e7
     * events/user, past any per-key cardinality a serving table holds. */
-  private def q98(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_upd", d)
-    ExportOps.withScratchCleanup(out) {
-      new java.io.File(out, "in").mkdirs()
+  private def q98(s: SparkSession, d: String): DataFrame =
+    StreamGate(s, "graft_upd", d) { g =>
       val ev = Tables(s, d, "events")
-      val mid = eventTsStats(s, d)._3.toLong
-      val now = System.currentTimeMillis()
-      Seq(unix_micros(col("ts")) <= mid, unix_micros(col("ts")) > mid)
-        .zipWithIndex.foreach { case (cond, i) =>
-          arriveAs(onePartFile(ev.filter(cond), out, s"f$i"), out, s"f$i",
-            now - (2 - i) * 60000L)
-        }
-      val serving = s"$out/serving"
-      val agg = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
+      g.arriveSlices(splitAt(ev, eventTsStats(s, d)._3.toLong))
+      val serving = s"${g.dir}/serving"
+      val agg = g.readIn(ev.schema)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_events"),
           sum(unix_millis(col("ts")) - lit(BaseEpochMs)).as("sum_off_ms"))
-      ExportOps.withConf(s, "spark.sql.shuffle.partitions", StreamShuffleParts) {
-        val q = agg.writeStream
-          .outputMode("update")
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            // persist: the merge runs two actions over the batch (the
-            // partition-metadata collect + the staged write); without a
-            // cache each would replay the stateful micro-batch plan
-            batch.persist()
-            try Relational.upsertServePartitioned(s, serving, batch,
-              batchId, "user_id", Seq("n_events", "sum_off_ms"))
-            finally { batch.unpersist(); () }
-          }
-          .option("checkpointLocation", s"$out/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      g.drain(agg.writeStream
+        .outputMode("update")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          // persist: the merge runs two actions over the batch (the
+          // partition-metadata collect + the staged write); without a
+          // cache each would replay the stateful micro-batch plan
+          batch.persist()
+          try Relational.upsertServePartitioned(s, serving, batch,
+            batchId, "user_id", Seq("n_events", "sum_off_ms"))
+          finally { batch.unpersist(); () }
+        })(_.processAllAvailable())
       // serve THROUGH the manifest (TxTable) — the crash-consistent path
       val served = TxTable.read(s, serving)
         .select(col("k").as("user_id"), col("n_events"), col("sum_off_ms"))
-      ExportOps.localizeAndDrop(served, out, "user_id")
+      g.localizeAndDrop(served, "user_id")
     }
-  }
 
   /** q67: the LEFT-OUTER twin of q62 — "every purchase, with its clicks OR
     * a null-click row if none arrived in the window". The outer rows have
@@ -631,18 +401,9 @@ object SessionGates {
       case "right_outer" => "graft_ssrj"
       case _             => "graft_ssoj"
     }) + (if (sentinel) "" else "_ns")
-    val out = ExportOps.scratchDir(prefix, d)
-    ExportOps.withScratchCleanup(out) {
-      new java.io.File(out, "in").mkdirs()
+    StreamGate(s, prefix, d) { g =>
       val ev = Tables(s, d, "events")
       val maxMicros = eventTsStats(s, d)._2
-      val now = System.currentTimeMillis()
-      def sentinelRow(id: Long, tsMicros: Long, eventType: String) =
-        ev.limit(1).select(
-          lit(id).as("event_id"),
-          timestamp_micros(lit(tsMicros)).as("ts"),
-          lit(-1L).as("user_id"), lit(eventType).as("event_type"),
-          lit(0.0).as("value"), lit("{}").as("props"))
       // ONE data batch + the sentinel batch (r14 diet): the outer legs'
       // distinctive property is EVICTION emission on watermark close —
       // cross-batch buffered-state matching is q62's (inner) and q95's
@@ -658,35 +419,22 @@ object SessionGates {
             // the sentinel purchase so the two never pair — every uid -1
             // row in the sink would be a real semantics bug, not fixture
             // noise
-            Seq(sentinelRow(-1L, maxMicros + 5400L * 1000000L, "purchase")
+            Seq(sentinelRow(ev, -1L, maxMicros + 5400L * 1000000L, "purchase")
               .unionByName(
-                sentinelRow(-2L, maxMicros + 7200L * 1000000L, "click")))
+                sentinelRow(ev, -2L, maxMicros + 7200L * 1000000L, "click")))
           else Seq.empty)
-      slices.zipWithIndex.foreach { case (df, i) =>
-        arriveAs(onePartFile(df, out, s"f$i"), out, s"f$i",
-          now - (slices.size - i) * 60000L) // arrival order
-      }
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
+      g.arriveSlices(slices) // arrival order
+      val stream = g.readIn(ev.schema)
         .select(col("event_id"), col("user_id"), col("event_type"),
           timestamp_millis(unix_millis(col("ts"))).as("ts"))
-      val joined = graft.streaming.EventStreams
-        .purchasesWithClicks(stream, joinType = joinType)
-      ExportOps.withConf(s, "spark.sql.shuffle.partitions", StreamShuffleParts) {
-        val q = joined.writeStream.format("parquet")
-          .option("path", s"$out/data")
-          .option("checkpointLocation", s"$out/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      val landed = s.read.parquet(s"$out/data")
+      g.drainParquet(graft.streaming.EventStreams
+        .purchasesWithClicks(stream, joinType = joinType))
+      val landed = s.read.parquet(g.data)
         .filter(col("uid") >= 0) // drop the watermark sentinels
         .select(col("purchase_id"), col("uid"),
           unix_millis(col("purchase_ts")).as("purchase_ms"),
           col("click_id"), unix_millis(col("click_ts")).as("click_ms"))
-      ExportOps.localizeAndDrop(landed, out, "purchase_id", "click_id")
+      g.localizeAndDrop(landed, "purchase_id", "click_id")
     }
   }
 
@@ -736,37 +484,22 @@ object SessionGates {
     * only state shape that survives 100 TB/day (ids older than the
     * horizon are evicted instead of accumulating forever). Hash-matches
     * the batch DISTINCT oracle. */
-  private def q65(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_sdd", d)
-    ExportOps.withScratchCleanup(out) {
-      new java.io.File(out, "in").mkdirs()
+  private def q65(s: SparkSession, d: String): DataFrame =
+    StreamGate(s, "graft_sdd", d) { g =>
       val ev = Tables(s, d, "events")
-      val part = onePartFile(ev, out, "events")
-      val now = System.currentTimeMillis()
-      Seq(0, 1).foreach { i => // identical copies = full redelivery
-        arriveAs(part, out, s"f$i", now - (2 - i) * 60000L)
-      }
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
+      val part = StreamGate.stage(ev, "events")
+      g.arrive(part, "f0") // identical copies = full redelivery
+      g.arrive(part, "f1")
+      g.drainParquet(g.readIn(ev.schema)
         .select(col("event_id"), col("user_id"), col("event_type"),
           timestamp_millis(unix_millis(col("ts"))).as("tsm"))
         .withWatermark("tsm", "10 minutes")
-        .dropDuplicatesWithinWatermark("event_id")
-      ExportOps.withConf(s, "spark.sql.shuffle.partitions", StreamShuffleParts) {
-        val q = stream.writeStream.format("parquet")
-          .option("path", s"$out/data")
-          .option("checkpointLocation", s"$out/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      val landed = s.read.parquet(s"$out/data")
+        .dropDuplicatesWithinWatermark("event_id"))
+      val landed = s.read.parquet(g.data)
         .select(col("event_id"), col("user_id"), col("event_type"),
           unix_millis(col("tsm")).as("ts_ms"))
-      ExportOps.localizeAndDrop(landed, out, "event_id")
+      g.localizeAndDrop(landed, "event_id")
     }
-  }
 
   /** q69: streaming CDC apply — q68's partition-grain merge driven by an
     * unbounded change feed, the production loop of a continuously-
@@ -782,40 +515,26 @@ object SessionGates {
     * Sequential application (update then delete on the overlap keys)
     * lands the same final snapshot as q68's single-shot log-ordered
     * merge — the gate hash-matches q68's oracle verbatim. */
-  private def q69(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_scdc", d)
-    ExportOps.withScratchCleanup(out) {
-      val snapDir = s"$out/snap"
+  private def q69(s: SparkSession, d: String): DataFrame =
+    StreamGate(s, "graft_scdc", d) { g =>
+      val snapDir = s"${g.dir}/snap"
       Tables(s, d, "customer")
         .select(col("c_custkey").as("k"), col("c_name").as("name"),
           col("c_acctbal").as("bal"), col("c_nationkey").as("p"))
         .write.partitionBy("p").parquet(snapDir)
       val changes = Relational.q68Changes(s, d)
-      new java.io.File(out, "in").mkdirs()
-      val now = System.currentTimeMillis()
-      Seq(changes.filter(col("op") === "U"),
-          changes.filter(col("op") =!= "U")).zipWithIndex.foreach {
-        case (df, i) =>
-          arriveAs(onePartFile(df, out, s"f$i"), out, s"f$i",
-            now - (2 - i) * 60000L) // arrival order
-      }
-      val stream = s.readStream.schema(changes.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
-      val q = stream.writeStream
+      g.arriveSlices(Seq(changes.filter(col("op") === "U"),
+        changes.filter(col("op") =!= "U"))) // arrival order
+      g.drain(g.readIn(changes.schema).writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           Relational.mergePartitioned(s, snapDir, batch, Seq("name", "bal"))
           ()
-        }
-        .option("checkpointLocation", s"$out/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.processAllAvailable() finally q.stop()
+        }, shards = None)(_.processAllAvailable())
       val mergedSnap = s.read.parquet(snapDir)
         .select(col("k"), col("name"), col("bal"),
           col("p").cast("int").as("p"))
-      ExportOps.localizeAndDrop(mergedSnap, out, "k")
+      g.localizeAndDrop(mergedSnap, "k")
     }
-  }
 
   /** q74: per-user cumulative totals via Spark 4's `transformWithState`
     * ([[graft.streaming.CumulativeTotalsProcessor]]) under real
@@ -865,21 +584,13 @@ object SessionGates {
     * q57/q58's batch session oracle: three gates, three mechanisms
     * (batch agg / session_window streaming / timer-driven arbitrary
     * state), one truth. */
-  private def q89(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_timers", d)
-    ExportOps.withConf(s, "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+  private def q89(s: SparkSession, d: String): DataFrame =
     // delta uploads per commit, not full snapshots — the q90 maintenance
     // conf; the timer gate pays 3 commits (data batch + sentinel batch +
     // the watermark-driven firing batch)
-    ExportOps.withConf(s,
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "true") {
-    ExportOps.withScratchCleanup(out) {
-      new java.io.File(out, "in").mkdirs()
+    StreamGate(s, "graft_timers", d, StreamGate.Changelog) { g =>
       val ev = Tables(s, d, "events")
       val maxMicros = eventTsStats(s, d)._2
-      val now = System.currentTimeMillis()
       // ONE data batch + the sentinel batch (r14 diet): the gate's
       // distinctive property is timers FIRING on a cross-batch watermark
       // advance, which the sentinel batch still provides; cross-batch
@@ -888,19 +599,11 @@ object SessionGates {
       // synthetic multi-batch replays, and the landed session set is
       // batching-invariant for time-ordered arrival — the second corpus
       // batch bought a full RocksDB changelog commit, not coverage.
-      arriveAs(onePartFile(ev, out, "f0"), out, "f0", now - 2 * 60000L)
-      arriveAs(onePartFile(
-        ev.limit(1).select(
-          lit(-1L).as("event_id"),
-          timestamp_micros(lit(maxMicros + 7200L * 1000000L)).as("ts"),
-          lit(-1L).as("user_id"),
-          lit("sentinel").as("event_type"),
-          lit(0.0).as("value"),
-          lit("{}").as("props")), out, "sentinel"), out, "sentinel",
-        now - 60000L)
+      g.arrive(ev, "f0")
+      g.arrive(sentinelRow(ev, -1L, maxMicros + 7200L * 1000000L, "sentinel"),
+        "sentinel")
       import s.implicits._
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
+      val stream = g.readIn(ev.schema)
         .select(col("user_id"),
           timestamp_millis(unix_millis(col("ts"))).as("tsm"))
         .withWatermark("tsm", "0 seconds")
@@ -909,25 +612,15 @@ object SessionGates {
         .transformWithState(new graft.streaming.SessionTimeoutProcessor(300000L),
           org.apache.spark.sql.streaming.TimeMode.EventTime(),
           org.apache.spark.sql.streaming.OutputMode.Append())
-      ExportOps.withConf(s, "spark.sql.shuffle.partitions",
-        timerShufflePartsFor(s, d)) {
-        val q = sessions.toDF().writeStream.format("parquet")
-          .option("path", s"$out/data")
-          .option("checkpointLocation", s"$out/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      // CPU-bound timer work: 8 shards, 32 past the sf0.1 corpus size
+      g.drainParquet(sessions.toDF(), shards = Some(StreamGate.shards(8,
+        Option.when(eventCount(s, d) > 200000L)(32))))
       // the sentinel user's own session never closes (nothing advances the
       // watermark past ITS timer) — by construction it cannot land; the
       // filter documents the contract rather than trusting it
-      val landed = s.read.parquet(s"$out/data").filter(col("user_id") >= 0)
-      ExportOps.localizeAndDrop(landed, out, "user_id", "session_start_ms")
+      val landed = s.read.parquet(g.data).filter(col("user_id") >= 0)
+      g.localizeAndDrop(landed, "user_id", "session_start_ms")
     }
-    }
-    }
-  }
 
   /** q90: state-store MAINTENANCE — RocksDB changelog checkpointing
     * under a full QUERY RESTART, the ops half of the streaming story
@@ -948,52 +641,34 @@ object SessionGates {
     * once per-key state reaches the tens of GB. The gate requires the
     * changelog files to actually exist in the checkpoint before it reads
     * results, so the conf can't silently regress to snapshot-only. */
-  private def q90(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_restart", d)
-    ExportOps.withConf(s, "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-    ExportOps.withConf(s,
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "true") {
-    ExportOps.withScratchCleanup(out) {
-      new java.io.File(out, "in").mkdirs()
+  private def q90(s: SparkSession, d: String): DataFrame =
+    StreamGate(s, "graft_restart", d, StreamGate.Changelog) { g =>
       val ev = Tables(s, d, "events")
-      val mid = { val st = eventTsStats(s, d); (st._1 + st._2) / 2 }
-      val now = System.currentTimeMillis()
+      val Seq(before, after) =
+        splitAt(ev, { val st = eventTsStats(s, d); (st._1 + st._2) / 2 })
       import s.implicits._
       def runOnce(): Unit = {
-        val stream = s.readStream.schema(ev.schema).parquet(s"$out/in")
+        val stream = g.readIn(ev.schema, oneFilePerBatch = false)
           .select(col("user_id"),
             expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
           .as[graft.streaming.UserEvent]
-        val totals = stream.groupByKey(_.user_id)
+        g.drainParquet(stream.groupByKey(_.user_id)
           .transformWithState(new graft.streaming.CumulativeTotalsProcessor,
             org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Append())
-        ExportOps.withConf(s, "spark.sql.shuffle.partitions", StreamShuffleParts) {
-          val q = totals.toDF().writeStream.format("parquet")
-            .option("path", s"$out/data")
-            .option("checkpointLocation", s"$out/ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        }
+            org.apache.spark.sql.streaming.OutputMode.Append()).toDF())
       }
       // run 1: first half only, then a planned shutdown
-      arriveAs(onePartFile(ev.filter(unix_micros(col("ts")) <= mid), out, "f0"),
-        out, "f0", now - 120000L)
+      g.arrive(before, "f0")
       runOnce()
       // run 2: a NEW query on the same checkpoint — state must recover,
       // and the source checkpoint must admit only the new file
-      arriveAs(onePartFile(ev.filter(unix_micros(col("ts")) > mid), out, "f1"),
-        out, "f1", now - 60000L)
+      g.arrive(after, "f1")
       runOnce()
       // the maintenance property: per-batch changelog files exist (delta
       // uploads, not full snapshots) — state dir layout:
       // ckpt/state/0/<partition>/<version>.changelog
       val changelogs = {
-        val stateDir = new java.io.File(out, "ckpt/state")
+        val stateDir = new java.io.File(g.dir, "ckpt/state")
         if (!stateDir.exists()) Array.empty[java.io.File]
         else {
           def walk(f: java.io.File): Array[java.io.File] =
@@ -1002,13 +677,9 @@ object SessionGates {
         }
       }
       require(changelogs.nonEmpty,
-        s"changelog checkpointing produced no .changelog files under $out/ckpt/state")
-      val landed = s.read.parquet(s"$out/data")
-      ExportOps.localizeAndDrop(landed, out, "user_id", "n_events", "sum_cents")
+        s"changelog checkpointing produced no .changelog files under ${g.ckpt}/state")
+      g.localizeAndDrop(s.read.parquet(g.data), "user_id", "n_events", "sum_cents")
     }
-    }
-    }
-  }
 
   /** q108: STATE-SCHEMA EVOLUTION across a restart — the upgrade story
     * q90's same-processor restart leaves open: run 1 accumulates per-user
@@ -1023,43 +694,23 @@ object SessionGates {
     * PLUS the new field folded over run-2 events only, its absent-state
     * default observable), so a dropped field, a misdecoded v1 row, or
     * lost carried counts each move the hash. */
-  private def q108(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_evolve", d)
-    ExportOps.withConf(s, "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-    ExportOps.withConf(s,
-      "spark.sql.streaming.stateStore.encodingFormat", "avro") {
-    ExportOps.withScratchCleanup(out) {
-      new java.io.File(out, "in").mkdirs()
+  private def q108(s: SparkSession, d: String): DataFrame =
+    StreamGate(s, "graft_evolve", d, StreamGate.AvroState) { g =>
       val ev = Tables(s, d, "events")
-      val mid = { val st = eventTsStats(s, d); (st._1 + st._2) / 2 }
-      val now = System.currentTimeMillis()
+      val Seq(before, after) =
+        splitAt(ev, { val st = eventTsStats(s, d); (st._1 + st._2) / 2 })
       import s.implicits._
-      def stream = s.readStream.schema(ev.schema).parquet(s"$out/in")
+      def stream = g.readIn(ev.schema, oneFilePerBatch = false)
         .select(col("user_id"),
           expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
         .as[graft.streaming.UserEvent]
-      def runOnce(dataDir: String,
-                  f: org.apache.spark.sql.Dataset[
-                    graft.streaming.UserEvent] => org.apache.spark.sql.DataFrame): Unit =
-        ExportOps.withConf(s, "spark.sql.shuffle.partitions", StreamShuffleParts) {
-          val q = f(stream).writeStream.format("parquet")
-            .option("path", dataDir)
-            .option("checkpointLocation", s"$out/ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        }
-      arriveAs(onePartFile(ev.filter(unix_micros(col("ts")) <= mid), out, "f0"),
-        out, "f0", now - 120000L)
-      runOnce(s"$out/data", st => st.groupByKey(_.user_id)
+      g.arrive(before, "f0")
+      g.drainParquet(stream.groupByKey(_.user_id)
         .transformWithState(new graft.streaming.CumulativeTotalsProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(),
           org.apache.spark.sql.streaming.OutputMode.Append()).toDF())
-      arriveAs(onePartFile(ev.filter(unix_micros(col("ts")) > mid), out, "f1"),
-        out, "f1", now - 60000L)
-      runOnce(s"$out/data", st => st.groupByKey(_.user_id)
+      g.arrive(after, "f1")
+      g.drainParquet(stream.groupByKey(_.user_id)
         .transformWithState(new graft.streaming.EvolvedTotalsProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(),
           org.apache.spark.sql.streaming.OutputMode.Append()).toDF())
@@ -1067,15 +718,12 @@ object SessionGates {
       // run-1 files carry the NARROW schema — the output evolved with the
       // state, and mergeSchema widens the old rows with the read-time
       // default, exactly like the store widened the v1 state rows
-      val landed = s.read.option("mergeSchema", "true").parquet(s"$out/data")
+      val landed = s.read.option("mergeSchema", "true").parquet(g.data)
         .withColumn("max_cents_run2",
           coalesce(col("max_cents_run2"), lit(-1L)))
-      ExportOps.localizeAndDrop(landed, out,
+      g.localizeAndDrop(landed,
         "user_id", "n_events", "sum_cents", "max_cents_run2")
     }
-    }
-    }
-  }
 
   /** q113: STREAM-STATIC join — the one Structured Streaming join leg the
     * q62/q67/q95/q99 stream-stream matrix never touches: a streaming fact
@@ -1108,13 +756,11 @@ object SessionGates {
     * checkpoint and sink still exist on disk. */
   private[ops] def streamStaticHarness(
       s: SparkSession, d: String,
-      inspect: (java.io.File, String) => Unit = (_, _) => ()): DataFrame = {
-    val out = ExportOps.scratchDir("graft_streamstatic", d)
-    ExportOps.withScratchCleanup(out) {
-      new java.io.File(out, "in").mkdirs()
+      inspect: (java.io.File, String) => Unit = (_, _) => ()): DataFrame =
+    StreamGate(s, "graft_streamstatic", d) { g =>
       val ev = Tables(s, d, "events")
-      val mid = { val st = eventTsStats(s, d); (st._1 + st._2) / 2 }
-      val now = System.currentTimeMillis()
+      val Seq(before, after) =
+        splitAt(ev, { val st = eventTsStats(s, d); (st._1 + st._2) / 2 })
       def dim(v: Int): DataFrame = {
         val base = Tables(s, d, "customer")
           .select(col("c_custkey").as("user_id"),
@@ -1128,38 +774,25 @@ object SessionGates {
         versioned.withColumn("dimv", lit(v))
       }
       def runOnce(v: Int): String =
-        ExportOps.withConf(s, "spark.sql.shuffle.partitions",
-          StreamShuffleParts) {
-          val stream = s.readStream.schema(ev.schema).parquet(s"$out/in")
-            .select(col("event_id"), col("user_id"), col("event_type"))
-          val q = stream
-            .join(broadcast(dim(v)), Seq("user_id"), "inner")
-            .writeStream.format("parquet")
-            .option("path", s"$out/data")
-            .option("checkpointLocation", s"$out/ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          try { q.processAllAvailable(); lastMicroBatchPlan(q) }
-          finally q.stop()
+        g.drain(g.parquetSink(g.readIn(ev.schema, oneFilePerBatch = false)
+          .select(col("event_id"), col("user_id"), col("event_type"))
+          .join(broadcast(dim(v)), Seq("user_id"), "inner"))) { q =>
+          q.processAllAvailable(); lastMicroBatchPlan(q)
         }
-      arriveAs(onePartFile(ev.filter(unix_micros(col("ts")) <= mid), out,
-        "f0"), out, "f0", now - 120000L)
+      g.arrive(before, "f0")
       runOnce(1)
-      arriveAs(onePartFile(ev.filter(unix_micros(col("ts")) > mid), out,
-        "f1"), out, "f1", now - 60000L)
+      g.arrive(after, "f1")
       val plan2 = runOnce(2)
-      val landed = s.read.parquet(s"$out/data")
+      val landed = s.read.parquet(g.data)
         .groupBy(col("dimv"), col("tier"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           count_distinct(col("user_id")).as("n_users"),
           sum(col("event_id")).cast("long").as("sum_event_id"))
       val result = ExportOps.localize(landed)
-      inspect(out, plan2)
-      ExportOps.deleteRecursively(out)
+      inspect(g.dir, plan2)
+      ExportOps.deleteRecursively(g.dir)
       result.orderBy("dimv", "tier", "event_type")
     }
-  }
 
   /** The last micro-batch's executed physical plan, via reflection across
     * the `private[sql]` StreamingQueryWrapper → StreamExecution →
@@ -1190,23 +823,15 @@ object SessionGates {
     * from scratch: batch-a rows are lifetime totals over ts ≤ m2 for
     * users with events in (m, m2]; batch-b rows are totals over ALL
     * events for users with events > m2. */
-  private def q100(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_boot", d)
-    ExportOps.withConf(s, "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-    ExportOps.withScratchCleanup(out) {
-      new java.io.File(out, "in").mkdirs()
+  private def q100(s: SparkSession, d: String): DataFrame =
+    StreamGate(s, "graft_boot", d, StreamGate.RocksDb) { g =>
       val ev = Tables(s, d, "events")
       val (mnS, maxMicros, _) = eventTsStats(s, d)
       val mid = (mnS + maxMicros) / 2
       val mid2 = (mid + maxMicros) / 2
-      val now = System.currentTimeMillis()
       val tsu = unix_micros(col("ts"))
-      Seq(tsu > mid && tsu <= mid2, tsu > mid2).zipWithIndex.foreach {
-        case (cond, i) =>
-          arriveAs(onePartFile(ev.filter(cond), out, s"f$i"), out, s"f$i",
-            now - (2 - i) * 60000L)
-      }
+      g.arriveSlices(Seq(ev.filter(tsu > mid && tsu <= mid2),
+        ev.filter(tsu > mid2)))
       import s.implicits._
       val centsExpr = expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
       // batch-computed history: per-user totals + per-type counts over the
@@ -1224,28 +849,15 @@ object SessionGates {
         .join(perType, Seq("user_id"))
         .as[graft.streaming.BootstrapState]
         .groupByKey(_.user_id)
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
+      val stream = g.readIn(ev.schema)
         .select(col("user_id"), centsExpr.as("cents"), col("event_type"))
         .as[graft.streaming.TypedEvent]
-      val totals = stream.groupByKey(_.user_id)
+      g.drainParquet(stream.groupByKey(_.user_id)
         .transformWithState(new graft.streaming.BootstrappedTotalsProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Append(), init)
-      ExportOps.withConf(s, "spark.sql.shuffle.partitions", StreamShuffleParts) {
-        val q = totals.toDF().writeStream.format("parquet")
-          .option("path", s"$out/data")
-          .option("checkpointLocation", s"$out/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      val landed = s.read.parquet(s"$out/data")
-      ExportOps.localizeAndDrop(landed, out, "user_id", "n_events", "sum_cents")
+          org.apache.spark.sql.streaming.OutputMode.Append(), init).toDF())
+      g.localizeAndDrop(s.read.parquet(g.data), "user_id", "n_events", "sum_cents")
     }
-    }
-  }
 
   /** q103: late REDELIVERY under sessionization — the composed ingest
     * shape production needs, gated because the naïve shape is silently
@@ -1271,15 +883,11 @@ object SessionGates {
     * Returns the landed (filtered, localized) session rows. */
   private[ops] def lateRedeliveryHarness(s: SparkSession, d: String,
                                          screened: Boolean): DataFrame = {
-    val out = ExportOps.scratchDir(
-      if (screened) "graft_late" else "graft_late_ns", d)
-    ExportOps.withScratchCleanup(out) {
-      new java.io.File(out, "in").mkdirs()
+    StreamGate(s, if (screened) "graft_late" else "graft_late_ns", d) { g =>
       val ev = Tables(s, d, "events")
       val (minMicros, maxMicros, _) = eventTsStats(s, d)
-      val now = System.currentTimeMillis()
       // batch 1: the whole corpus — the watermark lands at max - 10 min
-      arriveAs(onePartFile(ev, out, "f0"), out, "f0", now - 240000L)
+      g.arrive(ev, "f0")
       // batch 2: a REDELIVERY of rows from the corpus start, strictly
       // behind the watermark (guarded: first quarter of the span, which
       // must exceed the 10-min delay for the plant to be late at all)
@@ -1288,37 +896,20 @@ object SessionGates {
       val lateCut = minMicros + (maxMicros - minMicros) / 4
       val late = ev.filter(unix_micros(col("ts")) <= lateCut)
       require(late.limit(1).count() > 0, "no late rows to plant")
-      arriveAs(onePartFile(late, out, "f1"), out, "f1", now - 120000L)
+      g.arrive(late, "f1")
       // batch 3: the q58 sentinel flushes every closed session
-      arriveAs(onePartFile(
-        ev.limit(1).select(
-          lit(-1L).as("event_id"),
-          timestamp_micros(lit(maxMicros + 7200L * 1000000L)).as("ts"),
-          lit(-1L).as("user_id"),
-          lit("sentinel").as("event_type"),
-          lit(0.0).as("value"),
-          lit("{}").as("props")), out, "sentinel"), out, "sentinel",
-        now - 60000L)
-      val ingest = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
+      g.arrive(sentinelRow(ev, -1L, maxMicros + 7200L * 1000000L, "sentinel"),
+        "sentinel")
+      val ingest = g.readIn(ev.schema)
         .select(col("event_id"), col("user_id"),
           timestamp_millis(unix_millis(col("ts"))).as("tsm"))
         .withWatermark("tsm", "10 minutes")
       val screenedStream =
         if (screened) ingest.dropDuplicatesWithinWatermark("event_id")
         else ingest
-      ExportOps.withConf(s, "spark.sql.shuffle.partitions", StreamShuffleParts) {
-        val q = sessionAgg(screenedStream.drop("event_id")).writeStream
-          .format("parquet")
-          .option("path", s"$out/data")
-          .option("checkpointLocation", s"$out/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      val landed = s.read.parquet(s"$out/data").filter(col("user_id") >= 0)
-      ExportOps.localizeAndDrop(landed, out, "user_id", "session_start_ms")
+      g.drainParquet(sessionAgg(screenedStream.drop("event_id")))
+      val landed = s.read.parquet(g.data).filter(col("user_id") >= 0)
+      g.localizeAndDrop(landed, "user_id", "session_start_ms")
     }
   }
 
@@ -1335,27 +926,17 @@ object SessionGates {
     * hourly window closes; sentinel-derived rows cannot contribute (the
     * uid -1 purchase finds no click). Hash-matches a DuckDB replay of
     * the join feeding an hour-bucketed count. */
-  private def q106(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_joinagg", d)
-    ExportOps.withScratchCleanup(out) {
-      new java.io.File(out, "in").mkdirs()
+  private def q106(s: SparkSession, d: String): DataFrame =
+    StreamGate(s, "graft_joinagg", d) { g =>
       val ev = Tables(s, d, "events")
       val maxMicros = eventTsStats(s, d)._2
-      val now = System.currentTimeMillis()
-      def sentinelRow(id: Long, tsMicros: Long, eventType: String) =
-        ev.limit(1).select(
-          lit(id).as("event_id"),
-          timestamp_micros(lit(tsMicros)).as("ts"),
-          lit(-1L).as("user_id"), lit(eventType).as("event_type"),
-          lit(0.0).as("value"), lit("{}").as("props"))
       // two micro-batches only (corpus, then the watermark sentinels):
       // cross-batch JOIN state is already q62's gated property — this
       // gate's property is the operator CHAIN, and every extra batch
       // costs ~12 state-store commits (3 stateful ops × 8 partitions +
       // logs); the sentinel batch still drives the full propagation
       // cascade (join flush → per-purchase agg close → hourly close)
-      val slices: Seq[DataFrame] =
-        Seq(ev,
+      g.arriveSlices(Seq(ev,
           // sentinel margin arithmetic (the sf0.1 full-sweep fix): the
           // LAST hourly window closes only when the join-output watermark
           // (min sentinel ts − 10 min delay − 30 min join horizon) passes
@@ -1366,15 +947,10 @@ object SessionGates {
           // pass; sf0.1 landed early → one silently missing output row).
           // +240/+270 min clears the worst case with 140 min of slack;
           // sentinels still can't contribute rows (uid −1 filter).
-          sentinelRow(-1L, maxMicros + 14400L * 1000000L, "purchase")
+          sentinelRow(ev, -1L, maxMicros + 14400L * 1000000L, "purchase")
             .unionByName(
-              sentinelRow(-2L, maxMicros + 16200L * 1000000L, "click")))
-      slices.zipWithIndex.foreach { case (df, i) =>
-        arriveAs(onePartFile(df, out, s"f$i"), out, s"f$i",
-          now - (slices.size - i) * 60000L)
-      }
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
+              sentinelRow(ev, -2L, maxMicros + 16200L * 1000000L, "click"))))
+      val stream = g.readIn(ev.schema)
         .select(col("event_id"), col("user_id"), col("event_type"),
           timestamp_millis(unix_millis(col("ts"))).as("ts"))
       val joined = graft.streaming.EventStreams
@@ -1406,19 +982,9 @@ object SessionGates {
           sum(col("n_clicks")).as("n_pairs"))
         .select(unix_millis(col("window.start")).as("hour_start_ms"),
           col("n_pairs"), col("n_purchases"))
-      ExportOps.withConf(s, "spark.sql.shuffle.partitions", StreamShuffleParts) {
-        val q = hourly.writeStream.format("parquet")
-          .option("path", s"$out/data")
-          .option("checkpointLocation", s"$out/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      val landed = s.read.parquet(s"$out/data")
-      ExportOps.localizeAndDrop(landed, out, "hour_start_ms")
+      g.drainParquet(hourly)
+      g.localizeAndDrop(s.read.parquet(g.data), "hour_start_ms")
     }
-  }
 
   /** q105: STREAMING in-flight observation — `Dataset.observe` on an
     * unbounded stream (q93 gates the batch form): data-quality counters
@@ -1436,49 +1002,31 @@ object SessionGates {
   /** Runs q105's observed pipeline; returns (landed sessions, observed
     * row-count sum, observed cents sum) for the accounting spec. */
   private[ops] def observedSessionHarness(s: SparkSession, d: String)
-      : (DataFrame, Long, Long) = {
-    val out = ExportOps.scratchDir("graft_observe", d)
-    ExportOps.withScratchCleanup(out) {
-      new java.io.File(out, "in").mkdirs()
+      : (DataFrame, Long, Long) =
+    StreamGate(s, "graft_observe", d) { g =>
       val ev = Tables(s, d, "events")
       val maxMicros = eventTsStats(s, d)._2
-      val now = System.currentTimeMillis()
-      arriveAs(onePartFile(ev, out, "events"), out, "events", now - 120000L)
-      arriveAs(onePartFile(
-        ev.limit(1).select(
-          lit(-1L).as("event_id"),
-          timestamp_micros(lit(maxMicros + 7200L * 1000000L)).as("ts"),
-          lit(-1L).as("user_id"),
-          lit("sentinel").as("event_type"),
-          lit(0.0).as("value"),
-          lit("{}").as("props")), out, "sentinel"), out, "sentinel",
-        now - 60000L)
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
+      g.arrive(ev, "events")
+      g.arrive(sentinelRow(ev, -1L, maxMicros + 7200L * 1000000L, "sentinel"),
+        "sentinel")
+      val stream = g.readIn(ev.schema)
         .observe("ingest", count(lit(1)).as("n_rows"),
           sum(expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")).as("sum_cents"))
         .select(col("user_id"),
           timestamp_millis(unix_millis(col("ts"))).as("tsm"))
         .withWatermark("tsm", "10 minutes")
-      val observed = ExportOps.withConf(s, "spark.sql.shuffle.partitions", StreamShuffleParts) {
-        val q = sessionAgg(stream).writeStream
-          .format("parquet")
-          .option("path", s"$out/data")
-          .option("checkpointLocation", s"$out/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.processAllAvailable() finally q.stop()
-        q.recentProgress.toSeq
-          .flatMap(p => Option(p.observedMetrics.get("ingest")))
-          .map(r => (r.getAs[Long]("n_rows"),
-            Option(r.getAs[Any]("sum_cents")).fold(0L)(_.asInstanceOf[Long])))
+      // progress read after stop, when every batch's progress is in
+      val q = g.drain(g.parquetSink(sessionAgg(stream))) { q =>
+        q.processAllAvailable(); q
       }
-      val landed = s.read.parquet(s"$out/data").filter(col("user_id") >= 0)
-      (ExportOps.localizeAndDrop(landed, out, "user_id", "session_start_ms"),
+      val observed = q.recentProgress.toSeq
+        .flatMap(p => Option(p.observedMetrics.get("ingest")))
+        .map(r => (r.getAs[Long]("n_rows"),
+          Option(r.getAs[Any]("sum_cents")).fold(0L)(_.asInstanceOf[Long])))
+      val landed = s.read.parquet(g.data).filter(col("user_id") >= 0)
+      (g.localizeAndDrop(landed, "user_id", "session_start_ms"),
         observed.map(_._1).sum, observed.map(_._2).sum)
     }
-  }
 
   /** q102: the checkpoint AS A TABLE — Spark 4's state-store data source
     * (`spark.read.format("statestore")`), the ops introspection surface
@@ -1498,17 +1046,15 @@ object SessionGates {
     * (partition_id is a first-class column); nothing rehydrates through
     * the streaming runtime, so inspecting TB-scale state costs one scan
     * of the store, not a replay. */
-  private def q102(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_statesrc", d)
-    ExportOps.withScratchCleanup(out) {
-      stateSourceHarness(s, d, out)
-      val st = s.read.format("statestore").option("path", s"$out/ckpt").load()
+  private def q102(s: SparkSession, d: String): DataFrame =
+    StreamGate(s, "graft_statesrc", d) { g =>
+      stateSourceHarness(s, d, g.dir)
+      val st = s.read.format("statestore").option("path", g.ckpt).load()
       val totals = st.select(col("key.user_id").as("user_id"),
         col("value.count").as("n_events"),
         col("value.sum").as("sum_off_ms"))
-      ExportOps.localizeAndDrop(totals, out, "user_id")
+      g.localizeAndDrop(totals, "user_id")
     }
-  }
 
   /** Runs q102's two-batch streaming aggregate to completion against
     * `out/ckpt`, public-in-package for StateSourceSpec's time-travel
@@ -1516,122 +1062,89 @@ object SessionGates {
     * the artifact under test is the STATE the commits leave behind. */
   private[ops] def stateSourceHarness(s: SparkSession, d: String,
                                       out: java.io.File): Unit = {
-    new java.io.File(out, "in").mkdirs()
+    val g = StreamGate.over(s, out)
     val ev = Tables(s, d, "events")
-    val mid = eventTsStats(s, d)._3.toLong
-    val now = System.currentTimeMillis()
-    Seq(unix_micros(col("ts")) <= mid, unix_micros(col("ts")) > mid)
-      .zipWithIndex.foreach { case (cond, i) =>
-        arriveAs(onePartFile(ev.filter(cond), out, s"f$i"), out, s"f$i",
-          now - (2 - i) * 60000L)
-      }
-    val agg = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
+    g.arriveSlices(splitAt(ev, eventTsStats(s, d)._3.toLong))
+    val agg = g.readIn(ev.schema)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"),
         sum(unix_millis(col("ts")) - lit(BaseEpochMs)).as("sum_off_ms"))
-    ExportOps.withConf(s, "spark.sql.shuffle.partitions", StreamShuffleParts) {
-      val q = agg.writeStream
-        .outputMode("update")
-        .foreachBatch { (batch: DataFrame, _: Long) => batch.count(); () }
-        .option("checkpointLocation", s"$out/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    g.drain(agg.writeStream.outputMode("update")
+      .foreachBatch { (batch: DataFrame, _: Long) => batch.count(); () }
+    )(_.processAllAvailable())
   }
 
   private def twsGate(s: SparkSession, d: String, prefix: String,
       processor: org.apache.spark.sql.streaming.StatefulProcessor[
         Long, graft.streaming.UserEvent, graft.streaming.UserCumulative],
       timeMode: org.apache.spark.sql.streaming.TimeMode,
-      drainByCommits: Boolean = false): DataFrame = {
-    val out = ExportOps.scratchDir(prefix, d)
-    ExportOps.withConf(s, "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-    ExportOps.withScratchCleanup(out) {
-      new java.io.File(out, "in").mkdirs()
+      drainByCommits: Boolean = false): DataFrame =
+    StreamGate(s, prefix, d, StreamGate.RocksDb) { g =>
       val ev = Tables(s, d, "events")
-      val mid = { val st = eventTsStats(s, d); (st._1 + st._2) / 2 }
-      val now = System.currentTimeMillis()
-      Seq(unix_micros(col("ts")) <= mid, unix_micros(col("ts")) > mid)
-        .zipWithIndex.foreach { case (cond, i) =>
-          arriveAs(onePartFile(ev.filter(cond), out, s"f$i"), out, s"f$i",
-            now - (2 - i) * 60000L) // arrival order
-        }
+      g.arriveSlices(splitAt(ev,
+        { val st = eventTsStats(s, d); (st._1 + st._2) / 2 })) // arrival order
       import s.implicits._
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
+      val stream = g.readIn(ev.schema)
         .select(col("user_id"),
           expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
         .as[graft.streaming.UserEvent]
       val totals = stream.groupByKey(_.user_id)
         .transformWithState(processor, timeMode,
           org.apache.spark.sql.streaming.OutputMode.Append())
-      ExportOps.withConf(s, "spark.sql.shuffle.partitions", StreamShuffleParts) {
-        val q = totals.toDF().writeStream.format("parquet")
-          .option("path", s"$out/data")
-          .option("checkpointLocation", s"$out/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        // Under ProcessingTime (the TTL gate), the stateful operator keeps
-        // requesting state-cleanup batches as processing time advances, so
-        // AvailableNow's drain never reaches "no more work" and
-        // processAllAvailable() livelocks — and the cleanup batches
-        // interleave arbitrarily with the data batches. Cleanup batches
-        // emit no rows (no timers; handleInputRows only fires for keys
-        // with input), so the output is complete exactly when both DATA
-        // batches are durably committed. The file source's checkpoint log
-        // (ckpt/sources/0) gains one numbered entry per batch that admits
-        // new files — the gate's two staged files, under
-        // maxFilesPerTrigger=1, mean two entries; waiting until the later
-        // of those batch ids reaches the commit log, then stopping, is
-        // race-free: the sink's metadata log already covers that batch,
-        // and any in-flight cleanup batch adds nothing.
-        try {
-          if (drainByCommits) {
-            def batchIds(dir: String): Array[Long] =
-              Option(new java.io.File(out, dir).list())
-                .getOrElse(Array.empty[String])
-                .flatMap(n => scala.util.Try(n.toLong).toOption)
-            def drained: Boolean = {
-              val admitted = batchIds("ckpt/sources/0")
-              admitted.length >= 2 &&
-                batchIds("ckpt/commits").contains(admitted.max)
-            }
-            // deadline: a stalled query must fail loudly, not spin the
-            // gate forever (10 min covers the slowest observed co-tenant
-            // window at sf0.1 with margin)
-            val deadline = System.nanoTime() + 600L * 1000000000L
-            while (q.isActive && !drained) {
-              if (System.nanoTime() > deadline)
-                throw new IllegalStateException(
-                  "TTL gate drain deadline: the two data batches did not " +
-                    s"commit within 10 minutes (checkpoint $out/ckpt)")
-              Thread.sleep(50)
-            }
-            // the loop also exits when the query DIES before both data
-            // batches commit; reading whatever partial output landed would
-            // return wrong results with no error in bench mode — surface
-            // the query's real failure instead
-            if (!drained) {
-              q.exception.foreach(throw _)
-              throw new IllegalStateException(
-                "TTL gate: streaming query stopped before both data " +
-                  s"batches committed and reported no exception ($out/ckpt)")
-            }
-          } else q.processAllAvailable()
-        } finally q.stop()
+      // Under ProcessingTime (the TTL gate), the stateful operator keeps
+      // requesting state-cleanup batches as processing time advances, so
+      // AvailableNow's drain never reaches "no more work" and
+      // processAllAvailable() livelocks — and the cleanup batches
+      // interleave arbitrarily with the data batches. Cleanup batches
+      // emit no rows (no timers; handleInputRows only fires for keys
+      // with input), so the output is complete exactly when both DATA
+      // batches are durably committed. The file source's checkpoint log
+      // (ckpt/sources/0) gains one numbered entry per batch that admits
+      // new files — the gate's two staged files, under
+      // maxFilesPerTrigger=1, mean two entries; waiting until the later
+      // of those batch ids reaches the commit log, then stopping, is
+      // race-free: the sink's metadata log already covers that batch,
+      // and any in-flight cleanup batch adds nothing.
+      def awaitDataCommits(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+        def batchIds(dir: String): Array[Long] =
+          Option(new java.io.File(g.dir, dir).list())
+            .getOrElse(Array.empty[String])
+            .flatMap(n => scala.util.Try(n.toLong).toOption)
+        def drained: Boolean = {
+          val admitted = batchIds("ckpt/sources/0")
+          admitted.length >= 2 &&
+            batchIds("ckpt/commits").contains(admitted.max)
+        }
+        // deadline: a stalled query must fail loudly, not spin the
+        // gate forever (10 min covers the slowest observed co-tenant
+        // window at sf0.1 with margin)
+        val deadline = System.nanoTime() + 600L * 1000000000L
+        while (q.isActive && !drained) {
+          if (System.nanoTime() > deadline)
+            throw new IllegalStateException(
+              "TTL gate drain deadline: the two data batches did not " +
+                s"commit within 10 minutes (checkpoint ${g.ckpt})")
+          Thread.sleep(50)
+        }
+        // the loop also exits when the query DIES before both data
+        // batches commit; reading whatever partial output landed would
+        // return wrong results with no error in bench mode — surface
+        // the query's real failure instead
+        if (!drained) {
+          q.exception.foreach(throw _)
+          throw new IllegalStateException(
+            "TTL gate: streaming query stopped before both data " +
+              s"batches committed and reported no exception (${g.ckpt})")
+        }
       }
-      val landed = s.read.parquet(s"$out/data")
+      g.drain(g.parquetSink(totals.toDF())) { q =>
+        if (drainByCommits) awaitDataCommits(q) else q.processAllAvailable()
+      }
       // sum_cents as the final key: when a user's two batch totals tie on
       // n_events, (user_id, n_events) alone leaves their relative order
       // undefined — a latent cross-engine hash flake the oracle mirrors
-      ExportOps.localizeAndDrop(landed, out, "user_id", "n_events", "sum_cents")
+      g.localizeAndDrop(s.read.parquet(g.data), "user_id", "n_events", "sum_cents")
     }
-    }
-  }
 
   /** q107: the LISTSTATE leg of `transformWithState`
     * ([[graft.streaming.RecentEventsProcessor]]) — a bounded newest-5
@@ -1648,23 +1161,13 @@ object SessionGates {
     * directly. Oracle recomputes each batch's membership from scratch: a
     * batch's row for a user is the newest-5 (by ts, id) over ALL events
     * up to that batch's end. */
-  private def q107(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_recent", d)
-    ExportOps.withConf(s, "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-    ExportOps.withScratchCleanup(out) {
-      new java.io.File(out, "in").mkdirs()
+  private def q107(s: SparkSession, d: String): DataFrame =
+    StreamGate(s, "graft_recent", d, StreamGate.RocksDb) { g =>
       val ev = Tables(s, d, "events")
-      val mid = { val st = eventTsStats(s, d); (st._1 + 19 * st._2) / 20 }
-      val now = System.currentTimeMillis()
-      Seq(unix_micros(col("ts")) <= mid, unix_micros(col("ts")) > mid)
-        .zipWithIndex.foreach { case (cond, i) =>
-          arriveAs(onePartFile(ev.filter(cond), out, s"f$i"), out, s"f$i",
-            now - (2 - i) * 60000L)
-        }
+      g.arriveSlices(splitAt(ev,
+        { val st = eventTsStats(s, d); (st._1 + 19 * st._2) / 20 }))
       import s.implicits._
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
+      val stream = g.readIn(ev.schema)
         .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
           col("event_id"),
           expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
@@ -1673,21 +1176,10 @@ object SessionGates {
         .transformWithState(new graft.streaming.RecentEventsProcessor(5),
           org.apache.spark.sql.streaming.TimeMode.None(),
           org.apache.spark.sql.streaming.OutputMode.Append())
-      ExportOps.withConf(s, "spark.sql.shuffle.partitions", StreamShuffleParts) {
-        val q = windows.toDF().writeStream.format("parquet")
-          .option("path", s"$out/data")
-          .option("checkpointLocation", s"$out/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      val landed = s.read.parquet(s"$out/data")
-      ExportOps.localizeAndDrop(landed, out,
+      g.drainParquet(windows.toDF())
+      g.localizeAndDrop(s.read.parquet(g.data),
         "user_id", "n_recent", "sum_cents_recent", "last_event_id")
     }
-    }
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q57_session_window" -> q57 _, "q58_stream_sessions" -> q58 _,

@@ -14,7 +14,7 @@ import graft.{SparkSpec, SparkEntry}
   * session's 8/32 — asserting the canonicalized result set is
   * byte-identical across all three. Streaming gates additionally sweep
   * their STATE shard count (graft.stream.shuffle.partitions overrides
-  * SessionGates.StreamShuffleParts/TimerShuffleParts), so state-store
+  * every gate's graft.streaming.StreamGate.shards), so state-store
   * key partitioning itself is inside the claim, not just the batch-side
   * exchanges.
   *
