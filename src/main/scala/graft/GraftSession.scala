@@ -16,6 +16,10 @@ import org.apache.spark.sql.SparkSession
   *    `spark.sql.adaptive.coalescePartitions.minPartitionSize` bytes runs
   *    as one local sort, without the range-sampling job and range shuffle
   *    (off with `spark.sql.adaptive.optimizer.excludedRules`);
+  *  - the optimizer rule [[plans.LocalSort]]: a global sort over a
+  *    driver-local relation (a localized gate result) sorts its rows on
+  *    the driver instead of planning a range exchange over them (off
+  *    with `spark.sql.optimizer.excludedRules`);
   *  - graft native functions registered for SQL use.
   *
   * Session-wide conf side effect to know about: [[Tables]] sets
@@ -72,7 +76,10 @@ object GraftSession {
       .config("spark.sql.streaming.checkpointFileManagerClass", LocalCheckpointManager)
       .config("spark.hadoop.fs.file.impl", LocalFsImpl)
       .config("spark.ui.enabled", "false")
-      .withExtensions(_.injectRuntimeOptimizerRule(plans.SingleTaskSort))
+      .withExtensions { e =>
+        e.injectRuntimeOptimizerRule(plans.SingleTaskSort)
+        e.injectOptimizerRule(plans.LocalSort)
+      }
 
   def getOrCreate(): SparkSession = {
     val spark = builder().getOrCreate()

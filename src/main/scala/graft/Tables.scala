@@ -1,8 +1,14 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-provided parquet tables (see TESTDATA.md /
   * FIXTURES.md §B). All engine queries take the scale-factor directory as a
@@ -18,16 +24,17 @@ object Tables {
 
   /** Parquet footer schema, memoized per table path for the life of the
     * JVM (the fixture dirs are immutable — the same contract
-    * [[graft.ops.SessionGates.eventTsStats]] already rides). Schema
-    * inference on a path-based `spark.read.parquet` re-reads the footer
-    * on EVERY DataFrame build (~60-70 ms measured at sf0.1, vs ~7 ms with
-    * an explicit schema), and the bench builds fixture frames thousands
-    * of times per pass — this is the "register the table once" catalog
-    * discipline a real deployment gets from a metastore, applied to the
-    * path-read harness. Schemas are plain StructTypes: session-free, so
-    * the memo is safe across the test suites' many sessions. */
+    * [[graft.ops.SessionGates.eventTsStats]] already rides). A path-based
+    * read without a schema resolves it again on EVERY DataFrame build;
+    * [[readParquet]] makes that one footer read on the driver instead of
+    * Spark's one-task inference job (~60-70 ms), and the memo drops even
+    * that for the thousands of fixture frames a bench pass builds — the
+    * "register the table once" catalog discipline a real deployment gets
+    * from a metastore, applied to the path-read harness. Schemas are plain
+    * StructTypes: session-free, so the memo is safe across the test
+    * suites' many sessions. */
   private val schemaCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
+    scala.collection.concurrent.TrieMap.empty[String, StructType]
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     if (name == "events") {
@@ -103,8 +110,70 @@ object Tables {
     }
     perSession.getOrElseUpdate(path, {
       val schema = schemaCache.getOrElseUpdate(path,
-        spark.read.parquet(path).schema)
+        readParquet(spark, Seq(path)).schema)
       spark.read.schema(schema).parquet(path)
     })
   }
+
+  /** `spark.read.options(options).parquet(paths: _*)` with the data schema
+    * taken from ONE footer read on the driver. Spark's own inference for
+    * a schema-less read lists the paths and then runs a one-task job to
+    * read the footer of the first data file (by path string; summary
+    * files first), paying the job, the Hadoop conf serialization and the
+    * listing again on every read-back. This lists the paths with the
+    * Hadoop FS exactly as `InMemoryFileIndex` filters them, reads the
+    * footer of the same file Spark would pick, and converts it with the
+    * same `ParquetFileFormat.readSchemaFromFooter` + session-conf
+    * converter (so `nanosAsLong` and friends apply as before). Partition
+    * columns are not in the footer: they are still discovered from the
+    * paths, with their inferred types.
+    *
+    * Falls back to Spark's inference, and so to its errors, whenever the
+    * shortcut is not the same read: no visible data file (empty or
+    * missing path), glob patterns, summary files, or any option other
+    * than `basePath` (e.g. `mergeSchema`, which must see every footer). */
+  def readParquet(s: SparkSession, paths: Seq[String],
+                  options: Map[String, String] = Map.empty): DataFrame = {
+    val reader = s.read.options(options)
+    footerSchema(s, paths, options).fold(reader)(reader.schema).parquet(paths: _*)
+  }
+
+  def readParquet(s: SparkSession, path: String): DataFrame = readParquet(s, Seq(path))
+
+  private def footerSchema(s: SparkSession, paths: Seq[String],
+                           options: Map[String, String]): Option[StructType] = {
+    if (paths.isEmpty || !options.keySet.forall(_.equalsIgnoreCase("basePath")) ||
+        paths.exists(_.exists("{}[]*?\\".contains(_)))) return None
+    val conf = s.sessionState.newHadoopConfWithOptions(options)
+    val leaves = paths.map(p => leafFiles(conf, new Path(p)))
+    if (leaves.exists(_.isEmpty)) return None // a missing path: Spark's error
+    val files = leaves.flatMap(_.get)
+    if (files.isEmpty || files.exists(f => isSummary(f.getPath.getName))) return None
+    val first = files.minBy(_.getPath.toString)
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(first, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    Some(ParquetFileFormat.readSchemaFromFooter(new Footer(first.getPath, footer),
+      new ParquetToSparkSchemaConverter(s.sessionState.conf)))
+  }
+
+  /** The visible files under `path` (itself, if a file), recursively, or
+    * None when it does not exist. */
+  private def leafFiles(conf: Configuration, path: Path): Option[Seq[FileStatus]] = {
+    val fs = path.getFileSystem(conf)
+    def walk(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(c => hidden(c.getPath.getName)).flatMap(walk)
+    try Some(walk(fs.getFileStatus(path)).filterNot(f => hidden(f.getPath.getName)))
+    catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  /** `HadoopFSUtils.shouldFilterOutPathName`: `_`/`.`-prefixed names are
+    * hidden, except `col=value` dirs and the parquet summary files. */
+  private def hidden(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) && !isSummary(name)
+
+  private def isSummary(name: String): Boolean =
+    name.startsWith("_common_metadata") || name.startsWith("_metadata")
 }

@@ -307,7 +307,7 @@ object GeotabSynth {
       // localize the bounded fleet snapshot, then drop the scratch dir —
       // repeated gate/bench runs must not accumulate tempdirs
       graft.ops.ExportOps.localizeAndDrop(
-        spark.read.parquet(s"$out/data"), out, "id")
+        Tables.readParquet(spark, s"$out/data"), out, "id")
     } finally graft.sources.geotab.GeotabClients.unregister(clientName)
   }
 
@@ -476,7 +476,7 @@ object GeotabSynth {
         q.processAllAvailable() // run 2: the moved fleet
       } finally q.stop()
       graft.ops.ExportOps.localizeAndDrop(
-        spark.read.parquet(s"$out/data"), out, "id", "speed_ms")
+        Tables.readParquet(spark, s"$out/data"), out, "id", "speed_ms")
     } finally graft.sources.geotab.GeotabClients.unregister(clientName)
   }
 
@@ -988,7 +988,7 @@ object GeotabSynth {
         .start()
       q.awaitTermination()
     }
-    val landed = spark.read.parquet(s"$out/data")
+    val landed = Tables.readParquet(spark, s"$out/data")
       .select(col("deviceId").as("device_id"),
         (col("startMs") / 1000L).cast("long").as("trip_start_s"),
         (col("endMs") / 1000L).cast("long").as("trip_end_s"),

@@ -1651,7 +1651,7 @@ object DedupOps {
   private def d20(s: SparkSession, d: String): DataFrame =
     graft.streaming.StreamGate(s, "graft_sdedup", d) { g =>
     ExportOps.stageTable(d, "documents", new java.io.File(g.in))
-    val schema = s.read.parquet(s"$d/documents.parquet").schema
+    val schema = Tables(s, d, "documents").schema
     val stream = g.readIn(schema, oneFilePerBatch = false)
     val isNew = col("doc_id") % 5 === 4
     val copies = stream.filter(col("doc_id") % 40 === 0)
@@ -1666,7 +1666,7 @@ object DedupOps {
       .select(col("doc_id"),
         when(col("is_dup"), "exact_dup").otherwise("kept").as("status"))
     g.drainParquet(screened, shards = None)
-    g.localizeAndDrop(s.read.parquet(g.data), "doc_id")
+    g.localizeAndDrop(Tables.readParquet(s, g.data), "doc_id")
     }
 
   /** c01: the curation pipeline end-to-end — the composition an LLM data

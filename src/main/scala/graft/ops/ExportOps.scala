@@ -177,7 +177,9 @@ object ExportOps {
     * into a driver-local DataFrame, delete the scratch directory it was
     * read from, and return the localized frame with a deterministic
     * order. One sort, applied to the local relation — the pre-collect sort
-    * the call sites used to carry was redundant with it.
+    * the call sites used to carry was redundant with it — which
+    * [[graft.plans.LocalSort]] runs on the driver, so the sorted frame's
+    * action launches no sampling or shuffle job.
     *
     * Caller-side size contract: this collects `df` to the driver, so it is
     * only for gate results that stay small relative to driver memory — the
@@ -209,8 +211,12 @@ object ExportOps {
     * The probe collects through `limit(maxRows + 1)` (r14 ADVICE: a
     * plain collect-then-check paid the full driver-heap cost of the
     * violation before failing): the driver never materializes more than
-    * maxRows + 1 rows, one job either way — and when the result is
-    * within contract, the limited collect IS the complete result. */
+    * maxRows + 1 rows — and when the result is within contract, the
+    * limited collect IS the complete result. It is not always one job: a
+    * limit at the root plans `CollectLimitExec`, whose `executeTake`
+    * scans one partition first and, while rows are still missing, runs
+    * another job over a scaled-up number of the remaining partitions
+    * (q65's read-back runs a 1-task job, then a 2-task one). */
   private[ops] def localize(df: DataFrame, maxRows: Int): DataFrame = {
     import scala.jdk.CollectionConverters._
     val rows = df.limit(maxRows + 1).collect()
@@ -264,7 +270,7 @@ object ExportOps {
     // as int and diverge from the oracle's VARCHAR. (A null/empty lang
     // would round-trip as __HIVE_DEFAULT_PARTITION__ → null; the documents
     // fixture guarantees non-empty lang codes.)
-    val summary = s.read.parquet(out.getAbsolutePath)
+    val summary = Tables.readParquet(s, out.getAbsolutePath)
       .groupBy(col("split").cast("string").as("split"),
         col("lang").cast("string").as("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
@@ -302,7 +308,7 @@ object ExportOps {
       .agg(transform(array_sort(collect_list(struct(col("dim"), col("c")))),
         e => e.getField("c")).as("centroid"))
       .write.mode(SaveMode.Overwrite).parquet(out.getAbsolutePath)
-    val index = s.read.parquet(out.getAbsolutePath)
+    val index = Tables.readParquet(s, out.getAbsolutePath)
     val queries = emb.filter(col("vec_id") < 16)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
     val w = Window.partitionBy(col("q_id"))
@@ -330,11 +336,11 @@ object ExportOps {
     withScratchCleanup(out) {
     new java.io.File(out, "in").mkdirs()
     stageTable(d, "documents", new java.io.File(out, "in"))
-    val schema = s.read.parquet(s"$d/documents.parquet").schema
+    val schema = Tables(s, d, "documents").schema
     val stream = s.readStream.schema(schema).parquet(s"$out/in")
     val q = streamingTrainingExport(stream, s"$out/data", s"$out/ckpt")
     try q.processAllAvailable() finally q.stop()
-    val summary = s.read.parquet(s"$out/data")
+    val summary = Tables.readParquet(s, s"$out/data")
       .groupBy(col("split").cast("string").as("split"),
         col("lang").cast("string").as("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
@@ -358,7 +364,7 @@ object ExportOps {
     val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(path).getLength
     val target = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    s.read.parquet(inDir).coalesce(target)
+    Tables.readParquet(s, inDir).coalesce(target)
       .write.mode(SaveMode.Overwrite).parquet(outDir)
     outDir
   }
@@ -375,7 +381,7 @@ object ExportOps {
       Tables(s, d, "documents").repartition(64)
         .write.parquet(s"$out/frag")
       compact(s, s"$out/frag", s"$out/compacted")
-      val summary = s.read.parquet(s"$out/compacted")
+      val summary = Tables.readParquet(s, s"$out/compacted")
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
       localizeAndDrop(summary, out, "lang")
@@ -462,7 +468,7 @@ object ExportOps {
   def serveCentroidRouting(s: SparkSession, dir: String,
                            queries: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val index = s.read.parquet(dir)
+    val index = Tables.readParquet(s, dir)
       .groupBy(col("label"))
       .agg(transform(array_sort(collect_list(struct(col("dim"),
         (col("s").cast("double") / col("n")).as("c")))),
@@ -536,7 +542,7 @@ object ExportOps {
     val out = scratchDir("graft_rsort", d)
     withScratchCleanup(out) {
       sortedExport(s, d, out.getAbsolutePath)
-      val back = s.read.parquet(out.getAbsolutePath)
+      val back = Tables.readParquet(s, out.getAbsolutePath)
         .select(col("doc_id"), col("lang"), col("score"))
       localizeAndDrop(back, out, "doc_id")
     }
@@ -860,7 +866,7 @@ object ExportOps {
         col("l_suppkey"),
         expr("CAST(floor(l_quantity * 100 + 0.5) AS BIGINT)"))),
         1, 15), 16, 10).cast("long") % 4294967296L)
-      val back = s.read.parquet(out.getAbsolutePath + "/z")
+      val back = Tables.readParquet(s, out.getAbsolutePath + "/z")
         .groupBy((col("l_orderkey") % 1024).as("bucket"))
         .agg(count(lit(1)).as("n"), sum(rowck).as("row_checksum"))
       localizeAndDrop(back, out, "bucket")
@@ -878,7 +884,7 @@ object ExportOps {
     * the data is billions, and every range-predicate scan consults it
     * first. */
   def statsManifest(s: SparkSession, dataDir: String): DataFrame =
-    s.read.parquet(dataDir)
+    Tables.readParquet(s, dataDir)
       .withColumn("file", input_file_name())
       .groupBy(col("file"))
       .agg(count(lit(1)).as("n_rows"),
@@ -904,13 +910,13 @@ object ExportOps {
       sortedExport(s, d, dataDir)
       statsManifest(s, dataDir)
         .write.mode(SaveMode.Overwrite).parquet(s"$out/manifest")
-      val manifest = s.read.parquet(s"$out/manifest")
-      val thr = s.read.parquet(dataDir)
+      val manifest = Tables.readParquet(s, s"$out/manifest")
+      val thr = Tables.readParquet(s, dataDir)
         .agg(max(col("score"))).head().getLong(0) * 3 / 4
       val keep = manifest.filter(col("score_max") >= thr)
         .select(col("file")).collect().map(_.getString(0))
       require(keep.nonEmpty, "manifest pruned every file")
-      val pruned = s.read.parquet(keep.toIndexedSeq: _*)
+      val pruned = Tables.readParquet(s, keep.toIndexedSeq)
         .filter(col("score") >= thr)
         .select(col("doc_id"), col("lang"), col("score"))
       localizeAndDrop(pruned, out, "doc_id")
@@ -934,7 +940,7 @@ object ExportOps {
     * probe re-filters exactly); absence proofs are exact. */
   def bloomManifest(s: SparkSession, dataDir: String, key: String): DataFrame = {
     graft.functions.GraftFunctions.registerAll(s)
-    val data = s.read.parquet(dataDir)
+    val data = Tables.readParquet(s, dataDir)
     val files = data.select(input_file_name()).distinct().count()
     val perFile = math.max(64L, data.count() / math.max(files, 1L))
     // optimal bits for fpp=0.01 at the per-file row count
@@ -988,9 +994,9 @@ object ExportOps {
     if (candidates.isEmpty)
       // every filter said no: an EXACT absence proof — zero files opened
       s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        s.read.parquet(dataDir).schema)
+        Tables.readParquet(s, dataDir).schema)
     else
-      s.read.parquet(candidates.toIndexedSeq: _*)
+      Tables.readParquet(s, candidates.toIndexedSeq)
         .filter(col(key).isin(keys: _*))
   }
 
@@ -1021,7 +1027,7 @@ object ExportOps {
         (b.getLong(0), b.getLong(1))
       }
       val keys = (0 to 4).map(i => mn + (mx - mn) * i / 4).distinct
-      val hit = bloomProbe(s, dataDir, s.read.parquet(s"$out/manifest"),
+      val hit = bloomProbe(s, dataDir, Tables.readParquet(s, s"$out/manifest"),
         "doc_id", keys)
       localizeAndDrop(hit, out, "doc_id")
     }
@@ -1199,7 +1205,7 @@ object ExportOps {
     val in = fs.open(p)
     val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
             finally in.close()
-    s.read.parquet(s"$root/v=$v")
+    Tables.readParquet(s, s"$root/v=$v")
   }
 
   /** e12: the versioned-publish cycle gated end-to-end — v1 lands a
@@ -1235,7 +1241,7 @@ object ExportOps {
                      violation: org.apache.spark.sql.Column): Boolean = {
     writeVersion(df, root, version)
     val s = df.sparkSession
-    val bad = s.read.parquet(s"$root/v=$version").filter(violation).count()
+    val bad = Tables.readParquet(s, s"$root/v=$version").filter(violation).count()
     if (bad == 0L) { flipLatest(s, root, version); true } else false
   }
 
@@ -1271,7 +1277,7 @@ object ExportOps {
     require(!fs.exists(dst),
       s"migration target $dstDir already exists — retire it explicitly first")
     val stage = new org.apache.hadoop.fs.Path(dstDir + ".stage")
-    s.read.parquet(srcDir)
+    Tables.readParquet(s, srcDir)
       .write.partitionBy(partCols: _*).parquet(stage.toString)
     if (!fs.rename(stage, dst))
       throw new java.io.IOException(s"layout publish failed for $dstDir")
@@ -1295,7 +1301,7 @@ object ExportOps {
         col("event_type"))
       ev.write.partitionBy("day").parquet(s"$out/v1")
       migrateLayout(s, s"$out/v1", s"$out/v2", Seq("day", "event_type"))
-      val back = s.read.parquet(s"$out/v2")
+      val back = Tables.readParquet(s, s"$out/v2")
         .groupBy(col("day").cast("string").as("day"),
           col("event_type").cast("string").as("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
@@ -1331,7 +1337,7 @@ object ExportOps {
       withConf(s, "spark.sql.sources.partitionOverwriteMode", "dynamic") {
         rewrite.write.mode("overwrite").partitionBy("p").parquet(snap)
       }
-      val back = s.read.parquet(snap)
+      val back = Tables.readParquet(s, snap)
         .select(col("k"), col("name"), col("bal"),
           col("p").cast("int").as("p"))
       localizeAndDrop(back, out, "k")
@@ -1393,9 +1399,9 @@ object ExportOps {
     * rows). */
   def newFilesSince(s: SparkSession, root: String,
                     from: Long, to: Long): Seq[String] = {
-    val cur = s.read.parquet(s"$root/manifest/v=$to")
+    val cur = Tables.readParquet(s, s"$root/manifest/v=$to")
     val prev = if (from <= 0L) cur.limit(0)
-               else s.read.parquet(s"$root/manifest/v=$from")
+               else Tables.readParquet(s, s"$root/manifest/v=$from")
     cur.except(prev).collect().map(_.getString(0)).toIndexedSeq.sorted
   }
 
@@ -1428,7 +1434,7 @@ object ExportOps {
       def consume(from: Long, to: Long): Unit = {
         val fresh = newFilesSince(s, root, from, to)
         require(fresh.nonEmpty, s"e18: no new files in snapshot $from -> $to")
-        s.read.parquet(fresh: _*)
+        Tables.readParquet(s, fresh)
           .groupBy(col("o_orderpriority"))
           .agg(count(lit(1)).as("n_orders"),
             sum(col("o_totalprice").cast("decimal(30,2)")).as("sum_price"))
@@ -1440,7 +1446,7 @@ object ExportOps {
       append(orders.filter(col("o_orderkey") % 3 === 0))
       commitSnapshot(s, root, 2L)
       consume(1L, 2L)
-      val served = s.read.parquet(s"$root/partials")
+      val served = Tables.readParquet(s, s"$root/partials")
         .groupBy(col("o_orderpriority"))
         .agg(sum(col("n_orders")).as("n_orders"),
           sum(col("sum_price")).cast("double").as("sum_price"))
@@ -1463,7 +1469,7 @@ object ExportOps {
     val data = new org.apache.hadoop.fs.Path(s"$root/data")
     val fs = data.getFileSystem(conf)
     val live = retained.flatMap(v =>
-      s.read.parquet(s"$root/manifest/v=$v")
+      Tables.readParquet(s, s"$root/manifest/v=$v")
         .collect().map(_.getString(0))).toSet
     val orphans = fs.listStatus(data).toSeq
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
@@ -1508,7 +1514,7 @@ object ExportOps {
       b2.write.mode(SaveMode.Append).parquet(s"$root/data")
       val removed = vacuum(s, root, Seq(2L))
       require(removed.nonEmpty, "e20: vacuum found no debris to remove")
-      val served = s.read.parquet(s"$root/data")
+      val served = Tables.readParquet(s, s"$root/data")
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"),
           sum(col("o_totalprice").cast("decimal(30,2)")).cast("double")

@@ -1530,7 +1530,7 @@ object Relational {
           .select(col("event_type"),
             explode(transform(col("bk"), e => e.getField("id"))).as("h"))
       sketch(ev.filter(!isDelta)).write.parquet(s"$out/sketch")
-      val standing = s.read.parquet(s"$out/sketch")
+      val standing = Tables.readParquet(s, s"$out/sketch")
       val merged = standing.unionByName(sketch(ev.filter(isDelta)))
         .groupBy(col("event_type"), col("h")).agg(count(lit(1)).as("nd"))
         .groupBy(col("event_type"))
@@ -1596,7 +1596,7 @@ object Relational {
         .select(col("day"),
           explode(transform(col("bk"), e => e.getField("id"))).as("h"))
         .write.parquet(s"$out/sketch")
-      val sk = s.read.parquet(s"$out/sketch")
+      val sk = Tables.readParquet(s, s"$out/sketch")
       def estCol(nk: org.apache.spark.sql.Column,
                  hk: org.apache.spark.sql.Column) =
         when(nk < KmvK, nk).otherwise(
@@ -2576,7 +2576,7 @@ object Relational {
           sum(col("o_totalprice").cast("decimal(30,2)")).as("revenue_dec"))
       viewAgg(a0.join(b0, col("o_custkey") === col("c_custkey")))
         .write.parquet(s"$out/v0")
-      val v0 = s.read.parquet(s"$out/v0")
+      val v0 = Tables.readParquet(s, s"$out/v0")
       val delta = viewAgg(da.join(b0.unionByName(db),
           col("o_custkey") === col("c_custkey")))
         .unionByName(viewAgg(a0.join(db,
@@ -2717,7 +2717,7 @@ object Relational {
       t(s, d, "orders")
         .withColumn("omonth", month(col("o_orderdate")))
         .write.partitionBy("omonth").parquet(s"$out/fact")
-      val fact = s.read.parquet(s"$out/fact")
+      val fact = Tables.readParquet(s, s"$out/fact")
       val res = seasonRevenue(fact, monthsDim(s)).orderBy("omonth")
       ExportOps.localizeAndDrop(res, out, "omonth")
     }
@@ -2796,7 +2796,7 @@ object Relational {
         .agg(count(lit(1)).as("n"),
           sum(col("l_quantity").cast("decimal(30,2)")).as("qty_dec"))
         .write.parquet(s"$out/base")
-      val base = s.read.parquet(s"$out/base")
+      val base = Tables.readParquet(s, s"$out/base")
       def roll(level: String, k1: org.apache.spark.sql.Column,
                k2: org.apache.spark.sql.Column,
                g: org.apache.spark.sql.RelationalGroupedDataset) =
@@ -2843,7 +2843,7 @@ object Relational {
           sum(col("l_quantity").cast("decimal(30,2)")).as("qty_dec"))
         .write.parquet(s"$out/mv")
       val defn = MatviewCatalog.define("lineitem_rf_ls",
-        base = t(s, d, "lineitem"), mv = s.read.parquet(s"$out/mv"),
+        base = t(s, d, "lineitem"), mv = Tables.readParquet(s, s"$out/mv"),
         dims = Set("l_returnflag", "l_linestatus"),
         partialOf = {
           case Count(Seq(Literal(1, _))) => Some("n")

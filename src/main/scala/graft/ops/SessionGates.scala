@@ -129,7 +129,7 @@ object SessionGates {
     // to the batch shuffle default; the harness holds it for the query's
     // whole (serial) lifetime and restores it before anything else runs.
     g.drainParquet(sessionAgg(stream))
-    val landed = s.read.parquet(g.data).filter(col("user_id") >= 0)
+    val landed = Tables.readParquet(s, g.data).filter(col("user_id") >= 0)
     g.localizeAndDrop(landed, "user_id", "session_start_ms")
     }
 
@@ -185,7 +185,7 @@ object SessionGates {
           org.apache.spark.sql.streaming.TimeMode.None(),
           org.apache.spark.sql.streaming.OutputMode.Append())
       g.drainParquet(emits.toDF())
-      g.localizeAndDrop(s.read.parquet(g.data), "event_type", "n_total")
+      g.localizeAndDrop(Tables.readParquet(s, g.data), "event_type", "n_total")
     }
 
   /** q85: CHAINED stateful aggregations in ONE streaming query — Spark
@@ -223,7 +223,7 @@ object SessionGates {
           unix_millis(col("window.start")).as("w_start_ms"),
           col("peak_minute"), col("active_minutes"), col("n_events"))
       g.drainParquet(tenMinute)
-      val landed = s.read.parquet(g.data).filter(col("user_id") >= 0)
+      val landed = Tables.readParquet(s, g.data).filter(col("user_id") >= 0)
       g.localizeAndDrop(landed, "user_id", "w_start_ms")
     }
 
@@ -293,7 +293,7 @@ object SessionGates {
       val joined = graft.streaming.EventStreams.purchasesWithClicks(stream)
       // StreamGate.shards() state stores per side per micro-batch
       g.drainParquet(joined)
-      val landed = s.read.parquet(g.data)
+      val landed = Tables.readParquet(s, g.data)
         .select(col("purchase_id"), col("uid"),
           unix_millis(col("purchase_ts")).as("purchase_ms"),
           col("click_id"), unix_millis(col("click_ts")).as("click_ms"))
@@ -323,7 +323,7 @@ object SessionGates {
           timestamp_millis(unix_millis(col("ts"))).as("ts"))
       g.drainParquet(graft.streaming.EventStreams
         .purchasesWithClicks(stream, joinType = "left_semi"))
-      val landed = s.read.parquet(g.data)
+      val landed = Tables.readParquet(s, g.data)
         .select(col("purchase_id"), col("uid"),
           unix_millis(col("purchase_ts")).as("purchase_ms"))
       g.localizeAndDrop(landed, "purchase_id")
@@ -429,7 +429,7 @@ object SessionGates {
           timestamp_millis(unix_millis(col("ts"))).as("ts"))
       g.drainParquet(graft.streaming.EventStreams
         .purchasesWithClicks(stream, joinType = joinType))
-      val landed = s.read.parquet(g.data)
+      val landed = Tables.readParquet(s, g.data)
         .filter(col("uid") >= 0) // drop the watermark sentinels
         .select(col("purchase_id"), col("uid"),
           unix_millis(col("purchase_ts")).as("purchase_ms"),
@@ -495,7 +495,7 @@ object SessionGates {
           timestamp_millis(unix_millis(col("ts"))).as("tsm"))
         .withWatermark("tsm", "10 minutes")
         .dropDuplicatesWithinWatermark("event_id"))
-      val landed = s.read.parquet(g.data)
+      val landed = Tables.readParquet(s, g.data)
         .select(col("event_id"), col("user_id"), col("event_type"),
           unix_millis(col("tsm")).as("ts_ms"))
       g.localizeAndDrop(landed, "event_id")
@@ -530,7 +530,7 @@ object SessionGates {
           Relational.mergePartitioned(s, snapDir, batch, Seq("name", "bal"))
           ()
         }, shards = None)(_.processAllAvailable())
-      val mergedSnap = s.read.parquet(snapDir)
+      val mergedSnap = Tables.readParquet(s, snapDir)
         .select(col("k"), col("name"), col("bal"),
           col("p").cast("int").as("p"))
       g.localizeAndDrop(mergedSnap, "k")
@@ -618,7 +618,7 @@ object SessionGates {
       // the sentinel user's own session never closes (nothing advances the
       // watermark past ITS timer) — by construction it cannot land; the
       // filter documents the contract rather than trusting it
-      val landed = s.read.parquet(g.data).filter(col("user_id") >= 0)
+      val landed = Tables.readParquet(s, g.data).filter(col("user_id") >= 0)
       g.localizeAndDrop(landed, "user_id", "session_start_ms")
     }
 
@@ -678,7 +678,7 @@ object SessionGates {
       }
       require(changelogs.nonEmpty,
         s"changelog checkpointing produced no .changelog files under ${g.ckpt}/state")
-      g.localizeAndDrop(s.read.parquet(g.data), "user_id", "n_events", "sum_cents")
+      g.localizeAndDrop(Tables.readParquet(s, g.data), "user_id", "n_events", "sum_cents")
     }
 
   /** q108: STATE-SCHEMA EVOLUTION across a restart — the upgrade story
@@ -783,7 +783,7 @@ object SessionGates {
       runOnce(1)
       g.arrive(after, "f1")
       val plan2 = runOnce(2)
-      val landed = s.read.parquet(g.data)
+      val landed = Tables.readParquet(s, g.data)
         .groupBy(col("dimv"), col("tier"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           count_distinct(col("user_id")).as("n_users"),
@@ -856,7 +856,7 @@ object SessionGates {
         .transformWithState(new graft.streaming.BootstrappedTotalsProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(),
           org.apache.spark.sql.streaming.OutputMode.Append(), init).toDF())
-      g.localizeAndDrop(s.read.parquet(g.data), "user_id", "n_events", "sum_cents")
+      g.localizeAndDrop(Tables.readParquet(s, g.data), "user_id", "n_events", "sum_cents")
     }
 
   /** q103: late REDELIVERY under sessionization — the composed ingest
@@ -908,7 +908,7 @@ object SessionGates {
         if (screened) ingest.dropDuplicatesWithinWatermark("event_id")
         else ingest
       g.drainParquet(sessionAgg(screenedStream.drop("event_id")))
-      val landed = s.read.parquet(g.data).filter(col("user_id") >= 0)
+      val landed = Tables.readParquet(s, g.data).filter(col("user_id") >= 0)
       g.localizeAndDrop(landed, "user_id", "session_start_ms")
     }
   }
@@ -983,7 +983,7 @@ object SessionGates {
         .select(unix_millis(col("window.start")).as("hour_start_ms"),
           col("n_pairs"), col("n_purchases"))
       g.drainParquet(hourly)
-      g.localizeAndDrop(s.read.parquet(g.data), "hour_start_ms")
+      g.localizeAndDrop(Tables.readParquet(s, g.data), "hour_start_ms")
     }
 
   /** q105: STREAMING in-flight observation — `Dataset.observe` on an
@@ -1023,7 +1023,7 @@ object SessionGates {
         .flatMap(p => Option(p.observedMetrics.get("ingest")))
         .map(r => (r.getAs[Long]("n_rows"),
           Option(r.getAs[Any]("sum_cents")).fold(0L)(_.asInstanceOf[Long])))
-      val landed = s.read.parquet(g.data).filter(col("user_id") >= 0)
+      val landed = Tables.readParquet(s, g.data).filter(col("user_id") >= 0)
       (g.localizeAndDrop(landed, "user_id", "session_start_ms"),
         observed.map(_._1).sum, observed.map(_._2).sum)
     }
@@ -1143,7 +1143,7 @@ object SessionGates {
       // sum_cents as the final key: when a user's two batch totals tie on
       // n_events, (user_id, n_events) alone leaves their relative order
       // undefined — a latent cross-engine hash flake the oracle mirrors
-      g.localizeAndDrop(s.read.parquet(g.data), "user_id", "n_events", "sum_cents")
+      g.localizeAndDrop(Tables.readParquet(s, g.data), "user_id", "n_events", "sum_cents")
     }
 
   /** q107: the LISTSTATE leg of `transformWithState`
@@ -1177,7 +1177,7 @@ object SessionGates {
           org.apache.spark.sql.streaming.TimeMode.None(),
           org.apache.spark.sql.streaming.OutputMode.Append())
       g.drainParquet(windows.toDF())
-      g.localizeAndDrop(s.read.parquet(g.data),
+      g.localizeAndDrop(Tables.readParquet(s, g.data),
         "user_id", "n_recent", "sum_cents_recent", "last_event_id")
     }
 

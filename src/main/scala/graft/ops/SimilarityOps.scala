@@ -700,8 +700,8 @@ object SimilarityOps {
     * and compaction pins. */
   private[graft] def v22ServeFrom(s: SparkSession, root: String,
       d: String): DataFrame = {
-    val codes = s.read.parquet(s"$root/codes")
-    val tomb = s.read.parquet(s"$root/tombstones")
+    val codes = Tables.readParquet(s, s"$root/codes")
+    val tomb = Tables.readParquet(s, s"$root/tombstones")
     hammingServe(s,
       codes.join(tomb, Seq("vec_id"), "left_anti"),
       emb(s, d).join(tomb, Seq("vec_id"), "left_anti"))
@@ -717,8 +717,8 @@ object SimilarityOps {
     * ones, never a missing table. Tombstones are only emptied AFTER the
     * promote: replaying compaction on the old codes is idempotent. */
   private[graft] def v22Compact(s: SparkSession, root: String): Unit = {
-    val live = s.read.parquet(s"$root/codes")
-      .join(s.read.parquet(s"$root/tombstones"), Seq("vec_id"), "left_anti")
+    val live = Tables.readParquet(s, s"$root/codes")
+      .join(Tables.readParquet(s, s"$root/tombstones"), Seq("vec_id"), "left_anti")
     live.write.mode("overwrite").parquet(s"$root/codes.next")
     val dir = new java.io.File(root)
     val old = new java.io.File(dir, "codes")
@@ -727,7 +727,7 @@ object SimilarityOps {
     require(old.renameTo(trash), "v22 compaction: retire of old codes failed")
     require(new java.io.File(dir, "codes.next").renameTo(old),
       "v22 compaction: promote failed — old codes intact in codes.trash")
-    val empty = s.read.parquet(s"$root/tombstones").limit(0)
+    val empty = Tables.readParquet(s, s"$root/tombstones").limit(0)
     empty.write.mode("overwrite").parquet(s"$root/tombstones")
     ExportOps.deleteRecursively(trash)
   }
@@ -766,7 +766,7 @@ object SimilarityOps {
       codebook.write.parquet(s"$root/codebook")
       pqEncode(vecs, codebook).write.parquet(s"$root/codes")
       val served = pqAdcServe(s, vecs,
-        s.read.parquet(s"$root/codebook"), s.read.parquet(s"$root/codes"))
+        Tables.readParquet(s, s"$root/codebook"), Tables.readParquet(s, s"$root/codes"))
       ExportOps.localizeAndDrop(served, out, "q_id", "rank")
     }
   }

@@ -1146,7 +1146,7 @@ object TextOps {
         .groupBy(col("source"), col("bin"))
         .agg(count(lit(1)).as("c"))
         .write.parquet(s"$out/sketch")
-      val standing = s.read.parquet(s"$out/sketch")
+      val standing = Tables.readParquet(s, s"$out/sketch")
       val delta = binned.filter(col("doc_id") % 2 =!= 0)
         .groupBy(col("source"), col("bin"))
         .agg(count(lit(1)).as("c"))

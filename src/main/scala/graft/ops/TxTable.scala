@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Tables
 
 /** Versioned-manifest commit protocol for parquet tables maintained by
   * staged swaps — the crash-safety layer under [[Relational.mergePartitioned]]
@@ -218,14 +219,14 @@ object TxTable {
                            rels: Seq[String]): DataFrame = {
     val files = rels.map(f => s"$root/$f")
     if (rels.forall(f => !f.contains("..")))
-      s.read.option("basePath", root).parquet(files: _*)
+      Tables.readParquet(s, files, Map("basePath" -> root))
     else if (rels.exists(hasPartitionDirs))
       throw new IllegalStateException(
         s"table $root mixes out-of-root manifest references with a " +
           s"directory-encoded partition layout: reading it without " +
           s"basePath would silently drop the partition columns. Re-clone " +
           s"with absolute references or from an unpartitioned source.")
-    else s.read.parquet(files: _*)
+    else Tables.readParquet(s, files)
   }
 
   /** A hive-style partition directory segment (`col=value/`) anywhere on
