@@ -33,7 +33,12 @@ object Bench {
     // scan/join/agg/window machinery) with one tiny scan per table plus a
     // few representative query shapes at sf0.001, so per-query timings
     // measure the query, not the first-touch JVM costs that otherwise land
-    // on whichever query happens to run first.
+    // on whichever query happens to run first. The warm-up's generated
+    // classes are still compiled when their gate runs only because the
+    // codegen cache holds the registry's working set
+    // (GraftSession.CodegenCacheEntries); at Spark's default of 100 entries
+    // they were evicted within about 100 compiles, so the warm-up paid for
+    // JIT and class loading but every gate compiled its classes again.
     graft.Tables.all.foreach { t =>
       try graft.Tables(spark, sfDir, t).limit(1).count()
       catch { case _: Throwable => }
@@ -225,7 +230,7 @@ object Bench {
         }
         s""""$name":{$body,"family":"$fam","shuffle_bytes":${
           metrics.shuffleBytes(name)},"rows_read":${metrics.rowsRead(name)
-          },"gc_ms":${metrics.gcMs(name)}}"""
+          },"gc_ms":${metrics.gcMs(name)},"compiles":${metrics.compiles(name)}}"""
       }.mkString("{", ",", "}")
       val json =
         s"""{"sf":"$sfDir","reps":$reps,"cpus":"$cpus",

@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
 import scala.collection.concurrent.TrieMap
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 
 /** Per-query physical-plan fingerprints for Bench: shuffle bytes written
@@ -17,6 +18,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * queries. Attribution is by active-query window — Bench runs queries
   * one at a time — which also captures streaming micro-batch jobs that
   * run on non-driver threads where job-group tags don't propagate.
+  * The same window counts the query's Janino compiles (driver- and
+  * task-side), from Spark's JVM-wide `CodegenMetrics` histogram.
   */
 final class BenchMetrics extends SparkListener {
   private val label = new AtomicReference[String](null)
@@ -24,6 +27,8 @@ final class BenchMetrics extends SparkListener {
     TrieMap.empty[String, (AtomicLong, AtomicLong, AtomicLong, AtomicLong)]
   private val jobsStarted = new AtomicLong
   private val jobsEnded = new AtomicLong
+  private val compilesAtStart = new AtomicLong
+  private val compileCounts = TrieMap.empty[String, Long]
 
   override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
     val name = label.get
@@ -50,8 +55,11 @@ final class BenchMetrics extends SparkListener {
     * caches already populated, which is the deterministic one. */
   def start(name: String): Unit = {
     acc.remove(name)
+    compilesAtStart.set(compiled())
     label.set(name)
   }
+
+  private def compiled(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   // streaming-harness classification, marked MECHANICALLY by a
   // StreamingQueryListener Bench registers (a gate that starts any
@@ -80,6 +88,8 @@ final class BenchMetrics extends SparkListener {
       if (jobsStarted.get == jobsEnded.get) stable += 1 else stable = 0
       Thread.sleep(5)
     }
+    val n = label.get
+    if (n != null) compileCounts.put(n, compiled() - compilesAtStart.get)
     label.set(null)
   }
 
@@ -91,4 +101,6 @@ final class BenchMetrics extends SparkListener {
     acc.get(name).map(_._3.get).getOrElse(0L)
   def gcMs(name: String): Long =
     acc.get(name).map(_._4.get).getOrElse(0L)
+  /** Classes generated code compiled in the query's last window. */
+  def compiles(name: String): Long = compileCounts.getOrElse(name, 0L)
 }

@@ -20,6 +20,10 @@ import org.apache.spark.sql.SparkSession
   *    driver-local relation (a localized gate result) sorts its rows on
   *    the driver instead of planning a range exchange over them (off
   *    with `spark.sql.optimizer.excludedRules`);
+  *  - a generated-class cache sized to the engine's working set
+  *    ([[CodegenCacheEntries]] entries instead of Spark's 100), so a gate
+  *    that runs again reuses its compiled classes instead of recompiling
+  *    them with Janino;
   *  - graft native functions registered for SQL use.
   *
   * Session-wide conf side effect to know about: [[Tables]] sets
@@ -62,6 +66,26 @@ object GraftSession {
     * schemes are untouched. */
   val LocalFsImpl: String = "graft.NioLocalFileSystem"
 
+  /** `spark.sql.codegen.cache.maxEntries`: how many generated classes
+    * Spark keeps compiled. `CodeGenerator` keys its LRU by (thread context
+    * classloader, source), and one source is compiled once on the driver
+    * and again under the executor's classloader, so a workload cycling
+    * through more keys than the cache holds recompiles nearly all of them
+    * on every pass. Spark's default of 100 is below even a 7-gate loop:
+    * the perfbench `batch` gates make 126 keys from 92 sources in one
+    * pass, and at 100 entries each warm pass Janino-compiled 106-111
+    * classes again (14-17 ms each on a C1-only JVM; 0 once they fit). One
+    * pass over all 317 gates at sf0.01 makes 4,616 keys, and about 850
+    * more per pass were new keys whatever the size; 8192 is the smallest
+    * power of two above both. The conf is static:
+    * `CodeGenerator`'s static initializer reads it once per JVM, from the
+    * session that is active when the first class is generated, so every
+    * session of the JVM has to come from this builder
+    * (`SessionBuilderScanSpec` pins that). Held classes cost heap and
+    * metaspace: a full-registry JVM held about 100 MB more heap and 30 MB
+    * more metaspace after two passes than at 100 entries. */
+  val CodegenCacheEntries: Int = 8192
+
   def builder(master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
               shufflePartitions: Int = Runtime.getRuntime.availableProcessors())
       : SparkSession.Builder =
@@ -75,6 +99,7 @@ object GraftSession {
       .config("spark.sql.optimizer.excludedRules", ExcludedOptimizerRules)
       .config("spark.sql.streaming.checkpointFileManagerClass", LocalCheckpointManager)
       .config("spark.hadoop.fs.file.impl", LocalFsImpl)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
       .withExtensions { e =>
         e.injectRuntimeOptimizerRule(plans.SingleTaskSort)
