@@ -23,7 +23,9 @@ import org.apache.spark.sql.SparkSession
   *  - a generated-class cache sized to the engine's working set
   *    ([[CodegenCacheEntries]] entries instead of Spark's 100), so a gate
   *    that runs again reuses its compiled classes instead of recompiling
-  *    them with Janino;
+  *    them with Janino; Spark's per-session artifact isolation is off
+  *    (graft adds no session artifacts), so the tasks of a streaming
+  *    query's cloned session reuse those classes too;
   *  - graft native functions registered for SQL use.
   *
   * Session-wide conf side effect to know about: [[Tables]] sets
@@ -75,9 +77,10 @@ object GraftSession {
     * the perfbench `batch` gates make 126 keys from 92 sources in one
     * pass, and at 100 entries each warm pass Janino-compiled 106-111
     * classes again (14-17 ms each on a C1-only JVM; 0 once they fit). One
-    * pass over all 317 gates at sf0.01 makes 4,616 keys, and about 850
-    * more per pass were new keys whatever the size; 8192 is the smallest
-    * power of two above both. The conf is static:
+    * pass over all 317 gates at sf0.01 makes 4,616 keys, and with artifact
+    * isolation on about 850 more per pass were new keys whatever the size
+    * (see [[streaming.StreamGate]]); 8192 is the smallest power of two
+    * above both. The conf is static:
     * `CodeGenerator`'s static initializer reads it once per JVM, from the
     * session that is active when the first class is generated, so every
     * session of the JVM has to come from this builder
@@ -100,6 +103,9 @@ object GraftSession {
       .config("spark.sql.streaming.checkpointFileManagerClass", LocalCheckpointManager)
       .config("spark.hadoop.fs.file.impl", LocalFsImpl)
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // one executor classloader for every session's tasks, so generated
+      // classes are reused across streaming runs (see streaming.StreamGate)
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       .withExtensions { e =>
         e.injectRuntimeOptimizerRule(plans.SingleTaskSort)
