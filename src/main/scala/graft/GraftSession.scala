@@ -74,19 +74,19 @@ object GraftSession {
     * and again under the executor's classloader, so a workload cycling
     * through more keys than the cache holds recompiles nearly all of them
     * on every pass. Spark's default of 100 is below even a 7-gate loop:
-    * the perfbench `batch` gates make 126 keys from 92 sources in one
-    * pass, and at 100 entries each warm pass Janino-compiled 106-111
-    * classes again (14-17 ms each on a C1-only JVM; 0 once they fit). One
-    * pass over all 317 gates at sf0.01 makes 4,616 keys, and with artifact
-    * isolation on about 850 more per pass were new keys whatever the size
-    * (see [[streaming.StreamGate]]); 8192 is the smallest power of two
-    * above both. The conf is static:
+    * the perfbench `batch` gates make 126 keys in one pass, and at 100
+    * entries every warm pass Janino-compiled about 115 of them again
+    * (14-17 ms each on a C1-only JVM); at this size a warm pass compiles
+    * 0-6. One pass over all 317 gates makes 4,616 keys at sf0.01 (plus
+    * about 800 per pass while artifact isolation was on, see
+    * [[streaming.StreamGate]]) and 3,547 at sf0.1 with Bench's warm-up;
+    * 8192 is the smallest power of two above that. The conf is static:
     * `CodeGenerator`'s static initializer reads it once per JVM, from the
     * session that is active when the first class is generated, so every
     * session of the JVM has to come from this builder
-    * (`SessionBuilderScanSpec` pins that). Held classes cost heap and
-    * metaspace: a full-registry JVM held about 100 MB more heap and 30 MB
-    * more metaspace after two passes than at 100 entries. */
+    * (`SessionBuilderScanSpec` pins that). Held classes cost memory: after
+    * one Bench run over the registry at sf0.1, heap after GC was 224 MB
+    * against 134 MB at 100 entries, and metaspace 259 MB against 235 MB. */
   val CodegenCacheEntries: Int = 8192
 
   def builder(master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",

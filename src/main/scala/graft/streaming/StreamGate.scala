@@ -27,17 +27,17 @@ import graft.ops.ExportOps
   * The sink, output mode, shard count, confs and arrival order stay the
   * gate's own; only the lifecycle lives here.
   *
-  * Generated code and restarts: each started query runs in a clone of the
-  * session, and under Spark's default artifact isolation each session's
-  * tasks run under an executor classloader of its own. `CodeGenerator`
-  * keys its cache by (thread context classloader, source), so with
-  * isolation on every run of a streaming gate compiled its task-side
-  * classes again from source text identical to the run before: q65 5 and
-  * e03 6 classes per run on the sf0.01 fixture, and over one registry
-  * pass at sf0.01 846 compiles that no cache size removed, led by q106
-  * (57), q100 (50) and q103 (30). [[graft.GraftSession.builder]] turns
-  * isolation off (graft adds no per-session artifacts), so all tasks share
-  * the executor's loader and a run reuses the classes of the run before. */
+  * Generated code: each started query runs in a clone of the session, and
+  * under Spark's default artifact isolation each session's tasks run under
+  * an executor classloader of its own. `CodeGenerator` keys its cache by
+  * (thread context classloader, source), so with isolation on every run of
+  * a streaming gate compiled its task-side classes again from source text
+  * identical to the run before: q65 5 and e03 6 classes per run on the
+  * sf0.01 fixture, and 629 per registry pass at sf0.01 over the 31
+  * streaming gates, led by q106 (57), q100 (50) and q103 (30), which no
+  * cache size removed. [[graft.GraftSession.builder]] turns isolation off
+  * (graft adds no per-session artifacts), so all tasks share the
+  * executor's loader; the same pass then recompiles 2. */
 final class StreamGate private (spark: SparkSession, val dir: java.io.File) {
   val in: String = s"$dir/in"
   val data: String = s"$dir/data"

@@ -211,6 +211,23 @@ def bench_compare(old_path, new_path):
     print("top carried regressions (queries >0.2s in old):")
     for r, q in regressions:
         print(f"  {q:32s} {om[q]:6.2f}s -> {nm[q]:6.2f}s  x{r:.2f}")
+
+    def compiles(b):
+        # per-gate Janino compile counts (artifacts since the field was added)
+        return {q: v["compiles"] for q, v in b.get("queries", {}).items()
+                if isinstance(v, dict) and "compiles" in v}
+
+    oc, nc = compiles(old), compiles(new)
+    if oc or nc:
+        def total(c, fam):
+            n = sum(v for q, v in c.items() if family(q) == fam)
+            return f"{n:6d}" if c else "     -"
+        print("compiles (Janino classes in each gate's last rep):")
+        for fam in ("batch", "streaming"):
+            print(f"  {fam:9s} old={total(oc, fam)} new={total(nc, fam)}")
+        print("  top gates in new: " + ", ".join(
+            f"{q} {n}" for n, q in sorted(((n, q) for q, n in nc.items()),
+                                          reverse=True)[:10]))
     return 0
 
 
