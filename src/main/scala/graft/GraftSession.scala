@@ -11,22 +11,18 @@ import org.apache.spark.sql.SparkSession
   *  - shuffle partitions sized to the machine locally (a cluster deployment
   *    overrides with cores×executors, or leaves AQE to coalesce);
   *  - UTC session time (oracle parity + sane event-time semantics);
-  *  - the AQE runtime rule [[plans.SingleTaskSort]]: a global sort whose
-  *    input is materialized shuffle stages of at most
-  *    `spark.sql.adaptive.coalescePartitions.minPartitionSize` bytes runs
-  *    as one local sort, without the range-sampling job and range shuffle
-  *    (off with `spark.sql.adaptive.optimizer.excludedRules`);
-  *  - the optimizer rule [[plans.LocalSort]]: a global sort over a
-  *    driver-local relation (a localized gate result) sorts its rows on
-  *    the driver instead of planning a range exchange over them (off
-  *    with `spark.sql.optimizer.excludedRules`);
+  *  - everything graft adds to Spark — native SQL functions, optimizer
+  *    rules ([[plans.SingleTaskSort]], [[plans.LocalSort]],
+  *    [[plans.MatviewRewrite]]), the as-of join strategy and the DEDUP
+  *    parser — applied once at construction from the one list in
+  *    [[GraftExtensions]], so `newSession()` and streaming clones carry
+  *    them too;
   *  - a generated-class cache sized to the engine's working set
   *    ([[CodegenCacheEntries]] entries instead of Spark's 100), so a gate
   *    that runs again reuses its compiled classes instead of recompiling
   *    them with Janino; Spark's per-session artifact isolation is off
   *    (graft adds no session artifacts), so the tasks of a streaming
-  *    query's cloned session reuse those classes too;
-  *  - graft native functions registered for SQL use.
+  *    query's cloned session reuse those classes too.
   *
   * Session-wide conf side effect to know about: [[Tables]] sets
   * `spark.sql.legacy.parquet.nanosAsLong=true` (and leaves it set) the
@@ -107,65 +103,11 @@ object GraftSession {
       // classes are reused across streaming runs (see streaming.StreamGate)
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
-      .withExtensions { e =>
-        e.injectRuntimeOptimizerRule(plans.SingleTaskSort)
-        e.injectOptimizerRule(plans.LocalSort)
-      }
+      .withExtensions(new GraftExtensions)
 
   def getOrCreate(): SparkSession = {
     val spark = builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    functions.GraftFunctions.registerAll(spark)
     spark
-  }
-
-  @volatile private var extCache: SparkSession = _
-
-  /** A SparkSession on the SAME SparkContext as `base` with
-    * [[GraftExtensions]] applied (functions + optimizer rule + the
-    * GraftSqlParser syntax extension). Extensions bind at session
-    * CONSTRUCTION, so a pre-existing session can't gain a parser; this
-    * clears the active/default session registration, lets getOrCreate
-    * build a fresh session over the existing context, and restores
-    * `base` — callers keep their session, the returned one carries the
-    * extensions. Cached per JVM (sessions are not free: each holds a
-    * SessionState); the cache is re-keyed if the context was stopped.
-    * Session-scoped SQL confs do NOT inherit across sessions, so the
-    * tuned shuffle/timeZone/excludedRules are copied from `base`.
-    *
-    * CONCURRENCY CONTRACT: the clear→build→restore window is atomic only
-    * against other `extensionSession` callers (this lock). A concurrent
-    * thread resolving `SparkSession.active`/`builder().getOrCreate()`
-    * during the window can observe a missing or different default
-    * session — there is no public API to construct an extension-bearing
-    * session without going through the global builder (the constructor
-    * is private; `spark.sql.extensions` is static and can't bind to a
-    * live context). Callers must therefore not race this against
-    * concurrent session resolution; in practice the window opens at most
-    * once per JVM (the result is cached) and the gate harness runs
-    * queries sequentially. */
-  def extensionSession(base: SparkSession): SparkSession = synchronized {
-    if (extCache != null && !extCache.sparkContext.isStopped &&
-        (extCache.sparkContext eq base.sparkContext)) return extCache
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val ext =
-      // withExtensions, not the spark.sql.extensions conf: the conf is
-      // STATIC (read from the SparkContext at session build), so it can't
-      // take effect on a pre-existing context — the programmatic hook can
-      try SparkSession.builder()
-        .withExtensions(new GraftExtensions()(_))
-        .config("spark.sql.shuffle.partitions",
-          base.conf.get("spark.sql.shuffle.partitions"))
-        .config("spark.sql.session.timeZone",
-          base.conf.get("spark.sql.session.timeZone"))
-        .config("spark.sql.optimizer.excludedRules", ExcludedOptimizerRules)
-        .getOrCreate()
-      finally {
-        SparkSession.setDefaultSession(base)
-        SparkSession.setActiveSession(base)
-      }
-    extCache = ext
-    ext
   }
 }

@@ -17,7 +17,6 @@ object Prof {
     val s = GraftSession.builder(master = "local[32]", shufflePartitions = 32)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    functions.GraftFunctions.registerAll(s)
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val script = if (args.length > 1) args(1) else "t30"
     import org.apache.spark.sql.functions._

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -66,9 +67,5 @@ case class CharTrigrams(child: Expression)
 }
 
 object CharTrigrams {
-  def apply(spark: SparkSession, text: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_char_trigrams", exprs => CharTrigrams(exprs.head), "scala_udf")
-    org.apache.spark.sql.functions.call_function("graft_char_trigrams", text)
-  }
+  def apply(text: Column): Column = column(CharTrigrams(expression(text)))
 }

@@ -8,10 +8,11 @@ import org.apache.spark.sql.catalyst.expressions._
 /** SQL registration for the engine's native expressions, so
   * `spark.sql("SELECT graft_cosine_sim(a, b) ...")` works like any builtin.
   *
-  * Two deployment routes:
-  *  - [[GraftFunctions.registerAll]] on an existing session (tests, REPL);
-  *  - `--conf spark.sql.extensions=graft.GraftExtensions` at session build
-  *    (cluster deployment) via [[graft.GraftExtensions]].
+  * One deployment route: [[graft.GraftExtensions]] injects [[descriptions]]
+  * when a session is constructed (by [[graft.GraftSession.builder]], or on
+  * a cluster by `--conf spark.sql.extensions=graft.GraftExtensions`).
+  * [[registerAll]] stays for callers outside the engine that hold a
+  * session built some other way; no engine code calls it.
   */
 object GraftFunctions {
 

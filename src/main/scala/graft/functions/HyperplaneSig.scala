@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -113,14 +114,8 @@ object HyperplaneSigExact {
         .map(v => if (v < 0) (-1).toByte else 1.toByte).toArray)
     })
 
-  /** Column form via a registered builder (the [[ShingleHashes]] pattern,
-    * one function name per operating point). */
-  def hyperplaneSig(spark: SparkSession, v: Column, planes: Int = 16,
-                    dim: Int = 64, seed: Long = 42L): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"graft_hp_sig_${planes}_${dim}_$seed",
-      exprs => HyperplaneSigExact(exprs.head, planes, dim, seed), "scala_udf")
-    org.apache.spark.sql.functions.call_function(
-      s"graft_hp_sig_${planes}_${dim}_$seed", v)
-  }
+  /** Column form at one (planes, dim, seed) operating point. */
+  def hyperplaneSig(v: Column, planes: Int = 16, dim: Int = 64,
+                    seed: Long = 42L): Column =
+    column(HyperplaneSigExact(expression(v), planes, dim, seed))
 }

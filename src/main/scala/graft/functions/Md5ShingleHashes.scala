@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -135,14 +136,7 @@ object Md5ShingleHashes {
     if (w == out.length) out else java.util.Arrays.copyOf(out, w)
   }
 
-  /** Column form via a registered builder (the [[ShingleHashes]] pattern,
-    * one function name per (k, hexChars) operating point). */
-  def md5ShingleHashes(spark: SparkSession, text: Column,
-                       k: Int = 3, hexChars: Int = 7): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"graft_md5_shingles_${k}_$hexChars",
-      exprs => Md5ShingleHashes(exprs.head, k, hexChars), "scala_udf")
-    org.apache.spark.sql.functions.call_function(
-      s"graft_md5_shingles_${k}_$hexChars", text)
-  }
+  /** Column form at one (k, hexChars) operating point. */
+  def md5ShingleHashes(text: Column, k: Int = 3, hexChars: Int = 7): Column =
+    column(Md5ShingleHashes(expression(text), k, hexChars))
 }

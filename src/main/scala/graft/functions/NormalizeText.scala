@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -61,10 +62,7 @@ object NormalizeText {
     sb.toString.toLowerCase(java.util.Locale.ROOT)
   }
 
-  /** Column-level entry point (registers `graft_normalize`, idempotent). */
-  def normalizeText(spark: org.apache.spark.sql.SparkSession, text: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_normalize", exprs => NormalizeText(exprs.head), "scala_udf")
-    org.apache.spark.sql.functions.call_function("graft_normalize", text)
-  }
+  /** Column-level entry point (SQL: `graft_normalize`). */
+  def normalizeText(text: Column): Column =
+    column(NormalizeText(expression(text)))
 }

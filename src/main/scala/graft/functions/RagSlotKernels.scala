@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -92,13 +93,8 @@ object Md5TokenSlotHashes {
     out
   }
 
-  def apply(spark: SparkSession, text: Column, slots: Int): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"graft_md5_token_slots_$slots",
-      exprs => Md5TokenSlotHashes(exprs.head, slots), "scala_udf")
-    org.apache.spark.sql.functions.call_function(
-      s"graft_md5_token_slots_$slots", text)
-  }
+  def apply(text: Column, slots: Int): Column =
+    column(Md5TokenSlotHashes(expression(text), slots))
 }
 
 /** Fixed-width histogram of an `array<long>` of slot ids: element `j` of
@@ -141,11 +137,6 @@ case class SlotHistogram(child: Expression, slots: Int)
 }
 
 object SlotHistogram {
-  def apply(spark: SparkSession, hs: Column, slots: Int): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"graft_slot_histogram_$slots",
-      exprs => SlotHistogram(exprs.head, slots), "scala_udf")
-    org.apache.spark.sql.functions.call_function(
-      s"graft_slot_histogram_$slots", hs)
-  }
+  def apply(hs: Column, slots: Int): Column =
+    column(SlotHistogram(expression(hs), slots))
 }

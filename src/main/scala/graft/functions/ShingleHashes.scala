@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -107,10 +108,6 @@ object ShingleHashes {
     if (w == out.length) out else java.util.Arrays.copyOf(out, w)
   }
 
-  def shingleHashes(spark: SparkSession, text: Column, k: Int = 3): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"graft_shingle_hashes_$k",
-      exprs => ShingleHashes(exprs.head, k), "scala_udf")
-    org.apache.spark.sql.functions.call_function(s"graft_shingle_hashes_$k", text)
-  }
+  def shingleHashes(text: Column, k: Int = 3): Column =
+    column(ShingleHashes(expression(text), k))
 }

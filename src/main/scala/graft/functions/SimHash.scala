@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -82,12 +83,7 @@ object SimHash64 {
     out
   }
 
-  /** Column-level entry point: registers `graft_simhash64` in the session's
-    * function registry (idempotent) and invokes it — the public route from
-    * a custom Expression to a Column. */
-  def simhash64(spark: org.apache.spark.sql.SparkSession, tokenHashes: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash64", exprs => SimHash64(exprs.head), "scala_udf")
-    org.apache.spark.sql.functions.call_function("graft_simhash64", tokenHashes)
-  }
+  /** Column-level entry point (SQL: `graft_simhash64`). */
+  def simhash64(tokenHashes: Column): Column =
+    column(SimHash64(expression(tokenHashes)))
 }

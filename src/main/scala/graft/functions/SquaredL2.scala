@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -79,9 +80,6 @@ case class SquaredL2(left: Expression, right: Expression)
 }
 
 object SquaredL2 {
-  def apply(spark: SparkSession, a: Column, b: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_squared_l2", exprs => SquaredL2(exprs(0), exprs(1)), "scala_udf")
-    org.apache.spark.sql.functions.call_function("graft_squared_l2", a, b)
-  }
+  def apply(a: Column, b: Column): Column =
+    column(SquaredL2(expression(a), expression(b)))
 }

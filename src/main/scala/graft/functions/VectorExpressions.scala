@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
@@ -159,18 +160,11 @@ object MinHashSignature {
   }
 }
 
-/** Column-level entry points (registered per session, like SimHash64). */
+/** Column-level entry points: the expressions over Column arguments. */
 object VectorExpressions {
-  def cosineSim(spark: SparkSession, a: Column, b: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
-    org.apache.spark.sql.functions.call_function("graft_cosine_sim", a, b)
-  }
+  def cosineSim(a: Column, b: Column): Column =
+    column(CosineSimilarity(expression(a), expression(b)))
 
-  def minhash(spark: SparkSession, tokenHashes: Column, numHashes: Int = 64): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"graft_minhash_$numHashes",
-      exprs => MinHashSignature(exprs.head, numHashes), "scala_udf")
-    org.apache.spark.sql.functions.call_function(s"graft_minhash_$numHashes", tokenHashes)
-  }
+  def minhash(tokenHashes: Column, numHashes: Int = 64): Column =
+    column(MinHashSignature(expression(tokenHashes), numHashes))
 }

@@ -248,13 +248,13 @@ object Multimodal {
   private def m07(s: SparkSession, d: String): DataFrame = {
     val media = mediaTable(s, d)
       .select(col("doc_id"),
-        graft.ops.TextOps.docSlotEmbed(s, col("media").cast("string")).as("iv"))
+        graft.ops.TextOps.docSlotEmbed(col("media").cast("string")).as("iv"))
     val pairs = Tables(s, d, "documents").select(col("doc_id"),
       when(col("doc_id") % 5 === 0, col("doc_id") + 1)
         .otherwise(col("doc_id")).as("cap_src"))
     val captions = Tables(s, d, "documents").select(
       col("doc_id").as("cap_src"),
-      graft.ops.TextOps.docSlotEmbed(s, col("text")).as("cv"))
+      graft.ops.TextOps.docSlotEmbed(col("text")).as("cv"))
     pairs.join(media, "doc_id").join(captions, "cap_src")
       .withColumn("dot", aggregate(
         zip_with(col("iv"), col("cv"), (x, y) => x * y),
@@ -324,10 +324,10 @@ object Multimodal {
       .select(col("doc_id")).distinct()
       .withColumn("is_dup", lit(true))
     val iv = clean.select(col("doc_id"),
-      graft.ops.TextOps.docSlotEmbed(s, col("media").cast("string")).as("iv"))
+      graft.ops.TextOps.docSlotEmbed(col("media").cast("string")).as("iv"))
     val caps = Tables(s, d, "documents").select(
       col("doc_id").as("cap_src"),
-      graft.ops.TextOps.docSlotEmbed(s, col("text")).as("cv"))
+      graft.ops.TextOps.docSlotEmbed(col("text")).as("cv"))
     val aligned = iv
       .withColumn("cap_src",
         when(col("doc_id") % 5 === 0, col("doc_id") + 1)

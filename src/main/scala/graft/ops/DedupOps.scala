@@ -85,8 +85,7 @@ object DedupOps {
   def minhashSignatures(s: SparkSession, df: DataFrame, numHashes: Int = 64): DataFrame =
     df.select(col("doc_id"),
       graft.functions.VectorExpressions.minhash(
-        s, graft.functions.ShingleHashes.shingleHashes(s, col("text")),
-        numHashes).as("minhash"))
+        graft.functions.ShingleHashes.shingleHashes(col("text")), numHashes).as("minhash"))
 
   /** LSH banding: split the signature into `bands` bands of `rows` values,
     * hash each band, and emit (band_idx, band_hash, doc_id). Docs sharing
@@ -148,8 +147,8 @@ object DedupOps {
   private def simhashFrame(s: SparkSession, d: String): DataFrame =
     docs(s, d)
       .select(col("doc_id"),
-        simhash64(s, graft.functions.Md5ShingleHashes
-          .md5ShingleHashes(s, col("text"), k = 3, hexChars = 15))
+        simhash64(graft.functions.Md5ShingleHashes
+          .md5ShingleHashes(col("text"), k = 3, hexChars = 15))
           .as("simhash"))
 
   /** Exact n-gram Jaccard verification of MinHash candidates at the
@@ -252,14 +251,14 @@ object DedupOps {
   def shingleHashFrame(df: DataFrame): DataFrame =
     df.select(col("doc_id"),
       graft.functions.Md5ShingleHashes
-        .md5ShingleHashes(df.sparkSession, col("text")).as("hv"))
+        .md5ShingleHashes(col("text")).as("hv"))
 
   /** The 4-gram-grain twin of [[shingleHashFrame]] (d05's operating
     * point): same 28-bit md5 identities over 4-word shingles. */
   private def shingleHashFrame4(df: DataFrame): DataFrame =
     df.select(col("doc_id"),
       graft.functions.Md5ShingleHashes
-        .md5ShingleHashes(df.sparkSession, col("text"), k = 4).as("hv"))
+        .md5ShingleHashes(col("text"), k = 4).as("hv"))
 
   private def withShingleHashes(s: SparkSession, d: String): DataFrame =
     shingleHashFrame(docs(s, d))
@@ -402,7 +401,7 @@ object DedupOps {
     val sh = cachedShared(docs(s, d)
       .select(col("source"),
         explode(graft.functions.Md5ShingleHashes
-          .md5ShingleHashes(s, col("text"), k = 3, hexChars = 15)).as("h"))
+          .md5ShingleHashes(col("text"), k = 3, hexChars = 15)).as("h"))
       .distinct())
     val counts = sh.groupBy(col("source")).agg(count(lit(1)).as("n"))
     val shared = sh.as("a").join(sh.as("b"),
@@ -1078,8 +1077,6 @@ object DedupOps {
     * (4M / 64M-bit defaults) — raise those confs for a 100 TB index, or
     * the fpp degrades gracefully (never incorrectly). */
   def bloomScreen(incoming: DataFrame, existing: DataFrame): DataFrame = {
-    val s = incoming.sparkSession
-    graft.functions.GraftFunctions.registerAll(s)
     val ex = cached(existing.select(col("th")).distinct())
     val n = math.max(ex.count(), 1L)
     // optimal bit count for fpp=0.01 (the standard -n·ln p / ln²2 formula)
@@ -1934,7 +1931,6 @@ object DedupOps {
     * reference (no `cached()` seam), so the DataFrame form stays the
     * scale path; this gates the SURFACE, not a second engine. */
   private def c03(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     docs(s, d).createOrReplaceTempView("documents")
     s.sql(raw"""
       |WITH hv AS (

@@ -315,8 +315,7 @@ object ExportOps {
       .orderBy(col("cos").desc, col("label").asc)
     val served = queries.crossJoin(broadcast(index))
       .select(col("q_id"), col("label"),
-        graft.functions.VectorExpressions.cosineSim(
-          s, col("q_vec"), col("centroid")).as("cos"))
+        graft.functions.VectorExpressions.cosineSim(col("q_vec"), col("centroid")).as("cos"))
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("q_id"), col("label"), round(col("cos"), 4).as("cos"))
       .orderBy("q_id")
@@ -477,8 +476,7 @@ object ExportOps {
       .orderBy(col("cos").desc, col("label").asc)
     queries.crossJoin(broadcast(index))
       .select(col("q_id"), col("label"),
-        graft.functions.VectorExpressions.cosineSim(
-          s, col("q_vec"), col("centroid")).as("cos"))
+        graft.functions.VectorExpressions.cosineSim(col("q_vec"), col("centroid")).as("cos"))
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("q_id"), col("label"), round(col("cos"), 4).as("cos"))
       .orderBy("q_id")
@@ -939,7 +937,6 @@ object ExportOps {
     * all of them. False positives only ever ADD candidate files (the
     * probe re-filters exactly); absence proofs are exact. */
   def bloomManifest(s: SparkSession, dataDir: String, key: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val data = Tables.readParquet(s, dataDir)
     val files = data.select(input_file_name()).distinct().count()
     val perFile = math.max(64L, data.count() / math.max(files, 1L))
@@ -963,7 +960,6 @@ object ExportOps {
     * — BloomManifestPlanSpec pins that no bloom bytes reach the result. */
   def bloomCandidateFrame(manifest: DataFrame, hashes: Seq[Long]): DataFrame = {
     val s = manifest.sparkSession
-    graft.functions.GraftFunctions.registerAll(s)
     import s.implicits._
     manifest.join(broadcast(hashes.toDF("h")),
         call_function("graft_bloom_probe", col("bloom"), col("h")),

@@ -998,7 +998,6 @@ object Relational {
     * value equality; the DuckDB window oracle hash-matches the
     * content. */
   private def q129(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s) // idempotent
     t(s, d, "orders")
       .select(col("o_custkey"),
         expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)").as("cents"),
@@ -1027,7 +1026,6 @@ object Relational {
     * ObjectHashAggregate plan, partial aggregation, and partitioning
     * invariance. */
   private def q125(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s) // idempotent
     t(s, d, "events")
       .select(col("event_type"),
         expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
@@ -1513,7 +1511,6 @@ object Relational {
     * pins). q31 keeps the engine-native HLL++ form; q64 is the exact
     * twin. */
   private def q63(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s) // idempotent
     val out = ExportOps.scratchDir("graft_kmv", d)
     ExportOps.withScratchCleanup(out) {
       val ev = t(s, d, "events")
@@ -1582,7 +1579,6 @@ object Relational {
     * Q146RetentionSpec pins that) as well as the estimator regime at the
     * bench SF (~1.5k DAU; accuracy pinned in the same spec). */
   private def q146(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s) // idempotent
     val out = ExportOps.scratchDir("graft_kmv_ret", d)
     ExportOps.withScratchCleanup(out) {
       val ev = t(s, d, "events").select(
@@ -2829,7 +2825,7 @@ object Relational {
     * non-covered queries don't). At 100 TB the rewritten scan is KB-scale
     * metadata where the original is the full fact table. */
   private def q109(s: SparkSession, d: String): DataFrame = {
-    import graft.plans.{MatviewCatalog, MatviewRewrite}
+    import graft.plans.MatviewCatalog
     import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, Literal}
     import org.apache.spark.sql.catalyst.expressions.aggregate.{Count, Sum => CSum}
     import org.apache.spark.sql.types.DecimalType
@@ -2852,7 +2848,6 @@ object Relational {
             Some("qty_dec")
           case _ => None
         })
-      MatviewRewrite.attach(s)
       MatviewCatalog.register(defn)
       try {
         // the USER-side queries: raw-table aggregates at three grains

@@ -57,8 +57,7 @@ object SimilarityOps {
     val sims = corpus.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
-        graft.functions.VectorExpressions.cosineSim(
-          s, col("q_vec"), col("embedding")).as("cos"))
+        graft.functions.VectorExpressions.cosineSim(col("q_vec"), col("embedding")).as("cos"))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("n_id").asc)
     sims.withColumn("rank", row_number().over(w))
@@ -114,7 +113,7 @@ object SimilarityOps {
     val bw = bandWidth(emb(s, d).count())
     val corpus = emb(s, d)
       .withColumn("sig", graft.functions.HyperplaneSigExact
-        .hyperplaneSig(s, col("embedding"), planes = 32))
+        .hyperplaneSig(col("embedding"), planes = 32))
     val banded = corpus.select(col("vec_id"),
       posexplode(array(bandCols(col("sig"), bw): _*)))
       .withColumnRenamed("pos", "band_idx").withColumnRenamed("col", "band")
@@ -133,8 +132,7 @@ object SimilarityOps {
       .join(broadcast(qv.filter(col("q_id") < NumQueries)), "q_id")
       .join(nv, "n_id") // corpus-sized side: shuffle equi-join, never broadcast
       .select(col("q_id"), col("n_id"),
-        graft.functions.VectorExpressions.cosineSim(
-          s, col("q_vec"), col("n_vec")).as("cos"))
+        graft.functions.VectorExpressions.cosineSim(col("q_vec"), col("n_vec")).as("cos"))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("n_id").asc)
     candidates.withColumn("rank", row_number().over(w))
@@ -154,7 +152,7 @@ object SimilarityOps {
     val bw = bandWidth(emb(s, d).count())
     val vecs = emb(s, d)
       .withColumn("sig", graft.functions.HyperplaneSigExact
-        .hyperplaneSig(s, col("embedding"), planes = 32))
+        .hyperplaneSig(col("embedding"), planes = 32))
     val banded = vecs.select(col("vec_id"), col("embedding"),
       posexplode(array(bandCols(col("sig"), bw): _*)))
       .withColumnRenamed("pos", "band_idx").withColumnRenamed("col", "band")
@@ -175,8 +173,7 @@ object SimilarityOps {
     val vb = vecs.select(col("vec_id").as("id_b"), col("embedding").as("v_b"))
     pairs.join(va, "id_a").join(vb, "id_b")
       .select(col("id_a"), col("id_b"),
-        round(graft.functions.VectorExpressions.cosineSim(
-          s, col("v_a"), col("v_b")), 4).as("cos"))
+        round(graft.functions.VectorExpressions.cosineSim(col("v_a"), col("v_b")), 4).as("cos"))
       .filter(col("cos") >= 0.4) // fixtures are random unit-ish vectors: the
       // max pairwise cosine is ~0.48-0.60 across SFs, so 0.4 marks the
       // "suspiciously similar" tail while keeping output non-empty
@@ -200,8 +197,7 @@ object SimilarityOps {
       .filter(col("vec_id") =!= col("q_id") && col("label") =!= col("q_label"))
       .select(col("q_id"), col("vec_id").as("neg_id"),
         col("label").as("neg_label"),
-        graft.functions.VectorExpressions.cosineSim(
-          s, col("q_vec"), col("embedding")).as("cos"))
+        graft.functions.VectorExpressions.cosineSim(col("q_vec"), col("embedding")).as("cos"))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("neg_id").asc)
     sims.withColumn("rank", row_number().over(w))
@@ -231,7 +227,7 @@ object SimilarityOps {
     val nProbe = 4
     val vecs = emb(s, d)
       .withColumn("cell",
-        graft.functions.HyperplaneSigExact.hyperplaneSig(s, col("embedding"))
+        graft.functions.HyperplaneSigExact.hyperplaneSig(col("embedding"))
           .bitwiseAND(lit(0xFL)))
     // distributed centroid: explode dims, average per (cell, pos),
     // reassemble. The mean is a DECIMAL(30,12) sum over count (v18's
@@ -250,8 +246,7 @@ object SimilarityOps {
     // route queries to their nProbe nearest cells
     val routing = queries.crossJoin(broadcast(centroids))
       .select(col("q_id"), col("q_vec"), col("cell"),
-        graft.functions.VectorExpressions.cosineSim(
-          s, col("q_vec"), col("centroid")).as("cell_sim"))
+        graft.functions.VectorExpressions.cosineSim(col("q_vec"), col("centroid")).as("cell_sim"))
     val wCell = Window.partitionBy(col("q_id"))
       .orderBy(col("cell_sim").desc, col("cell").asc)
     val probed = routing.withColumn("cr", row_number().over(wCell))
@@ -261,8 +256,7 @@ object SimilarityOps {
     val cands = vecs.join(broadcast(probed), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
-        graft.functions.VectorExpressions.cosineSim(
-          s, col("q_vec"), col("embedding")).as("cos"))
+        graft.functions.VectorExpressions.cosineSim(col("q_vec"), col("embedding")).as("cos"))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("n_id").asc)
     cands.withColumn("rank", row_number().over(w))
@@ -285,8 +279,7 @@ object SimilarityOps {
     val b = vecs.select(col("vec_id").as("id_b"), col("embedding").as("v_b"))
     a.join(broadcast(b), col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        round(graft.functions.VectorExpressions.cosineSim(
-          s, col("v_a"), col("v_b")), 4).as("cos"))
+        round(graft.functions.VectorExpressions.cosineSim(col("v_a"), col("v_b")), 4).as("cos"))
       .filter(col("cos") >= 0.4)
       .orderBy("id_a", "id_b")
   }
@@ -314,8 +307,7 @@ object SimilarityOps {
                           centroids: DataFrame): DataFrame =
     vecs.crossJoin(broadcast(centroids))
       .select(col("vec_id"), col("embedding"), col("cell"),
-        graft.functions.VectorExpressions.cosineSim(
-          s, col("embedding"), col("centroid")).as("cos"))
+        graft.functions.VectorExpressions.cosineSim(col("embedding"), col("centroid")).as("cos"))
       .groupBy(col("vec_id"))
       .agg(min(struct((-col("cos")).as("nc"), col("cell"))).getField("cell")
         .as("cell"))
@@ -361,8 +353,7 @@ object SimilarityOps {
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
     val routing = queries.crossJoin(broadcast(centroids))
       .select(col("q_id"), col("q_vec"), col("cell"),
-        graft.functions.VectorExpressions.cosineSim(
-          s, col("q_vec"), col("centroid")).as("cell_sim"))
+        graft.functions.VectorExpressions.cosineSim(col("q_vec"), col("centroid")).as("cell_sim"))
     val wCell = Window.partitionBy(col("q_id"))
       .orderBy(col("cell_sim").desc, col("cell").asc)
     val probed = routing.withColumn("cr", row_number().over(wCell))
@@ -371,8 +362,7 @@ object SimilarityOps {
     val cands = assigned.join(broadcast(probed), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
-        graft.functions.VectorExpressions.cosineSim(
-          s, col("q_vec"), col("embedding")).as("cos"))
+        graft.functions.VectorExpressions.cosineSim(col("q_vec"), col("embedding")).as("cos"))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("n_id").asc)
     cands.withColumn("rank", row_number().over(w))
@@ -538,9 +528,9 @@ object SimilarityOps {
     * `aggregate(zip_with(a, b, (x,y) -> (x-y)*(x-y)), 0.0, (acc,e) ->
     * acc + e)` the oracles replay (SquaredL2Spec pins it, element order
     * and null semantics included). */
-  private def pqL2sq(s: SparkSession, a: org.apache.spark.sql.Column,
+  private def pqL2sq(a: org.apache.spark.sql.Column,
                      b: org.apache.spark.sql.Column) =
-    graft.functions.SquaredL2(s, a, b)
+    graft.functions.SquaredL2(a, b)
 
   /** Encodes every vector against the codebook: (vec_id, sub, code) —
     * the 8x-compressed corpus representation an index persists. */
@@ -548,7 +538,7 @@ object SimilarityOps {
                m: Int = 8): DataFrame =
     pqSubvecs(vecs, m).join(broadcast(codebook), "sub")
       .select(col("vec_id"), col("sub"),
-        struct(pqL2sq(vecs.sparkSession, col("sv"), col("cent")).as("dist"),
+        struct(pqL2sq(col("sv"), col("cent")).as("dist"),
           col("code")).as("sc"))
       .groupBy(col("vec_id"), col("sub"))
       .agg(min(col("sc")).as("best"))
@@ -559,13 +549,11 @@ object SimilarityOps {
     * shortlist pays a full-vector exact rerank. */
   def pqAdcServe(s: SparkSession, vecs: DataFrame, codebook: DataFrame,
                  codes: DataFrame, m: Int = 8): DataFrame = {
-    def l2sq(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      pqL2sq(s, a, b)
     val queries = pqSubvecs(vecs, m).filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("sub"), col("sv").as("qv"))
     val qTables = queries.join(broadcast(codebook), "sub")
       .select(col("q_id"), col("sub"), col("code"),
-        l2sq(col("qv"), col("cent")).as("qdist"))
+        pqL2sq(col("qv"), col("cent")).as("qdist"))
     // the 8-term ADC sum is a hash agg whose row order is plan-dependent:
     // 9dp-quantized decimal terms make it order-free and oracle-exact
     // (the hyperplane/StableAgg discipline)
@@ -589,7 +577,7 @@ object SimilarityOps {
       .join(vecs, "vec_id")
       .join(broadcast(qFull), "q_id")
       .select(col("q_id"), col("vec_id"), col("adc"),
-        l2sq(col("v"), col("qv")).as("dist"))
+        pqL2sq(col("v"), col("qv")).as("dist"))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("dist").asc, col("vec_id").asc)
     reranked.withColumn("rank", row_number().over(w))
@@ -674,8 +662,7 @@ object SimilarityOps {
       .join(vecs.select(col("vec_id").as("n_id"), col("embedding").as("n_vec")),
         "n_id")
       .select(col("q_id"), col("n_id"), col("ham"),
-        graft.functions.VectorExpressions.cosineSim(
-          s, col("q_vec"), col("n_vec")).as("cos"))
+        graft.functions.VectorExpressions.cosineSim(col("q_vec"), col("n_vec")).as("cos"))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("n_id").asc)
     reranked.withColumn("rank", row_number().over(w))
@@ -795,7 +782,7 @@ object SimilarityOps {
     // v05's exact-decimal signature kernel, so the coarse layer is the
     // same oracle-replayable cell space the IVF gates already pin
     val cells = emb(s, d).withColumn("cell",
-      graft.functions.HyperplaneSigExact.hyperplaneSig(s, col("embedding"))
+      graft.functions.HyperplaneSigExact.hyperplaneSig(col("embedding"))
         .bitwiseAND(lit(0xFL)))
     // coarse layer: exact-mean centroids per cell (the v05 aggregation —
     // order-free DECIMAL(30,12) sums, one double division)
@@ -813,8 +800,7 @@ object SimilarityOps {
       .orderBy(col("cell_sim").desc, col("cell").asc)
     val probed = queries.crossJoin(broadcast(centroids))
       .select(col("q_id"), col("cell"),
-        graft.functions.VectorExpressions.cosineSim(
-          s, col("q_vec"), col("centroid")).as("cell_sim"))
+        graft.functions.VectorExpressions.cosineSim(col("q_vec"), col("centroid")).as("cell_sim"))
       .withColumn("cr", row_number().over(wCell))
       .filter(col("cr") <= nProbe)
       .select(col("q_id"), col("cell"))
@@ -831,7 +817,7 @@ object SimilarityOps {
       .select(col("vec_id").as("q_id"), col("sub"), col("sv").as("qv"))
       .join(broadcast(codebook), "sub")
       .select(col("q_id"), col("sub"), col("code"),
-        pqL2sq(s, col("qv"), col("cent")).as("qdist"))
+        pqL2sq(col("qv"), col("cent")).as("qdist"))
     val adc = codes.join(broadcast(probed), Seq("cell"))
       .join(broadcast(qTables), Seq("q_id", "sub", "code"))
       .filter(col("vec_id") =!= col("q_id"))
@@ -848,7 +834,7 @@ object SimilarityOps {
       .join(vecs.select(col("vec_id"), col("v")), "vec_id")
       .join(broadcast(qFull), "q_id")
       .select(col("q_id"), col("vec_id"), col("adc"),
-        pqL2sq(s, col("v"), col("qv")).as("dist"))
+        pqL2sq(col("v"), col("qv")).as("dist"))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("dist").asc, col("vec_id").asc)
     reranked.withColumn("rank", row_number().over(w))
@@ -884,7 +870,7 @@ object SimilarityOps {
     val bw = bandWidth(corpus.count())
     val banded = corpus
       .withColumn("sig", graft.functions.HyperplaneSigExact
-        .hyperplaneSig(s, col("embedding"), planes = 32))
+        .hyperplaneSig(col("embedding"), planes = 32))
       .select(col("vec_id"),
         posexplode(array(bandCols(col("sig"), bw): _*)))
       .withColumnRenamed("pos", "band_idx").withColumnRenamed("col", "band")
@@ -924,8 +910,7 @@ object SimilarityOps {
       .join(unlabeled, "vec_id")
       .join(labeled, "n_id")
       .select(col("vec_id"), col("n_id"), col("label"),
-        graft.functions.VectorExpressions.cosineSim(
-          s, col("q_vec"), col("n_vec")).as("cos"))
+        graft.functions.VectorExpressions.cosineSim(col("q_vec"), col("n_vec")).as("cos"))
     unlabeled.select(col("vec_id"))
       .join(voteScored(scored, k), Seq("vec_id"), "left")
       .select(col("vec_id"), col("pred_label"),
@@ -940,8 +925,7 @@ object SimilarityOps {
                    unlabeled: DataFrame, k: Int): DataFrame = {
     val scored = labeled.crossJoin(broadcast(unlabeled))
       .select(col("vec_id"), col("n_id"), col("label"),
-        graft.functions.VectorExpressions.cosineSim(
-          s, col("q_vec"), col("n_vec")).as("cos"))
+        graft.functions.VectorExpressions.cosineSim(col("q_vec"), col("n_vec")).as("cos"))
     voteScored(scored, k)
   }
 
@@ -999,8 +983,7 @@ object SimilarityOps {
       .crossJoin(broadcast(queries.select(col("q_id"), col("q_trunc"))))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
-        graft.functions.VectorExpressions.cosineSim(
-          s, col("q_trunc"), col("trunc")).as("tcos"))
+        graft.functions.VectorExpressions.cosineSim(col("q_trunc"), col("trunc")).as("tcos"))
     val wPre = Window.partitionBy(col("q_id"))
       .orderBy(col("tcos").desc, col("n_id").asc)
     val shortlist = cheap.withColumn("pre_rank", row_number().over(wPre))
@@ -1010,8 +993,7 @@ object SimilarityOps {
       .join(corpus.select(col("vec_id").as("n_id"), col("embedding")), "n_id")
       .join(broadcast(queries.select(col("q_id"), col("q_vec"))), "q_id")
       .select(col("q_id"), col("n_id"),
-        graft.functions.VectorExpressions.cosineSim(
-          s, col("q_vec"), col("embedding")).as("cos"))
+        graft.functions.VectorExpressions.cosineSim(col("q_vec"), col("embedding")).as("cos"))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("n_id").asc)
     rerank.withColumn("rank", row_number().over(w))
@@ -1048,8 +1030,7 @@ object SimilarityOps {
     val assigned = vecs
       .crossJoin(broadcast(cents.select(col("label").as("cl"), col("centroid"))))
       .select(col("vec_id"), col("embedding"), col("cl"),
-        graft.functions.VectorExpressions.cosineSim(
-          s, col("embedding"), col("centroid")).as("cos"))
+        graft.functions.VectorExpressions.cosineSim(col("embedding"), col("centroid")).as("cos"))
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
     assigned
       .select(col("cl").as("cluster"),
@@ -1133,8 +1114,7 @@ object SimilarityOps {
     val cosRanks = corpus.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
-        graft.functions.VectorExpressions.cosineSim(
-          s, col("q_vec"), col("embedding")).as("cos"))
+        graft.functions.VectorExpressions.cosineSim(col("q_vec"), col("embedding")).as("cos"))
       .withColumn("rank_cos", row_number().over(wCos))
       .select("q_id", "n_id", "rank_cos")
     val codes = int8Codes(corpus)
@@ -1204,8 +1184,7 @@ object SimilarityOps {
     }
     val rel = emb(s, d).filter(col("vec_id") =!= MmrQueryId)
       .select(col("vec_id"), col("embedding"),
-        graft.functions.VectorExpressions.cosineSim(s,
-          typedlit(qVec), col("embedding")).as("rel"))
+        graft.functions.VectorExpressions.cosineSim(typedlit(qVec), col("embedding")).as("rel"))
       .cache()
     try {
       val picked = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Float], Double)]
@@ -1214,7 +1193,7 @@ object SimilarityOps {
           if (picked.isEmpty) rel.withColumn("score", col("rel"))
           else {
             val maxSim = picked.map { case (_, v, _) =>
-              graft.functions.VectorExpressions.cosineSim(s, typedlit(v), col("embedding"))
+              graft.functions.VectorExpressions.cosineSim(typedlit(v), col("embedding"))
             }.reduce((a, b) => greatest(a, b))
             rel.filter(!col("vec_id").isInCollection(picked.map(_._1)))
               .withColumn("score",
@@ -1285,8 +1264,7 @@ object SimilarityOps {
     val sims = corpus.join(broadcast(queries),
         col("label") === col("q_label") && col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
-        graft.functions.VectorExpressions.cosineSim(
-          s, col("q_vec"), col("embedding")).as("cos"))
+        graft.functions.VectorExpressions.cosineSim(col("q_vec"), col("embedding")).as("cos"))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("n_id").asc)
     sims.withColumn("rank", row_number().over(w))
@@ -1316,8 +1294,7 @@ object SimilarityOps {
     corpus.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
-        graft.functions.VectorExpressions.cosineSim(
-          s, col("q_vec"), col("embedding")).as("cos"))
+        graft.functions.VectorExpressions.cosineSim(col("q_vec"), col("embedding")).as("cos"))
       .filter(col("cos") >= RadiusTau)
       .select(col("q_id"), col("n_id"), round(col("cos"), 4).as("cos"))
       .orderBy("q_id", "n_id")
@@ -1399,7 +1376,7 @@ object SimilarityOps {
       .unionByName(planted.select(col("p_id").as("vec_id"), col("emb")))
     val bands = uni
       .withColumn("sig", graft.functions.HyperplaneSigExact
-        .hyperplaneSig(s, col("emb"), planes = 32))
+        .hyperplaneSig(col("emb"), planes = 32))
       .select(col("vec_id"), posexplode(array(bandCols(col("sig"), bw): _*)))
       .withColumnRenamed("pos", "band_idx").withColumnRenamed("col", "band")
     val gold = v25Gold(s, planted.join(src, "src_id"))
@@ -1445,10 +1422,8 @@ object SimilarityOps {
     * cos_band edges, so engine float disagreement can't flip a hash). */
   private[ops] def v25GoldRaw(s: SparkSession, joined: DataFrame): DataFrame =
     joined.select(col("src_id").as("id_a"), col("p_id").as("id_b"),
-      graft.functions.VectorExpressions.cosineSim(
-        s, col("v"), col("emb")).as("cos_raw"),
-      round(graft.functions.VectorExpressions.cosineSim(
-          s, col("v"), col("emb")).cast("decimal(18,10)"), 4)
+      graft.functions.VectorExpressions.cosineSim(col("v"), col("emb")).as("cos_raw"),
+      round(graft.functions.VectorExpressions.cosineSim(col("v"), col("emb")).cast("decimal(18,10)"), 4)
         .cast("double").as("cos"))
 
   /** The v25 planted/source join for the spec's boundary probe — the

@@ -303,9 +303,8 @@ object TextOps {
     * one JVM pass per document instead of an interpreted md5-hex →
     * substring → conv lambda per token (r20 optimization; bit-identity
     * spec-pinned against the [[ragSlotHash]] transform). */
-  private[graft] def ragSlotHashes(s: SparkSession,
-      text: org.apache.spark.sql.Column) =
-    graft.functions.Md5TokenSlotHashes(s, text, RagSlots)
+  private[graft] def ragSlotHashes(text: org.apache.spark.sql.Column) =
+    graft.functions.Md5TokenSlotHashes(text, RagSlots)
 
   // Slot counts are ONE pass over the hash array. History: the original
   // 16-filters-per-slot form re-evaluated the md5 transform 16× per row
@@ -314,9 +313,8 @@ object TextOps {
   // codegen-fallback) and allocated a fresh 16-slot array per TOKEN, so
   // r20 moved it into the native [[graft.functions.SlotHistogram]]
   // kernel (bit-identity spec-pinned against the fold form).
-  private[graft] def ragSlotCounts(s: SparkSession,
-      hs: org.apache.spark.sql.Column) =
-    graft.functions.SlotHistogram(s, hs, RagSlots)
+  private[graft] def ragSlotCounts(hs: org.apache.spark.sql.Column) =
+    graft.functions.SlotHistogram(hs, RagSlots)
 
   /** The compositional histogram fold the DuckDB oracles replay — spec
     * reference for [[graft.functions.SlotHistogram]]. */
@@ -330,9 +328,8 @@ object TextOps {
 
   /** Whole-document 16-slot feature-hash embedding — the t24 chunk
     * encoder applied to a full text; m07's stub "encoder tower". */
-  private[graft] def docSlotEmbed(s: SparkSession,
-      text: org.apache.spark.sql.Column) =
-    ragSlotCounts(s, ragSlotHashes(s, text))
+  private[graft] def docSlotEmbed(text: org.apache.spark.sql.Column) =
+    ragSlotCounts(ragSlotHashes(text))
 
   /** The t24/t25 shared chunk+embed stage: (doc_id, chunk_start,
     * cv: array<long> slot counts, cn: L2 norm). Map-only — no shuffle.
@@ -347,7 +344,7 @@ object TextOps {
   def ragChunkEmbeddings(docsDf: DataFrame): DataFrame = {
     val s = docsDf.sparkSession
     docsDf
-      .withColumn("hs_full", ragSlotHashes(s, col("text")))
+      .withColumn("hs_full", ragSlotHashes(col("text")))
       .withColumn("n_tokens", size(col("hs_full")).cast("long"))
       .withColumn("chunk_start", explode(expr(
         s"sequence(0L, greatest(n_tokens - 1, 0L), ${RagChunkStride}L)")))
@@ -355,7 +352,7 @@ object TextOps {
         (col("chunk_start") + 1).cast("int"), lit(RagChunkTokens)))
       .filter(size(col("hs")) > 0)
       .select(col("doc_id"), col("chunk_start"),
-        ragSlotCounts(s, col("hs")).as("cv"))
+        ragSlotCounts(col("hs")).as("cv"))
       .withColumn("cn", ragNorm(col("cv")))
   }
 
@@ -364,8 +361,8 @@ object TextOps {
   def ragQueryEmbeddings(s: SparkSession): DataFrame = {
     import s.implicits._
     RagQueries.toDF("query_id", "query_text")
-      .select(col("query_id"), ragSlotHashes(s, col("query_text")).as("hs"))
-      .select(col("query_id"), ragSlotCounts(s, col("hs")).as("qv"))
+      .select(col("query_id"), ragSlotHashes(col("query_text")).as("hs"))
+      .select(col("query_id"), ragSlotCounts(col("hs")).as("qv"))
       .withColumn("qn", ragNorm(col("qv")))
   }
 
@@ -1211,7 +1208,7 @@ object TextOps {
     // native one-pass CharTrigrams kernel — one byte scan per document,
     // one slice per trigram, bit-identity spec-pinned.
     val base = docs(s, d).select(col("doc_id"), col("lang"),
-      graft.functions.CharTrigrams(s, col("text")).as("tris"))
+      graft.functions.CharTrigrams(col("text")).as("tris"))
     val prof = base.filter(col("doc_id") % 2 === 0)
       .select(col("lang"), explode(col("tris")).as("g"))
       .groupBy(col("lang"), col("g")).agg(count(lit(1)).as("c"))
@@ -1343,7 +1340,7 @@ object TextOps {
       .select(col("doc_id"),
         element_at(variants, (col("doc_id") % 6 + 1).cast("int")).as("title"))
       .withColumn("norm",
-        graft.functions.NormalizeText.normalizeText(s, col("title")))
+        graft.functions.NormalizeText.normalizeText(col("title")))
       .groupBy(col("norm"))
       .agg(count(lit(1)).as("n_docs"),
         countDistinct(col("title")).as("n_spellings"))
@@ -1366,7 +1363,6 @@ object TextOps {
     * (PlanAuditR14Spec) holds the `Generate graft_ngrams` node and the
     * absence of any ScalaUDF/ArrayTransform in the gram path. */
   private def t35(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s) // idempotent
     docs(s, d).createOrReplaceTempView("documents")
     s.sql(
       """SELECT gram, count(1) AS n, count(DISTINCT doc_id) AS n_docs,
@@ -1391,7 +1387,6 @@ object TextOps {
     * — the engine's `Generate ... false, [pos, gram]` vs `true` flag is
     * the only difference, pinned in the spec. */
   private def t36(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s) // idempotent
     // shorten every 3rd doc below the trigram threshold so the outer
     // regime is populated: two tokens keep no trigram
     docs(s, d)
@@ -1419,17 +1414,16 @@ object TextOps {
     * exact-dedup idiom as first-class grammar. The parser DESUGARS the
     * statement to standard SQL and delegates — analysis, optimization
     * and planning are stock, so the custom syntax can never plan worse
-    * than the hand-written equivalent. Extensions bind at session
-    * construction, so the gate runs on [[graft.GraftSession
-    * .extensionSession]] (same SparkContext, fresh SessionState with the
-    * extensions applied). The deduped per-source summary hash-matches a
-    * DuckDB oracle of the desugared semantics; ParserExtensionSpec pins
-    * the passthrough (ordinary SQL parses bit-identically through the
-    * wrapped parser) and custom-vs-desugared equality on one session. */
+    * than the hand-written equivalent. The parser binds at session
+    * construction ([[graft.GraftExtensions]]), so every graft session,
+    * `newSession()` included, parses the statement. The deduped
+    * per-source summary hash-matches a DuckDB oracle of the desugared
+    * semantics; ParserExtensionSpec pins the passthrough (ordinary SQL
+    * parses identically through the wrapped parser and the stock one)
+    * and custom-vs-desugared equality on one session. */
   private def c13(s: SparkSession, d: String): DataFrame = {
-    val ext = graft.GraftSession.extensionSession(s)
-    docs(ext, d).createOrReplaceTempView("documents_c13")
-    ext.sql("DEDUP documents_c13 BY md5(text) KEEP MIN doc_id")
+    docs(s, d).createOrReplaceTempView("documents_c13")
+    s.sql("DEDUP documents_c13 BY md5(text) KEEP MIN doc_id")
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
       .orderBy("source")

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, BindReferences, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project}
@@ -129,6 +129,8 @@ final case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
   }
 }
 
+/** Plans [[AsOfJoinPlan]] as [[AsOfJoinExec]]; injected into every session
+  * by [[graft.GraftExtensions]]. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoinPlan(l, r, lk, rk, lt, rt) =>
@@ -139,12 +141,6 @@ object AsOfJoinStrategy extends SparkStrategy {
 
 object AsOfJoin {
 
-  /** Registers the planner strategy (idempotent, session-scoped). */
-  def attach(s: SparkSession): Unit =
-    if (!s.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ AsOfJoinStrategy
-
   /** `left` as-of-joined to `right`: every left row paired with the
     * latest right row whose `rightTime <= leftTime` on the same key
     * (left outer). Output = left columns ++ right columns (nullable). */
@@ -152,7 +148,6 @@ object AsOfJoin {
             leftKey: String, rightKey: String,
             leftTime: String, rightTime: String): DataFrame = {
     val s = left.sparkSession
-    attach(s)
     val lp = left.queryExecution.analyzed
     // self-join hygiene: both sides of a same-source as-of share
     // expression ids; re-aliasing the right side mints fresh ones so the

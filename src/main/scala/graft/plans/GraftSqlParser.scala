@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.parser.ParserInterface
+import org.apache.spark.sql.catalyst.parser.{ParameterContext, ParserInterface}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -37,19 +37,26 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
   private val Dedup =
     """(?is)\s*DEDUP\s+([\w.]+|`[^`]+`)\s+BY\s+(.+)\s+KEEP\s+MIN\s+([\w.]+|`[^`]+`)\s*;?\s*""".r
 
-  private def desugar(table: String, key: String, id: String): String =
-    s"""SELECT * FROM $table WHERE $id IN
-       |  (SELECT min($id) FROM $table GROUP BY $key)""".stripMargin
-
-  override def parsePlan(sqlText: String): LogicalPlan = sqlText match {
-    case Dedup(t, k, i) => delegate.parsePlan(desugar(t, k, i))
-    case _              => delegate.parsePlan(sqlText)
+  /** A DEDUP statement as the standard SQL it stands for; any other text
+    * unchanged. */
+  private def desugar(sqlText: String): String = sqlText match {
+    case Dedup(table, key, id) =>
+      s"""SELECT * FROM $table WHERE $id IN
+         |  (SELECT min($id) FROM $table GROUP BY $key)""".stripMargin
+    case _ => sqlText
   }
 
-  override def parseQuery(sqlText: String): LogicalPlan = sqlText match {
-    case Dedup(t, k, i) => delegate.parseQuery(desugar(t, k, i))
-    case _              => delegate.parseQuery(sqlText)
-  }
+  override def parsePlan(sqlText: String): LogicalPlan =
+    delegate.parsePlan(desugar(sqlText))
+
+  // `SparkSession.sql(text, args)` parses through this method; the
+  // interface's default would call parsePlan and drop the parameters
+  override def parsePlanWithParameters(sqlText: String,
+                                       paramContext: ParameterContext): LogicalPlan =
+    delegate.parsePlanWithParameters(desugar(sqlText), paramContext)
+
+  override def parseQuery(sqlText: String): LogicalPlan =
+    delegate.parseQuery(desugar(sqlText))
 
   override def parseExpression(sqlText: String): Expression =
     delegate.parseExpression(sqlText)

@@ -27,7 +27,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * `LocalRelation` first. The rule adds no conf:
   * `spark.sql.optimizer.excludedRules=graft.plans.LocalSort` turns it off.
   *
-  * Injected by [[graft.GraftSession.builder]] and [[graft.GraftExtensions]]. */
+  * Injected into every session by [[graft.GraftExtensions]], which
+  * [[graft.GraftSession.builder]] applies. */
 case class LocalSort(session: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {

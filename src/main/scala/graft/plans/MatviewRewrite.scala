@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** One registered materialized view: queries against `baseRoots` whose
   * grouping keys are a subset of `dims` and whose aggregate calls all map
@@ -70,13 +70,13 @@ object MatviewCatalog {
   * partials (sum-of-counts, sum-of-decimal-sums). The user writes the
   * query against the RAW table; the plan never touches it.
   *
-  * Injection: cluster-wide via `spark.sql.extensions=graft.GraftExtensions`
-  * (injectOptimizerRule), or per-session via [[MatviewRewrite.attach]]
-  * (`spark.experimental.extraOptimizations`). Both run the rule in the
-  * optimizer's user-provided batch — AFTER column pruning, so the matched
-  * shape is Aggregate over attribute-only Project/Filter over the scan,
-  * and BEFORE physical planning, so the injected Project still prunes the
-  * view scan's ReadSchema.
+  * Injection: [[graft.GraftExtensions]] binds it into every session with
+  * `injectPreCBORule`, so it runs ONCE per optimization, in the pre-CBO
+  * batch right after the fixed-point operator-optimization batches —
+  * AFTER column pruning, so the matched shape is Aggregate over
+  * attribute-only Project/Filter over the scan, and BEFORE physical
+  * planning, so the injected Project still prunes the view scan's
+  * ReadSchema.
   *
   * Scope guards (each bails to the original plan): grouping keys must be
   * plain dim attributes; filters between the aggregate and the scan must
@@ -87,13 +87,6 @@ object MatviewCatalog {
   * schemas) are untouched. The rule is idempotent: a rewritten aggregate
   * scans the view's root, which no definition claims as a base. */
 object MatviewRewrite extends Rule[LogicalPlan] {
-
-  /** Arms the rule on an existing session (idempotent). */
-  def attach(s: SparkSession): Unit = synchronized {
-    if (!s.experimental.extraOptimizations.contains(MatviewRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ MatviewRewrite
-  }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (MatviewCatalog.registered.isEmpty) plan

@@ -50,7 +50,8 @@ import org.apache.spark.sql.internal.SQLConf
   * turns it off. Idempotent: a sort over `Repartition(1, false, _)` is not
   * matched again.
   *
-  * Injected by [[graft.GraftSession.builder]] and [[graft.GraftExtensions]]. */
+  * Injected into every session by [[graft.GraftExtensions]], which
+  * [[graft.GraftSession.builder]] applies. */
 case class SingleTaskSort(session: SparkSession) extends Rule[LogicalPlan] {
 
   /** The shuffle origins AQE's `CoalesceShufflePartitions` coalesces. */

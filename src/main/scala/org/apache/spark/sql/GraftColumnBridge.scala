@@ -2,7 +2,8 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Column <-> Expression bridge for graft's FunctionRegistry builders.
+/** Column <-> Expression bridge for graft's native expressions: their
+  * Column entry points and FunctionRegistry builders.
   *
   * Spark 4's Column wraps a ColumnNode rather than an Expression, and the
   * classic converter (`org.apache.spark.sql.classic.ExpressionUtils`) is
@@ -25,7 +26,7 @@ object GraftColumnBridge {
   /** DataFrame from a custom LogicalPlan (`classic.Dataset.ofRows` is
     * `private[sql]`) — the front door for library-defined logical
     * operators like [[graft.plans.AsOfJoinPlan]], planned by a strategy
-    * registered through `experimental.extraStrategies`. */
+    * that [[graft.GraftExtensions]] injects. */
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)

@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.ExportOps
-import graft.plans.{MatviewCatalog, MatviewRewrite}
+import graft.plans.MatviewCatalog
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -42,7 +42,6 @@ class PlanAuditR13Spec extends SparkSpec {
         .agg(count(lit(1)).as("n"),
           sum(col("l_quantity").cast("decimal(30,2)")).as("qty_dec"))
         .write.parquet(mvPath)
-      MatviewRewrite.attach(spark)
       MatviewCatalog.register(MatviewCatalog.define("spec_cube",
         base = lineitem, mv = spark.read.parquet(mvPath),
         dims = Set("l_returnflag", "l_linestatus"),

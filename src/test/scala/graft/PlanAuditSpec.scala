@@ -143,8 +143,8 @@ class PlanAuditSpec extends SparkSpec {
       .getSeq[Float](0).toArray
     val round = vecs.filter(col("vec_id") =!= 0L)
       .select(col("vec_id"),
-        graft.functions.VectorExpressions.cosineSim(spark, typedlit(q), col("embedding")).as("rel"),
-        graft.functions.VectorExpressions.cosineSim(spark, typedlit(sel), col("embedding")).as("sim_sel"))
+        graft.functions.VectorExpressions.cosineSim(typedlit(q), col("embedding")).as("rel"),
+        graft.functions.VectorExpressions.cosineSim(typedlit(sel), col("embedding")).as("sim_sel"))
       .withColumn("score", lit(0.7) * col("rel") - lit(0.3) * col("sim_sel"))
       .orderBy(col("score").desc, col("vec_id").asc).limit(1)
     val p = round.queryExecution.explainString(

@@ -21,7 +21,7 @@ class CharTrigramsSpec extends SparkSpec {
   private def checkFrame(df: org.apache.spark.sql.DataFrame): Unit = {
     val bad = df.select(
         composed(col("text")).as("want"),
-        CharTrigrams(spark, col("text")).as("got"))
+        CharTrigrams(col("text")).as("got"))
       .filter(not(col("want") <=> col("got")))
     assert(bad.count() === 0L,
       s"trigrams diverged, e.g. ${bad.take(1).mkString}")

@@ -18,7 +18,7 @@ class HyperplaneSigSpec extends SparkSpec {
       val bad = df.select(
           VectorFunctions.hyperplaneSignatureExact(col("embedding"), planes)
             .as("want"),
-          HyperplaneSigExact.hyperplaneSig(spark, col("embedding"), planes)
+          HyperplaneSigExact.hyperplaneSig(col("embedding"), planes)
             .as("got"))
         .filter(col("want") =!= col("got"))
       assert(bad.count() === 0L,
@@ -33,8 +33,8 @@ class HyperplaneSigSpec extends SparkSpec {
     val df = spark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
     val bad = df.select(
-        HyperplaneSigExact.hyperplaneSig(spark, col("embedding"), 16).as("s16"),
-        HyperplaneSigExact.hyperplaneSig(spark, col("embedding"), 32).as("s32"))
+        HyperplaneSigExact.hyperplaneSig(col("embedding"), 16).as("s16"),
+        HyperplaneSigExact.hyperplaneSig(col("embedding"), 32).as("s32"))
       .filter(col("s16") =!= (col("s32").bitwiseAND(lit(0xFFFFL))))
     assert(bad.count() === 0L)
   }
@@ -51,7 +51,7 @@ class HyperplaneSigSpec extends SparkSpec {
     val df = rows.toDF("embedding")
     val bad = df.select(
         VectorFunctions.hyperplaneSignatureExact(col("embedding")).as("want"),
-        HyperplaneSigExact.hyperplaneSig(spark, col("embedding")).as("got"))
+        HyperplaneSigExact.hyperplaneSig(col("embedding")).as("got"))
       .filter(col("want") =!= col("got"))
     assert(bad.count() === 0L, s"diverged: ${bad.take(1).mkString}")
   }
@@ -60,7 +60,7 @@ class HyperplaneSigSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq(Array.fill(63)(1.0f), Array.fill(65)(1.0f)).toDF("embedding")
     val got = df.select(
-      HyperplaneSigExact.hyperplaneSig(spark, col("embedding")).as("got"))
+      HyperplaneSigExact.hyperplaneSig(col("embedding")).as("got"))
       .collect().map(_.getLong(0))
     val want = df.select(
       VectorFunctions.hyperplaneSignatureExact(col("embedding")).as("want"))
@@ -76,7 +76,7 @@ class HyperplaneSigSpec extends SparkSpec {
     val withNull = Seq(Seq.tabulate(64)(j =>
       if (j == 7) Option.empty[Float] else Some(0.5f))).toDF("embedding")
     val gotN = withNull.select(HyperplaneSigExact
-      .hyperplaneSig(spark, col("embedding"))).collect().head.getLong(0)
+      .hyperplaneSig(col("embedding"))).collect().head.getLong(0)
     val wantN = withNull.select(VectorFunctions
       .hyperplaneSignatureExact(col("embedding"))).collect().head.getLong(0)
     assert(gotN === 0L && wantN === 0L)
@@ -87,7 +87,7 @@ class HyperplaneSigSpec extends SparkSpec {
       val df = Seq(Array.tabulate(64)(j => if (j == 3) v else 0.5f))
         .toDF("embedding")
       val row = df.select(
-        HyperplaneSigExact.hyperplaneSig(spark, col("embedding")).as("got"),
+        HyperplaneSigExact.hyperplaneSig(col("embedding")).as("got"),
         VectorFunctions.hyperplaneSignatureExact(col("embedding")).as("want"))
         .collect().head
       assert(row.getLong(0) === 0L, s"value $v must poison the signature")
@@ -108,7 +108,7 @@ class HyperplaneSigSpec extends SparkSpec {
     val mk = (v: Double) => Array.tabulate(64)(j => if (j == 3) v else 0.5)
     val df = Seq(mk(inBand), mk(-inBand), mk(belowBand)).toDF("embedding")
     val rows = df.select(
-        HyperplaneSigExact.hyperplaneSig(spark, col("embedding")).as("got"),
+        HyperplaneSigExact.hyperplaneSig(col("embedding")).as("got"),
         VectorFunctions.hyperplaneSignatureExact(col("embedding")).as("want"))
       .collect()
     rows.foreach(r => assert(r.getLong(0) === r.getLong(1),

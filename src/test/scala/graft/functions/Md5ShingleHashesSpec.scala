@@ -22,7 +22,7 @@ class Md5ShingleHashesSpec extends SparkSpec {
     for ((k, hex) <- Seq((3, 7), (4, 7), (3, 15))) {
       val bad = df.select(
           composed(col("text"), k, hex).as("want"),
-          Md5ShingleHashes.md5ShingleHashes(spark, col("text"), k, hex)
+          Md5ShingleHashes.md5ShingleHashes(col("text"), k, hex)
             .as("got"))
         .filter(not(col("want") === col("got")))
       assert(bad.count() === 0L,
@@ -54,7 +54,7 @@ class Md5ShingleHashesSpec extends SparkSpec {
   test("distinct is on the shingle string, order is first occurrence") {
     import spark.implicits._
     val got = Seq("a b c a b c d").toDF("text")
-      .select(Md5ShingleHashes.md5ShingleHashes(spark, col("text"), 3, 7)
+      .select(Md5ShingleHashes.md5ShingleHashes(col("text"), 3, 7)
         .as("hv"))
       .head().getSeq[Long](0)
     val want = Seq("a b c a b c d").toDF("text")

@@ -144,7 +144,7 @@ class NativeAggSpec extends SparkSpec {
     val decomposed = "E" + "\u0301" + "clair" // E + combining acute
     val rows = Seq(composed, decomposed, "ECLAIR", "eclair")
       .toDF("s")
-      .select(NormalizeText.normalizeText(spark, col("s")).as("n"))
+      .select(NormalizeText.normalizeText(col("s")).as("n"))
       .collect().map(_.getString(0)).toSet
     assert(rows === Set("eclair"),
       s"all four spellings must share one canonical form, got $rows")
@@ -153,7 +153,7 @@ class NativeAggSpec extends SparkSpec {
     assert(NormalizeText.normalize(once) === once)
     // null-safety through the expression path
     val withNull = Seq(Some("Ünïted"), None).toDF("s")
-      .select(NormalizeText.normalizeText(spark, col("s")).as("n"))
+      .select(NormalizeText.normalizeText(col("s")).as("n"))
       .collect().map(r => Option(r.getString(0))).toSeq
     assert(withNull === Seq(Some("united"), None))
     // SQL front door

@@ -29,14 +29,13 @@ class RagSlotKernelsSpec extends SparkSpec {
   private def checkFrame(df: org.apache.spark.sql.DataFrame): Unit = {
     val badH = df.select(
         composedHashes(col("text")).as("want"),
-        Md5TokenSlotHashes(spark, col("text"), slots).as("got"))
+        Md5TokenSlotHashes(col("text"), slots).as("got"))
       .filter(not(col("want") <=> col("got")))
     assert(badH.count() === 0L,
       s"token slot hashes diverged, e.g. ${badH.take(1).mkString}")
     val badC = df.select(
         composedHistogram(composedHashes(col("text"))).as("want"),
-        SlotHistogram(spark,
-          Md5TokenSlotHashes(spark, col("text"), slots), slots).as("got"))
+        SlotHistogram(Md5TokenSlotHashes(col("text"), slots), slots).as("got"))
       .filter(not(col("want") <=> col("got")))
     assert(badC.count() === 0L,
       s"slot histogram diverged, e.g. ${badC.take(1).mkString}")
@@ -71,7 +70,7 @@ class RagSlotKernelsSpec extends SparkSpec {
       .toDF("hs")
     val bad = hs.select(
         composedHistogram(col("hs")).as("want"),
-        SlotHistogram(spark, col("hs"), slots).as("got"))
+        SlotHistogram(col("hs"), slots).as("got"))
       .filter(not(col("want") <=> col("got")))
     assert(bad.count() === 0L, s"diverged: ${bad.take(1).mkString}")
   }

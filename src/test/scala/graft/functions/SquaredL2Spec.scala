@@ -22,7 +22,7 @@ class SquaredL2Spec extends SparkSpec {
   private def checkFrame(df: org.apache.spark.sql.DataFrame): Unit = {
     val bad = df.select(
         composed(col("a"), col("b")).as("want"),
-        SquaredL2(spark, col("a"), col("b")).as("got"))
+        SquaredL2(col("a"), col("b")).as("got"))
       .filter(not(col("want") <=> col("got")))
     assert(bad.count() === 0L, s"diverged, e.g. ${bad.take(1).mkString}")
   }

@@ -84,7 +84,7 @@ class TextFunctionsSpec extends SparkSpec {
     val hashes = Array(0x1234L, -0x9876L, 0xdeadbeefL)
     val viaEval = SimHash64.eval(hashes)
     val viaExpr = Seq(Tuple1(hashes)).toDF("h")
-      .select(SimHash64.simhash64(spark, $"h")).as[Long].head()
+      .select(SimHash64.simhash64($"h")).as[Long].head()
     assert(viaEval === viaExpr)
   }
 }

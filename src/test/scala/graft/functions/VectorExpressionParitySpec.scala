@@ -38,13 +38,12 @@ class VectorExpressionParitySpec extends SparkSpec {
 
   test("cosine codegen and interpreted paths agree bitwise (float and double)") {
     def runF = vecsF
-      .select(VectorExpressions.cosineSim(spark, $"a", $"b").as("c"))
+      .select(VectorExpressions.cosineSim($"a", $"b").as("c"))
       .as[Double].collect()
     val (genF, interpF) = bothModes(runF)
     assert(genF.sameElements(interpF), "float cosine parity broke")
     def runD = vecsF
-      .select(VectorExpressions.cosineSim(spark,
-        $"a".cast("array<double>"), $"b".cast("array<double>")).as("c"))
+      .select(VectorExpressions.cosineSim($"a".cast("array<double>"), $"b".cast("array<double>")).as("c"))
       .as[Double].collect()
     val (genD, interpD) = bothModes(runD)
     assert(genD.sameElements(interpD), "double cosine parity broke")
@@ -65,7 +64,7 @@ class VectorExpressionParitySpec extends SparkSpec {
     val docs = (0 until 32).map(i =>
       (i.toLong, Array.fill(20)(rnd.nextLong()))).toDF("id", "hashes")
     def run = docs
-      .select($"id", VectorExpressions.minhash(spark, $"hashes").as("sig"))
+      .select($"id", VectorExpressions.minhash($"hashes").as("sig"))
       .as[(Long, Array[Long])].collect().sortBy(_._1)
     val (gen, interp) = bothModes(run)
     gen.zip(interp).foreach { case ((gi, gs), (ii, is)) =>
@@ -84,9 +83,8 @@ class VectorExpressionParitySpec extends SparkSpec {
     // constant-folds into a LocalTableScan and no stage exists to inspect
     val df = graft.Tables(spark, "/root/testdata/sf0.001", "embeddings")
       .select(
-        VectorExpressions.cosineSim(spark, $"embedding", $"embedding").as("c"),
-        VectorExpressions.minhash(spark,
-          $"embedding".cast("array<bigint>")).as("sig"))
+        VectorExpressions.cosineSim($"embedding", $"embedding").as("c"),
+        VectorExpressions.minhash($"embedding".cast("array<bigint>")).as("sig"))
     val stages = df.queryExecution.executedPlan.collect {
       case w: WholeStageCodegenExec => w.child.toString }
     assert(stages.exists(s =>

@@ -61,8 +61,7 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("simhash: identical docs hash equal; near dups within small hamming") {
     val sig = docs.select($"doc_id",
-      SimHash64.simhash64(spark,
-        transform(split($"text", " "), t => xxhash64(t))).as("sh"))
+      SimHash64.simhash64(transform(split($"text", " "), t => xxhash64(t))).as("sh"))
       .as[(Long, Long)].collect().toMap
     assert(sig(0L) === sig(1L))
     val hammingNear = java.lang.Long.bitCount(sig(0L) ^ sig(2L))
@@ -79,7 +78,7 @@ class DedupSimilaritySpec extends SparkSpec {
       (Array(0.0f, 0.0f), Array(1.0f, 0.0f), 0.0) // zero-norm guard
     ).toDF("a", "b", "expected")
     val got = vecs.select(
-      VectorExpressions.cosineSim(spark, $"a", $"b").as("cos"), $"expected")
+      VectorExpressions.cosineSim($"a", $"b").as("cos"), $"expected")
       .as[(Double, Double)].collect()
     got.foreach { case (c, e) => assert(math.abs(c - e) < 1e-12, s"$c vs $e") }
   }
@@ -196,12 +195,12 @@ class DedupSimilaritySpec extends SparkSpec {
     }
     val brute = top5(labeled.crossJoin(broadcast(unlabeled))
       .select($"vec_id", $"n_id", graft.functions.VectorExpressions
-        .cosineSim(spark, $"q_vec", $"n_vec").as("cos")))
+        .cosineSim($"q_vec", $"n_vec").as("cos")))
     // the gate's candidate generation, re-derived: 500 vectors → band
     // width 4, so each band is the plain 4-bit signature slice
     val banded = corpus
       .withColumn("sig", graft.functions.HyperplaneSigExact
-        .hyperplaneSig(spark, $"embedding", planes = 32))
+        .hyperplaneSig($"embedding", planes = 32))
       .select($"vec_id", posexplode(array((0 until 4).map(b =>
         shiftright($"sig", b * 4).bitwiseAND(lit(0xFL))): _*)))
       .withColumnRenamed("pos", "band_idx").withColumnRenamed("col", "band")
@@ -212,7 +211,7 @@ class DedupSimilaritySpec extends SparkSpec {
       .select("vec_id", "n_id").distinct()
     val gatedTop = top5(cand.join(unlabeled, "vec_id").join(labeled, "n_id")
       .select($"vec_id", $"n_id", graft.functions.VectorExpressions
-        .cosineSim(spark, $"q_vec", $"n_vec").as("cos")))
+        .cosineSim($"q_vec", $"n_vec").as("cos")))
     val recall = (brute & gatedTop).size.toDouble / brute.size
     assert(recall >= 0.3, s"v15 candidate recall@5 $recall collapsed")
     // coverage: every unlabeled vector must still get a verdict

@@ -1,20 +1,27 @@
 package graft.plans
 
 import graft.SparkSpec
+import org.apache.spark.sql.GraftColumnBridge
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.parser.NamedParameterContext
+import org.apache.spark.sql.execution.SparkSqlParser
 import org.apache.spark.sql.functions._
 
 /** c13's parser-injection pins: the custom DEDUP statement equals its
   * desugared standard SQL on the SAME session, and ordinary SQL parses
-  * bit-identically through the wrapped parser (passthrough — the
-  * extension owns only its own grammar). */
+  * identically through the wrapped parser and through its delegate, the
+  * stock parser (passthrough — the extension owns only its own grammar).
+  * Every graft session carries the parser ([[graft.GraftExtensions]]), so
+  * the comparison point is a stock `SparkSqlParser`, not another session. */
 class ParserExtensionSpec extends SparkSpec {
 
   private val d = "/root/testdata/sf0.001"
 
-  private def ext = graft.GraftSession.extensionSession(spark)
+  /** What [[GraftSqlParser]] delegates to: Spark's own SQL parser. */
+  private val stock = new SparkSqlParser()
 
   test("DEDUP statement equals its hand-written desugared SQL") {
-    val s = ext
+    val s = spark
     // plant duplicates: the raw fixture texts are all distinct at this SF
     graft.Tables(s, d, "documents")
       .select(col("doc_id"), col("source"),
@@ -37,35 +44,40 @@ class ParserExtensionSpec extends SparkSpec {
   }
 
   test("passthrough: ordinary SQL parses identically through the wrapped parser") {
-    val s = ext
-    graft.Tables(s, d, "lineitem").createOrReplaceTempView("pe_li")
     graft.Tables(spark, d, "lineitem").createOrReplaceTempView("pe_li")
+    graft.Tables(spark, d, "documents").createOrReplaceTempView("documents")
     val q = """SELECT l_returnflag, count(1) AS n FROM pe_li
               |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
-    val a = s.sql(q).collect().map(_.toSeq).toSeq
-    val b = spark.sql(q).collect().map(_.toSeq).toSeq
-    assert(a == b, "the wrapped parser must be transparent to stock SQL")
-    // parse-tree identity, not just value identity: same analyzed plan text
-    // modulo exprIds is overkill; pin the parsed (unresolved) plan string
-    // strip exprIds (fresh per parse) before comparing the parse trees
-    def norm(p: String) = p.replaceAll("#\\d+", "#")
-    val pExt = norm(s.sessionState.sqlParser.parsePlan(q).toString)
-    val pStock = norm(spark.sessionState.sqlParser.parsePlan(q).toString)
-    assert(pExt == pStock,
-      s"parsed plans must match:\n$pExt\nvs\n$pStock")
+    // c08's pipe syntax with a named parameter: `sql(text, args)` parses
+    // through parsePlanWithParameters, which must reach the delegate with
+    // its parameters
+    val inputs = Seq(q -> Map.empty[String, Any],
+      graft.ops.TextOps.c08PipeSql -> Map[String, Any]("minChars" -> 50))
+    for ((text, args) <- inputs) {
+      val params = NamedParameterContext(args.map { case (k, v) => k -> Literal(v) })
+      val a = spark.sql(text, args).collect().map(_.toSeq).toSeq
+      val b = GraftColumnBridge.ofRows(spark,
+        stock.parsePlanWithParameters(text, params)).collect().map(_.toSeq).toSeq
+      assert(a == b && a.nonEmpty, "the wrapped parser must be transparent to stock SQL")
+      // parse-tree identity, not just value identity: strip exprIds (fresh
+      // per parse) and compare the parsed (unresolved) plans
+      def norm(p: String) = p.replaceAll("#\\d+", "#")
+      val pExt = norm(spark.sessionState.sqlParser.parsePlanWithParameters(text, params).toString)
+      val pStock = norm(stock.parsePlanWithParameters(text, params).toString)
+      assert(pExt == pStock,
+        s"parsed plans must match:\n$pExt\nvs\n$pStock")
+    }
   }
 
-  test("the extension session carries the engine functions and the matview rule") {
-    val s = ext
+  test("the builder session carries the engine functions; the stock parser rejects DEDUP") {
     // functions injected at construction (not registerAll): usable in SQL
-    assert(s.sql("SELECT graft_normalize('Éclair') AS x")
+    assert(spark.sql("SELECT graft_normalize('Éclair') AS x")
       .collect()(0).getString(0) == "eclair")
-    // base session untouched: DEDUP must NOT parse there
-    graft.Tables(spark, d, "documents").createOrReplaceTempView("pe_docs2")
+    // the grammar is the extension's own: its delegate must NOT parse it
     val thrown = intercept[Exception] {
-      spark.sql("DEDUP pe_docs2 BY md5(text) KEEP MIN doc_id").collect()
+      stock.parsePlan("DEDUP pe_docs2 BY md5(text) KEEP MIN doc_id")
     }
     assert(thrown.getMessage.contains("DEDUP"),
-      "the stock session must reject the extension grammar")
+      "the stock parser must reject the extension grammar")
   }
 }
