@@ -69,7 +69,7 @@ class ParserExtensionSpec extends SparkSpec {
     }
   }
 
-  test("the builder session carries the engine functions; the stock parser rejects DEDUP") {
+  test("engine functions resolve; the stock parser rejects DEDUP") {
     // functions injected at construction (not registerAll): usable in SQL
     assert(spark.sql("SELECT graft_normalize('Éclair') AS x")
       .collect()(0).getString(0) == "eclair")
