@@ -10,7 +10,7 @@ object Bench {
   /** JSON string escaping for embedded error text: quotes, backslashes and
     * control characters would otherwise tear the self-adjudicating
     * artifact apart. */
-  private def jsonEscape(s: String): String = {
+  private[graft] def jsonEscape(s: String): String = {
     val b = new StringBuilder(s.length + 8)
     s.foreach {
       case '"'           => b.append("\\\"")
@@ -137,23 +137,10 @@ object Bench {
       .getOrElse(1).max(1)
     // Plan fingerprints alongside wall-time: shuffle bytes + rows read per
     // query (noise-free on this co-tenant host, unlike seconds — see
-    // BenchMetrics). Registered after warm-up so warm-up jobs don't count.
-    val metrics = new BenchMetrics
-    spark.sparkContext.addSparkListener(metrics)
-    // family split for the artifact: any gate that starts a Structured
-    // Streaming query during its attribution window is streaming-harness
-    spark.streams.addListener(
-      new org.apache.spark.sql.streaming.StreamingQueryListener {
-        override def onQueryStarted(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener
-              .QueryStartedEvent): Unit = metrics.markStreaming()
-        override def onQueryProgress(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener
-              .QueryProgressEvent): Unit = ()
-        override def onQueryTerminated(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener
-              .QueryTerminatedEvent): Unit = ()
-      })
+    // BenchMetrics), and the family split for the artifact: any gate that
+    // starts a Structured Streaming query during its attribution window is
+    // streaming-harness. Attached after warm-up so warm-up jobs don't count.
+    val metrics = new BenchMetrics().attach(spark)
     def loadAvg(): Seq[Double] =
       scala.util.Try(java.nio.file.Files.readString(
           java.nio.file.Paths.get("/proc/loadavg"))

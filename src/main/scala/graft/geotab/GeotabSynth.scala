@@ -3,7 +3,9 @@ package graft.geotab
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.Tables
+import graft.streaming.StreamGate
 
 /** Deterministic Geotab-shaped entity tables synthesized from the driver's
   * TPC-H-ish fixtures, so the full reference pipeline (joins, union-driver
@@ -297,17 +299,11 @@ object GeotabSynth {
     val clientName = "g05-" + sfDir.replaceAll("[^A-Za-z0-9]", "_") +
       "-" + java.util.UUID.randomUUID().toString.take(8)
     val flat = connectorFlatStream(spark, sfDir, clientName)
-    val out = java.nio.file.Files.createTempDirectory("graft-g05-").toFile
-    try graft.ops.ExportOps.withScratchCleanup(out) {
-      val q = flat.writeStream.format("parquet")
-        .option("path", s"$out/data").option("checkpointLocation", s"$out/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    try StreamGate(spark, "graft-g05", sfDir) { g =>
+      g.drainParquet(flat, shards = None)
       // localize the bounded fleet snapshot, then drop the scratch dir —
       // repeated gate/bench runs must not accumulate tempdirs
-      graft.ops.ExportOps.localizeAndDrop(
-        Tables.readParquet(spark, s"$out/data"), out, "id")
+      g.localizeAndDrop(Tables.readParquet(spark, g.data), "id")
     } finally graft.sources.geotab.GeotabClients.unregister(clientName)
   }
 
@@ -321,24 +317,20 @@ object GeotabSynth {
     val clientName = "g06-" + sfDir.replaceAll("[^A-Za-z0-9]", "_") +
       "-" + java.util.UUID.randomUUID().toString.take(8)
     val flat = connectorFlatStream(spark, sfDir, clientName)
-    val out = java.nio.file.Files.createTempDirectory("graft-g06-").toFile
-    try graft.ops.ExportOps.withScratchCleanup(out) {
-      val w = EventStreams.cotWriter(flat, new EventStreams.FileSink(s"$out/data"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      val q = EventStreams.start(w, s"$out/ckpt")
-      q.awaitTermination()
+    try StreamGate(spark, "graft-g06", sfDir) { g =>
+      g.drain(EventStreams.cotWriter(flat, new EventStreams.FileSink(g.data)),
+        shards = None)(_.processAllAvailable())
       // list the sink's batch dirs explicitly: a bare glob read fails with
       // an opaque PATH_NOT_FOUND when the sink produced nothing, and THAT
       // failure should name the gate
-      val batchDirs = Option(new java.io.File(out, "data").listFiles())
+      val batchDirs = Option(new java.io.File(g.data).listFiles())
         .getOrElse(Array.empty[java.io.File])
         .filter(f => f.isDirectory && f.getName.startsWith("batch_"))
       require(batchDirs.nonEmpty,
-        s"g06 streaming CoT sink produced no batches under $out/data")
-      graft.ops.ExportOps.localizeAndDrop(
+        s"g06 streaming CoT sink produced no batches under ${g.data}")
+      g.localizeAndDrop(
         spark.read.schema("id STRING, cot_xml STRING")
-          .json(batchDirs.map(_.getPath).toIndexedSeq: _*),
-        out, "id")
+          .json(batchDirs.map(_.getPath).toIndexedSeq: _*), "id")
     } finally graft.sources.geotab.GeotabClients.unregister(clientName)
   }
 
@@ -392,15 +384,11 @@ object GeotabSynth {
       x.close()
     })
     server.start()
-    val out = java.nio.file.Files.createTempDirectory("graft-g09-").toFile
-    try graft.ops.ExportOps.withScratchCleanup(out) {
+    try StreamGate(spark, "graft-g09", sfDir) { g =>
       val url = s"http://127.0.0.1:${server.getAddress.getPort}/submit"
       val sink = new FeatureCollectionHttpSink(url, nBuckets = 4, backoffMs = 1)
-      val q = EventStreams.start(
-        EventStreams.featureWriter(flat, sink)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
-        s"$out/ckpt")
-      q.awaitTermination()
+      g.drain(EventStreams.featureWriter(flat, sink), shards = None)(
+        _.processAllAvailable())
       import scala.jdk.CollectionConverters._
       import spark.implicits._
       val payloads = received.values().iterator().asScala.toSeq.toDF("payload")
@@ -437,7 +425,7 @@ object GeotabSynth {
           col("f.properties.metadata.driverPhone").as("driver_phone"),
           col("f.properties.metadata.designation").as("driver_designation"),
           col("f.properties.metadata.comment").as("driver_comment"))
-      graft.ops.ExportOps.localizeAndDrop(landed, out, "id")
+      g.localizeAndDrop(landed, "id")
     } finally {
       server.stop(0)
       graft.sources.geotab.GeotabClients.unregister(clientName)
@@ -464,6 +452,9 @@ object GeotabSynth {
     // out of the registry for the mid-stream snapshot swap
     val flat = connectorFlatStream(spark, sfDir, clientName)
     val client = GeotabClients(clientName).asInstanceOf[InMemoryGeotabClient]
+    // not a StreamGate drain: the snapshot swap happens between two
+    // micro-batches of ONE running query, which needs the default trigger
+    // (AvailableNow stops once the first snapshot is in)
     val out = java.nio.file.Files.createTempDirectory("graft-g10-").toFile
     try graft.ops.ExportOps.withScratchCleanup(out) {
       val q = flat.writeStream.format("parquet")
@@ -953,51 +944,38 @@ object GeotabSynth {
   def streamTrips(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import graft.streaming.TripSegmentation
-    val outDir = java.nio.file.Files.createTempDirectory("graft-g08-").toFile
-    val out = outDir.toString
-    graft.ops.ExportOps.withScratchCleanup(outDir) {
-    val pings = Tables(spark, sfDir, "orders").select(
-      concat(lit("dev-"), col("o_custkey")).as("deviceId"),
-      col("o_orderkey").cast("long").as("tsec"),
-      ((col("o_orderkey") % 5) * 10).cast("double").as("speed"))
-    val maxT = pings.agg(max(col("tsec"))).head().getLong(0)
-    val cuts = Seq(
-      col("tsec") <= maxT / 3,
-      col("tsec") > maxT / 3 && col("tsec") <= 2 * maxT / 3,
-      col("tsec") > 2 * maxT / 3)
-    // the file source picks up oldest-modified first: arrival order
-    graft.streaming.StreamGate.over(spark, outDir)
-      .arriveSlices(cuts.map(c => pings.filter(c)))
-    val stream = spark.readStream
-      .schema("deviceId STRING, tsec BIGINT, speed DOUBLE")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$out/in")
-      .select(col("deviceId"), timestamp_seconds(col("tsec")).as("ts"),
-        col("speed"))
-      .as[TripSegmentation.StatusPing]
-    val trips = TripSegmentation.trips(spark, stream,
-      stopSpeed = 1.0, watermarkDelay = "10 minutes",
-      idleTimeoutMs = Long.MaxValue / 4)
-    // fixture-scale state-store sizing: one store instance per shuffle
-    // partition per micro-batch; see StreamGate.shards
-    graft.ops.ExportOps.withConf(spark, "spark.sql.shuffle.partitions",
-      graft.streaming.StreamGate.shards()) {
-      val q = trips.toDF().writeStream.format("parquet")
-        .option("path", s"$out/data").option("checkpointLocation", s"$out/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val landed = Tables.readParquet(spark, s"$out/data")
-      .select(col("deviceId").as("device_id"),
-        (col("startMs") / 1000L).cast("long").as("trip_start_s"),
-        (col("endMs") / 1000L).cast("long").as("trip_end_s"),
-        col("nPings").cast("long").as("n_pings"),
-        col("maxSpeed").as("max_speed"))
-    // localize, then drop the scratch dir (slices + input + ckpt + sink) —
-    // same lifecycle as the d20/q58/e* gates
-    graft.ops.ExportOps.localizeAndDrop(landed, outDir,
-      "device_id", "trip_start_s")
+    StreamGate(spark, "graft-g08", sfDir) { g =>
+      val pings = Tables(spark, sfDir, "orders").select(
+        concat(lit("dev-"), col("o_custkey")).as("deviceId"),
+        col("o_orderkey").cast("long").as("tsec"),
+        ((col("o_orderkey") % 5) * 10).cast("double").as("speed"))
+      val maxT = pings.agg(max(col("tsec"))).head().getLong(0)
+      val cuts = Seq(
+        col("tsec") <= maxT / 3,
+        col("tsec") > maxT / 3 && col("tsec") <= 2 * maxT / 3,
+        col("tsec") > 2 * maxT / 3)
+      // the file source picks up oldest-modified first: arrival order
+      g.arriveSlices(cuts.map(c => pings.filter(c)))
+      val stream = g.readIn(
+          StructType.fromDDL("deviceId STRING, tsec BIGINT, speed DOUBLE"))
+        .select(col("deviceId"), timestamp_seconds(col("tsec")).as("ts"),
+          col("speed"))
+        .as[TripSegmentation.StatusPing]
+      val trips = TripSegmentation.trips(spark, stream,
+        stopSpeed = 1.0, watermarkDelay = "10 minutes",
+        idleTimeoutMs = Long.MaxValue / 4)
+      // fixture-scale state-store sizing: one store instance per shuffle
+      // partition per micro-batch; see StreamGate.shards
+      g.drainParquet(trips.toDF())
+      val landed = Tables.readParquet(spark, g.data)
+        .select(col("deviceId").as("device_id"),
+          (col("startMs") / 1000L).cast("long").as("trip_start_s"),
+          (col("endMs") / 1000L).cast("long").as("trip_end_s"),
+          col("nPings").cast("long").as("n_pings"),
+          col("maxSpeed").as("max_speed"))
+      // localize, then drop the scratch dir (slices + input + ckpt + sink) —
+      // same lifecycle as the d20/q58/e* gates
+      g.localizeAndDrop(landed, "device_id", "trip_start_s")
     }
   }
 

@@ -331,6 +331,10 @@ object ExportOps {
     * export's DuckDB twin. Stream/batch duality for the pipeline's
     * terminal stage, gated like g05 does it for the ingest stage. */
   private def e03(s: SparkSession, d: String): DataFrame = {
+    // not a StreamGate drain: [[streamingTrainingExport]] starts its query
+    // under the default trigger, and moving it to AvailableNow would change
+    // the per-batch cost of a benchmarked stream_write gate — a performance
+    // change to be measured on its own, not folded into a harness move
     val out = scratchDir("graft_sexport", d)
     withScratchCleanup(out) {
     new java.io.File(out, "in").mkdirs()

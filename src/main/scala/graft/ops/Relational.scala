@@ -2818,12 +2818,16 @@ object Relational {
     * written against the RAW lineitem table, exactly as a dashboard would
     * write them; the rule redirects each one onto the registered
     * partial-aggregate artifact (count partial + exact decimal sum
-    * partial), merging partials instead of re-scanning the fact table. The
-    * DuckDB oracle computes every grain directly from the raw table, so a
-    * hash match proves the rewrite is lossless; PlanAuditR13Spec pins that
-    * the optimized plans actually scan the view artifact (and that
-    * non-covered queries don't). At 100 TB the rewritten scan is KB-scale
-    * metadata where the original is the full fact table. */
+    * partial), merging partials instead of re-scanning the fact table. By
+    * the time the rule runs, the optimizer has folded each grain's
+    * `select(lit(level), k1, k2, n, cast(qd as double))` into the
+    * aggregate's output list, so the rule translates literals and casts
+    * around the merged partials too. The DuckDB oracle computes every
+    * grain directly from the raw table, so a hash match proves the rewrite
+    * is lossless; PlanAuditR13Spec pins that the optimized plan of q109's
+    * own collect scans the view artifact and never lineitem (and that
+    * non-covered queries keep the base scan). At 100 TB the rewritten scan
+    * is KB-scale metadata where the original is the full fact table. */
   private def q109(s: SparkSession, d: String): DataFrame = {
     import graft.plans.MatviewCatalog
     import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, Literal}

@@ -37,29 +37,24 @@ object SessionGates {
 
   private val GapMs = 300000L
 
-  /** Events row count, memoized per fixture dir (parquet footer
-    * metadata — one cheap job, shared across gates and reps). */
-  private val evCountCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
+  /** Events row count: fixture metadata ([[Tables.fixtureStat]]), shared
+    * across gates and reps. */
   private[ops] def eventCount(s: SparkSession, d: String): Long =
-    evCountCache.getOrElseUpdate(d, Tables(s, d, "events").count())
+    Tables.fixtureStat(d, "events_count")(Tables(s, d, "events").count())
 
-  /** (min, max, avg) of `unix_micros(ts)` over the events table,
-    * memoized per fixture dir: every streaming harness derives its
-    * micro-batch split from these three numbers, and they are FIXTURE
-    * metadata (immutable per dir for the life of the JVM), so one agg
+  /** (min, max, avg) of `unix_micros(ts)` over the events table: every
+    * streaming harness derives its micro-batch split from these three
+    * numbers, and as fixture metadata ([[Tables.fixtureStat]]) one agg
     * replaces the one-driver-job-per-gate-per-rep the bench otherwise
     * pays. The avg stays a Double so call sites truncate exactly as the
     * inline `avg(...).getDouble.toLong` they replace. */
-  private val tsStatsCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, Long, Double)]
   private[ops] def eventTsStats(s: SparkSession, d: String): (Long, Long, Double) =
-    tsStatsCache.getOrElseUpdate(d, {
+    Tables.fixtureStat(d, "events_ts_stats") {
       val r = Tables(s, d, "events").agg(
         min(unix_micros(col("ts"))), max(unix_micros(col("ts"))),
         avg(unix_micros(col("ts")))).head()
       (r.getLong(0), r.getLong(1), r.getDouble(2))
-    })
+    }
 
   /** 2020-01-01T00:00:00Z in epoch-ms — the fixed base the q98 serving
     * metric offsets from so per-key sums stay far from Long overflow. */

@@ -408,7 +408,7 @@ object SimilarityOps {
     val vecs = DedupOps.cachedShared(corpus.select(col("vec_id"),
       VectorFunctions.toDouble(col("embedding")).as("v")))
     val codebook = pqCodebook(s, vecs, m, k)
-    pqAdcServe(s, vecs, codebook, pqEncode(vecs, codebook, m))
+    pqAdcServe(vecs, codebook, pqEncode(vecs, codebook, m))
   }
 
   /** Lloyd rounds of the PQ codebook fit — a constant (like
@@ -547,7 +547,7 @@ object SimilarityOps {
   /** ADC serving from a (possibly reloaded) codebook + codes pair: the
     * compressed scan nominates a shortlist from codes alone; only the
     * shortlist pays a full-vector exact rerank. */
-  def pqAdcServe(s: SparkSession, vecs: DataFrame, codebook: DataFrame,
+  def pqAdcServe(vecs: DataFrame, codebook: DataFrame,
                  codes: DataFrame, m: Int = 8): DataFrame = {
     val queries = pqSubvecs(vecs, m).filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("sub"), col("sv").as("qv"))
@@ -595,7 +595,7 @@ object SimilarityOps {
     val vecs = DedupOps.cachedShared(emb(s, d).select(col("vec_id"),
       VectorFunctions.toDouble(col("embedding")).as("v")))
     val codebook = memoLocal(s, s"pqcb:$d:8:16")(pqCodebook(s, vecs))
-    pqAdcServe(s, vecs, codebook, pqEncode(vecs, codebook))
+    pqAdcServe(vecs, codebook, pqEncode(vecs, codebook))
   }
 
   /** v19: the PQ index PERSISTED and SERVED — v14's codebook and codes
@@ -752,7 +752,7 @@ object SimilarityOps {
       val codebook = memoLocal(s, s"pqcb:$d:8:16")(pqCodebook(s, vecs))
       codebook.write.parquet(s"$root/codebook")
       pqEncode(vecs, codebook).write.parquet(s"$root/codes")
-      val served = pqAdcServe(s, vecs,
+      val served = pqAdcServe(vecs,
         Tables.readParquet(s, s"$root/codebook"), Tables.readParquet(s, s"$root/codes"))
       ExportOps.localizeAndDrop(served, out, "q_id", "rank")
     }

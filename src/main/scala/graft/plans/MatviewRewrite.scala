@@ -82,7 +82,10 @@ object MatviewCatalog {
   * plain dim attributes; filters between the aggregate and the scan must
   * reference dims only (they re-apply to the view — partials are additive
   * under dim-predicate slicing); every aggregate call must map to a
-  * partial, with no DISTINCT and no FILTER clause. Output attribute ids
+  * partial, with no DISTINCT and no FILTER clause. Output expressions may
+  * wrap aggregates and dims in any expression and carry literals — the
+  * optimizer folds a `select(lit(...), cast(sum(...)))` above the
+  * aggregate into its output list before this rule runs. Output attribute ids
   * and data types are preserved exactly, so parent operators (and result
   * schemas) are untouched. The rule is idempotent: a rewritten aggregate
   * scans the view's root, which no definition claims as a base. */
@@ -141,20 +144,36 @@ object MatviewRewrite extends Rule[LogicalPlan] {
   private def translate(ne: NamedExpression, d: MatviewDef,
                         mvAttr: String => Option[Attribute]): Option[NamedExpression] =
     ne match {
-      case a: AttributeReference if d.dims(a.name) =>
-        mvAttr(a.name).map(m => Alias(m, a.name)(exprId = a.exprId))
-      case al @ Alias(a: AttributeReference, nm) if d.dims(a.name) =>
-        mvAttr(a.name).map(m => Alias(m, nm)(exprId = al.exprId))
-      case al @ Alias(ae: AggregateExpression, nm)
-          if !ae.isDistinct && ae.filter.isEmpty =>
-        d.partialOf(ae.aggregateFunction).flatMap(mvAttr).map { p =>
-          val merged = ae.copy(aggregateFunction = Sum(p))
-          val typed: Expression =
-            if (merged.dataType == al.dataType) merged
-            else Cast(merged, al.dataType)
-          Alias(typed, nm)(exprId = al.exprId)
+      // a grouping key passed through: the view's column under its id
+      case a: AttributeReference =>
+        onView(a, d, mvAttr).map(m => Alias(m, a.name)(exprId = a.exprId))
+      case _ => onView(ne, d, mvAttr).map(_.asInstanceOf[NamedExpression])
+    }
+
+  /** `e` over the view's rows, or None if the view cannot answer it: a
+    * covered aggregate becomes the merge of its partial, a dim attribute
+    * the view's column, a literal stays, and every other expression is
+    * rebuilt over its translated children. Any other attribute, or an
+    * aggregate no partial covers, bails. */
+  private def onView(e: Expression, d: MatviewDef,
+                     mvAttr: String => Option[Attribute]): Option[Expression] =
+    e match {
+      case ae: AggregateExpression =>
+        if (ae.isDistinct || ae.filter.nonEmpty) None
+        else d.partialOf(ae.aggregateFunction).flatMap(mvAttr).map { p =>
+          val sum = ae.copy(aggregateFunction = Sum(p))
+          val typed = if (sum.dataType == ae.dataType) sum else Cast(sum, ae.dataType)
+          // over no partial rows `sum` is NULL; the base aggregate's own
+          // empty-input result (count's 0) must come back instead
+          ae.aggregateFunction.defaultResult.fold(typed: Expression)(z =>
+            Coalesce(Seq(typed, z)))
         }
-      case _ => None
+      case a: AttributeReference =>
+        if (d.dims(a.name)) mvAttr(a.name) else None
+      case l: Literal => Some(l)
+      case leaf if leaf.children.isEmpty && leaf.references.nonEmpty => None
+      case other =>
+        traverse(other.children)(onView(_, d, mvAttr)).map(other.withNewChildren)
     }
 
   private def traverse[A, B](xs: Seq[A])(f: A => Option[B]): Option[Seq[B]] =

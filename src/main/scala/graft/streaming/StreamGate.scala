@@ -140,7 +140,7 @@ object StreamGate {
 
   /** Sys-prop that overrides every gate's state-store partition count, so
     * the partition-invariance sweep (PartitionInvarianceSpec) and the
-    * StreamProbe shard A/B can vary the STATE shard count, not just the
+    * `graft.Probe` shard A/B can vary the STATE shard count, not just the
     * session default — results are a pure function of the data at any
     * parallelism. */
   val ShardsProp = "graft.stream.shuffle.partitions"

@@ -18,14 +18,22 @@ import org.apache.spark.sql.functions._
   *  - the answer really comes from the artifact: doctoring the view
   *    changes the result (serve-from-artifact proof);
   *  - registration is scoped: after unregister, the same query scans the
-  *    base again. */
+  *    base again;
+  *  - q109's own collect, whose grains carry literals and casts around the
+  *    aggregates, scans only the view;
+  *  - a merged count over an empty dim slice reads 0, as the base count
+  *    does, not the NULL a bare sum of no partials gives. */
 class PlanAuditR13Spec extends SparkSpec {
 
   private val d = "/root/testdata/sf0.001"
   private def lineitem = Tables(spark, d, "lineitem")
 
   private def scannedRoots(df: DataFrame): Seq[String] =
-    df.queryExecution.optimizedPlan.collect {
+    rootsIn(df.queryExecution.optimizedPlan)
+
+  private def rootsIn(
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Seq[String] =
+    plan.collect {
       case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         lr.relation match {
           case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
@@ -344,6 +352,44 @@ class PlanAuditR13Spec extends SparkSpec {
     assert(correct.toSet != leaky.toSet,
       "a future-leaking feature join must be distinguishable from the " +
         "point-in-time assembly, or the gate is vacuous")
+  }
+
+  test("q109: the gate's own collect scans the view, never lineitem") {
+    // the optimizer folds each grain's literal/cast projection into the
+    // aggregate's output list before the rule runs; those grains must
+    // still rewrite
+    val collects = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        if (funcName == "collect") { collects.add(qe.optimizedPlan); () }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      SparkEntry.queries("q109_matview_rewrite")(spark, d)
+      val deadline = System.nanoTime() + 10000000000L
+      while (collects.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+    assert(!collects.isEmpty, "q109 ran no collect")
+    val roots = rootsIn(collects.peek())
+    assert(roots.nonEmpty && roots.forall(_.contains("graft_mvrw")),
+      s"q109's collect must scan only the view artifact, scanned: $roots")
+  }
+
+  test("q109: a global count over an empty dim slice reads 0, not NULL") {
+    withCube { _ =>
+      val empty = lineitem.filter(col("l_returnflag") === "no such flag")
+        .agg(count(lit(1)).as("n"))
+      assert(scannedRoots(empty).exists(_.contains("graft_mvplan")),
+        "the empty slice must still be served by the view")
+      // `n` keeps count's non-nullable type, so `collect` reads a NULL
+      // merge as 0 anyway; the JSON encoder checks the value itself
+      assert(empty.collect().toSeq === Seq(org.apache.spark.sql.Row(0L)))
+      assert(empty.toJSON.collect().toSeq === Seq("""{"n":0}"""))
+    }
   }
 
   test("q109: registration is scoped — after unregister the base serves again") {

@@ -23,7 +23,7 @@ class SimilarityOpsR11Spec extends SparkSpec {
       SimilarityOps.pqEncode(vecs, codebook).write.parquet(s"$root/codes")
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toSeq.map(String.valueOf(_))).toSet
-      val fromArtifact = rows(SimilarityOps.pqAdcServe(spark, vecs,
+      val fromArtifact = rows(SimilarityOps.pqAdcServe(vecs,
         spark.read.parquet(s"$root/codebook"),
         spark.read.parquet(s"$root/codes")))
       val inMemory = rows(SimilarityOps.pqAdcTopK(spark,
@@ -32,7 +32,7 @@ class SimilarityOpsR11Spec extends SparkSpec {
         "reloaded codebook+codes must serve exactly what the in-memory " +
           "path computes — the artifact IS the index")
       // serve twice from the same artifacts: bit-stable
-      assert(rows(SimilarityOps.pqAdcServe(spark, vecs,
+      assert(rows(SimilarityOps.pqAdcServe(vecs,
         spark.read.parquet(s"$root/codebook"),
         spark.read.parquet(s"$root/codes"))) === fromArtifact)
       // doctored artifact: flip every code of one non-query vector — the
@@ -47,7 +47,7 @@ class SimilarityOpsR11Spec extends SparkSpec {
           when(col("vec_id") === victim, (col("code") + 1) % 16)
             .otherwise(col("code")))
         .write.parquet(s"$root/codes2")
-      val doctored = rows(SimilarityOps.pqAdcServe(spark, vecs,
+      val doctored = rows(SimilarityOps.pqAdcServe(vecs,
         spark.read.parquet(s"$root/codebook"),
         spark.read.parquet(s"$root/codes2")))
       assert(doctored !== fromArtifact,
