@@ -149,11 +149,16 @@ object Tables {
     if (leaves.exists(_.isEmpty)) return None // a missing path: Spark's error
     val files = leaves.flatMap(_.get)
     if (files.isEmpty || files.exists(f => isSummary(f.getPath.getName))) return None
-    val first = files.minBy(_.getPath.toString)
+    Some(footerSchema(s, conf, files.minBy(_.getPath.toString)))
+  }
+
+  /** The Spark schema of one parquet file, from its footer alone, converted
+    * under the session's conf as Spark's own inference converts it. */
+  def footerSchema(s: SparkSession, conf: Configuration, file: FileStatus): StructType = {
     val footer = ParquetFooterReader.readFooter(
-      HadoopInputFile.fromStatus(first, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
-    Some(ParquetFileFormat.readSchemaFromFooter(new Footer(first.getPath, footer),
-      new ParquetToSparkSchemaConverter(s.sessionState.conf)))
+      HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(s.sessionState.conf))
   }
 
   /** The visible files under `path` (itself, if a file), recursively, or

@@ -145,6 +145,9 @@ object AuditOps {
           max(col("ms")).as("max_ms"))
         .write.mode("overwrite").parquet(s"$out/data")
       val m = obs.get
+      // the metrics are on the driver now; the export served only as the
+      // observed pass (the result frame below never reads it)
+      ExportOps.deleteRecursively(out)
       def dbl(v: Any): Double = v match {
         case l: Long => l.toDouble
         case i: Int => i.toDouble

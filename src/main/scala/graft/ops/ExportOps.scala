@@ -1393,16 +1393,20 @@ object ExportOps {
   }
 
   /** Files present in snapshot `to` but not in snapshot `from` (pass
-    * from = 0 for "since the beginning"). The collect is manifest-sized —
-    * the planner-side metadata read every incremental consumer performs
+    * from = 0 for "since the beginning"). Both manifests are collected in
+    * one read and diffed on the driver: they are manifest-sized — the
+    * planner-side metadata read every incremental consumer performs
     * (e14's argument: thousands of manifest rows vs billions of data
-    * rows). */
+    * rows) — and a distributed diff would shuffle the file paths. */
   def newFilesSince(s: SparkSession, root: String,
                     from: Long, to: Long): Seq[String] = {
-    val cur = Tables.readParquet(s, s"$root/manifest/v=$to")
-    val prev = if (from <= 0L) cur.limit(0)
-               else Tables.readParquet(s, s"$root/manifest/v=$from")
-    cur.except(prev).collect().map(_.getString(0)).toIndexedSeq.sorted
+    val versions = if (from <= 0L) Seq(to) else Seq(to, from)
+    val rows = Tables.readParquet(s, versions.map(v => s"$root/manifest/v=$v"),
+        Map("basePath" -> s"$root/manifest"))
+      .select(col("file"), col("v").cast("long")).collect()
+    val (cur, prev) = rows.partition(_.getLong(1) == to)
+    val old = prev.map(_.getString(0)).toSet
+    cur.map(_.getString(0)).filterNot(old).distinct.sorted.toIndexedSeq
   }
 
   /** e18: INCREMENTAL CONSUMPTION of an append-only table — the
@@ -1574,7 +1578,7 @@ object ExportOps {
     * The gate bootstraps a nation-partitioned customer snapshot (v1),
     * applies the q68 change batch through the partition-grain merge
     * (v2, vacuum deferred — the retention-window posture), then
-    * aggregates BOTH versions through [[TxTable.readVersion]]: the v1
+    * aggregates BOTH versions through [[TxTable.readVersions]]: the v1
     * rows must reproduce the pre-merge table (rollback/audit/
     * reproducible-training reads against a moving table) and the v2
     * rows the post-merge state — a time-travel read that leaked files
@@ -1594,15 +1598,15 @@ object ExportOps {
       Relational.mergePartitioned(s, snapDir,
         Relational.q68Changes(s, d), Seq("name", "bal"),
         vacuumNow = false) // v2; v1's files stay readable until vacuum
-      def summarize(df: DataFrame, v: Long): DataFrame =
-        df.groupBy(col("p").cast("int").as("p"))
-          .agg(count(lit(1)).as("n_rows"),
-            sum(expr("CAST(floor(bal * 100 + 0.5) AS BIGINT)"))
-              .as("sum_bal_cents"))
-          .withColumn("version", lit(v))
-      val both = summarize(TxTable.readVersion(s, snapDir, 1L), 1L)
-        .unionByName(summarize(TxTable.readVersion(s, snapDir, 2L), 2L))
-      localizeAndDrop(both, out, "version", "p")
+      // one scan: the v1 files v2 still lists are read once, tagged twice
+      val both = TxTable.readVersions(s, snapDir, Seq(1L, 2L))
+        .groupBy(col("p").cast("int").as("p"), col(TxTable.VersionCol))
+        .agg(count(lit(1)).as("n_rows"),
+          sum(expr("CAST(floor(bal * 100 + 0.5) AS BIGINT)"))
+            .as("sum_bal_cents"))
+        .select(col("p"), col("n_rows"), col("sum_bal_cents"),
+          col(TxTable.VersionCol))
+      localizeAndDrop(both, out, TxTable.VersionCol, "p")
     }
   }
 

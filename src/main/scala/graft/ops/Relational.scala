@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType}
 import graft.Tables
 
 /** Relational operator pack over the driver fixtures: scans, filters,
@@ -2132,23 +2133,25 @@ object Relational {
   }
 
   /** q68's deterministic change batch, public for the specs: every change
-    * row carries its nation as the partition value `p`. */
+    * row carries its nation as the partition value `p`. One scan of
+    * customer: each row emits its update, delete and insert through one
+    * generator over three same-shaped structs, and `keep` drops the ones
+    * its key does not select. */
   def q68Changes(s: SparkSession, d: String): DataFrame = {
-    val cc = t(s, d, "customer").filter(col("c_nationkey").isin(3, 7))
-    val updates = cc.filter(col("c_custkey") % 3 === 0)
-      .select(col("c_custkey").as("k"), col("c_name").as("name"),
-        (col("c_acctbal") + 100).as("bal"), col("c_nationkey").as("p"),
-        lit(1L).as("seq"), lit("U").as("op"))
-    val deletes = cc.filter(col("c_custkey") % 11 === 0)
-      .select(col("c_custkey").as("k"), lit(null).cast("string").as("name"),
-        lit(null).cast("double").as("bal"), col("c_nationkey").as("p"),
-        lit(2L).as("seq"), lit("D").as("op"))
-    val inserts = cc.filter(col("c_custkey") % 13 === 0)
-      .select((col("c_custkey") + 200000L).as("k"),
-        concat(lit("new-"), col("c_name")).as("name"),
-        col("c_acctbal").as("bal"), col("c_nationkey").as("p"),
-        lit(1L).as("seq"), lit("I").as("op"))
-    updates.unionByName(deletes).unionByName(inserts)
+    val key = col("c_custkey")
+    def change(keep: Column, k: Column, name: Column, bal: Column,
+               seq: Long, op: String): Column =
+      struct(keep.as("keep"), k.as("k"), name.as("name"), bal.as("bal"),
+        col("c_nationkey").as("p"), lit(seq).as("seq"), lit(op).as("op"))
+    t(s, d, "customer").filter(col("c_nationkey").isin(3, 7))
+      .select(inline(array(
+        change(key % 3 === 0, key, col("c_name"), col("c_acctbal") + 100,
+          1L, "U"),
+        change(key % 11 === 0, key, lit(null).cast(StringType),
+          lit(null).cast(DoubleType), 2L, "D"),
+        change(key % 13 === 0, key + 200000L,
+          concat(lit("new-"), col("c_name")), col("c_acctbal"), 1L, "I"))))
+      .filter(col("keep")).drop("keep")
   }
 
   /** q70: telemetry gap-fill — per-user 5-minute resample with

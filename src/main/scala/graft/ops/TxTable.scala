@@ -1,7 +1,14 @@
 package graft.ops
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, PartitionDirectory, PartitionSpec, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.functions.{array, col, explode, lit, when}
+import org.apache.spark.sql.types.{LongType, StructType}
 import graft.Tables
 
 /** Versioned-manifest commit protocol for parquet tables maintained by
@@ -27,6 +34,15 @@ import graft.Tables
   *    one atomic metadata op. Readers resolve max-N and read exactly
   *    that file set, so they see version N or version N+1, never a
   *    mixture, never a missing partition.
+  *  - Reads are served FROM the manifest, never from a listing: every
+  *    read ([[read]], [[readVersion]], [[readVersions]]) resolves the
+  *    version's manifest, stats each listed file once, and hands Spark a
+  *    relation over exactly that file set through a file index of its
+  *    own. Spark never globs, lists or checks the paths again, and
+  *    partition columns are inferred from the directory-encoded paths
+  *    as a `basePath` read infers them. Several versions read together
+  *    scan each distinct file once (time travel over a merge rereads no
+  *    untouched partition).
   *  - A crash at ANY point before the manifest rename leaves the old
   *    manifest latest and every old file untouched — the table still
   *    serves the old version. A crash after leaves the new version
@@ -189,73 +205,185 @@ object TxTable {
     walk(rootPath)
   }
 
-  /** Reads the latest committed version: exactly the manifest's file
-    * set, with partition columns recovered from the directory-encoded
-    * paths (`basePath`), so the frame is indistinguishable from a
-    * directory read of a clean table — but immune to in-flight or
-    * crashed maintenance. Partition-column predicates still prune at
-    * the file-index level (spec-pinned). */
-  def read(s: SparkSession, root: String): DataFrame = {
-    val rels = liveFiles(s, root)
-    if (rels.isEmpty) return emptySnapshot(s, root, currentVersion(s, root))
-    readResolved(s, root, rels)
+  /** Reads the latest committed version: [[readVersion]] of
+    * [[currentVersion]]. */
+  def read(s: SparkSession, root: String): DataFrame =
+    readVersion(s, root, currentVersion(s, root))
+
+  /** Snapshot-as-of read: the table exactly as version `version` served
+    * it. Valid for any version [[vacuum]] has not yet retired —
+    * rollback, audit, and reproducible-training reads against a moving
+    * table. The frame is indistinguishable from a directory read of a
+    * clean table (same schema, partition columns recovered from the
+    * directory-encoded paths), but immune to in-flight or crashed
+    * maintenance, and partition-column predicates still prune at the
+    * file-index level (spec-pinned). */
+  def readVersion(s: SparkSession, root: String, version: Long): DataFrame =
+    scan(s, root, Seq(version))
+
+  /** The column [[readVersions]] tags each row with. */
+  val VersionCol = "version"
+
+  /** Time travel over several versions in ONE scan: the union of the
+    * `versions`' snapshots, each row tagged with [[VersionCol]] once per
+    * version whose manifest lists its file. A file two versions share
+    * (every partition a merge did not touch) is read once and emitted
+    * under both tags, so reading v1 and v2 of a table a merge rewrote
+    * two partitions of costs one scan of the v1 files plus the two new
+    * partitions' files, not two scans of the table (e22). */
+  def readVersions(s: SparkSession, root: String, versions: Seq[Long]): DataFrame = {
+    require(versions.nonEmpty && versions.size < 64 &&
+      versions.distinct.size == versions.size,
+      s"readVersions takes 1 to 63 distinct versions, got $versions")
+    val df = scan(s, root, versions)
+    require(!df.columns.contains(VersionCol),
+      s"table $root already has a column named $VersionCol")
+    if (versions.size == 1) df.withColumn(VersionCol, lit(versions.head))
+    else {
+      val tags = versions.zipWithIndex.map { case (v, i) =>
+        when(col(MaskCol).bitwiseAND(1L << i) =!= 0L, lit(v)) }
+      df.withColumn(VersionCol, explode(array(tags: _*)))
+        .filter(col(VersionCol).isNotNull).drop(MaskCol)
+    }
   }
 
-  /** Resolves manifest lines against the root and reads them. basePath
-    * (directory-encoded partition recovery) is only passed when every
-    * reference lives UNDER the root: a shallow clone's manifest points
-    * outside its root (`../source/...`), which basePath rejects — such
-    * tables read their partition columns from the data itself (the e27
-    * gate clones an unpartitioned layout; a partitioned clone at scale
-    * would use absolute-URI references the same way Delta does).
+  /** Per-file version bitmask of a multi-version [[scan]]: bit i is set
+    * when `versions(i)`'s manifest lists the file. It rides as a synthetic
+    * partition value, so it costs nothing per row until it is exploded. */
+  private val MaskCol = "_tx_version_mask"
+
+  /** The one read path: a parquet relation over exactly the union of the
+    * `versions`' manifests, each distinct file stated once. No glob, no
+    * directory listing, no Spark data-source resolution: the file set is
+    * the manifest's, so nothing is ever re-discovered from the filesystem.
+    * With more than one version the frame carries [[MaskCol]].
+    *
+    * A manifest can outlive its data: vacuum keeps the last keepManifests
+    * manifests as commit HISTORY but deletes every data file the latest
+    * version no longer references. The one stat per file doubles as the
+    * check that fails a vacuumed snapshot with the real story, not
+    * parquet's file-not-found.
+    *
+    * Partition columns come from the directory-encoded paths through
+    * Spark's own partition inference, with the table root as the base
+    * path — unless a reference lives OUTSIDE the root: a shallow clone's
+    * manifest points at `../source/...`, and such tables read their
+    * columns from the data itself (the e27 gate clones an unpartitioned
+    * layout; a partitioned clone at scale would use absolute-URI
+    * references the same way Delta does).
     *
     * GUARD: if out-of-root references coexist with a directory-ENCODED
-    * partition layout (`col=value/` path segments), dropping basePath
-    * would silently read the table back WITHOUT its partition columns —
-    * a schema change, not a degraded read. That combination fails loudly
+    * partition layout (`col=value/` path segments), reading without the
+    * root as base path would silently drop the partition columns — a
+    * schema change, not a degraded read. That combination fails loudly
     * here (and [[shallowClone]] rejects it at clone time, where the fix
     * — absolute-URI references — belongs). */
-  private def readResolved(s: SparkSession, root: String,
-                           rels: Seq[String]): DataFrame = {
-    val files = rels.map(f => s"$root/$f")
-    if (rels.forall(f => !f.contains("..")))
-      Tables.readParquet(s, files, Map("basePath" -> root))
-    else if (rels.exists(hasPartitionDirs))
+  private def scan(s: SparkSession, root: String, versions: Seq[Long]): DataFrame = {
+    val manifests = versions.map(v => v -> filesOfVersion(s, root, v))
+    val masks = mutable.LinkedHashMap.empty[String, Long]
+    for (((_, rels), i) <- manifests.zipWithIndex; rel <- rels)
+      masks(rel) = masks.getOrElse(rel, 0L) | (1L << i)
+    val tagged = versions.size > 1
+    if (masks.isEmpty) {
+      val empty = emptySnapshot(s, root, versions.head)
+      return if (tagged) empty.withColumn(MaskCol, lit(0L)) else empty
+    }
+    val (fs, rootPath) = fsOf(s, root)
+    val stats = masks.keys.map { rel =>
+      rel -> (try Some(fs.getFileStatus(new Path(s"$root/$rel")))
+              catch { case _: java.io.FileNotFoundException => None })
+    }.toMap
+    manifests.foreach { case (v, rels) =>
+      val missing = rels.filter(stats(_).isEmpty)
+      if (missing.nonEmpty) throw new IllegalStateException(
+        s"version $v of $root is no longer readable: ${missing.size} of " +
+          s"${rels.size} data files were deleted by vacuum (only the latest " +
+          s"version's data files survive a vacuum; retained older manifests " +
+          s"are commit history, not readable snapshots). First missing: " +
+          s"$root/${missing.head}")
+    }
+    val inRoot = masks.keys.forall(!_.contains(".."))
+    if (!inRoot && masks.keys.exists(hasPartitionDirs))
       throw new IllegalStateException(
         s"table $root mixes out-of-root manifest references with a " +
           s"directory-encoded partition layout: reading it without " +
           s"basePath would silently drop the partition columns. Re-clone " +
           s"with absolute references or from an unpartitioned source.")
-    else Tables.readParquet(s, files)
+    val files = masks.toSeq.map { case (rel, mask) => (stats(rel).get, mask) }
+    val footer = Tables.footerSchema(s, s.sessionState.newHadoopConf(),
+      files.map(_._1).minBy(_.getPath.toString))
+    val index =
+      if (inRoot) new ManifestIndex(s, Map("basePath" -> root),
+        Seq(fs.makeQualified(rootPath)), footer, files, tagged)
+      else new ManifestIndex(s, Map.empty, files.map(_._1.getPath), footer, files, tagged)
+    val partCols = index.partitionSpec().partitionColumns
+    val resolver = s.sessionState.conf.resolver
+    val dataSchema = GraftColumnBridge.asNullable(StructType(footer.filterNot(f =>
+      partCols.fieldNames.exists(resolver(_, f.name)))))
+    s.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      dataSchema, None, new ParquetFileFormat, Map.empty)(s))
+  }
+
+  /** A file index that serves only the files it is given: the
+    * manifest-resolved, once-stated data files. Spark's own partition
+    * inference runs over their directories (`basePath` and root paths
+    * play the roles they play in a path read), so partition columns and
+    * their types are exactly a directory read's. Files are served grouped
+    * by (partition directory, version mask), and partition filters prune
+    * those groups as Spark prunes partition directories. */
+  private final class ManifestIndex(s: SparkSession, params: Map[String, String],
+                                    override val rootPaths: Seq[Path], footer: StructType,
+                                    files: Seq[(FileStatus, Long)], tagged: Boolean)
+    extends PartitioningAwareFileIndex(s, params, Some(footer)) {
+    override lazy val leafFiles: mutable.LinkedHashMap[Path, FileStatus] =
+      mutable.LinkedHashMap(files.map { case (st, _) => st.getPath -> st }: _*)
+    override lazy val leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
+      files.map(_._1).toArray.groupBy(_.getPath.getParent)
+    private lazy val spec = inferPartitioning()
+    override def partitionSpec(): PartitionSpec = spec
+    override def partitionSchema: StructType =
+      if (tagged) spec.partitionColumns.add(MaskCol, LongType, nullable = false)
+      else spec.partitionColumns
+    override def refresh(): Unit = ()
+
+    // a file whose directory carries no partition values is not served,
+    // as in Spark's own listFiles
+    private lazy val partitions: Seq[(InternalRow, Array[FileStatus])] = {
+      val partCols = spec.partitionColumns
+      val valuesOf = spec.partitions.map(pp => pp.path -> pp.values).toMap
+      val groups = mutable.LinkedHashMap.empty[(Path, Long), mutable.ArrayBuffer[FileStatus]]
+      files.foreach { case (st, mask) =>
+        val dir = if (partCols.isEmpty) null else st.getPath.getParent
+        if (st.getLen > 0 && (dir == null || valuesOf.contains(dir)))
+          groups.getOrElseUpdate((dir, if (tagged) mask else 0L),
+            mutable.ArrayBuffer.empty) += st
+      }
+      groups.toSeq.map { case ((dir, mask), sts) =>
+        val values = if (dir == null) Seq.empty else valuesOf(dir).toSeq(partCols)
+        InternalRow.fromSeq(if (tagged) values :+ mask else values) -> sts.toArray
+      }
+    }
+
+    override def listFiles(partitionFilters: Seq[Expression],
+                           dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      val schema = partitionSchema
+      val keep = partitionFilters.reduceOption(And).map { p =>
+        Predicate.createInterpreted(p.transform {
+          case a: AttributeReference =>
+            val i = schema.indexWhere(_.name == a.name)
+            BoundReference(i, schema(i).dataType, nullable = true)
+        })
+      }
+      partitions.collect { case (values, sts) if keep.forall(_.eval(values)) =>
+        PartitionDirectory(values, sts)
+      }
+    }
   }
 
   /** A hive-style partition directory segment (`col=value/`) anywhere on
     * the file's directory path. */
   private def hasPartitionDirs(rel: String): Boolean =
     rel.split('/').dropRight(1).exists(_.contains("="))
-
-  /** Snapshot-as-of read: the table exactly as version `version` served
-    * it. Valid for any version [[vacuum]] has not yet retired —
-    * rollback, audit, and reproducible-training reads against a moving
-    * table (e22 gates it end-to-end). */
-  def readVersion(s: SparkSession, root: String, version: Long): DataFrame = {
-    val rels = filesOfVersion(s, root, version)
-    val files = rels.map(f => s"$root/$f")
-    if (files.isEmpty) return emptySnapshot(s, root, version)
-    // A manifest can outlive its data: vacuum keeps the last keepManifests
-    // manifests as commit HISTORY but deletes every data file the latest
-    // version no longer references. Check up front so a vacuumed snapshot
-    // fails with the real story, not parquet's file-not-found.
-    val (fs, _) = fsOf(s, root)
-    val missing = files.filterNot(f => fs.exists(new Path(f)))
-    if (missing.nonEmpty) throw new IllegalStateException(
-      s"version $version of $root is no longer readable: ${missing.size} of " +
-        s"${files.size} data files were deleted by vacuum (only the latest " +
-        s"version's data files survive a vacuum; retained older manifests " +
-        s"are commit history, not readable snapshots). First missing: " +
-        missing.head)
-    readResolved(s, root, rels)
-  }
 
   /** An empty-but-legal snapshot (a manifest that commits zero files —
     * e.g. a retention erasure expiring every partition). Parquet cannot

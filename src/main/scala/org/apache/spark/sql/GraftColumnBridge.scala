@@ -30,4 +30,8 @@ object GraftColumnBridge {
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `StructType.asNullable`: a file relation's data schema is nullable
+    * all the way down, as `DataSource` makes it. */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
 }

@@ -38,7 +38,7 @@ class NewSessionSpec extends SparkSpec {
   test("a new session rewrites a covered aggregate onto a registered view") {
     val lineitem = Tables(fresh, d, "lineitem")
     val out = ops.ExportOps.scratchDir("graft_ns_mv", "spec")
-    ops.ExportOps.withScratchCleanup(out) {
+    cleaned(out) {
       val mvPath = s"$out/mv"
       lineitem.groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("n"),

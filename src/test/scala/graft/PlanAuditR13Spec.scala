@@ -44,7 +44,7 @@ class PlanAuditR13Spec extends SparkSpec {
 
   private def withCube[A](body: String => A): A = {
     val out = ExportOps.scratchDir("graft_mvplan", "spec")
-    ExportOps.withScratchCleanup(out) {
+    cleaned(out) {
       val mvPath = s"$out/mv"
       lineitem.groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("n"),

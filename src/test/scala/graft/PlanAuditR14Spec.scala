@@ -91,7 +91,7 @@ class PlanAuditR14Spec extends SparkSpec {
 
   test("e26: the ORC scan carries the pushed predicate and the pruned schema") {
     val out = ExportOps.scratchDir("graft_orc_spec", d)
-    ExportOps.withScratchCleanup(out) {
+    cleaned(out) {
       val ev = Tables(spark, d, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           unix_micros(col("ts")).as("ts_us"), col("value"))

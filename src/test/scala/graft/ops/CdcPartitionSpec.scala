@@ -93,6 +93,61 @@ class CdcPartitionSpec extends SparkSpec {
     }
   }
 
+  /** q68's change batch as three filtered scans joined by a union: the
+    * reference the one-pass [[Relational.q68Changes]] must reproduce. */
+  private def q68ChangesByUnion() = {
+    val cc = spark.read.parquet(s"$d/customer.parquet")
+      .filter(col("c_nationkey").isin(3, 7))
+    val updates = cc.filter(col("c_custkey") % 3 === 0)
+      .select(col("c_custkey").as("k"), col("c_name").as("name"),
+        (col("c_acctbal") + 100).as("bal"), col("c_nationkey").as("p"),
+        lit(1L).as("seq"), lit("U").as("op"))
+    val deletes = cc.filter(col("c_custkey") % 11 === 0)
+      .select(col("c_custkey").as("k"), lit(null).cast("string").as("name"),
+        lit(null).cast("double").as("bal"), col("c_nationkey").as("p"),
+        lit(2L).as("seq"), lit("D").as("op"))
+    val inserts = cc.filter(col("c_custkey") % 13 === 0)
+      .select((col("c_custkey") + 200000L).as("k"),
+        concat(lit("new-"), col("c_name")).as("name"),
+        col("c_acctbal").as("bal"), col("c_nationkey").as("p"),
+        lit(1L).as("seq"), lit("I").as("op"))
+    updates.unionByName(deletes).unionByName(inserts)
+  }
+
+  test("q68: the one-pass change batch equals the three-scan union, from one scan") {
+    val onePass = Relational.q68Changes(spark, d)
+    val union = q68ChangesByUnion()
+    assert(onePass.schema === union.schema)
+    val rows = (df: org.apache.spark.sql.DataFrame) =>
+      df.collect().map(_.toString).toSeq.sorted
+    assert(rows(onePass) === rows(union))
+    assert(rows(onePass).map(_.split(",").last).toSet === Set("U]", "D]", "I]"))
+    val scans = onePass.queryExecution.optimizedPlan.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l
+    }
+    assert(scans.size === 1, onePass.queryExecution.optimizedPlan.toString)
+  }
+
+  test("q68: the manifest read of the touched side prunes with PartitionFilters") {
+    val out = ExportOps.scratchDir("graft_cdcpin2", "spec")
+    cleaned(out) {
+      val snapDir = s"$out/snap"
+      spark.read.parquet(s"$d/customer.parquet")
+        .select(col("c_custkey").as("k"), col("c_nationkey").as("p"))
+        .write.partitionBy("p").parquet(snapDir)
+      TxTable.bootstrapIfNeeded(spark, snapDir)
+      val touched = TxTable.read(spark, snapDir).filter(col("p").isin(3, 7))
+      val plan = touched.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      assert("PartitionFilters: \\[[^\\]]*IN \\(3,7\\)".r
+        .findFirstIn(plan).nonEmpty, plan)
+      val scannedDirs = touched.select(input_file_name()).distinct()
+        .collect().map(_.getString(0))
+        .flatMap("p=(\\d+)".r.findFirstMatchIn(_)).map(_.group(1).toInt).toSet
+      assert(scannedDirs === Set(3, 7))
+    }
+  }
+
   test("q73 kernel: ancestorPairs closes a deep chain in log rounds") {
     import spark.implicits._
     // a 33-deep chain (0←1←2…←33): naive chaining needs 33 joins,

@@ -19,7 +19,7 @@ class CdfRefreshSpec extends SparkSpec {
 
   test("c11: append-only CDF, day-1 byte-identity, idempotent re-run") {
     val out = ExportOps.scratchDir("graft_refresh_spec", d)
-    ExportOps.withScratchCleanup(out) {
+    cleaned(out) {
       val dir = s"$out/corpus"
       val docsT = graft.Tables(spark, d, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"),

@@ -21,7 +21,7 @@ class CloneRestoreSpec extends SparkSpec {
 
   test("e27: the clone is manifest-only; the source is never perturbed") {
     val out = ExportOps.scratchDir("graft_clone_spec", d)
-    ExportOps.withScratchCleanup(out) {
+    cleaned(out) {
       val src = s"$out/src"; val cln = s"$out/clone"
       graft.Tables(spark, d, "customer")
         .select(col("c_custkey").as("k"), col("c_acctbal").as("bal"),
@@ -56,7 +56,7 @@ class CloneRestoreSpec extends SparkSpec {
 
   test("e28: restore serves the old version as a NEW commit, history intact") {
     val out = ExportOps.scratchDir("graft_restore_spec", d)
-    ExportOps.withScratchCleanup(out) {
+    cleaned(out) {
       val snap = s"$out/snap"
       graft.Tables(spark, d, "customer")
         .select(col("c_custkey").as("k"), col("c_name").as("name"),

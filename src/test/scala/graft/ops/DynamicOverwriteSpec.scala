@@ -33,7 +33,7 @@ class DynamicOverwriteSpec extends SparkSpec {
 
   test("e25: dynamic overwrite rewrites only the incoming partitions, byte-identically elsewhere") {
     val out = ExportOps.scratchDir("graft_dynspec", "spec")
-    ExportOps.withScratchCleanup(out) {
+    cleaned(out) {
       val snap = new java.io.File(out, "snap")
       customer.write.partitionBy("p").parquet(snap.getPath)
       val allParts = partitionsOf(snap)
@@ -67,7 +67,7 @@ class DynamicOverwriteSpec extends SparkSpec {
 
   test("e25: the static default clobbers — only the incoming partitions survive") {
     val out = ExportOps.scratchDir("graft_dynspec2", "spec")
-    ExportOps.withScratchCleanup(out) {
+    cleaned(out) {
       val snap = new java.io.File(out, "snap")
       customer.write.partitionBy("p").parquet(snap.getPath)
       val rewrite = customer.filter(col("p").isin(3, 7))

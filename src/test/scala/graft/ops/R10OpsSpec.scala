@@ -40,6 +40,16 @@ class R10OpsSpec extends SparkSpec {
     assert(run() === metrics)
   }
 
+  test("q93: a finished run leaves no graft_observe scratch behind") {
+    val base = ExportOps.scratchDir("graft_observe", sf).getParentFile
+    val mine = s"_${ProcessHandle.current().pid()}_"
+    def observeDirs() = Option(base.list()).toSeq.flatten
+      .filter(n => n.startsWith("graft_observe_") && n.contains(mine)).toSet
+    val before = observeDirs()
+    SparkEntry.queries("q93_observed_metrics")(spark, sf).collect()
+    assert(observeDirs() -- before === Set.empty[String])
+  }
+
   test("q94: map-surface stats agree with the relational replay") {
     val viaMap = SparkEntry.queries("q94_map_funcs")(spark, sf)
     val relational = Tables(spark, sf, "events")

@@ -28,7 +28,7 @@ class TombstoneDeleteSpec extends SparkSpec {
 
   test("v22: tombstoned serve == rebuilt-without-deleted serve, and no deleted id surfaces") {
     val out = ExportOps.scratchDir("graft_tsspec", "spec")
-    ExportOps.withScratchCleanup(out) {
+    cleaned(out) {
       val root = out.getAbsolutePath
       SimilarityOps.signCodes(emb).write.parquet(s"$root/codes")
       val codesBefore = fileState(new java.io.File(out, "codes"))
@@ -60,7 +60,7 @@ class TombstoneDeleteSpec extends SparkSpec {
 
   test("v22: compaction folds tombstones in — serve unchanged, set empty, codes shrunk") {
     val out = ExportOps.scratchDir("graft_tsspec2", "spec")
-    ExportOps.withScratchCleanup(out) {
+    cleaned(out) {
       val root = out.getAbsolutePath
       SimilarityOps.signCodes(emb).write.parquet(s"$root/codes")
       SimilarityOps.v22Tombstones(spark, d).write.parquet(s"$root/tombstones")

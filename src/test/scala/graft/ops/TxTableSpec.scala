@@ -1,13 +1,137 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.metrics.source.HiveCatalogMetrics
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /** Unit pins for the [[TxTable]] protocol pieces CrashSafeSwapSpec's
   * end-to-end scenarios don't isolate: manifest-log trimming, hidden-name
-  * filtering in the data-file walk, and the loud failure modes of
-  * version resolution. */
+  * filtering in the data-file walk, the loud failure modes of version
+  * resolution, and the manifest-served read path (one scan per distinct
+  * file, no listing). */
 class TxTableSpec extends SparkSpec {
+
+  private val d = "/root/testdata/sf0.001"
+
+  /** A nation-partitioned customer snapshot at v1 and the q68 merge at
+    * v2, vacuum deferred: e22's two-version table. */
+  private def withMergedSnapshot[A](body: String => A): A = {
+    val out = ExportOps.scratchDir("graft_txunit_tt", "spec")
+    cleaned(out) {
+      val root = s"$out/snap"
+      spark.read.parquet(s"$d/customer.parquet")
+        .select(col("c_custkey").as("k"), col("c_name").as("name"),
+          col("c_acctbal").as("bal"), col("c_nationkey").as("p"))
+        .write.partitionBy("p").parquet(root)
+      TxTable.bootstrapIfNeeded(spark, root)
+      Relational.mergePartitioned(spark, root, Relational.q68Changes(spark, d),
+        Seq("name", "bal"), vacuumNow = false)
+      assert(TxTable.currentVersion(spark, root) === 2L)
+      body(root)
+    }
+  }
+
+  private def relations(df: DataFrame): Seq[HadoopFsRelation] =
+    df.queryExecution.optimizedPlan.collect {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r
+    }
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("readVersions equals the union of the per-version reads, each tagged") {
+    withMergedSnapshot { root =>
+      val both = TxTable.readVersions(spark, root, Seq(1L, 2L))
+      val union = TxTable.readVersion(spark, root, 1L)
+        .withColumn(TxTable.VersionCol, lit(1L))
+        .unionByName(TxTable.readVersion(spark, root, 2L)
+          .withColumn(TxTable.VersionCol, lit(2L)))
+      assert(both.columns.toSeq === union.columns.toSeq)
+      assert(both.schema.map(f => f.name -> f.dataType) ===
+        union.schema.map(f => f.name -> f.dataType))
+      assert(rows(both) === rows(union))
+      // a single version is the plain read plus a constant tag
+      assert(rows(TxTable.readVersions(spark, root, Seq(2L))) ===
+        rows(TxTable.readVersion(spark, root, 2L)
+          .withColumn(TxTable.VersionCol, lit(2L))))
+    }
+  }
+
+  test("readVersions scans each distinct file once") {
+    withMergedSnapshot { root =>
+      val both = TxTable.readVersions(spark, root, Seq(1L, 2L))
+      val rels = relations(both)
+      assert(rels.size === 1, s"one scan for both versions, got ${rels.size}")
+      val served = rels.head.location.inputFiles.toSeq
+      val listed = (TxTable.filesOfVersion(spark, root, 1L) ++
+        TxTable.filesOfVersion(spark, root, 2L)).distinct
+      assert(served.size === listed.size && served.distinct.size === served.size,
+        s"each distinct manifest file once: $served")
+      assert(served.map(_.stripPrefix("file:").replaceAll("^/+", "/")).toSet ===
+        listed.map(f => s"$root/$f").toSet)
+      // the two versions share all but the merged partitions' files
+      assert(listed.size < TxTable.filesOfVersion(spark, root, 1L).size +
+        TxTable.filesOfVersion(spark, root, 2L).size)
+    }
+  }
+
+  test("a manifest read lists no directory and resolves no data source") {
+    withMergedSnapshot { root =>
+      def discovered(body: => Unit): Long = {
+        val before = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount
+        body
+        HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount - before
+      }
+      // the control: a path read lists (and checks and globs) its paths
+      assert(discovered(spark.read.parquet(root).collect()) > 0)
+      for (df <- Seq(() => TxTable.read(spark, root),
+                     () => TxTable.readVersions(spark, root, Seq(1L, 2L)))) {
+        var built: DataFrame = null
+        assert(discovered { built = df(); built.collect() } === 0L,
+          "a manifest read must not list files")
+        // DataSource's path resolution (its checkPathsExist and globPath
+        // pools) builds an InMemoryFileIndex; the manifest read never does
+        assert(relations(built).forall(r => !r.location.isInstanceOf[InMemoryFileIndex]))
+      }
+    }
+  }
+
+  test("readVersions keeps the vacuum, no-manifest and out-of-root errors") {
+    withMergedSnapshot { root =>
+      TxTable.vacuum(spark, root)
+      val vacuumed = intercept[IllegalStateException] {
+        TxTable.readVersions(spark, root, Seq(1L, 2L))
+      }
+      assert(vacuumed.getMessage.startsWith(s"version 1 of $root is no longer readable"),
+        vacuumed.getMessage)
+      assert(vacuumed.getMessage.contains("deleted by vacuum"))
+      val never = intercept[IllegalArgumentException] {
+        TxTable.readVersions(spark, root, Seq(2L, 9L))
+      }
+      assert(never.getMessage.contains("vacuumed or never committed"))
+    }
+    import spark.implicits._
+    val out = ExportOps.scratchDir("graft_txunit7", "spec")
+    cleaned(out) {
+      val src = s"$out/src"
+      Seq((1L, 0), (2L, 1)).toDF("k", "p").write.partitionBy("p").parquet(src)
+      val cln = s"$out/cln"
+      assert(intercept[IllegalArgumentException] {
+        TxTable.read(spark, cln)
+      }.getMessage.contains("bootstrap first"))
+      // a hand-committed clone whose references leave its root AND carry
+      // partition directories: served without the root as base path it
+      // would silently lose `p`, so the read refuses it
+      TxTable.bootstrapIfNeeded(spark, src)
+      new java.io.File(cln).mkdirs()
+      TxTable.commit(spark, cln, TxTable.liveFiles(spark, src).map(f => s"../src/$f"))
+      val mixed = intercept[IllegalStateException] { TxTable.read(spark, cln) }
+      assert(mixed.getMessage.contains("mixes out-of-root manifest references"),
+        mixed.getMessage)
+    }
+  }
 
   test("vacuum trims the manifest log to keepManifests, never the latest") {
     import spark.implicits._

@@ -11,9 +11,11 @@ Usage: driver_compare.py <sfDir> <verifyOutDir> [query ...]
 
 The --bench mode mechanically adjudicates a round-over-round bench pair of
 SPARK_GRAFT_BENCH_OUT artifacts: carried-query (present in BOTH files)
-median sums and their ratio, the per-family split, host load stamps, and
-the top per-query regressions — the self-adjudicating comparison the r11
-verdict asked for in place of prose co-tenancy arguments.
+median sums and their ratio, the per-family split, host load stamps, the
+top per-query regressions, and every gate whose rows_read or shuffle_bytes
+fingerprint moved (gates known to drift on identical code marked `~`) — the
+self-adjudicating comparison the r11 verdict asked for in place of prose
+co-tenancy arguments.
 """
 import glob
 import hashlib
@@ -138,6 +140,34 @@ def main(sf_dir, out_dir, only, json_out=None):
     return 1 if n_bad else 0
 
 
+# Gates whose fingerprints differ between two Bench runs of identical code
+# (ROADMAP Direction 4): at sf0.1 between bench_r20c and bench_r21_base, and
+# at sf0.01 between two REPS=1 runs of each of two commits. A fingerprint
+# diff on one of these is not evidence of a plan change.
+DRIFTING = {"c04", "d06", "d14", "d22", "d25", "d28", "e01", "e03", "e08",
+            "e13", "e14", "e21", "e24", "g18", "q73", "q98", "v09", "v11"}
+
+
+def fingerprint_diffs(old, new):
+    """Prints every carried gate whose rows_read or shuffle_bytes differs,
+    plan changes first, then the known-drifting gates marked `~`."""
+    fields = ("rows_read", "shuffle_bytes")
+    oq, nq = old.get("queries", {}), new.get("queries", {})
+    diffs = []
+    for q in sorted(set(oq) & set(nq)):
+        o, n = oq[q], nq[q]
+        if not (isinstance(o, dict) and isinstance(n, dict)):
+            continue
+        moved = [f"{f} {o[f]} -> {n[f]}" for f in fields
+                 if f in o and f in n and o[f] != n[f]]
+        if moved:
+            diffs.append((q.split("_")[0] in DRIFTING, q, moved))
+    print(f"fingerprint diffs (rows_read, shuffle_bytes): {len(diffs)} gates, "
+          f"{sum(1 for d in diffs if d[0])} of them known to drift (~)")
+    for drift, q, moved in sorted(diffs):
+        print(f"  {'~' if drift else ' '} {q:32s} {'; '.join(moved)}")
+
+
 def bench_compare(old_path, new_path):
     old = json.load(open(old_path))
     new = json.load(open(new_path))
@@ -216,6 +246,8 @@ def bench_compare(old_path, new_path):
         # per-gate Janino compile counts (artifacts since the field was added)
         return {q: v["compiles"] for q, v in b.get("queries", {}).items()
                 if isinstance(v, dict) and "compiles" in v}
+
+    fingerprint_diffs(old, new)
 
     oc, nc = compiles(old), compiles(new)
     if oc or nc:
