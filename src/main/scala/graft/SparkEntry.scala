@@ -20,15 +20,26 @@ object SparkEntry {
     geotab.GeotabPipeline.geojson(
       geotab.GeotabSynth.flagship(spark, "/root/testdata/sf0.001"))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ops.AuditOps.queries ++
-    ops.SessionGates.queries ++
-    ops.Relational.queries ++
-      ops.DedupOps.queries ++
-      ops.TextOps.queries ++
-      ops.SimilarityOps.queries ++
-      ops.ExportOps.queries ++
-      multimodal.Multimodal.queries ++
+  /** The packs' maps merged, failing when a gate name is declared twice:
+    * `++` would silently keep the last. */
+  private def registry[V](packs: Map[String, V]*): Map[String, V] = {
+    val names = packs.flatMap(_.keys)
+    val twice = names.diff(names.distinct)
+    require(twice.isEmpty,
+      s"gate names declared twice: ${twice.distinct.sorted.mkString(", ")}")
+    packs.reduce(_ ++ _)
+  }
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry(
+      ops.AuditOps.queries,
+      ops.SessionGates.queries,
+      ops.Relational.queries,
+      ops.DedupOps.queries,
+      ops.TextOps.queries,
+      ops.SimilarityOps.queries,
+      ops.ExportOps.queries,
+      multimodal.Multimodal.queries,
       Map[String, (SparkSession, String) => DataFrame](
         "g01_geotab_flagship" -> ((s, d) => geotab.GeotabSynth.flagship(s, d)),
         "g02_geotab_connector" -> ((s, d) => geotab.GeotabSynth.connectorFlagship(s, d)),
@@ -47,17 +58,18 @@ object SparkEntry {
         "g15_daily_distance" -> ((s, d) => geotab.GeotabSynth.dailyDistanceQuery(s, d)),
         "g16_zone_transitions" -> ((s, d) => geotab.GeotabSynth.zoneTransitionsQuery(s, d)),
         "g17_polygon_fence" -> ((s, d) => geotab.GeotabSynth.polygonFenceQuery(s, d)),
-        "g18_http_transport" -> ((s, d) => geotab.GeotabSynth.httpConnectorFlagship(s, d)))
+        "g18_http_transport" -> ((s, d) => geotab.GeotabSynth.httpConnectorFlagship(s, d))))
 
-  def oracleSql: Map[String, String] =
-    ops.AuditOps.oracle ++
-    ops.SessionGates.oracle ++
-    ops.Relational.oracle ++
-      ops.DedupOps.oracle ++
-      ops.TextOps.oracle ++
-      ops.SimilarityOps.oracle ++
-      ops.ExportOps.oracle ++
-      multimodal.Multimodal.oracle ++
+  lazy val oracleSql: Map[String, String] =
+    registry(
+      ops.AuditOps.oracle,
+      ops.SessionGates.oracle,
+      ops.Relational.oracle,
+      ops.DedupOps.oracle,
+      ops.TextOps.oracle,
+      ops.SimilarityOps.oracle,
+      ops.ExportOps.oracle,
+      multimodal.Multimodal.oracle,
       Map("g01_geotab_flagship" -> geotab.GeotabSynth.flagshipOracleSql,
         // same oracle: g02 is the same pipeline fed through the connector
         "g02_geotab_connector" -> geotab.GeotabSynth.flagshipOracleSql,
@@ -86,5 +98,5 @@ object SparkEntry {
         // same oracle again: g18 is the flagship ingested over real HTTP
         // (HttpGeotabClient → local JSON-RPC facade), the production
         // transport inside the correctness gate
-        "g18_http_transport" -> geotab.GeotabSynth.flagshipOracleSql)
+        "g18_http_transport" -> geotab.GeotabSynth.flagshipOracleSql))
 }

@@ -126,7 +126,7 @@ object GeotabSynth {
       // client per bench rep) is never reclaimed by a later overwrite —
       // localize (fleet-sized, within the documented contract) so the
       // finally can evict the client like the other connector gates do
-      graft.ops.ExportOps.localize(features).orderBy("id")
+      graft.ops.ExportOps.localize(features, "id")
     } finally graft.sources.geotab.GeotabClients.unregister(clientName)
   }
 
@@ -164,7 +164,7 @@ object GeotabSynth {
         connectorDevices(spark, url), infoDf,
         connectorDrivers(spark, url), flagshipConfig(spark, sfDir))
       // materialize while the facade is up (the plan is lazy); fleet-sized
-      val out = graft.ops.ExportOps.localize(features).orderBy("id")
+      val out = graft.ops.ExportOps.localize(features, "id")
       inspect(facade)
       out
     } finally {
@@ -301,9 +301,9 @@ object GeotabSynth {
     val flat = connectorFlatStream(spark, sfDir, clientName)
     try StreamGate(spark, "graft-g05", sfDir) { g =>
       g.drainParquet(flat, shards = None)
-      // localize the bounded fleet snapshot, then drop the scratch dir —
-      // repeated gate/bench runs must not accumulate tempdirs
-      g.localizeAndDrop(Tables.readParquet(spark, g.data), "id")
+      // localize the bounded fleet snapshot before the scope drops the
+      // scratch dir — repeated gate/bench runs must not accumulate tempdirs
+      graft.ops.ExportOps.localize(Tables.readParquet(spark, g.data), "id")
     } finally graft.sources.geotab.GeotabClients.unregister(clientName)
   }
 
@@ -328,7 +328,7 @@ object GeotabSynth {
         .filter(f => f.isDirectory && f.getName.startsWith("batch_"))
       require(batchDirs.nonEmpty,
         s"g06 streaming CoT sink produced no batches under ${g.data}")
-      g.localizeAndDrop(
+      graft.ops.ExportOps.localize(
         spark.read.schema("id STRING, cot_xml STRING")
           .json(batchDirs.map(_.getPath).toIndexedSeq: _*), "id")
     } finally graft.sources.geotab.GeotabClients.unregister(clientName)
@@ -425,7 +425,7 @@ object GeotabSynth {
           col("f.properties.metadata.driverPhone").as("driver_phone"),
           col("f.properties.metadata.designation").as("driver_designation"),
           col("f.properties.metadata.comment").as("driver_comment"))
-      g.localizeAndDrop(landed, "id")
+      graft.ops.ExportOps.localize(landed, "id")
     } finally {
       server.stop(0)
       graft.sources.geotab.GeotabClients.unregister(clientName)
@@ -455,8 +455,7 @@ object GeotabSynth {
     // not a StreamGate drain: the snapshot swap happens between two
     // micro-batches of ONE running query, which needs the default trigger
     // (AvailableNow stops once the first snapshot is in)
-    val out = java.nio.file.Files.createTempDirectory("graft-g10-").toFile
-    try graft.ops.ExportOps.withScratchCleanup(out) {
+    try graft.ops.ExportOps.withScratch("graft_g10", sfDir) { out =>
       val q = flat.writeStream.format("parquet")
         .option("path", s"$out/data").option("checkpointLocation", s"$out/ckpt")
         .start() // default trigger: fires whenever the snapshot version advances
@@ -466,8 +465,8 @@ object GeotabSynth {
           info(spark, sfDir).withColumn("speed", col("speed") + 7)))
         q.processAllAvailable() // run 2: the moved fleet
       } finally q.stop()
-      graft.ops.ExportOps.localizeAndDrop(
-        Tables.readParquet(spark, s"$out/data"), out, "id", "speed_ms")
+      graft.ops.ExportOps.localize(
+        Tables.readParquet(spark, s"$out/data"), "id", "speed_ms")
     } finally graft.sources.geotab.GeotabClients.unregister(clientName)
   }
 
@@ -973,9 +972,9 @@ object GeotabSynth {
           (col("endMs") / 1000L).cast("long").as("trip_end_s"),
           col("nPings").cast("long").as("n_pings"),
           col("maxSpeed").as("max_speed"))
-      // localize, then drop the scratch dir (slices + input + ckpt + sink) —
-      // same lifecycle as the d20/q58/e* gates
-      g.localizeAndDrop(landed, "device_id", "trip_start_s")
+      // localize before the scope drops the scratch dir (slices + input +
+      // ckpt + sink) — same lifecycle as the d20/q58/e* gates
+      graft.ops.ExportOps.localize(landed, "device_id", "trip_start_s")
     }
   }
 

@@ -129,9 +129,8 @@ object AuditOps {
     * callback — no polling; [[StableAgg.moneySum]] keeps the one
     * float-valued metric addition-order-free. Metrics surface as a
     * (metric, value) table in DOUBLE (counts are ≪ 2^53 — exact). */
-  private def q93(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_observe", d)
-    ExportOps.withScratchCleanup(out) {
+  private def q93(s: SparkSession, d: String): DataFrame =
+    ExportOps.withScratch("graft_observe", d) { out =>
       val obs = org.apache.spark.sql.Observation("export_metrics")
       Tables(s, d, "events")
         .filter(col("event_type") =!= "error")
@@ -147,7 +146,6 @@ object AuditOps {
       val m = obs.get
       // the metrics are on the driver now; the export served only as the
       // observed pass (the result frame below never reads it)
-      ExportOps.deleteRecursively(out)
       def dbl(v: Any): Double = v match {
         case l: Long => l.toDouble
         case i: Int => i.toDouble
@@ -159,7 +157,6 @@ object AuditOps {
       m.toSeq.map { case (k, v) => (k, dbl(v)) }.sortBy(_._1)
         .toDF("metric", "value")
     }
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q56_quality_audit" -> q56 _, "q60_snapshot_drift" -> q60 _,

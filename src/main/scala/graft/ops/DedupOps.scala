@@ -1512,16 +1512,14 @@ object DedupOps {
     (incoming, inHv)
   }
 
-  private def d22(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_sigidx", d)
-    ExportOps.withScratchCleanup(out) {
+  private def d22(s: SparkSession, d: String): DataFrame =
+    ExportOps.withScratch("graft_sigidx", d) { out =>
       buildCorpusIndex(s, d, out.getAbsolutePath)
       val (incoming, inHv) = d22Arrival(s, d)
       // ---- serve: reads only the persisted artifact ----
       val res = screenAgainstIndex(s, incoming, inHv, out.getAbsolutePath)
-      ExportOps.localizeAndDrop(res, out, "doc_id")
+      ExportOps.localize(res, "doc_id")
     }
-  }
 
   /** e06: the compaction maintenance job run on the artifact that matters
     * — d22's persisted signature/band index, landed FRAGMENTED (64 part
@@ -1534,17 +1532,15 @@ object DedupOps {
     * screen's joins key on th/band columns and are blind to file layout,
     * so only a compaction that corrupted or dropped rows could change a
     * status. Compacted file counts are spec-pinned (CorpusOpsR8Spec). */
-  private def e06(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_sigcmp", d)
-    ExportOps.withScratchCleanup(out) {
+  private def e06(s: SparkSession, d: String): DataFrame =
+    ExportOps.withScratch("graft_sigcmp", d) { out =>
       buildCorpusIndex(s, d, s"$out/frag", fragments = 64)
       ExportOps.compact(s, s"$out/frag/sigs", s"$out/idx/sigs")
       ExportOps.compact(s, s"$out/frag/bands", s"$out/idx/bands")
       val (incoming, inHv) = d22Arrival(s, d)
       val res = screenAgainstIndex(s, incoming, inHv, s"$out/idx")
-      ExportOps.localizeAndDrop(res, out, "doc_id")
+      ExportOps.localize(res, "doc_id")
     }
-  }
 
   /** d25: the persisted index under APPEND maintenance — the steady-state
     * an ingestion pipeline actually runs, closing the one-cycle limit of
@@ -1559,9 +1555,8 @@ object DedupOps {
     * pins that the screen reads only the artifact (doctoring the persisted
     * files changes the verdicts). Each batch hashes only itself; the
     * corpus is scanned once at build, never again. */
-  private def d25(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_sigidx2", d)
-    ExportOps.withScratchCleanup(out) {
+  private def d25(s: SparkSession, d: String): DataFrame =
+    ExportOps.withScratch("graft_sigidx2", d) { out =>
       val all = docs(s, d)
       val base = cached(withShingleHashes(s, d))
       val inB1 = col("doc_id") % 5 === 4
@@ -1598,9 +1593,8 @@ object DedupOps {
       val res = s1.withColumn("batch", lit(1L))
         .unionByName(s2.withColumn("batch", lit(2L)))
         .select("batch", "doc_id", "status")
-      ExportOps.localizeAndDrop(res, out, "batch", "doc_id")
+      ExportOps.localize(res, "batch", "doc_id")
     }
-  }
 
   /** d19: per-domain document cap — the crawl-pipeline guard against any
     * single host dominating the corpus (CommonCrawl-style "max pages per
@@ -1663,7 +1657,7 @@ object DedupOps {
       .select(col("doc_id"),
         when(col("is_dup"), "exact_dup").otherwise("kept").as("status"))
     g.drainParquet(screened, shards = None)
-    g.localizeAndDrop(Tables.readParquet(s, g.data), "doc_id")
+    ExportOps.localize(Tables.readParquet(s, g.data), "doc_id")
     }
 
   /** c01: the curation pipeline end-to-end — the composition an LLM data

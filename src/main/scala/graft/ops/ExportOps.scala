@@ -74,35 +74,36 @@ object ExportOps {
     f.delete()
   }
 
-  /** Sets a session conf for the duration of `body`, restoring the
-    * previous value (or unsetting) afterwards — the save/set/restore
-    * pattern every streaming gate needs for `nanosAsLong` /
-    * `shuffle.partitions`, centralized so a restore cannot be forgotten
+  /** Sets session confs for the duration of `body`, restoring each pair's
+    * previous value (or unsetting it) afterwards, in reverse order — the
+    * save/set/restore pattern every streaming gate needs for `nanosAsLong`
+    * / `shuffle.partitions`, centralized so a restore cannot be forgotten
     * (q58 leaked exactly this conf before round 7). "Previous" is the
     * explicitly set value: `getOption` answers a registered conf's
     * default, so testing it would pin the default instead of unsetting. */
-  def withConf[T](s: SparkSession, key: String, value: String)(body: => T): T = {
-    val prev = s.conf.getAll.get(key)
-    s.conf.set(key, value)
+  def withConf[T](s: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val set = s.conf.getAll
+    val prev = confs.map { case (k, _) => k -> set.get(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
     try body
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
+    finally prev.reverse.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
     }
   }
 
   private val scratchSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** PID- and invocation-suffixed gate scratch dir under java.io.tmpdir.
-    * The PID isolates concurrent gate/bench JVMs at the same SF; the
-    * per-invocation counter isolates concurrent runs of the SAME gate in
-    * one JVM — the test suite executes suites in parallel, and with a
-    * shared name run B's setup deleted run A's in-flight scratch (the
-    * e16 "quarantine caught 0 rows" failure: A read B's half-staged CSV).
-    * Success and failure paths both delete the dir (localizeAndDrop /
-    * withScratchCleanup), so unique names leak nothing a shared name
-    * wouldn't also leak on kill -9. */
-  def scratchDir(prefix: String, d: String): java.io.File = {
+  /** PID- and invocation-suffixed gate scratch dir, allocated only by
+    * [[withScratch]]. The PID isolates concurrent gate/bench JVMs at the
+    * same SF; the per-invocation counter isolates concurrent runs of the
+    * SAME gate in one JVM — the test suite executes suites in parallel,
+    * and with a shared name run B's setup deleted run A's in-flight
+    * scratch (the e16 "quarantine caught 0 rows" failure: A read B's
+    * half-staged CSV). The scope deletes the dir however its body ends, so
+    * unique names leak nothing a shared name wouldn't also leak on
+    * kill -9. */
+  private def scratchDir(prefix: String, d: String): java.io.File = {
     // GRAFT_SCRATCH overrides the scratch base; since r15 the DEFAULT is
     // a writable /dev/shm when present (falling back to java.io.tmpdir):
     // gate fixtures and streaming checkpoints are transient per-run
@@ -135,6 +136,22 @@ object ExportOps {
     f
   }
 
+  /** Runs `body` on a fresh scratch dir ([[scratchDir]]) named `prefix`
+    * for fixture `d`, and deletes the dir when the body returns or throws.
+    * Whatever the body returns must not read the dir: a gate result leaves
+    * the scope [[localize]]d, so a lazy frame over the scratch fails on its
+    * first action. A failed cleanup never hides the body's exception; it
+    * rides along as a suppressed one. */
+  def withScratch[T](prefix: String, d: String)(body: java.io.File => T): T = {
+    val dir = scratchDir(prefix, d)
+    var thrown: Throwable = null
+    try body(dir)
+    catch { case t: Throwable => thrown = t; throw t }
+    finally
+      try deleteRecursively(dir)
+      catch { case c: Throwable if thrown != null => thrown.addSuppressed(c) }
+  }
+
   /** Stages a fixture table's parquet bytes into a streaming-source
     * directory. The driver's testdata ships single-file tables, but any
     * Spark/lakehouse-written table is a DIRECTORY of part files (the sf1
@@ -159,27 +176,15 @@ object ExportOps {
     }
   }
 
-  /** Runs a gate body, deleting its scratch directory if the body throws.
-    * The success path's [[localizeAndDrop]] already deletes the dir; without
-    * this, a failed streaming query or read-back leaks the PID-suffixed
-    * scratch (input copy + checkpoint + sink), which a later run in a NEW
-    * process can never reclaim. Cleanup failures are swallowed so the
-    * original error always propagates. */
-  def withScratchCleanup[T](scratch: java.io.File)(body: => T): T =
-    try body
-    catch {
-      case t: Throwable =>
-        try deleteRecursively(scratch) catch { case _: Throwable => () }
-        throw t
-    }
-
-  /** Shared tail of every streaming/export gate: materialize the result
-    * into a driver-local DataFrame, delete the scratch directory it was
-    * read from, and return the localized frame with a deterministic
-    * order. One sort, applied to the local relation — the pre-collect sort
-    * the call sites used to carry was redundant with it — which
-    * [[graft.plans.LocalSort]] runs on the driver, so the sorted frame's
-    * action launches no sampling or shuffle job.
+  /** Materializes `df` as a driver-local frame, sorted by `sortCols` if
+    * any — the shared tail of every streaming/export gate, whose result
+    * must not read the scratch dir [[withScratch]] deletes. One sort,
+    * applied to the local relation, which [[graft.plans.LocalSort]] runs
+    * on the driver, so the sorted frame's action launches no sampling or
+    * shuffle job. Gates that mutate an artifact they also read (d25's
+    * index append) need this mid-flight too: a lazy plan re-lists the
+    * artifact directory at execution time, so a result evaluated after
+    * the mutation would silently see the post-mutation files.
     *
     * Caller-side size contract: this collects `df` to the driver, so it is
     * only for gate results that stay small relative to driver memory — the
@@ -187,20 +192,10 @@ object ExportOps {
     * arrival batches, g08 trips, q58 sessions) are fixture-batch-sized.
     * A caller whose result grows with the corpus (not with the batch/
     * summary) must write to durable storage instead of localizing. */
-  def localizeAndDrop(df: DataFrame, scratch: java.io.File,
-                      sortCols: String*): DataFrame = {
-    val local = localize(df)
-    deleteRecursively(scratch)
+  def localize(df: DataFrame, sortCols: String*): DataFrame = {
+    val local = localize(df, LocalizeMaxRows)
     if (sortCols.nonEmpty) local.orderBy(sortCols.map(col): _*) else local
   }
-
-  /** Pins `df`'s CURRENT contents as a driver-local frame (same size
-    * contract as [[localizeAndDrop]]). Gates that mutate an artifact they
-    * also read (d25's index append) need this mid-flight: a lazy plan
-    * re-lists the artifact directory at execution time, so a result
-    * evaluated after the mutation would silently see the post-mutation
-    * files. */
-  def localize(df: DataFrame): DataFrame = localize(df, LocalizeMaxRows)
 
   /** The size contract, ENFORCED (it was prose until r15): localized
     * gate results are fixture-batch/summary-sized. A result that grows
@@ -253,33 +248,29 @@ object ExportOps {
   /** [[localize]]'s enforced ceiling: generous for every fixture-batch
     * result (the largest localized landing at sf1, q65's full-corpus
     * dedup echo, is ~1M rows) while still far below driver-heap risk. */
-  private[ops] val LocalizeMaxRows: Int =
-    sys.env.get("GRAFT_LOCALIZE_MAX_ROWS").flatMap(v =>
-      scala.util.Try(v.trim.toInt).toOption).getOrElse(4_000_000)
+  private[ops] val LocalizeMaxRows: Int = 4_000_000
 
   /** e01: export + read-back partition summary. Gates the full
     * write→read cycle (assignment, partition layout, partition-column
     * recovery) against a DuckDB twin computing the same assignment
     * directly from the documents table. */
-  private def e01(s: SparkSession, d: String): DataFrame = {
-    val out = scratchDir("graft_export", d)
-    withScratchCleanup(out) {
-    trainingExport(s, d, out.getAbsolutePath)
-    // Partition-column values come back through directory-name inference:
-    // cast both to string so a numeric-looking lang can never be inferred
-    // as int and diverge from the oracle's VARCHAR. (A null/empty lang
-    // would round-trip as __HIVE_DEFAULT_PARTITION__ → null; the documents
-    // fixture guarantees non-empty lang codes.)
-    val summary = Tables.readParquet(s, out.getAbsolutePath)
-      .groupBy(col("split").cast("string").as("split"),
-        col("lang").cast("string").as("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-    // materialize the (tiny: splits × langs) summary, then delete the
-    // scratch export so repeated gate/bench runs don't accumulate parquet
-    // under java.io.tmpdir without bound
-    localizeAndDrop(summary, out, "split", "lang")
+  private def e01(s: SparkSession, d: String): DataFrame =
+    withScratch("graft_export", d) { out =>
+      trainingExport(s, d, out.getAbsolutePath)
+      // Partition-column values come back through directory-name inference:
+      // cast both to string so a numeric-looking lang can never be inferred
+      // as int and diverge from the oracle's VARCHAR. (A null/empty lang
+      // would round-trip as __HIVE_DEFAULT_PARTITION__ → null; the documents
+      // fixture guarantees non-empty lang codes.)
+      val summary = Tables.readParquet(s, out.getAbsolutePath)
+        .groupBy(col("split").cast("string").as("split"),
+          col("lang").cast("string").as("lang"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
+      // materialize the (tiny: splits × langs) summary; the scope then
+      // deletes the scratch export so repeated gate/bench runs don't
+      // accumulate parquet without bound
+      localize(summary, "split", "lang")
     }
-  }
 
   /** e02: vector-index persistence — build per-label centroids
     * distributedly, WRITE the index to parquet, RELOAD it, and serve
@@ -296,31 +287,31 @@ object ExportOps {
     * the tiny reloaded index broadcasts; the corpus is never re-scanned. */
   private def e02(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val out = scratchDir("graft_index", d)
-    withScratchCleanup(out) {
-    val emb = Tables(s, d, "embeddings")
-    val dims = emb.select(col("label"),
-        posexplode(graft.functions.VectorFunctions.toDouble(col("embedding"))))
-      .withColumnRenamed("pos", "dim").withColumnRenamed("col", "x")
-    val cent = dims.groupBy(col("label"), col("dim"))
-      .agg((StableAgg.scaledSum(col("x"), 12) / count(lit(1))).as("c"))
-    cent.groupBy(col("label"))
-      .agg(transform(array_sort(collect_list(struct(col("dim"), col("c")))),
-        e => e.getField("c")).as("centroid"))
-      .write.mode(SaveMode.Overwrite).parquet(out.getAbsolutePath)
-    val index = Tables.readParquet(s, out.getAbsolutePath)
-    val queries = emb.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("label").asc)
-    val served = queries.crossJoin(broadcast(index))
-      .select(col("q_id"), col("label"),
-        graft.functions.VectorExpressions.cosineSim(col("q_vec"), col("centroid")).as("cos"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("q_id"), col("label"), round(col("cos"), 4).as("cos"))
-      .orderBy("q_id")
-    // materialize the 16-row routing table, then drop the scratch index
-    localizeAndDrop(served, out, "q_id")
+    withScratch("graft_index", d) { out =>
+      val emb = Tables(s, d, "embeddings")
+      val dims = emb.select(col("label"),
+          posexplode(graft.functions.VectorFunctions.toDouble(col("embedding"))))
+        .withColumnRenamed("pos", "dim").withColumnRenamed("col", "x")
+      val cent = dims.groupBy(col("label"), col("dim"))
+        .agg((StableAgg.scaledSum(col("x"), 12) / count(lit(1))).as("c"))
+      cent.groupBy(col("label"))
+        .agg(transform(array_sort(collect_list(struct(col("dim"), col("c")))),
+          e => e.getField("c")).as("centroid"))
+        .write.mode(SaveMode.Overwrite).parquet(out.getAbsolutePath)
+      val index = Tables.readParquet(s, out.getAbsolutePath)
+      val queries = emb.filter(col("vec_id") < 16)
+        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
+      val w = Window.partitionBy(col("q_id"))
+        .orderBy(col("cos").desc, col("label").asc)
+      val served = queries.crossJoin(broadcast(index))
+        .select(col("q_id"), col("label"),
+          graft.functions.VectorExpressions.cosineSim(col("q_vec"), col("centroid")).as("cos"))
+        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+        .select(col("q_id"), col("label"), round(col("cos"), 4).as("cos"))
+        .orderBy("q_id")
+      // materialize the 16-row routing table before the scope drops the
+      // scratch index
+      localize(served, "q_id")
     }
   }
 
@@ -335,19 +326,18 @@ object ExportOps {
     // under the default trigger, and moving it to AvailableNow would change
     // the per-batch cost of a benchmarked stream_write gate — a performance
     // change to be measured on its own, not folded into a harness move
-    val out = scratchDir("graft_sexport", d)
-    withScratchCleanup(out) {
-    new java.io.File(out, "in").mkdirs()
-    stageTable(d, "documents", new java.io.File(out, "in"))
-    val schema = Tables(s, d, "documents").schema
-    val stream = s.readStream.schema(schema).parquet(s"$out/in")
-    val q = streamingTrainingExport(stream, s"$out/data", s"$out/ckpt")
-    try q.processAllAvailable() finally q.stop()
-    val summary = Tables.readParquet(s, s"$out/data")
-      .groupBy(col("split").cast("string").as("split"),
-        col("lang").cast("string").as("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-    localizeAndDrop(summary, out, "split", "lang")
+    withScratch("graft_sexport", d) { out =>
+      new java.io.File(out, "in").mkdirs()
+      stageTable(d, "documents", new java.io.File(out, "in"))
+      val schema = Tables(s, d, "documents").schema
+      val stream = s.readStream.schema(schema).parquet(s"$out/in")
+      val q = streamingTrainingExport(stream, s"$out/data", s"$out/ckpt")
+      try q.processAllAvailable() finally q.stop()
+      val summary = Tables.readParquet(s, s"$out/data")
+        .groupBy(col("split").cast("string").as("split"),
+          col("lang").cast("string").as("lang"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
+      localize(summary, "split", "lang")
     }
   }
 
@@ -378,18 +368,16 @@ object ExportOps {
     * copy must hash-match the oracle computed from the original table:
     * compaction may change layout, never content. The file-count bound is
     * spec-pinned ([[graft.ops.ExportOpsSpec]]). */
-  private def e04(s: SparkSession, d: String): DataFrame = {
-    val out = scratchDir("graft_compact", d)
-    withScratchCleanup(out) {
+  private def e04(s: SparkSession, d: String): DataFrame =
+    withScratch("graft_compact", d) { out =>
       Tables(s, d, "documents").repartition(64)
         .write.parquet(s"$out/frag")
       compact(s, s"$out/frag", s"$out/compacted")
       val summary = Tables.readParquet(s, s"$out/compacted")
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-      localizeAndDrop(summary, out, "lang")
+      localize(summary, "lang")
     }
-  }
 
   /** e05: schema-evolution ingest — the lake reality that batches landed
     * last month lack columns added this month. Batch 1 lands the original
@@ -399,9 +387,8 @@ object ExportOps {
     * a per-language summary the oracle recomputes from the source table
     * with the same batch rule. At scale this is why additive evolution is
     * safe: readers pay one footer-merge pass, no rewrite of history. */
-  private def e05(s: SparkSession, d: String): DataFrame = {
-    val out = scratchDir("graft_evolve", d)
-    withScratchCleanup(out) {
+  private def e05(s: SparkSession, d: String): DataFrame =
+    withScratch("graft_evolve", d) { out =>
       val docsT = Tables(s, d, "documents")
       val old = docsT.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -417,9 +404,8 @@ object ExportOps {
           count(col("quality")).as("n_scored"),
           StableAgg.scaledSum(coalesce(col("quality"), lit(0.0)), 2)
             .as("sum_quality"))
-      localizeAndDrop(summary, out, "lang")
+      localize(summary, "lang")
     }
-  }
 
   // ------------------------------------------------- e07: index maintenance
 
@@ -492,18 +478,16 @@ object ExportOps {
     * [[appendToCentroidIndex]]; the routing served from the appended index
     * must hash-match e02's oracle computed over the FULL table in one
     * shot — proof the maintenance loop loses nothing vs a rebuild. */
-  private def e07(s: SparkSession, d: String): DataFrame = {
-    val out = scratchDir("graft_centapp", d)
-    withScratchCleanup(out) {
+  private def e07(s: SparkSession, d: String): DataFrame =
+    withScratch("graft_centapp", d) { out =>
       val emb = Tables(s, d, "embeddings")
       buildCentroidIndex(s, emb.filter(col("vec_id") % 3 =!= 0), s"$out/idx")
       appendToCentroidIndex(s, emb.filter(col("vec_id") % 3 === 0), s"$out/idx")
       val served = serveCentroidRouting(s, s"$out/idx",
         emb.filter(col("vec_id") < 16)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_vec")))
-      localizeAndDrop(served, out, "q_id")
+      localize(served, "q_id")
     }
-  }
 
   // ------------------------------------------------- e08: sorted export
 
@@ -540,15 +524,13 @@ object ExportOps {
     * sortedness) are spec-pinned in [[graft.ops.ExportOpsSpec]] — the
     * gate's hash compare is order-insensitive by design, so order is a
     * spec property, not an oracle property. */
-  private def e08(s: SparkSession, d: String): DataFrame = {
-    val out = scratchDir("graft_rsort", d)
-    withScratchCleanup(out) {
+  private def e08(s: SparkSession, d: String): DataFrame =
+    withScratch("graft_rsort", d) { out =>
       sortedExport(s, d, out.getAbsolutePath)
       val back = Tables.readParquet(s, out.getAbsolutePath)
         .select(col("doc_id"), col("lang"), col("score"))
-      localizeAndDrop(back, out, "doc_id")
+      localize(back, "doc_id")
     }
-  }
 
   // ------------------------------------------------- e09: JSONL round-trip
 
@@ -562,9 +544,8 @@ object ExportOps {
     * real scan — twice the I/O of the job itself. JSONL stays splittable
     * (one record per line), so a 100 TB export still parallelizes reads
     * without a manifest. */
-  private def e09(s: SparkSession, d: String): DataFrame = {
-    val out = scratchDir("graft_jsonl", d)
-    withScratchCleanup(out) {
+  private def e09(s: SparkSession, d: String): DataFrame =
+    withScratch("graft_jsonl", d) { out =>
       val docsT = Tables(s, d, "documents")
         .select(col("doc_id"), col("text"), col("lang"),
           col("source"), col("n_chars"))
@@ -572,9 +553,8 @@ object ExportOps {
       val back = s.read.schema(docsT.schema).json(s"$out/jsonl")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
           md5(col("text")).as("text_md5"))
-      localizeAndDrop(back, out, "doc_id")
+      localize(back, "doc_id")
     }
-  }
 
   /** e16: CSV interchange round-trip with malformed-row handling — the
     * OTHER ubiquitous exchange format, and the one where row corruption is
@@ -591,9 +571,8 @@ object ExportOps {
     * not the job. Timestamps round-trip as epoch-µs longs — CSV has no
     * timestamp type, so the export pins the encoding instead of trusting
     * parser locale defaults. */
-  private def e16(s: SparkSession, d: String): DataFrame = {
-    val out = scratchDir("graft_csv", d)
-    withScratchCleanup(out) {
+  private def e16(s: SparkSession, d: String): DataFrame =
+    withScratch("graft_csv", d) { out =>
       val ev = Tables(s, d, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           unix_micros(col("ts")).as("ts_us"), col("props"))
@@ -632,9 +611,8 @@ object ExportOps {
       val clean = cached.filter(col("_corrupt").isNull)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("ts_us"), md5(col("props")).as("props_md5"))
-      localizeAndDrop(clean, out, "event_id")
+      localize(clean, "event_id")
     }
-  }
 
   /** e26: the ORC format leg — the last columnar interchange format next
     * to parquet (native), CSV (e16), JSONL (e09) and XML (e19). Some
@@ -651,9 +629,8 @@ object ExportOps {
     * parquet's, so the export pins the encoding exactly as e16 does).
     * PlanAuditR14Spec pins the scan economy: the ORC scan must show the
     * pushed predicate and the pruned 4-column ReadSchema. */
-  private def e26(s: SparkSession, d: String): DataFrame = {
-    val out = scratchDir("graft_orc", d)
-    withScratchCleanup(out) {
+  private def e26(s: SparkSession, d: String): DataFrame =
+    withScratch("graft_orc", d) { out =>
       val ev = Tables(s, d, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           unix_micros(col("ts")).as("ts_us"), col("value"))
@@ -666,9 +643,8 @@ object ExportOps {
           sum(col("value").cast("decimal(30,2)")).cast("double")
             .as("sum_value"),
           min(col("ts_us")).as("first_us"), max(col("ts_us")).as("last_us"))
-      localizeAndDrop(back, out, "user_id")
+      localize(back, "user_id")
     }
-  }
 
   /** The e26 read-back plan over an existing ORC directory — shared with
     * the PlanAuditR14Spec pushdown pin so the spec audits exactly the
@@ -848,9 +824,8 @@ object ExportOps {
     * (files bounded in BOTH dims; a one-dim box query touches a fraction
     * of the files a single-column sort layout must read) is spec-pinned
     * in [[graft.ops.ZOrderSpec]] against a partkey-sorted control. */
-  private def e13(s: SparkSession, d: String): DataFrame = {
-    val out = scratchDir("graft_zorder", d)
-    withScratchCleanup(out) {
+  private def e13(s: SparkSession, d: String): DataFrame =
+    withScratch("graft_zorder", d) { out =>
       zorderExport(s, d, out.getAbsolutePath + "/z")
       // content invariance at REPORT grain (r15): the read-back aggregates
       // to 1024 bucketed checksums instead of localizing the whole table —
@@ -871,9 +846,8 @@ object ExportOps {
       val back = Tables.readParquet(s, out.getAbsolutePath + "/z")
         .groupBy((col("l_orderkey") % 1024).as("bucket"))
         .agg(count(lit(1)).as("n"), sum(rowck).as("row_checksum"))
-      localizeAndDrop(back, out, "bucket")
+      localize(back, "bucket")
     }
-  }
 
   // --------------------------------- e14: stats manifest + file skipping
 
@@ -905,9 +879,8 @@ object ExportOps {
     * metadata read every table format performs. The actual skip (pruned
     * file list strictly smaller) is spec-pinned in
     * [[graft.ops.ManifestSpec]]. */
-  private def e14(s: SparkSession, d: String): DataFrame = {
-    val out = scratchDir("graft_manifest", d)
-    withScratchCleanup(out) {
+  private def e14(s: SparkSession, d: String): DataFrame =
+    withScratch("graft_manifest", d) { out =>
       val dataDir = out.getAbsolutePath + "/data"
       sortedExport(s, d, dataDir)
       statsManifest(s, dataDir)
@@ -921,9 +894,8 @@ object ExportOps {
       val pruned = Tables.readParquet(s, keep.toIndexedSeq)
         .filter(col("score") >= thr)
         .select(col("doc_id"), col("lang"), col("score"))
-      localizeAndDrop(pruned, out, "doc_id")
+      localize(pruned, "doc_id")
     }
-  }
 
   // ------------------------------------ e24: Bloom-filter file skipping
 
@@ -1008,9 +980,8 @@ object ExportOps {
     * read. Must hash-match the oracle's plain lookup on the raw table;
     * the actual skip (candidate files ≪ total, zone maps unable to
     * prune) is spec-pinned in [[graft.ops.BloomIndexSpec]]. */
-  private def e24(s: SparkSession, d: String): DataFrame = {
-    val out = scratchDir("graft_bloomidx", d)
-    withScratchCleanup(out) {
+  private def e24(s: SparkSession, d: String): DataFrame =
+    withScratch("graft_bloomidx", d) { out =>
       val dataDir = s"$out/data"
       Tables(s, d, "documents")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
@@ -1029,9 +1000,8 @@ object ExportOps {
       val keys = (0 to 4).map(i => mn + (mx - mn) * i / 4).distinct
       val hit = bloomProbe(s, dataDir, Tables.readParquet(s, s"$out/manifest"),
         "doc_id", keys)
-      localizeAndDrop(hit, out, "doc_id")
+      localize(hit, "doc_id")
     }
-  }
 
   /** e15: retention + targeted erasure maintenance — the two delete
     * shapes every compliant lake runs, gated end-to-end on a day-
@@ -1055,9 +1025,8 @@ object ExportOps {
     * The surviving table must hash-match the oracle filtering the raw
     * events by BOTH rules. Rewrite-then-swap per partition rides the same
     * staged-directory discipline as q68's merge. */
-  private def e15(s: SparkSession, d: String): DataFrame = {
-    val out = scratchDir("graft_retention", d)
-    withScratchCleanup(out) {
+  private def e15(s: SparkSession, d: String): DataFrame =
+    withScratch("graft_retention", d) { out =>
       val root = s"$out/table"
       val ev = Tables(s, d, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
@@ -1080,9 +1049,8 @@ object ExportOps {
       val survived = TxTable.read(s, root)
         .select(col("event_id"), col("user_id"),
           col("day").cast("string").as("day"))
-      localizeAndDrop(survived, out, "event_id")
+      localize(survived, "event_id")
     }
-  }
 
   /** The e15 maintenance kernel, public for the spec that pins its ONLY
     * scale property the value check can't see: partitions without a
@@ -1217,18 +1185,16 @@ object ExportOps {
     * snapshot isolation every pointer-based lake publish uses: readers
     * never see a partial version because visibility is one atomic
     * metadata rename, and old versions stay queryable for rollback. */
-  private def e12(s: SparkSession, d: String): DataFrame = {
-    val out = scratchDir("graft_publish", d)
-    withScratchCleanup(out) {
+  private def e12(s: SparkSession, d: String): DataFrame =
+    withScratch("graft_publish", d) { out =>
       val root = out.getAbsolutePath
       val docsT = Tables(s, d, "documents")
       def summary(df: DataFrame) = df.groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
       publishVersion(summary(docsT.filter(col("doc_id") % 2 === 0)), root, 1L)
       publishVersion(summary(docsT), root, 2L)
-      localizeAndDrop(readPublished(s, root), out, "lang")
+      localize(readPublished(s, root), "lang")
     }
-  }
 
   /** Write-audit-publish: stage the candidate version's data, audit the
     * STAGED FILES (what readers would actually see — not the input plan,
@@ -1291,9 +1257,8 @@ object ExportOps {
     * re-layout lost no rows and invented none. The payoff the spec
     * measures: a (day, event_type) point query on v2 prunes to ONE leaf
     * directory. */
-  private def e21(s: SparkSession, d: String): DataFrame = {
-    val out = scratchDir("graft_relayout", d)
-    withScratchCleanup(out) {
+  private def e21(s: SparkSession, d: String): DataFrame =
+    withScratch("graft_relayout", d) { out =>
       val ev = Tables(s, d, "events").select(
         col("event_id"),
         expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"),
@@ -1306,9 +1271,8 @@ object ExportOps {
           col("event_type").cast("string").as("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
         .orderBy("day", "event_type")
-      localizeAndDrop(back, out, "day", "event_type")
+      localize(back, "day", "event_type")
     }
-  }
 
   /** e25: NATIVE dynamic partition overwrite —
     * `partitionOverwriteMode=dynamic` makes `INSERT OVERWRITE` replace
@@ -1324,9 +1288,8 @@ object ExportOps {
     * and the clobber under static). The gate recomputes nations {3, 7}
     * with +100 balances, overwrites dynamically, and reads the whole
     * snapshot back against an oracle recomputing it from the source. */
-  private def e25(s: SparkSession, d: String): DataFrame = {
-    val out = scratchDir("graft_dynover", d)
-    withScratchCleanup(out) {
+  private def e25(s: SparkSession, d: String): DataFrame =
+    withScratch("graft_dynover", d) { out =>
       val snap = s"$out/snap"
       val c = Tables(s, d, "customer")
         .select(col("c_custkey").as("k"), col("c_name").as("name"),
@@ -1334,19 +1297,17 @@ object ExportOps {
       c.write.partitionBy("p").parquet(snap)
       val rewrite = c.filter(col("p").isin(3, 7))
         .withColumn("bal", col("bal") + 100)
-      withConf(s, "spark.sql.sources.partitionOverwriteMode", "dynamic") {
+      withConf(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
         rewrite.write.mode("overwrite").partitionBy("p").parquet(snap)
       }
       val back = Tables.readParquet(s, snap)
         .select(col("k"), col("name"), col("bal"),
           col("p").cast("int").as("p"))
-      localizeAndDrop(back, out, "k")
+      localize(back, "k")
     }
-  }
 
-  private def e17(s: SparkSession, d: String): DataFrame = {
-    val out = scratchDir("graft_wap", d)
-    withScratchCleanup(out) {
+  private def e17(s: SparkSession, d: String): DataFrame =
+    withScratch("graft_wap", d) { out =>
       val root = out.getAbsolutePath
       val docsT = Tables(s, d, "documents")
       def summary(df: DataFrame) = df.groupBy(col("lang"))
@@ -1367,9 +1328,8 @@ object ExportOps {
         "e17: the poisoned v2 must fail its audit")
       require(auditedPublish(summary(docsT), root, 3L, violation),
         "e17: the corrected v3 must publish")
-      localizeAndDrop(readPublished(s, root), out, "lang")
+      localize(readPublished(s, root), "lang")
     }
-  }
 
   // ----------------- e18: incremental snapshot consumption (table tail)
 
@@ -1427,9 +1387,8 @@ object ExportOps {
     * reading just the hour's arrivals (O(increment)): the manifest diff
     * is metadata-sized, and partial-aggregate state replaces re-reads.
     * The new-files-only property is spec-pinned in ExportOpsR10Spec. */
-  private def e18(s: SparkSession, d: String): DataFrame = {
-    val out = scratchDir("graft_increment", d)
-    withScratchCleanup(out) {
+  private def e18(s: SparkSession, d: String): DataFrame =
+    withScratch("graft_increment", d) { out =>
       val root = out.getAbsolutePath
       val orders = Tables(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
@@ -1454,9 +1413,8 @@ object ExportOps {
         .groupBy(col("o_orderpriority"))
         .agg(sum(col("n_orders")).as("n_orders"),
           sum(col("sum_price")).cast("double").as("sum_price"))
-      localizeAndDrop(served, out, "o_orderpriority")
+      localize(served, "o_orderpriority")
     }
-  }
 
   /** Deletes every data file not referenced by a retained snapshot's
     * manifest, then expires the non-retained manifests themselves. The
@@ -1503,9 +1461,8 @@ object ExportOps {
     * over-deletion loses them, and either moves the hash. The
     * referenced-files-untouched and idempotent-second-vacuum invariants
     * are spec-pinned in ExportOpsR10Spec. */
-  private def e20(s: SparkSession, d: String): DataFrame = {
-    val out = scratchDir("graft_vacuum", d)
-    withScratchCleanup(out) {
+  private def e20(s: SparkSession, d: String): DataFrame =
+    withScratch("graft_vacuum", d) { out =>
       val root = out.getAbsolutePath
       val orders = Tables(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
@@ -1523,9 +1480,8 @@ object ExportOps {
         .agg(count(lit(1)).as("n_orders"),
           sum(col("o_totalprice").cast("decimal(30,2)")).cast("double")
             .as("sum_price"))
-      localizeAndDrop(served, out, "o_orderpriority")
+      localize(served, "o_orderpriority")
     }
-  }
 
   /** e19: XML interchange round-trip — the third exchange format next to
     * e09 (JSONL) and e16 (CSV), and the one closest to the reference's
@@ -1537,9 +1493,8 @@ object ExportOps {
     * table must hash-match the source events exactly — entity escaping
     * (props holds JSON full of quotes/braces) proven lossless on real
     * data, not asserted. */
-  private def e19(s: SparkSession, d: String): DataFrame = {
-    val out = scratchDir("graft_xml", d)
-    withScratchCleanup(out) {
+  private def e19(s: SparkSession, d: String): DataFrame =
+    withScratch("graft_xml", d) { out =>
       val ev = Tables(s, d, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           unix_micros(col("ts")).as("ts_us"), col("props"))
@@ -1567,9 +1522,8 @@ object ExportOps {
         .schema(schema).load(s"$out/xml")
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("ts_us"), md5(col("props")).as("props_md5"))
-      localizeAndDrop(back, out, "event_id")
+      localize(back, "event_id")
     }
-  }
 
   /** e22: SNAPSHOT TIME TRAVEL over the [[TxTable]] manifest log — the
     * read-side payoff of the r12 crash-safe commit protocol: because
@@ -1586,9 +1540,8 @@ object ExportOps {
     * the double fold order-free. At 100 TB this is Delta/Iceberg's
     * `VERSION AS OF`, priced the same way: old versions cost only the
     * superseded files vacuum hasn't retired. */
-  private def e22(s: SparkSession, d: String): DataFrame = {
-    val out = scratchDir("graft_timetravel", d)
-    withScratchCleanup(out) {
+  private def e22(s: SparkSession, d: String): DataFrame =
+    withScratch("graft_timetravel", d) { out =>
       val snapDir = s"$out/snap"
       Tables(s, d, "customer")
         .select(col("c_custkey").as("k"), col("c_name").as("name"),
@@ -1606,9 +1559,8 @@ object ExportOps {
             .as("sum_bal_cents"))
         .select(col("p"), col("n_rows"), col("sum_bal_cents"),
           col(TxTable.VersionCol))
-      localizeAndDrop(both, out, TxTable.VersionCol, "p")
+      localize(both, TxTable.VersionCol, "p")
     }
-  }
 
   /** c11: INCREMENTAL CORPUS REFRESH — the daily steady-state composite
     * the lake-maintenance gates exist for, run end-to-end: a corpus
@@ -1630,9 +1582,8 @@ object ExportOps {
     * append-only contract (the feed carries inserts ONLY), day-1-file
     * byte-identity across the append, and refresh idempotence (a re-run
     * of the same arrivals inserts zero rows). */
-  private def c11(s: SparkSession, d: String): DataFrame = {
-    val out = scratchDir("graft_refresh", d)
-    withScratchCleanup(out) {
+  private def c11(s: SparkSession, d: String): DataFrame =
+    withScratch("graft_refresh", d) { out =>
       val dir = s"$out/corpus"
       val docsT = graft.Tables(s, d, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"),
@@ -1670,9 +1621,8 @@ object ExportOps {
           (coalesce(col("n_arrived"), lit(0L)) -
             coalesce(col("n_inserted"), lit(0L))).as("n_screened"),
           col("n_total"), col("sum_chars"))
-      localizeAndDrop(report, out, "source")
+      localize(report, "source")
     }
-  }
 
   /** c12: SQL DDL/DML front door — the surface a migrated warehouse
     * workload actually arrives through: `CREATE TABLE ... USING parquet
@@ -1688,9 +1638,8 @@ object ExportOps {
     * DROP TABLE in finally — catalog entries are session-global and a
     * leaked name would shadow later gates. Scale: the DDL is metadata;
     * every DML plans the same scan/insert as the path-based API. */
-  private def c12(s: SparkSession, d: String): DataFrame = {
-    val out = scratchDir("graft_ddl", d)
-    withScratchCleanup(out) {
+  private def c12(s: SparkSession, d: String): DataFrame =
+    withScratch("graft_ddl", d) { out =>
       val loc = s"$out/events_ext"
       graft.Tables(s, d, "events").createOrReplaceTempView("events_src")
       s.sql("DROP TABLE IF EXISTS graft_c12_events")
@@ -1716,12 +1665,11 @@ object ExportOps {
             |  CAST(sum(cents) AS BIGINT) AS sum_cents
             |FROM graft_c12_events
             |GROUP BY event_type ORDER BY event_type""".stripMargin)
-        localizeAndDrop(report, out, "event_type")
+        localize(report, "event_type")
       } finally {
         s.sql("DROP TABLE IF EXISTS graft_c12_events"); ()
       }
     }
-  }
 
   /** e27: SHALLOW CLONE — Delta's zero-copy table fork, recovered from
     * the manifest protocol: [[TxTable.shallowClone]] commits ONE manifest
@@ -1734,9 +1682,8 @@ object ExportOps {
     * re-derives each side relationally. CloneRestoreSpec pins the
     * zero-copy facts: no data file exists under the clone root before
     * the append, and the source's files are byte-identical after it. */
-  private def e27(s: SparkSession, d: String): DataFrame = {
-    val out = scratchDir("graft_clone", d)
-    withScratchCleanup(out) {
+  private def e27(s: SparkSession, d: String): DataFrame =
+    withScratch("graft_clone", d) { out =>
       val src = s"$out/src"; val cln = s"$out/clone"
       graft.Tables(s, d, "customer")
         .select(col("c_custkey").as("k"), col("c_name").as("name"),
@@ -1759,9 +1706,8 @@ object ExportOps {
           .withColumn("side", lit(tag))
       val both = summarize(TxTable.read(s, src), "source")
         .unionByName(summarize(TxTable.read(s, cln), "clone"))
-      localizeAndDrop(both, out, "side", "p")
+      localize(both, "side", "p")
     }
-  }
 
   /** e28: RESTORE — roll the table back to an earlier version AS A NEW
     * COMMIT ([[TxTable.restore]]): the bad deploy's versions stay in
@@ -1771,9 +1717,8 @@ object ExportOps {
     * merge (v2), restores to v1 (v3), and reports the summaries of the
     * corrupted version and the restored head — which must equal v1's.
     * The oracle re-derives both states. */
-  private def e28(s: SparkSession, d: String): DataFrame = {
-    val out = scratchDir("graft_restore", d)
-    withScratchCleanup(out) {
+  private def e28(s: SparkSession, d: String): DataFrame =
+    withScratch("graft_restore", d) { out =>
       val snap = s"$out/snap"
       graft.Tables(s, d, "customer")
         .select(col("c_custkey").as("k"), col("c_name").as("name"),
@@ -1793,9 +1738,8 @@ object ExportOps {
           .withColumn("state", lit(tag))
       val both = summarize(TxTable.readVersion(s, snap, 2L), "corrupted")
         .unionByName(summarize(TxTable.read(s, snap), "restored"))
-      localizeAndDrop(both, out, "state", "p")
+      localize(both, "state", "p")
     }
-  }
 
   /** e29: TRANSACTIONAL COMPACTION (OPTIMIZE) — e04's small-file
     * maintenance routed through the manifest protocol, which is how it
@@ -1809,9 +1753,8 @@ object ExportOps {
     * before, ≤8 after, both versions serving identical row counts.
     * The oracle pins content invariance — compaction may change layout,
     * never values. Coalesce is shuffle-free: every byte moves once. */
-  private def e29(s: SparkSession, d: String): DataFrame = {
-    val out = scratchDir("graft_optimize", d)
-    withScratchCleanup(out) {
+  private def e29(s: SparkSession, d: String): DataFrame =
+    withScratch("graft_optimize", d) { out =>
       val tbl = s"$out/events"
       val ev = graft.Tables(s, d, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
@@ -1836,9 +1779,8 @@ object ExportOps {
           sum(col("value").cast("decimal(30,2)")).cast("double")
             .as("sum_value"),
           min(col("ts_us")).as("first_us"), max(col("ts_us")).as("last_us"))
-      localizeAndDrop(report, out, "event_type")
+      localize(report, "event_type")
     }
-  }
 
   /** Row-level change feed between two committed [[TxTable]] versions —
     * Delta/Iceberg's `table_changes()` recovered READ-SIDE from the
@@ -1899,9 +1841,8 @@ object ExportOps {
     * same-key collisions where a later delete beats an earlier update.
     * At 100 TB this is the incremental-consumer feed (e18's consumption
     * pattern) without any write-path instrumentation. */
-  private def e23(s: SparkSession, d: String): DataFrame = {
-    val out = scratchDir("graft_cdf", d)
-    withScratchCleanup(out) {
+  private def e23(s: SparkSession, d: String): DataFrame =
+    withScratch("graft_cdf", d) { out =>
       val snapDir = s"$out/snap"
       Tables(s, d, "customer")
         .select(col("c_custkey").as("k"), col("c_name").as("name"),
@@ -1913,9 +1854,8 @@ object ExportOps {
         vacuumNow = false) // v2
       val feed = tableChanges(s, snapDir, 1L, 2L, Seq("k"))
         .withColumn("p", col("p").cast("int"))
-      localizeAndDrop(feed, out, "k", "_change_type")
+      localize(feed, "k", "_change_type")
     }
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "e22_tx_time_travel" -> e22 _,

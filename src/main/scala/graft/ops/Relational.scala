@@ -467,22 +467,21 @@ object Relational {
         statCols(t0).mkString(", "))
     }
     try {
-      ExportOps.withConf(s, "spark.sql.cbo.enabled", cbo.toString) {
-        ExportOps.withConf(s, "spark.sql.cbo.joinReorder.enabled", cbo.toString) {
-          val df = s.sql(
-            s"""SELECT n.n_name, count(1) AS n_items,
-               |  CAST(sum(CAST(floor(l.l_extendedprice * 100 + 0.5) AS BIGINT))
-               |    AS BIGINT) AS sum_cents
-               |FROM ${names("lineitem")} l
-               |JOIN ${names("orders")} o ON l.l_orderkey = o.o_orderkey
-               |JOIN ${names("customer")} c ON o.o_custkey = c.c_custkey
-               |JOIN ${names("nation")} n ON c.c_nationkey = n.n_nationkey
-               |WHERE n.n_regionkey = 2
-               |GROUP BY n.n_name ORDER BY n.n_name""".stripMargin)
-          val leaves = df.queryExecution.optimizedPlan.collectLeaves()
-            .map(_.toString.linesIterator.next())
-          (ExportOps.localize(df), leaves)
-        }
+      ExportOps.withConf(s, "spark.sql.cbo.enabled" -> cbo.toString,
+          "spark.sql.cbo.joinReorder.enabled" -> cbo.toString) {
+        val df = s.sql(
+          s"""SELECT n.n_name, count(1) AS n_items,
+             |  CAST(sum(CAST(floor(l.l_extendedprice * 100 + 0.5) AS BIGINT))
+             |    AS BIGINT) AS sum_cents
+             |FROM ${names("lineitem")} l
+             |JOIN ${names("orders")} o ON l.l_orderkey = o.o_orderkey
+             |JOIN ${names("customer")} c ON o.o_custkey = c.c_custkey
+             |JOIN ${names("nation")} n ON c.c_nationkey = n.n_nationkey
+             |WHERE n.n_regionkey = 2
+             |GROUP BY n.n_name ORDER BY n.n_name""".stripMargin)
+        val leaves = df.queryExecution.optimizedPlan.collectLeaves()
+          .map(_.toString.linesIterator.next())
+        (ExportOps.localize(df), leaves)
       }
     } finally names.values.foreach(cat => s.sql(s"DROP TABLE IF EXISTS $cat"))
   }
@@ -557,8 +556,8 @@ object Relational {
     * shuffle records with the rule on, same answer. */
   private[graft] def windowGroupLimitRun(s: SparkSession, d: String,
       pushdown: Boolean = true): (DataFrame, String) =
-    ExportOps.withConf(s, "spark.sql.optimizer.windowGroupLimitThreshold",
-      if (pushdown) "1000" else "-1") {
+    ExportOps.withConf(s, "spark.sql.optimizer.windowGroupLimitThreshold" ->
+      (if (pushdown) "1000" else "-1")) {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts").desc, col("event_id").asc)
       val df = t(s, d, "events")
@@ -590,7 +589,7 @@ object Relational {
       if (merge) graft.GraftSession.ExcludedOptimizerRules
       else graft.GraftSession.ExcludedOptimizerRules +
         ",org.apache.spark.sql.catalyst.optimizer.MergeScalarSubqueries"
-    ExportOps.withConf(s, "spark.sql.optimizer.excludedRules", excluded) {
+    ExportOps.withConf(s, "spark.sql.optimizer.excludedRules" -> excluded) {
       t(s, d, "orders").createOrReplaceTempView("q132_orders")
       t(s, d, "customer").createOrReplaceTempView("q132_customer")
       val df = s.sql(
@@ -622,19 +621,17 @@ object Relational {
     * full-corpus read). */
   private[graft] def parquetAggPushdownRun(s: SparkSession, d: String,
       pushdown: Boolean = true): (DataFrame, String) =
-    ExportOps.withConf(s, "spark.sql.parquet.aggregatePushdown",
-      pushdown.toString) {
-      ExportOps.withConf(s, "spark.sql.sources.useV1SourceList",
-        if (pushdown) "" else "parquet") {
-        val df = s.read.parquet(s"$d/lineitem.parquet")
-          .agg(count(lit(1)).as("n_rows"),
-            min(col("l_quantity")).as("min_qty"),
-            max(col("l_quantity")).as("max_qty"),
-            min(col("l_extendedprice")).as("min_price"),
-            max(col("l_extendedprice")).as("max_price"))
-        (ExportOps.localizeExecuted(df),
-          df.queryExecution.executedPlan.toString)
-      }
+    ExportOps.withConf(s,
+        "spark.sql.parquet.aggregatePushdown" -> pushdown.toString,
+        "spark.sql.sources.useV1SourceList" -> (if (pushdown) "" else "parquet")) {
+      val df = s.read.parquet(s"$d/lineitem.parquet")
+        .agg(count(lit(1)).as("n_rows"),
+          min(col("l_quantity")).as("min_qty"),
+          max(col("l_quantity")).as("max_qty"),
+          min(col("l_extendedprice")).as("min_price"),
+          max(col("l_extendedprice")).as("max_price"))
+      (ExportOps.localizeExecuted(df),
+        df.queryExecution.executedPlan.toString)
     }
 
   private def q133(s: SparkSession, d: String): DataFrame =
@@ -1511,9 +1508,8 @@ object Relational {
     * because of the merge-transparency equality, which ScaleToolsSpec
     * pins). q31 keeps the engine-native HLL++ form; q64 is the exact
     * twin. */
-  private def q63(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_kmv", d)
-    ExportOps.withScratchCleanup(out) {
+  private def q63(s: SparkSession, d: String): DataFrame =
+    ExportOps.withScratch("graft_kmv", d) { out =>
       val ev = t(s, d, "events")
         .select(col("event_id"), col("event_type"),
           kmvHash(col("user_id")).as("h"))
@@ -1541,9 +1537,8 @@ object Relational {
             .otherwise(floor(lit((KmvK - 1).toDouble) *
               lit((1L << 60).toDouble) / col("hk").cast("double")))
             .as("est_users"))
-      ExportOps.localizeAndDrop(merged, out, "event_type")
+      ExportOps.localize(merged, "event_type")
     }
-  }
 
   /** q64: the exact twin of q63 — per-type distinct users by full
     * recompute, DuckDB-oracled (the same twin relationship q08 has to
@@ -1579,9 +1574,8 @@ object Relational {
     * exercises the exact regime (estimates EQUAL true counts —
     * Q146RetentionSpec pins that) as well as the estimator regime at the
     * bench SF (~1.5k DAU; accuracy pinned in the same spec). */
-  private def q146(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_kmv_ret", d)
-    ExportOps.withScratchCleanup(out) {
+  private def q146(s: SparkSession, d: String): DataFrame =
+    ExportOps.withScratch("graft_kmv_ret", d) { out =>
       val ev = t(s, d, "events").select(
         expr("unix_micros(ts) DIV 86400000000").as("day"),
         kmvHash(col("user_id")).as("h"))
@@ -1633,9 +1627,8 @@ object Relational {
           inter.as("est_retained"),
           (col("est_dau_a") - inter).as("est_churned"),
           (col("est_dau_b") - inter).as("est_new"))
-      ExportOps.localizeAndDrop(rep, out, "day_a")
+      ExportOps.localize(rep, "day_a")
     }
-  }
 
   /** q66: CDC upsert/delete merge — the MERGE INTO every snapshot-
     * maintenance pipeline runs: a standing snapshot plus a change batch of
@@ -1852,20 +1845,12 @@ object Relational {
     * re-plan: result content is unchanged (the oracle pins that), only
     * the partition split changes. */
   def withSkewConfs[T](s: SparkSession)(body: => T): T =
-    ExportOps.withConf(s, "spark.sql.autoBroadcastJoinThreshold", "-1") {
-      ExportOps.withConf(s, "spark.sql.adaptive.autoBroadcastJoinThreshold", "-1") {
-        ExportOps.withConf(s,
-          "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "128k") {
-          ExportOps.withConf(s,
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes", "128k") {
-            ExportOps.withConf(s,
-              "spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0") {
-              body
-            }
-          }
-        }
-      }
-    }
+    ExportOps.withConf(s,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "128k",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "128k",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0")(body)
 
   /** q101: SKEW-JOIN under AQE, gated — `ops/Skew.scala`'s manual salting
     * covers the shapes AQE can't reach; this gate pins that the AUTOMATIC
@@ -1961,7 +1946,7 @@ object Relational {
     * control. */
   private[graft] def aqeCoalesceRun(s: SparkSession, d: String)
       : (DataFrame, String) =
-    ExportOps.withConf(s, "spark.sql.shuffle.partitions", "64") {
+    ExportOps.withConf(s, "spark.sql.shuffle.partitions" -> "64") {
       val df = t(s, d, "events")
         .select(col("event_type"), hour(col("ts")).as("hr"),
           expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
@@ -1990,18 +1975,10 @@ object Relational {
   private def withRuntimeFilterConfs[T](s: SparkSession, enabled: Boolean)
       (body: => T): T =
     ExportOps.withConf(s,
-      "spark.sql.optimizer.runtime.bloomFilter.enabled", enabled.toString) {
-      ExportOps.withConf(s,
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        "0") {
-        ExportOps.withConf(s, "spark.sql.autoBroadcastJoinThreshold", "-1") {
-          ExportOps.withConf(s,
-            "spark.sql.adaptive.autoBroadcastJoinThreshold", "-1") {
-            body
-          }
-        }
-      }
-    }
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> enabled.toString,
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")(body)
 
   /** q122: RUNTIME BLOOM-FILTER join pruning — Catalyst's
     * `InjectRuntimeFilter` plants a `BloomFilterAggregate` subquery on
@@ -2049,20 +2026,20 @@ object Relational {
     * plan, with a switch-disabled control keeping the merge join. */
   private[graft] def aqeJoinSwitchRun(s: SparkSession, d: String,
       runtimeBroadcast: Boolean = true): (DataFrame, String) =
-    ExportOps.withConf(s, "spark.sql.autoBroadcastJoinThreshold", "-1") {
-      ExportOps.withConf(s, "spark.sql.adaptive.autoBroadcastJoinThreshold",
-        if (runtimeBroadcast) "10m" else "-1") {
-        val l = t(s, d, "lineitem")
-        val p = t(s, d, "part")
-        val df = l.join(p, l("l_partkey") === p("p_partkey"))
-          .groupBy(col("p_brand"))
-          .agg(count(lit(1)).as("n"),
-            sum(expr("CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"))
-              .cast("long").as("sum_cents"))
-          .orderBy("p_brand")
-        val local = ExportOps.localizeExecuted(df)
-        (local, df.queryExecution.executedPlan.toString)
-      }
+    ExportOps.withConf(s,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" ->
+          (if (runtimeBroadcast) "10m" else "-1")) {
+      val l = t(s, d, "lineitem")
+      val p = t(s, d, "part")
+      val df = l.join(p, l("l_partkey") === p("p_partkey"))
+        .groupBy(col("p_brand"))
+        .agg(count(lit(1)).as("n"),
+          sum(expr("CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"))
+            .cast("long").as("sum_cents"))
+        .orderBy("p_brand")
+      val local = ExportOps.localizeExecuted(df)
+      (local, df.queryExecution.executedPlan.toString)
     }
 
   private def q123(s: SparkSession, d: String): DataFrame =
@@ -2116,9 +2093,8 @@ object Relational {
     * WHOLE snapshot back: changed partitions must carry the merge, the
     * other 23 must come through the swap untouched. Oracle recomputes the
     * full post-merge snapshot from the customer table. */
-  private def q68(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_cdcpart", d)
-    ExportOps.withScratchCleanup(out) {
+  private def q68(s: SparkSession, d: String): DataFrame =
+    ExportOps.withScratch("graft_cdcpart", d) { out =>
       val snapDir = s"$out/snap"
       val c = t(s, d, "customer")
       c.select(col("c_custkey").as("k"), col("c_name").as("name"),
@@ -2128,9 +2104,8 @@ object Relational {
       // read THROUGH the manifest — the crash-consistent serve path
       val mergedSnap = TxTable.read(s, snapDir)
         .select(col("k"), col("name"), col("bal"), col("p").cast("int").as("p"))
-      ExportOps.localizeAndDrop(mergedSnap, out, "k")
+      ExportOps.localize(mergedSnap, "k")
     }
-  }
 
   /** q68's deterministic change batch, public for the specs: every change
     * row carries its nation as the partition value `p`. One scan of
@@ -2556,9 +2531,8 @@ object Relational {
     * is addition-order-free; the cast to double happens once at the
     * output edge. Gate = the merged view hash-matches a from-scratch
     * full recompute over the complete tables. */
-  private def q77(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_matview", d)
-    ExportOps.withScratchCleanup(out) {
+  private def q77(s: SparkSession, d: String): DataFrame =
+    ExportOps.withScratch("graft_matview", d) { out =>
       val ords = t(s, d, "orders")
         .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
       val cust = t(s, d, "customer")
@@ -2587,9 +2561,8 @@ object Relational {
         .select(col("c_nationkey"), col("n_orders"),
           col("rev").cast("double").as("revenue"))
         .orderBy("c_nationkey")
-      ExportOps.localizeAndDrop(refreshed, out, "c_nationkey")
+      ExportOps.localize(refreshed, "c_nationkey")
     }
-  }
 
   /** Bin width for [[overlapJoinBinned]]: 1 hour. Chosen near the median
     * interval length so each interval lands in a handful of bins — the
@@ -2710,17 +2683,15 @@ object Relational {
     * expression inside the fact scan's PartitionFilters) is pinned in
     * [[graft.DppSpec]]; the gate hash-matches the oracle computing the
     * same revenue with a static month predicate. */
-  private def q80(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_dpp", d)
-    ExportOps.withScratchCleanup(out) {
+  private def q80(s: SparkSession, d: String): DataFrame =
+    ExportOps.withScratch("graft_dpp", d) { out =>
       t(s, d, "orders")
         .withColumn("omonth", month(col("o_orderdate")))
         .write.partitionBy("omonth").parquet(s"$out/fact")
       val fact = Tables.readParquet(s, s"$out/fact")
       val res = seasonRevenue(fact, monthsDim(s)).orderBy("omonth")
-      ExportOps.localizeAndDrop(res, out, "omonth")
+      ExportOps.localize(res, "omonth")
     }
-  }
 
   /** q81: snapshot diff / data reconciliation — the row-level audit every
     * migration, backfill, or replication pipeline runs: old snapshot vs
@@ -2787,9 +2758,8 @@ object Relational {
     * directly from the raw table: proof the partial-merge algebra
     * (sum-of-sums, sum-of-counts over decimals) loses nothing. The q77
     * matview discipline applied downward through grains. */
-  private def q83(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_cube", d)
-    ExportOps.withScratchCleanup(out) {
+  private def q83(s: SparkSession, d: String): DataFrame =
+    ExportOps.withScratch("graft_cube", d) { out =>
       t(s, d, "lineitem")
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("n"),
@@ -2809,11 +2779,10 @@ object Relational {
         base.groupBy(col("l_linestatus")))
       val total = roll("all", lit(null).cast("string"), lit(null).cast("string"),
         base.groupBy())
-      ExportOps.localizeAndDrop(
+      ExportOps.localize(
         byFlag.unionByName(byStatus).unionByName(total)
-          .orderBy("level", "k1", "k2"), out, "level", "k1", "k2")
+          .orderBy("level", "k1", "k2"), "level", "k1", "k2")
     }
-  }
 
   /** q109: q83's cube serving made TRANSPARENT — aggregate navigation via
     * a Catalyst optimizer rule ([[graft.plans.MatviewRewrite]], registered
@@ -2836,8 +2805,7 @@ object Relational {
     import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, Literal}
     import org.apache.spark.sql.catalyst.expressions.aggregate.{Count, Sum => CSum}
     import org.apache.spark.sql.types.DecimalType
-    val out = ExportOps.scratchDir("graft_mvrw", d)
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_mvrw", d) { out =>
       // materialize the serving grain once (the q83 artifact shape:
       // exact decimal partials so any re-grouping merges losslessly)
       t(s, d, "lineitem")
@@ -2872,11 +2840,11 @@ object Relational {
           lit(null).cast("string"), col("l_linestatus"))
         val total = grain("all", Nil,
           lit(null).cast("string"), lit(null).cast("string"))
-        // localizeAndDrop collects HERE, inside the registration scope —
+        // localize collects HERE, inside the registration scope —
         // the rewrite fires during these executions
-        ExportOps.localizeAndDrop(
+        ExportOps.localize(
           byFlag.unionByName(byStatus).unionByName(total)
-            .orderBy("level", "k1", "k2"), out, "level", "k1", "k2")
+            .orderBy("level", "k1", "k2"), "level", "k1", "k2")
       } finally MatviewCatalog.unregister("lineitem_rf_ls")
     }
   }

@@ -125,7 +125,7 @@ object SessionGates {
     // whole (serial) lifetime and restores it before anything else runs.
     g.drainParquet(sessionAgg(stream))
     val landed = Tables.readParquet(s, g.data).filter(col("user_id") >= 0)
-    g.localizeAndDrop(landed, "user_id", "session_start_ms")
+    ExportOps.localize(landed, "user_id", "session_start_ms")
     }
 
   /** q118: DYNAMIC-GAP session windows — `session_window`'s expression-
@@ -180,7 +180,7 @@ object SessionGates {
           org.apache.spark.sql.streaming.TimeMode.None(),
           org.apache.spark.sql.streaming.OutputMode.Append())
       g.drainParquet(emits.toDF())
-      g.localizeAndDrop(Tables.readParquet(s, g.data), "event_type", "n_total")
+      ExportOps.localize(Tables.readParquet(s, g.data), "event_type", "n_total")
     }
 
   /** q85: CHAINED stateful aggregations in ONE streaming query — Spark
@@ -219,7 +219,7 @@ object SessionGates {
           col("peak_minute"), col("active_minutes"), col("n_events"))
       g.drainParquet(tenMinute)
       val landed = Tables.readParquet(s, g.data).filter(col("user_id") >= 0)
-      g.localizeAndDrop(landed, "user_id", "w_start_ms")
+      ExportOps.localize(landed, "user_id", "w_start_ms")
     }
 
   /** q112: COMPLETE output mode — the last cell of the streaming
@@ -255,7 +255,7 @@ object SessionGates {
         q.processAllAvailable()
         q.recentProgress.count(_.numInputRows > 0)
       }
-      (g.localizeAndDrop(s.sql(
+      (ExportOps.localize(s.sql(
         "SELECT event_type, n, sum_cents FROM graft_q112 " +
           "ORDER BY n DESC, event_type")), triggers)
     }
@@ -292,7 +292,7 @@ object SessionGates {
         .select(col("purchase_id"), col("uid"),
           unix_millis(col("purchase_ts")).as("purchase_ms"),
           col("click_id"), unix_millis(col("click_ts")).as("click_ms"))
-      g.localizeAndDrop(landed, "purchase_id", "click_id")
+      ExportOps.localize(landed, "purchase_id", "click_id")
     }
 
   /** q95: the LEFT-SEMI leg of the stream-stream join family — "which
@@ -321,7 +321,7 @@ object SessionGates {
       val landed = Tables.readParquet(s, g.data)
         .select(col("purchase_id"), col("uid"),
           unix_millis(col("purchase_ts")).as("purchase_ms"))
-      g.localizeAndDrop(landed, "purchase_id")
+      ExportOps.localize(landed, "purchase_id")
     }
 
   /** q98: UPDATE output mode + an upsert serving sink — the third leg of
@@ -371,7 +371,7 @@ object SessionGates {
       // serve THROUGH the manifest (TxTable) — the crash-consistent path
       val served = TxTable.read(s, serving)
         .select(col("k").as("user_id"), col("n_events"), col("sum_off_ms"))
-      g.localizeAndDrop(served, "user_id")
+      ExportOps.localize(served, "user_id")
     }
 
   /** q67: the LEFT-OUTER twin of q62 — "every purchase, with its clicks OR
@@ -429,7 +429,7 @@ object SessionGates {
         .select(col("purchase_id"), col("uid"),
           unix_millis(col("purchase_ts")).as("purchase_ms"),
           col("click_id"), unix_millis(col("click_ts")).as("click_ms"))
-      g.localizeAndDrop(landed, "purchase_id", "click_id")
+      ExportOps.localize(landed, "purchase_id", "click_id")
     }
   }
 
@@ -493,7 +493,7 @@ object SessionGates {
       val landed = Tables.readParquet(s, g.data)
         .select(col("event_id"), col("user_id"), col("event_type"),
           unix_millis(col("tsm")).as("ts_ms"))
-      g.localizeAndDrop(landed, "event_id")
+      ExportOps.localize(landed, "event_id")
     }
 
   /** q69: streaming CDC apply — q68's partition-grain merge driven by an
@@ -528,7 +528,7 @@ object SessionGates {
       val mergedSnap = Tables.readParquet(s, snapDir)
         .select(col("k"), col("name"), col("bal"),
           col("p").cast("int").as("p"))
-      g.localizeAndDrop(mergedSnap, "k")
+      ExportOps.localize(mergedSnap, "k")
     }
 
   /** q74: per-user cumulative totals via Spark 4's `transformWithState`
@@ -614,7 +614,7 @@ object SessionGates {
       // watermark past ITS timer) — by construction it cannot land; the
       // filter documents the contract rather than trusting it
       val landed = Tables.readParquet(s, g.data).filter(col("user_id") >= 0)
-      g.localizeAndDrop(landed, "user_id", "session_start_ms")
+      ExportOps.localize(landed, "user_id", "session_start_ms")
     }
 
   /** q90: state-store MAINTENANCE — RocksDB changelog checkpointing
@@ -673,7 +673,7 @@ object SessionGates {
       }
       require(changelogs.nonEmpty,
         s"changelog checkpointing produced no .changelog files under ${g.ckpt}/state")
-      g.localizeAndDrop(Tables.readParquet(s, g.data), "user_id", "n_events", "sum_cents")
+      ExportOps.localize(Tables.readParquet(s, g.data), "user_id", "n_events", "sum_cents")
     }
 
   /** q108: STATE-SCHEMA EVOLUTION across a restart — the upgrade story
@@ -716,7 +716,7 @@ object SessionGates {
       val landed = s.read.option("mergeSchema", "true").parquet(g.data)
         .withColumn("max_cents_run2",
           coalesce(col("max_cents_run2"), lit(-1L)))
-      g.localizeAndDrop(landed,
+      ExportOps.localize(landed,
         "user_id", "n_events", "sum_cents", "max_cents_run2")
     }
 
@@ -783,10 +783,9 @@ object SessionGates {
         .agg(count(lit(1)).as("n_events"),
           count_distinct(col("user_id")).as("n_users"),
           sum(col("event_id")).cast("long").as("sum_event_id"))
-      val result = ExportOps.localize(landed)
+      val result = ExportOps.localize(landed, "dimv", "tier", "event_type")
       inspect(g.dir, plan2)
-      ExportOps.deleteRecursively(g.dir)
-      result.orderBy("dimv", "tier", "event_type")
+      result
     }
 
   /** The last micro-batch's executed physical plan, via reflection across
@@ -851,7 +850,7 @@ object SessionGates {
         .transformWithState(new graft.streaming.BootstrappedTotalsProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(),
           org.apache.spark.sql.streaming.OutputMode.Append(), init).toDF())
-      g.localizeAndDrop(Tables.readParquet(s, g.data), "user_id", "n_events", "sum_cents")
+      ExportOps.localize(Tables.readParquet(s, g.data), "user_id", "n_events", "sum_cents")
     }
 
   /** q103: late REDELIVERY under sessionization — the composed ingest
@@ -904,7 +903,7 @@ object SessionGates {
         else ingest
       g.drainParquet(sessionAgg(screenedStream.drop("event_id")))
       val landed = Tables.readParquet(s, g.data).filter(col("user_id") >= 0)
-      g.localizeAndDrop(landed, "user_id", "session_start_ms")
+      ExportOps.localize(landed, "user_id", "session_start_ms")
     }
   }
 
@@ -978,7 +977,7 @@ object SessionGates {
         .select(unix_millis(col("window.start")).as("hour_start_ms"),
           col("n_pairs"), col("n_purchases"))
       g.drainParquet(hourly)
-      g.localizeAndDrop(Tables.readParquet(s, g.data), "hour_start_ms")
+      ExportOps.localize(Tables.readParquet(s, g.data), "hour_start_ms")
     }
 
   /** q105: STREAMING in-flight observation — `Dataset.observe` on an
@@ -1019,7 +1018,7 @@ object SessionGates {
         .map(r => (r.getAs[Long]("n_rows"),
           Option(r.getAs[Any]("sum_cents")).fold(0L)(_.asInstanceOf[Long])))
       val landed = Tables.readParquet(s, g.data).filter(col("user_id") >= 0)
-      (g.localizeAndDrop(landed, "user_id", "session_start_ms"),
+      (ExportOps.localize(landed, "user_id", "session_start_ms"),
         observed.map(_._1).sum, observed.map(_._2).sum)
     }
 
@@ -1043,21 +1042,21 @@ object SessionGates {
     * of the store, not a replay. */
   private def q102(s: SparkSession, d: String): DataFrame =
     StreamGate(s, "graft_statesrc", d) { g =>
-      stateSourceHarness(s, d, g.dir)
+      stateSourceHarness(s, d, g)
       val st = s.read.format("statestore").option("path", g.ckpt).load()
       val totals = st.select(col("key.user_id").as("user_id"),
         col("value.count").as("n_events"),
         col("value.sum").as("sum_off_ms"))
-      g.localizeAndDrop(totals, "user_id")
+      ExportOps.localize(totals, "user_id")
     }
 
   /** Runs q102's two-batch streaming aggregate to completion against
-    * `out/ckpt`, public-in-package for StateSourceSpec's time-travel
-    * pin. The foreachBatch sink only drains the iterator (b.count) —
-    * the artifact under test is the STATE the commits leave behind. */
+    * `g`'s checkpoint, public-in-package for StateSourceSpec's
+    * time-travel pin. The foreachBatch sink only drains the iterator
+    * (b.count) — the artifact under test is the STATE the commits leave
+    * behind. */
   private[ops] def stateSourceHarness(s: SparkSession, d: String,
-                                      out: java.io.File): Unit = {
-    val g = StreamGate.over(s, out)
+                                      g: StreamGate): Unit = {
     val ev = Tables(s, d, "events")
     g.arriveSlices(splitAt(ev, eventTsStats(s, d)._3.toLong))
     val agg = g.readIn(ev.schema)
@@ -1138,7 +1137,7 @@ object SessionGates {
       // sum_cents as the final key: when a user's two batch totals tie on
       // n_events, (user_id, n_events) alone leaves their relative order
       // undefined — a latent cross-engine hash flake the oracle mirrors
-      g.localizeAndDrop(Tables.readParquet(s, g.data), "user_id", "n_events", "sum_cents")
+      ExportOps.localize(Tables.readParquet(s, g.data), "user_id", "n_events", "sum_cents")
     }
 
   /** q107: the LISTSTATE leg of `transformWithState`
@@ -1172,7 +1171,7 @@ object SessionGates {
           org.apache.spark.sql.streaming.TimeMode.None(),
           org.apache.spark.sql.streaming.OutputMode.Append())
       g.drainParquet(windows.toDF())
-      g.localizeAndDrop(Tables.readParquet(s, g.data),
+      ExportOps.localize(Tables.readParquet(s, g.data),
         "user_id", "n_recent", "sum_cents_recent", "last_event_id")
     }
 

@@ -733,19 +733,16 @@ object SimilarityOps {
     * the tombstone-filtered corpus. At 100 TB: deletes cost KBs/day of
     * tombstones + one anti-join broadcast at serve; the rebuild they
     * replace costs a full corpus scan + re-encode. */
-  private def v22(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_annts", d)
-    ExportOps.withScratchCleanup(out) {
+  private def v22(s: SparkSession, d: String): DataFrame =
+    ExportOps.withScratch("graft_annts", d) { out =>
       val root = out.getAbsolutePath
       signCodes(emb(s, d)).write.parquet(s"$root/codes")
       v22Tombstones(s, d).write.parquet(s"$root/tombstones")
-      ExportOps.localizeAndDrop(v22ServeFrom(s, root, d), out, "q_id", "rank")
+      ExportOps.localize(v22ServeFrom(s, root, d), "q_id", "rank")
     }
-  }
 
-  private def v19(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_pqidx", d)
-    ExportOps.withScratchCleanup(out) {
+  private def v19(s: SparkSession, d: String): DataFrame =
+    ExportOps.withScratch("graft_pqidx", d) { out =>
       val root = out.getAbsolutePath
       val vecs = DedupOps.cachedShared(emb(s, d).select(col("vec_id"),
         VectorFunctions.toDouble(col("embedding")).as("v")))
@@ -754,9 +751,8 @@ object SimilarityOps {
       pqEncode(vecs, codebook).write.parquet(s"$root/codes")
       val served = pqAdcServe(vecs,
         Tables.readParquet(s, s"$root/codebook"), Tables.readParquet(s, s"$root/codes"))
-      ExportOps.localizeAndDrop(served, out, "q_id", "rank")
+      ExportOps.localize(served, "q_id", "rank")
     }
-  }
 
   /** v21: IVF-PQ — the composition v14's scaladoc promises and every
     * FAISS-style serving index actually ships: the coarse IVF layer

@@ -415,15 +415,13 @@ object TextOps {
     * since round 15: the cell signature is exact integer arithmetic over
     * the slot counts, so [[t25OracleSql]] replays the whole lifecycle in
     * DuckDB; t24 remains the brute-scan recall twin. */
-  private def t25(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_ragidx", d)
-    ExportOps.withScratchCleanup(out) {
+  private def t25(s: SparkSession, d: String): DataFrame =
+    ExportOps.withScratch("graft_ragidx", d) { out =>
       val root = out.getAbsolutePath
       buildRagIndex(s, ragChunkEmbeddings(docs(s, d)), root)
       val served = ragServeFromIndex(s, root, ragQueryEmbeddings(s), RagNProbe)
-      ExportOps.localizeAndDrop(served, out, "query_id", "rank")
+      ExportOps.localize(served, "query_id", "rank")
     }
-  }
 
   /** Builds the persistent RAG chunk index under `root`:
     * `root/postings/cell=N/` (chunk embeddings, partitioned by their IVF
@@ -538,9 +536,8 @@ object TextOps {
     * bit-identically to a from-scratch rebuild over the whole corpus
     * (spec-pinned equality) — which is exactly why t25's full-corpus
     * lifecycle oracle ([[t25OracleSql]]) hash-checks this gate too. */
-  private def t30(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_ragapp", d)
-    ExportOps.withScratchCleanup(out) {
+  private def t30(s: SparkSession, d: String): DataFrame =
+    ExportOps.withScratch("graft_ragapp", d) { out =>
       val root = out.getAbsolutePath
       val all = docs(s, d)
       buildRagIndex(s,
@@ -548,9 +545,8 @@ object TextOps {
       appendRagIndex(s,
         ragChunkEmbeddings(all.filter(col("doc_id") % 2 =!= 0)), root)
       val served = ragServeFromIndex(s, root, ragQueryEmbeddings(s), RagNProbe)
-      ExportOps.localizeAndDrop(served, out, "query_id", "rank")
+      ExportOps.localize(served, "query_id", "rank")
     }
-  }
 
   /** Routes each query to its `nProbe` nearest cell centroids from the
     * RELOADED index. The collect is bounded by queries × nProbe — the
@@ -1128,9 +1124,8 @@ object TextOps {
     * threshold-finding is a window over sketch rows, not corpus rows; the
     * corpus pays one scan for binning and one broadcast-joinable filter —
     * no per-source sort anywhere. */
-  private def t29(s: SparkSession, d: String): DataFrame = {
-    val out = ExportOps.scratchDir("graft_sketchcut", d)
-    ExportOps.withScratchCleanup(out) {
+  private def t29(s: SparkSession, d: String): DataFrame =
+    ExportOps.withScratch("graft_sketchcut", d) { out =>
       val toks = tokenize(col("text"), "space-raw")
       val binned = docs(s, d).select(col("doc_id"), col("source"),
           (size(array_distinct(toks)).cast("double") /
@@ -1164,9 +1159,8 @@ object TextOps {
         .filter(col("bin") >= col("cut_bin"))
         .select(col("source"), col("doc_id"), col("bin"), col("cut_bin"),
           col("n_source"), round(col("score"), 6).as("score"))
-      ExportOps.localizeAndDrop(kept, out, "source", "doc_id")
+      ExportOps.localize(kept, "source", "doc_id")
     }
-  }
 
   /** t31: n-gram LANGUAGE-ID — the classifier the survey's text family
     * lists but t02 (which profiles the GIVEN label) never builds: the
@@ -1689,7 +1683,7 @@ object TextOps {
     * distributed aggregate; the loop carries 16 bytes of driver state. */
   private def c10(s: SparkSession, d: String): DataFrame = {
     docs(s, d).createOrReplaceTempView("documents")
-    ExportOps.withConf(s, "spark.sql.scripting.enabled", "true") {
+    ExportOps.withConf(s, "spark.sql.scripting.enabled" -> "true") {
       ExportOps.localize(s.sql(
         """BEGIN
           |  DECLARE mc BIGINT DEFAULT 0;

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 /** Logical optimizer rule: sort a driver-local relation on the driver.
   *
   * A global `Sort` over a `LocalRelation` (a frame built from rows the
-  * driver already holds, such as every [[graft.ops.ExportOps.localizeAndDrop]]
+  * driver already holds, such as every [[graft.ops.ExportOps.localize]]d
   * gate result) otherwise plans a range exchange over the local table
   * scan: a `RangePartitioner` sampling job and a range-shuffle map job
   * before the rows come back in order. [[SingleTaskSort]] cannot catch

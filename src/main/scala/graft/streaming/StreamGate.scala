@@ -9,11 +9,11 @@ import graft.ops.ExportOps
   * scheduled run as one `Trigger.AvailableNow` drain. A gate's life is
   * always the same five steps, and this harness owns all of them:
   *
-  *  1. scratch: a PID- and invocation-suffixed dir ([[ExportOps.scratchDir]])
-  *     with its watched `in/`, deleted if the body throws
-  *     ([[ExportOps.withScratchCleanup]]) and by [[localizeAndDrop]] on
-  *     success, plus any per-gate state-store confs ([[RocksDb]],
-  *     [[Changelog]], [[AvroState]]) held for the gate's whole life;
+  *  1. scratch: a PID- and invocation-suffixed dir with its watched
+  *     `in/`, made and deleted by one [[ExportOps.withScratch]] scope
+  *     whether the gate returns or throws, plus any per-gate state-store
+  *     confs ([[RocksDb]], [[Changelog]], [[AvroState]]) held for the
+  *     gate's whole life;
   *  2. staging: each slice is written once per JVM ([[StreamGate.stage]])
   *     and copied into `in/` by [[arrive]] with a strictly increasing
   *     past mtime, so the file source replays arrivals in call order;
@@ -22,7 +22,8 @@ import graft.ops.ExportOps
   *     checkpoint at `ckpt/`, `Trigger.AvailableNow`, `start`, the gate's
   *     await (`processAllAvailable` unless the gate inspects the running
   *     query), `stop` in a `finally`;
-  *  5. read-back: the gate reads its sink and [[localizeAndDrop]]s.
+  *  5. read-back: the gate reads its sink and [[ExportOps.localize]]s
+  *     it, so the result it returns reads nothing the scope deletes.
   *
   * The sink, output mode, shard count, confs and arrival order stay the
   * gate's own; only the lifecycle lives here.
@@ -86,7 +87,7 @@ final class StreamGate private (spark: SparkSession, val dir: java.io.File) {
       try await(q) finally q.stop()
     }
     shards.fold(run())(n =>
-      ExportOps.withConf(spark, "spark.sql.shuffle.partitions", n)(run()))
+      ExportOps.withConf(spark, "spark.sql.shuffle.partitions" -> n)(run()))
   }
 
   /** `df` appended to the parquet sink at `data/`. */
@@ -97,10 +98,6 @@ final class StreamGate private (spark: SparkSession, val dir: java.io.File) {
   def drainParquet(df: DataFrame,
                    shards: Option[String] = Some(StreamGate.shards())): Unit =
     drain(parquetSink(df), shards)(_.processAllAvailable())
-
-  /** [[ExportOps.localizeAndDrop]] of the read-back; deletes the scratch. */
-  def localizeAndDrop(df: DataFrame, sortCols: String*): DataFrame =
-    ExportOps.localizeAndDrop(df, dir, sortCols: _*)
 }
 
 object StreamGate {
@@ -123,20 +120,13 @@ object StreamGate {
     * with `confs` set on the session for the whole body and restored
     * after. */
   def apply[T](s: SparkSession, prefix: String, d: String,
-               confs: Seq[(String, String)] = Nil)(body: StreamGate => T): T = {
-    val out = ExportOps.scratchDir(prefix, d)
-    def withConfs(cs: Seq[(String, String)]): T = cs match {
-      case (k, v) +: rest => ExportOps.withConf(s, k, v)(withConfs(rest))
-      case _ => ExportOps.withScratchCleanup(out)(body(over(s, out)))
+               confs: Seq[(String, String)] = Nil)(body: StreamGate => T): T =
+    ExportOps.withConf(s, confs: _*) {
+      ExportOps.withScratch(prefix, d) { dir =>
+        new java.io.File(dir, "in").mkdirs()
+        body(new StreamGate(s, dir))
+      }
     }
-    withConfs(confs)
-  }
-
-  /** A gate over a caller-owned scratch dir (the caller cleans it up). */
-  def over(s: SparkSession, dir: java.io.File): StreamGate = {
-    new java.io.File(dir, "in").mkdirs()
-    new StreamGate(s, dir)
-  }
 
   /** Sys-prop that overrides every gate's state-store partition count, so
     * the partition-invariance sweep (PartitionInvarianceSpec) and the

@@ -15,11 +15,19 @@ class AmplifySfSpec extends SparkSpec {
   private val X = 3
   private val src = "/root/testdata/sf0.001"
 
+  // both amplified fixtures live in one scratch scope around the whole
+  // suite, built lazily by the first test that reads them
+  @volatile private var scratch: java.io.File = _
+  override def run(testName: Option[String],
+                   args: org.scalatest.Args): org.scalatest.Status =
+    ExportOps.withScratch("graft_amp_spec", "spec") { d =>
+      scratch = d
+      super.run(testName, args)
+    }
+
   private lazy val dir: String = {
-    val out = ExportOps.scratchDir("graft_amp_spec", "spec")
+    val out = new java.io.File(scratch, "linear")
     out.mkdirs()
-    Runtime.getRuntime.addShutdownHook(
-      new Thread(() => ExportOps.deleteRecursively(out)))
     AmplifySf.amplify(spark, src, out.getAbsolutePath, X)
     out.getAbsolutePath
   }
@@ -93,10 +101,8 @@ class AmplifySfSpec extends SparkSpec {
   private val HX = 10
   private val HBeta = 0.8
   private lazy val heapsDir: String = {
-    val out = ExportOps.scratchDir("graft_amp_heaps_spec", "spec")
+    val out = new java.io.File(scratch, "heaps")
     out.mkdirs()
-    Runtime.getRuntime.addShutdownHook(
-      new Thread(() => ExportOps.deleteRecursively(out)))
     AmplifySf.amplify(spark, src, out.getAbsolutePath, HX,
       vocabBeta = Some(HBeta))
     out.getAbsolutePath

@@ -38,7 +38,7 @@ class BenchShuffleSpec extends SparkSpec {
     // the GraftSession front-door test legitimately retunes the shared
     // session to host-sized partitions, and suite order must not leak
     // that into these measurements
-    ops.ExportOps.withConf(spark, "spark.sql.shuffle.partitions", "8") {
+    ops.ExportOps.withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
     try {
       val measured = pins.keys.toSeq.sorted.map { name =>
         metrics.start(name)

@@ -37,8 +37,7 @@ class NewSessionSpec extends SparkSpec {
 
   test("a new session rewrites a covered aggregate onto a registered view") {
     val lineitem = Tables(fresh, d, "lineitem")
-    val out = ops.ExportOps.scratchDir("graft_ns_mv", "spec")
-    cleaned(out) {
+    ops.ExportOps.withScratch("graft_ns_mv", "spec") { out =>
       val mvPath = s"$out/mv"
       lineitem.groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("n"),

@@ -19,11 +19,6 @@ class ParquetReadSpec extends SparkSpec {
 
   private val d = new java.io.File("perfbench/fixtures/sf0.01").getAbsolutePath
 
-  private def withDir[T](body: java.io.File => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pread").toFile
-    try body(dir) finally ops.ExportOps.deleteRecursively(dir)
-  }
-
   private def sample(s: SparkSession): DataFrame = s.range(0, 40, 1, 4)
     .select(col("id"), (col("id") % 3).cast("int").as("p"),
       concat(lit("v"), col("id").cast("string")).as("s"),
@@ -42,7 +37,7 @@ class ParquetReadSpec extends SparkSpec {
   }
 
   test("(a) a single file, a flat dir and a hive-partitioned dir read with Spark's schema") {
-    withDir { dir =>
+    ops.ExportOps.withScratch("graft_pread", "spec") { dir =>
       val flat = new java.io.File(dir, "flat").getAbsolutePath
       sample(spark).write.parquet(flat)
       sameSchema(Seq(flat))
@@ -56,7 +51,7 @@ class ParquetReadSpec extends SparkSpec {
   }
 
   test("(b) an explicit file list with basePath (the TxTable layout) reads with Spark's schema") {
-    withDir { tmp =>
+    ops.ExportOps.withScratch("graft_pread", "spec") { tmp =>
       val dir = new java.io.File(tmp, "t")
       sample(spark).write.partitionBy("p").parquet(dir.getAbsolutePath)
       val files = partFiles(dir)
@@ -69,7 +64,7 @@ class ParquetReadSpec extends SparkSpec {
   }
 
   test("(c) a streaming parquet sink dir (_spark_metadata) reads with Spark's schema") {
-    withDir { dir =>
+    ops.ExportOps.withScratch("graft_pread", "spec") { dir =>
       val in = new java.io.File(dir, "in").getAbsolutePath
       sample(spark).write.parquet(in)
       val out = new java.io.File(dir, "out").getAbsolutePath
@@ -89,7 +84,7 @@ class ParquetReadSpec extends SparkSpec {
     val s = spark.newSession()
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     sameSchema(Seq(s"$d/events.parquet"), s = s)
-    withDir { dir =>
+    ops.ExportOps.withScratch("graft_pread", "spec") { dir =>
       val file = new Path(new java.io.File(dir, "nanos.parquet").getAbsolutePath)
       val schema = MessageTypeParser.parseMessageType(
         "message m { optional int64 ts (TIMESTAMP(NANOS,true)); optional int64 id; }")
@@ -105,7 +100,7 @@ class ParquetReadSpec extends SparkSpec {
   }
 
   test("(e) an empty dir and a missing path fail with Spark's exception") {
-    withDir { dir =>
+    ops.ExportOps.withScratch("graft_pread", "spec") { dir =>
       def failure(read: => DataFrame): Class[_] =
         intercept[Throwable](read.schema).getClass
       val empty = new java.io.File(dir, "empty")
@@ -117,7 +112,7 @@ class ParquetReadSpec extends SparkSpec {
   }
 
   test("(f) a read-back through the helper launches no job before its action") {
-    withDir { dir =>
+    ops.ExportOps.withScratch("graft_pread", "spec") { dir =>
       val root = new java.io.File(dir, "t").getAbsolutePath
       sample(spark).write.partitionBy("p").parquet(root)
       var back: DataFrame = null

@@ -21,8 +21,7 @@ class PlanAuditR12Spec extends SparkSpec {
   private val d = "/root/testdata/sf0.001"
 
   test("TxTable.read: partition predicates prune at the file-index level") {
-    val out = ExportOps.scratchDir("graft_txplan", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_txplan", "spec") { out =>
       val snapDir = s"$out/snap"
       spark.read.parquet(s"$d/customer.parquet")
         .select(col("c_custkey").as("k"), col("c_name").as("name"),
@@ -49,7 +48,6 @@ class PlanAuditR12Spec extends SparkSpec {
         .flatMap("p=(\\d+)".r.findFirstMatchIn(_)).map(_.group(1).toInt).toSet
       assert(scanned === Set(3, 7),
         s"manifest read must open only the filtered partitions, got $scanned")
-      ExportOps.deleteRecursively(out)
     }
   }
 
@@ -70,8 +68,7 @@ class PlanAuditR12Spec extends SparkSpec {
   }
 
   test("TxTable.read after a merge serves exactly the manifest's file set") {
-    val out = ExportOps.scratchDir("graft_txplan2", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_txplan2", "spec") { out =>
       val snapDir = s"$out/snap"
       spark.read.parquet(s"$d/customer.parquet")
         .select(col("c_custkey").as("k"), col("c_name").as("name"),
@@ -93,7 +90,6 @@ class PlanAuditR12Spec extends SparkSpec {
       assert(opened === liveAbs,
         s"read must open exactly the live manifest files:\n" +
           s"extra=${opened -- liveAbs}\nmissing=${liveAbs -- opened}")
-      ExportOps.deleteRecursively(out)
     }
   }
 }

@@ -43,8 +43,7 @@ class PlanAuditR13Spec extends SparkSpec {
     }.flatten
 
   private def withCube[A](body: String => A): A = {
-    val out = ExportOps.scratchDir("graft_mvplan", "spec")
-    cleaned(out) {
+    ExportOps.withScratch("graft_mvplan", "spec") { out =>
       val mvPath = s"$out/mv"
       lineitem.groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("n"),
@@ -319,7 +318,7 @@ class PlanAuditR13Spec extends SparkSpec {
     assert(plan.contains("AQEShuffleRead") && plan.contains("coalesced"),
       s"tiny post-shuffle data must coalesce at runtime:\n$plan")
     ExportOps.withConf(spark,
-      "spark.sql.adaptive.coalescePartitions.enabled", "false") {
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
       val (_, control) = ops.Relational.aqeCoalesceRun(spark, d)
       assert(!control.contains("coalesced"),
         s"the disabled control must keep static partitions:\n$control")

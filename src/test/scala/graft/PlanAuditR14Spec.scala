@@ -90,8 +90,7 @@ class PlanAuditR14Spec extends SparkSpec {
   }
 
   test("e26: the ORC scan carries the pushed predicate and the pruned schema") {
-    val out = ExportOps.scratchDir("graft_orc_spec", d)
-    cleaned(out) {
+    ExportOps.withScratch("graft_orc_spec", d) { out =>
       val ev = Tables(spark, d, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           unix_micros(col("ts")).as("ts_us"), col("value"))

@@ -70,8 +70,7 @@ class PlanAuditR9Spec extends SparkSpec {
   test("e15: the affected-day discovery scan prunes to (user_id, day)") {
     // the erasure discovery is the only corpus read the maintenance does
     // beyond the rewrites; it must push the target filter and prune
-    val out = ops.ExportOps.scratchDir("graft_e15_plan", d)
-    ops.ExportOps.withScratchCleanup(out) {
+    ops.ExportOps.withScratch("graft_e15_plan", d) { out =>
       import org.apache.spark.sql.functions._
       val root = s"$out/table"
       Tables(spark, d, "events")
@@ -85,7 +84,6 @@ class PlanAuditR9Spec extends SparkSpec {
         org.apache.spark.sql.execution.FormattedMode)
       assert(p.contains("ReadSchema: struct<user_id:bigint>"),
         s"discovery must read only user_id (day is partition metadata):\n$p")
-      ops.ExportOps.deleteRecursively(out)
     }
   }
 }

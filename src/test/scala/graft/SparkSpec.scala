@@ -6,11 +6,6 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared session-per-suite base (spark_guide.md: one lazy session). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
-
-  /** Runs `body`, then deletes the scratch dir whether it passed or threw
-    * (`ExportOps.withScratchCleanup` deletes only on a throw). */
-  def cleaned[A](scratch: java.io.File)(body: => A): A =
-    try body finally ops.ExportOps.deleteRecursively(scratch)
 }
 
 object SparkSpec {

@@ -9,8 +9,7 @@ class VariantSpec extends SparkSpec {
 
   test("VARIANT columns round-trip through parquet with typed extraction") {
     import spark.implicits._
-    val out = ops.ExportOps.scratchDir("graft_variant", "spec")
-    ops.ExportOps.withScratchCleanup(out) {
+    ops.ExportOps.withScratch("graft_variant", "spec") { out =>
       val src = Seq(
         (1L, """{"k": 7, "tags": ["a", "b"], "meta": {"d": 2.5}}"""),
         (2L, """{"k": 9}"""),
@@ -35,7 +34,6 @@ class VariantSpec extends SparkSpec {
         // that lets one extraction expression serve heterogeneous rows
         (2L, Some(9L), None, None),
         (3L, None, None, None)))
-      ops.ExportOps.deleteRecursively(out)
     }
   }
 }

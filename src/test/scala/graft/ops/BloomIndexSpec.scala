@@ -13,8 +13,7 @@ class BloomIndexSpec extends SparkSpec {
 
   private def withIndex[A](body: (String, org.apache.spark.sql.DataFrame)
       => A): A = {
-    val out = ExportOps.scratchDir("graft_bloomspec", "spec")
-    cleaned(out) {
+    ExportOps.withScratch("graft_bloomspec", "spec") { out =>
       val dataDir = s"$out/data"
       graft.Tables(spark, d, "documents")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))

@@ -28,8 +28,7 @@ class CdcPartitionSpec extends SparkSpec {
   }
 
   test("q68: merge prunes the snapshot scan to the changed partitions") {
-    val out = ExportOps.scratchDir("graft_cdcpin", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_cdcpin", "spec") { out =>
       val snapDir = s"$out/snap"
       spark.read.parquet(s"$d/customer.parquet")
         .select(col("c_custkey").as("k"), col("c_name").as("name"),
@@ -50,13 +49,11 @@ class CdcPartitionSpec extends SparkSpec {
         .flatMap("p=(\\d+)".r.findFirstMatchIn(_)).map(_.group(1).toInt).toSet
       assert(scannedDirs === Set(3, 7),
         s"scan must touch only the changed partitions, read $scannedDirs")
-      ExportOps.deleteRecursively(out)
     }
   }
 
   test("q68: untouched partitions survive the swap byte-identical; merge matches the full-shuffle kernel") {
-    val out = ExportOps.scratchDir("graft_cdcbyt", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_cdcbyt", "spec") { out =>
       val snapDir = s"$out/snap"
       val snap0 = spark.read.parquet(s"$d/customer.parquet")
         .select(col("c_custkey").as("k"), col("c_name").as("name"),
@@ -89,7 +86,6 @@ class CdcPartitionSpec extends SparkSpec {
           Seq("name", "bal", "p"))
         .collect().map(rowKey).toSet
       assert(landed === full)
-      ExportOps.deleteRecursively(out)
     }
   }
 
@@ -129,8 +125,7 @@ class CdcPartitionSpec extends SparkSpec {
   }
 
   test("q68: the manifest read of the touched side prunes with PartitionFilters") {
-    val out = ExportOps.scratchDir("graft_cdcpin2", "spec")
-    cleaned(out) {
+    ExportOps.withScratch("graft_cdcpin2", "spec") { out =>
       val snapDir = s"$out/snap"
       spark.read.parquet(s"$d/customer.parquet")
         .select(col("c_custkey").as("k"), col("c_nationkey").as("p"))
@@ -181,13 +176,13 @@ class CdcPartitionSpec extends SparkSpec {
         |  SELECT c.node, p.parent FROM anc c
         |  JOIN deep_chain p ON c.ancestor = p.node)
         |SELECT count(1) AS n FROM anc""".stripMargin
-    ExportOps.withConf(spark, "spark.sql.cteRecursionLevelLimit", "4") {
+    ExportOps.withConf(spark, "spark.sql.cteRecursionLevelLimit" -> "4") {
       val e = intercept[Exception](spark.sql(sql).collect())
       assert(e.getMessage.toLowerCase.contains("recursion"),
         s"expected a recursion-limit error, got: ${e.getMessage}")
     }
     // same query, sufficient limit: the full closure (9+8+...+1 = 45 pairs)
-    ExportOps.withConf(spark, "spark.sql.cteRecursionLevelLimit", "20") {
+    ExportOps.withConf(spark, "spark.sql.cteRecursionLevelLimit" -> "20") {
       assert(spark.sql(sql).head().getLong(0) === 45L)
     }
   }
@@ -196,8 +191,7 @@ class CdcPartitionSpec extends SparkSpec {
     // the property the streaming gate's at-least-once foreachBatch leans
     // on: replaying an already-applied batch cannot change the snapshot
     // (change rows carry absolute values and beat the landed seq-0 rows)
-    val out = ExportOps.scratchDir("graft_cdcidem", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_cdcidem", "spec") { out =>
       val snapDir = s"$out/snap"
       spark.read.parquet(s"$d/customer.parquet")
         .select(col("c_custkey").as("k"), col("c_name").as("name"),
@@ -211,7 +205,6 @@ class CdcPartitionSpec extends SparkSpec {
       val once = snapshot()
       Relational.mergePartitioned(spark, snapDir, changes, Seq("name", "bal"))
       assert(snapshot() === once, "replaying the same batch must be a no-op")
-      ExportOps.deleteRecursively(out)
     }
   }
 }

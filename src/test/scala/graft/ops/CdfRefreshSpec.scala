@@ -18,8 +18,7 @@ class CdfRefreshSpec extends SparkSpec {
       .select(col("doc_id"), col("sig"), col("source"), col("n_chars"))
 
   test("c11: append-only CDF, day-1 byte-identity, idempotent re-run") {
-    val out = ExportOps.scratchDir("graft_refresh_spec", d)
-    cleaned(out) {
+    ExportOps.withScratch("graft_refresh_spec", d) { out =>
       val dir = s"$out/corpus"
       val docsT = graft.Tables(spark, d, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"),

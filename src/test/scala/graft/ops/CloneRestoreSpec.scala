@@ -20,8 +20,7 @@ class CloneRestoreSpec extends SparkSpec {
     }.toMap
 
   test("e27: the clone is manifest-only; the source is never perturbed") {
-    val out = ExportOps.scratchDir("graft_clone_spec", d)
-    cleaned(out) {
+    ExportOps.withScratch("graft_clone_spec", d) { out =>
       val src = s"$out/src"; val cln = s"$out/clone"
       graft.Tables(spark, d, "customer")
         .select(col("c_custkey").as("k"), col("c_acctbal").as("bal"),
@@ -55,8 +54,7 @@ class CloneRestoreSpec extends SparkSpec {
   }
 
   test("e28: restore serves the old version as a NEW commit, history intact") {
-    val out = ExportOps.scratchDir("graft_restore_spec", d)
-    cleaned(out) {
+    ExportOps.withScratch("graft_restore_spec", d) { out =>
       val snap = s"$out/snap"
       graft.Tables(spark, d, "customer")
         .select(col("c_custkey").as("k"), col("c_name").as("name"),

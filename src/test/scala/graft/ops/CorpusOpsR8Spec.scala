@@ -20,8 +20,7 @@ class CorpusOpsR8Spec extends SparkSpec {
     // the verdict's pin: the serve phase must read the parquet index, not
     // recompute corpus signatures — so doctoring the artifact (removing a
     // member) must flip the arrival's status, with sources untouched
-    val out = ExportOps.scratchDir("graft_idxpin", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_idxpin", "spec") { out =>
       val a = "the quick brown fox jumps over the lazy dog near the river bank"
       val b = "completely different words about distributed query engines and shuffles"
       val corpus = Seq((1L, a), (2L, b)).toDF("doc_id", "text")
@@ -36,13 +35,11 @@ class CorpusOpsR8Spec extends SparkSpec {
       writeIndex(corpus.filter($"doc_id" === 2L), out.getAbsolutePath)
       assert(status() === Map(100L -> "kept"),
         "screen verdict must track the artifact, not the source corpus")
-      ExportOps.deleteRecursively(out)
     }
   }
 
   test("appendToIndex makes keepers visible to the next screen") {
-    val out = ExportOps.scratchDir("graft_idxapp", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_idxapp", "spec") { out =>
       val a = "the quick brown fox jumps over the lazy dog near the river bank"
       val c = "novel arrival text with entirely fresh vocabulary tokens here today"
       writeIndex(Seq((1L, a)).toDF("doc_id", "text"), out.getAbsolutePath)
@@ -61,7 +58,6 @@ class CorpusOpsR8Spec extends SparkSpec {
         DedupOps.shingleHashFrame(b2), out.getAbsolutePath)
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
       assert(s2 === Map(20L -> "exact_dup"))
-      ExportOps.deleteRecursively(out)
     }
   }
 
@@ -105,8 +101,7 @@ class CorpusOpsR8Spec extends SparkSpec {
 
   test("e06: compaction collapses the fragmented index and serves the identical screen") {
     val d = "/root/testdata/sf0.001"
-    val out = ExportOps.scratchDir("graft_cmppin", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_cmppin", "spec") { out =>
       def parts(p: String) = new java.io.File(p).listFiles()
         .count(f => f.getName.startsWith("part-"))
       DedupOps.buildCorpusIndex(spark, d, s"$out/frag", fragments = 64)
@@ -127,7 +122,6 @@ class CorpusOpsR8Spec extends SparkSpec {
         spark, docsDf, hv, idx)
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
       assert(screen(s"$out/idx") === screen(s"$out/frag"))
-      ExportOps.deleteRecursively(out)
     }
   }
 

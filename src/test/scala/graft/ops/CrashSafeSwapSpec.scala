@@ -30,8 +30,7 @@ class CrashSafeSwapSpec extends SparkSpec {
       .collect().map(_.mkString("|")).toSet
 
   test("merge: crash between stage-complete and manifest commit serves the OLD version; retry lands the new") {
-    val out = ExportOps.scratchDir("graft_crash_merge", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_crash_merge", "spec") { out =>
       val snapDir = s"$out/snap"
       snapshot0.write.partitionBy("p").parquet(snapDir)
       // bootstrap the manifest (v1) before planting the crash, so the
@@ -64,13 +63,11 @@ class CrashSafeSwapSpec extends SparkSpec {
       assert(TxTable.listDataFiles(spark, snapDir).toSet ===
         TxTable.liveFiles(spark, snapDir).toSet,
         "vacuum must sweep the crashed attempt's orphans")
-      ExportOps.deleteRecursively(out)
     }
   }
 
   test("merge: crash between manifest commit and vacuum serves the NEW version; vacuum is re-runnable") {
-    val out = ExportOps.scratchDir("graft_crash_postcommit", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_crash_postcommit", "spec") { out =>
       val snapDir = s"$out/snap"
       snapshot0.write.partitionBy("p").parquet(snapDir)
       TxTable.bootstrapIfNeeded(spark, snapDir)
@@ -93,14 +90,12 @@ class CrashSafeSwapSpec extends SparkSpec {
       assert(TxTable.listDataFiles(spark, snapDir).toSet ===
         TxTable.liveFiles(spark, snapDir).toSet)
       assert(contents(TxTable.read(spark, snapDir)) === want)
-      ExportOps.deleteRecursively(out)
     }
   }
 
   test("retention/erasure: crash before commit serves the FULL pre-maintenance table; retry completes") {
     import spark.implicits._
-    val out = ExportOps.scratchDir("graft_crash_retention", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_crash_retention", "spec") { out =>
       val root = s"$out/table"
       Seq(
         (1L, 10L, "2024-01-01"), (2L, 11L, "2024-01-02"),
@@ -125,13 +120,11 @@ class CrashSafeSwapSpec extends SparkSpec {
         .collect().sorted.toSeq === Seq(2L, 3L, 5L))
       assert(!new java.io.File(root, "day=2024-01-01").exists(),
         "vacuum must sweep the retention-expired partition directory")
-      ExportOps.deleteRecursively(out)
     }
   }
 
   test("rag append: crash before the postings commit leaves the index serving exactly as built") {
-    val out = ExportOps.scratchDir("graft_crash_rag", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_crash_rag", "spec") { out =>
       val root = out.getAbsolutePath
       val documents = spark.read.parquet(s"$d/documents.parquet")
       TextOps.buildRagIndex(spark,
@@ -152,14 +145,12 @@ class CrashSafeSwapSpec extends SparkSpec {
         .collect().map(_.mkString("|")).toSet
       assert(servedAfter === servedBefore,
         "aborted append must not change what the index serves")
-      ExportOps.deleteRecursively(out)
     }
   }
 
   test("serving bootstrap: a crashed batch-0 leaves NO manifest; redelivery completes it cleanly") {
     import spark.implicits._
-    val out = ExportOps.scratchDir("graft_crash_boot", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_crash_boot", "spec") { out =>
       val serving = s"$out/serving"
       val b0 = (0L until 20L).map(k => (k, 1L, k * 10L))
         .toDF("user_id", "n_events", "sum_off_ms")
@@ -188,14 +179,12 @@ class CrashSafeSwapSpec extends SparkSpec {
         .filter($"k" === 3L).select($"n_events", $"sum_off_ms")
         .head()
       assert((after.getLong(0), after.getLong(1)) === ((5L, 999L)))
-      ExportOps.deleteRecursively(out)
     }
   }
 
   test("commit race: one winner per version in-process; a foreign mid-window commit fails loudly") {
     import spark.implicits._
-    val out = ExportOps.scratchDir("graft_occ", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_occ", "spec") { out =>
       val root = s"$out/table"
       Seq((1L, "a")).toDF("k", "v").write.parquet(root)
       TxTable.bootstrapIfNeeded(spark, root)
@@ -243,13 +232,11 @@ class CrashSafeSwapSpec extends SparkSpec {
       assert(TxTable.filesOfVersion(spark, root, vNext) ===
         Seq("FOREIGN/file.parquet"),
         "the foreign winner's manifest must survive our failed commit")
-      ExportOps.deleteRecursively(out)
     }
   }
 
   test("concurrent reader racing merges sees old or new, never a mixture or a missing partition") {
-    val out = ExportOps.scratchDir("graft_race", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_race", "spec") { out =>
       val snapDir = s"$out/snap"
       // 8 partitions, 80 keys; each merge round INSERTS 10 fresh keys into
       // partitions {3, 7}, so every committed version has a distinct count
@@ -300,7 +287,6 @@ class CrashSafeSwapSpec extends SparkSpec {
       TxTable.vacuum(spark, snapDir)
       assert(TxTable.listDataFiles(spark, snapDir).toSet ===
         TxTable.liveFiles(spark, snapDir).toSet)
-      ExportOps.deleteRecursively(out)
     }
   }
 }

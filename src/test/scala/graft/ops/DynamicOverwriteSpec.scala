@@ -32,8 +32,7 @@ class DynamicOverwriteSpec extends SparkSpec {
       .map(_.getName.stripPrefix("p=").toInt).toSet
 
   test("e25: dynamic overwrite rewrites only the incoming partitions, byte-identically elsewhere") {
-    val out = ExportOps.scratchDir("graft_dynspec", "spec")
-    cleaned(out) {
+    ExportOps.withScratch("graft_dynspec", "spec") { out =>
       val snap = new java.io.File(out, "snap")
       customer.write.partitionBy("p").parquet(snap.getPath)
       val allParts = partitionsOf(snap)
@@ -45,7 +44,7 @@ class DynamicOverwriteSpec extends SparkSpec {
       val rewrite = customer.filter(col("p").isin(3, 7))
         .withColumn("bal", col("bal") + 100)
       ExportOps.withConf(spark,
-        "spark.sql.sources.partitionOverwriteMode", "dynamic") {
+        "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
         rewrite.write.mode("overwrite").partitionBy("p").parquet(snap.getPath)
       }
       assert(partitionsOf(snap) === allParts,
@@ -66,14 +65,13 @@ class DynamicOverwriteSpec extends SparkSpec {
   }
 
   test("e25: the static default clobbers — only the incoming partitions survive") {
-    val out = ExportOps.scratchDir("graft_dynspec2", "spec")
-    cleaned(out) {
+    ExportOps.withScratch("graft_dynspec2", "spec") { out =>
       val snap = new java.io.File(out, "snap")
       customer.write.partitionBy("p").parquet(snap.getPath)
       val rewrite = customer.filter(col("p").isin(3, 7))
         .withColumn("bal", col("bal") + 100)
       ExportOps.withConf(spark,
-        "spark.sql.sources.partitionOverwriteMode", "static") {
+        "spark.sql.sources.partitionOverwriteMode" -> "static") {
         rewrite.write.mode("overwrite").partitionBy("p").parquet(snap.getPath)
       }
       assert(partitionsOf(snap) === Set(3, 7),

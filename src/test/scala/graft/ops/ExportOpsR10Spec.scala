@@ -10,8 +10,7 @@ class ExportOpsR10Spec extends SparkSpec {
 
   test("e17: a failed audit never flips LATEST; the candidate stays quarantined") {
     import spark.implicits._
-    val out = ExportOps.scratchDir("graft_wap_spec", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_wap_spec", "spec") { out =>
       val root = out.getAbsolutePath
       val v1 = Seq(("en", 10L), ("fr", 7L)).toDF("lang", "n_docs")
       val violation = col("n_docs") <= 0
@@ -39,14 +38,12 @@ class ExportOpsR10Spec extends SparkSpec {
       assert(ExportOps.readPublished(spark, root)
         .as[(String, Long)].collect().toSet ===
         Set(("en", 12L), ("fr", 3L)))
-      ExportOps.deleteRecursively(out)
     }
   }
 
   test("e18: manifest diff hands the consumer ONLY the newly-added files") {
     import spark.implicits._
-    val out = ExportOps.scratchDir("graft_incr_spec", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_incr_spec", "spec") { out =>
       val root = out.getAbsolutePath
       Seq((1L, "a"), (2L, "b")).toDF("k", "v")
         .write.mode("append").parquet(s"$root/data")
@@ -67,14 +64,12 @@ class ExportOpsR10Spec extends SparkSpec {
       // consumer never re-reads (and never misses) anything
       assert(spark.read.parquet(fresh: _*).as[(Long, String)]
         .collect().toSet === Set((3L, "c")))
-      ExportOps.deleteRecursively(out)
     }
   }
 
   test("e20: vacuum removes only unreferenced files and is idempotent") {
     import spark.implicits._
-    val out = ExportOps.scratchDir("graft_vac_spec", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_vac_spec", "spec") { out =>
       val root = out.getAbsolutePath
       Seq((1L, "a"), (2L, "b")).toDF("k", "v")
         .write.mode("append").parquet(s"$root/data")
@@ -106,14 +101,12 @@ class ExportOpsR10Spec extends SparkSpec {
       assert(ExportOps.vacuum(spark, root, Seq(2L)).isEmpty)
       assert(spark.read.parquet(s"$root/data").as[(Long, String)]
         .collect().toSet === Set((1L, "a"), (2L, "b"), (3L, "c")))
-      ExportOps.deleteRecursively(out)
     }
   }
 
   test("e20: vacuum tolerates non-numeric v= manifest debris") {
     import spark.implicits._
-    val out = ExportOps.scratchDir("graft_vac_tmp", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_vac_tmp", "spec") { out =>
       val root = out.getAbsolutePath
       Seq((1L, "a")).toDF("k", "v").write.mode("append").parquet(s"$root/data")
       ExportOps.commitSnapshot(spark, root, 1L)
@@ -129,7 +122,6 @@ class ExportOpsR10Spec extends SparkSpec {
       // the unparseable entry is neither fatal nor deleted
       assert(new java.io.File(root, "manifest/v=1.tmp/marker").exists())
       assert(new java.io.File(root, "manifest/v=1").exists())
-      ExportOps.deleteRecursively(out)
     }
   }
 }

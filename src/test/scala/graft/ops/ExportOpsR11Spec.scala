@@ -24,8 +24,7 @@ class ExportOpsR11Spec extends SparkSpec {
   }
 
   test("e21: migration never touches the source; the new layout prunes two levels") {
-    val out = ExportOps.scratchDir("graft_relayout_spec", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_relayout_spec", "spec") { out =>
       val ev = graft.Tables(spark, d, "events").select(
         col("event_id"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"),
@@ -70,7 +69,6 @@ class ExportOpsR11Spec extends SparkSpec {
       intercept[IllegalArgumentException] {
         ExportOps.migrateLayout(spark, s"$out/v1", s"$out/v2", Seq("day"))
       }
-      ExportOps.deleteRecursively(out)
     }
   }
 }

@@ -306,4 +306,45 @@ class ExportOpsSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(new java.io.File(root, "v=1").exists(), "old versions stay for rollback")
   }
 
+
+  test("withScratch: the dir is gone after the body returns") {
+    val dir = ExportOps.withScratch("graft_scope_spec", "spec") { dir =>
+      assert(dir.mkdirs())
+      java.nio.file.Files.write(new java.io.File(dir, "f").toPath, Array[Byte](1))
+      dir
+    }
+    assert(!dir.exists(), s"$dir must be deleted when the body returns")
+  }
+
+  test("withScratch: the dir is gone after the body throws, and the exception propagates") {
+    var dir: java.io.File = null
+    val boom = new IllegalStateException("boom")
+    val e = intercept[IllegalStateException] {
+      ExportOps.withScratch("graft_scope_spec", "spec") { d =>
+        dir = d
+        spark.range(5).write.parquet(s"$d/data")
+        throw boom
+      }
+    }
+    assert(e eq boom, "the body's own exception must propagate")
+    assert(!dir.exists(), s"$dir must be deleted when the body throws")
+  }
+
+  test("withScratch: a localized result still counts after the dir is gone") {
+    val (dir, local) = ExportOps.withScratch("graft_scope_spec", "spec") { d =>
+      spark.range(7).write.parquet(s"$d/data")
+      (d, ExportOps.localize(graft.Tables.readParquet(spark, s"$d/data"), "id"))
+    }
+    assert(!dir.exists())
+    assert(local.count() === 7L)
+    assert(local.collect().map(_.getLong(0)).toSeq === (0L until 7L))
+  }
+
+  test("withScratch: a lazy frame over the dir fails on its action after the scope") {
+    val lazyFrame = ExportOps.withScratch("graft_scope_spec", "spec") { d =>
+      spark.range(7).write.parquet(s"$d/data")
+      graft.Tables.readParquet(spark, s"$d/data")
+    }
+    intercept[Exception](lazyFrame.collect())
+  }
 }

@@ -40,14 +40,22 @@ class R10OpsSpec extends SparkSpec {
     assert(run() === metrics)
   }
 
-  test("q93: a finished run leaves no graft_observe scratch behind") {
-    val base = ExportOps.scratchDir("graft_observe", sf).getParentFile
-    val mine = s"_${ProcessHandle.current().pid()}_"
-    def observeDirs() = Option(base.list()).toSeq.flatten
-      .filter(n => n.startsWith("graft_observe_") && n.contains(mine)).toSet
-    val before = observeDirs()
-    SparkEntry.queries("q93_observed_metrics")(spark, sf).collect()
-    assert(observeDirs() -- before === Set.empty[String])
+  // one gate per former scratch lifecycle: a hand delete after the write
+  // (q93), a gate scope (e01), a createTempDirectory scope (g10) and a
+  // StreamGate (q65)
+  Seq("q93_observed_metrics" -> "graft_observe",
+      "e01_training_export" -> "graft_export",
+      "g10_stream_two_runs" -> "graft_g10",
+      "q65_stream_dedup" -> "graft_sdd").foreach { case (gate, prefix) =>
+    test(s"${gate.take(3)}: a finished run leaves no $prefix scratch behind") {
+      val base = ExportOps.withScratch(prefix, sf)(_.getParentFile)
+      val mine = s"_${ProcessHandle.current().pid()}_"
+      def scratchDirs() = Option(base.list()).toSeq.flatten
+        .filter(n => n.startsWith(prefix + "_") && n.contains(mine)).toSet
+      val before = scratchDirs()
+      SparkEntry.queries(gate)(spark, sf).collect()
+      assert(scratchDirs() -- before === Set.empty[String])
+    }
   }
 
   test("q94: map-surface stats agree with the relational replay") {

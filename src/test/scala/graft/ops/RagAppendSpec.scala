@@ -28,8 +28,7 @@ class RagAppendSpec extends SparkSpec {
   }
 
   test("t30: appended index serves identically to a rebuild; old files untouched") {
-    val out = ExportOps.scratchDir("graft_ragapp_spec", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_ragapp_spec", "spec") { out =>
       val rootA = s"${out.getAbsolutePath}/appended"
       val rootB = s"${out.getAbsolutePath}/rebuilt"
       TextOps.buildRagIndex(spark,
@@ -54,14 +53,12 @@ class RagAppendSpec extends SparkSpec {
         .collect().map(_.toSeq.map(String.valueOf(_))).toSet
       assert(servedA === servedB,
         "build+append must serve exactly what a from-scratch rebuild serves")
-      ExportOps.deleteRecursively(out)
     }
   }
 
   test("t30: new cells appear without rebuild; doctored probed cell changes the serve") {
     import spark.implicits._
-    val out = ExportOps.scratchDir("graft_ragapp_new", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_ragapp_new", "spec") { out =>
       val root = out.getAbsolutePath
       // seed from a sliver of the corpus so some cells start absent
       TextOps.buildRagIndex(spark,
@@ -110,13 +107,11 @@ class RagAppendSpec extends SparkSpec {
             "doctoring the probed cell did not change the serve — the " +
               "result is not coming from the index artifact")
       }
-      ExportOps.deleteRecursively(out)
     }
   }
 
   test("a pre-protocol index registers on first touch for serve AND append") {
-    val out = ExportOps.scratchDir("graft_ragapp_preproto", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_ragapp_preproto", "spec") { out =>
       val root = out.getAbsolutePath
       TextOps.buildRagIndex(spark,
         TextOps.ragChunkEmbeddings(documents.filter(col("doc_id") % 2 === 0)),
@@ -140,7 +135,6 @@ class RagAppendSpec extends SparkSpec {
         TextOps.ragChunkEmbeddings(documents.filter(col("doc_id") % 2 =!= 0)),
         root)
       assert(TextOps.ragServeFromIndex(spark, root, qemb, 6).count() > 0)
-      ExportOps.deleteRecursively(out)
     }
   }
 }

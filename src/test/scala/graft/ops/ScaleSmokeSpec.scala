@@ -31,11 +31,17 @@ class ScaleSmokeSpec extends SparkSpec {
     * amplified corpus has X distinct copies of each row's content under
     * distinct identities — the shape that grows every dedup/merge
     * family's real work by X. */
+  @volatile private var scratch: java.io.File = _
+  override def run(testName: Option[String],
+                   args: org.scalatest.Args): org.scalatest.Status =
+    ExportOps.withScratch("graft_scale_amp", "spec") { d =>
+      scratch = d
+      super.run(testName, args)
+    }
+
   private lazy val ampDir: String = {
-    val out = ExportOps.scratchDir("graft_scale_amp", "spec")
+    val out = scratch
     out.mkdirs()
-    Runtime.getRuntime.addShutdownHook(
-      new Thread(() => ExportOps.deleteRecursively(out)))
     val rep = explode(expr(s"sequence(0L, ${X - 1}L)")).as("rep")
     spark.read.parquet(s"$base/documents.parquet")
       .select(col("*"), rep)
@@ -107,10 +113,8 @@ class ScaleSmokeSpec extends SparkSpec {
     // ramp regression (fixed modulus) would send density — and the
     // per-block quadratic verify — up ×4, putting the ratio near 16×.
     val amp5 = {
-      val out = ExportOps.scratchDir("graft_scale_d26", "spec")
+      val out = new java.io.File(scratch, "x5")
       out.mkdirs()
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => ExportOps.deleteRecursively(out)))
       spark.read.parquet(s"$base/documents.parquet")
         .select(col("*"), explode(expr("sequence(0L, 4L)")).as("rep"))
         .withColumn("doc_id", col("doc_id") + col("rep") * 1000000L)
@@ -130,8 +134,7 @@ class ScaleSmokeSpec extends SparkSpec {
 
   test("q66 vs q68 at x20: partition-grain merge I/O scales with touched partitions") {
     assume(enabled, "set GRAFT_SCALE_SMOKE=1 to run the amplified-scale smoke")
-    val out = ExportOps.scratchDir("graft_scale_merge", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_scale_merge", "spec") { out =>
       val snap = spark.read.parquet(s"$ampDir/customer.parquet")
         .select(col("c_custkey").as("k"), col("c_name").as("name"),
           col("c_acctbal").as("bal"), col("c_nationkey").as("p"))
@@ -175,7 +178,6 @@ class ScaleSmokeSpec extends SparkSpec {
       assert(mf.length() < 20000,
         s"manifest grew to ${mf.length()} bytes — it must stay file-count " +
           "metadata, not data-sized")
-      ExportOps.deleteRecursively(out)
     }
   }
 
@@ -222,8 +224,7 @@ class ScaleSmokeSpec extends SparkSpec {
     // materialized to scratch (8 files): a lazy amplification view would
     // re-run its repartition exchange inside BOTH measurements and swamp
     // the aggregate shuffles under test
-    val evOut = ExportOps.scratchDir("graft_scale_bitmap", "spec")
-    try {
+    ExportOps.withScratch("graft_scale_bitmap", "spec") { evOut =>
       spark.read.parquet(s"$base/events.parquet")
         .select(col("*"), explode(expr(s"sequence(0L, ${X - 1}L)")).as("rep"))
         .withColumn("event_id", col("event_id") + col("rep") * 100000000L)
@@ -260,7 +261,7 @@ class ScaleSmokeSpec extends SparkSpec {
       s"bitmap route shuffled ${mBitmap.shuffleRecords} records vs " +
         s"count-distinct's ${mDistinct.shuffleRecords} — the bucket " +
         s"economy collapsed at x$X")
-    } finally ExportOps.deleteRecursively(evOut)
+    }
   }
 
   test("t27 vs t29 at x20: the sketch cutoff still plans no corpus rank") {

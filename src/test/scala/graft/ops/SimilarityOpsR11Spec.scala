@@ -12,8 +12,7 @@ class SimilarityOpsR11Spec extends SparkSpec {
   private val d = "/root/testdata/sf0.001"
 
   test("v19: artifact serve equals in-memory v14; doctored codes change the serve") {
-    val out = ExportOps.scratchDir("graft_pqidx_spec", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_pqidx_spec", "spec") { out =>
       val root = out.getAbsolutePath
       val vecs = DedupOps.cachedShared(
         spark.read.parquet(s"$d/embeddings.parquet").select(col("vec_id"),
@@ -53,7 +52,6 @@ class SimilarityOpsR11Spec extends SparkSpec {
       assert(doctored !== fromArtifact,
         s"re-coding vector $victim did not change the serve — the result " +
           "is not coming from the codes artifact")
-      ExportOps.deleteRecursively(out)
     }
   }
 

@@ -22,10 +22,9 @@ class StreamGatesR10Spec extends SparkSpec {
   private def runTimerStream(batches: Seq[Seq[(Long, Long)]],
                              gapMs: Long): Seq[(Long, Long, Long, Long)] = {
     import spark.implicits._
-    val out = ExportOps.scratchDir("graft_timer_spec", "spec")
-    ExportOps.withConf(spark, "spark.sql.streaming.stateStore.providerClass",
+    ExportOps.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_timer_spec", "spec") { out =>
       new java.io.File(out, "in").mkdirs()
       val maxMs = batches.flatten.map(_._2).max
       val all = batches :+ Seq((-1L, maxMs + 7200000L)) // sentinel batch
@@ -60,7 +59,6 @@ class StreamGatesR10Spec extends SparkSpec {
         .filter(col("user_id") >= 0)
         .as[(Long, Long, Long, Long)].collect().toSeq
         .map { case (u, st, en, n) => (u, st - B, en - B, n) }
-      ExportOps.deleteRecursively(out)
       rows
     }
     }
@@ -107,10 +105,9 @@ class StreamGatesR10Spec extends SparkSpec {
     // one — handleInputRows never emits, so that session must be absent
     val gap = 30000L
     import spark.implicits._
-    val out = ExportOps.scratchDir("graft_timer_nosent", "spec")
-    ExportOps.withConf(spark, "spark.sql.streaming.stateStore.providerClass",
+    ExportOps.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_timer_nosent", "spec") { out =>
       new java.io.File(out, "in").mkdirs()
       Seq((2L, 0L), (2L, 35000L), (2L, 200000L)).toDF("user_id", "ms")
         .select(col("user_id"), timestamp_millis(col("ms") + B).as("tsm"))
@@ -138,7 +135,6 @@ class StreamGatesR10Spec extends SparkSpec {
       val got = spark.read.parquet(s"$out/data")
         .as[(Long, Long, Long, Long)].collect().toSet
         .map { t: (Long, Long, Long, Long) => (t._1, t._2 - B, t._3 - B, t._4) }
-      ExportOps.deleteRecursively(out)
       assert(got === Set((2L, 0L, 30000L, 1L), (2L, 35000L, 65000L, 1L)),
         s"only sessions whose timers the final watermark passed may emit: $got")
     }

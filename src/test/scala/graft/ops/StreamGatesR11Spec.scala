@@ -63,12 +63,11 @@ class StreamGatesR11Spec extends SparkSpec {
 
   test("q102: statestore batchId time-travels to the state AS OF an earlier commit") {
     val d = "/root/testdata/sf0.001"
-    val out = ExportOps.scratchDir("graft_statesrc_spec", "spec")
-    ExportOps.withScratchCleanup(out) {
-      SessionGates.stateSourceHarness(spark, d, out)
+    graft.streaming.StreamGate(spark, "graft_statesrc_spec", "spec") { g =>
+      SessionGates.stateSourceHarness(spark, d, g)
       def stateAt(opts: Map[String, String]): Map[Long, (Long, Long)] = {
         val r = spark.read.format("statestore")
-          .option("path", s"$out/ckpt")
+          .option("path", g.ckpt)
         opts.foreach { case (k, v) => r.option(k, v) }
         r.load()
           .select(col("key.user_id"), col("value.count"), col("value.sum"))
@@ -96,7 +95,6 @@ class StreamGatesR11Spec extends SparkSpec {
       b0.foreach { case (u, (n0, _)) =>
         assert(fin(u)._1 >= n0, s"user $u count shrank across commits")
       }
-      ExportOps.deleteRecursively(out)
     }
   }
 

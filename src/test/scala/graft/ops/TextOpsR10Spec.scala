@@ -41,8 +41,7 @@ class TextOpsR10Spec extends SparkSpec {
 
   test("t25: the serve scan prunes to the probed cell directories") {
     import spark.implicits._
-    val out = ExportOps.scratchDir("graft_ragidx_spec", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_ragidx_spec", "spec") { out =>
       val root = out.getAbsolutePath
       TextOps.buildRagIndex(spark,
         TextOps.ragChunkEmbeddings(spark.read.parquet(s"$d/documents.parquet")),
@@ -81,7 +80,6 @@ class TextOpsR10Spec extends SparkSpec {
       // bit-stable — the artifact, not the builder session, is the truth
       val again = TextOps.ragServeShortlist(spark, root, q0, probes)
       assert(served.collect().toSeq === again.collect().toSeq)
-      ExportOps.deleteRecursively(out)
     }
   }
 }

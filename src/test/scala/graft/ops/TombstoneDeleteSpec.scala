@@ -27,8 +27,7 @@ class TombstoneDeleteSpec extends SparkSpec {
   private def emb = Tables(spark, d, "embeddings")
 
   test("v22: tombstoned serve == rebuilt-without-deleted serve, and no deleted id surfaces") {
-    val out = ExportOps.scratchDir("graft_tsspec", "spec")
-    cleaned(out) {
+    ExportOps.withScratch("graft_tsspec", "spec") { out =>
       val root = out.getAbsolutePath
       SimilarityOps.signCodes(emb).write.parquet(s"$root/codes")
       val codesBefore = fileState(new java.io.File(out, "codes"))
@@ -59,8 +58,7 @@ class TombstoneDeleteSpec extends SparkSpec {
   }
 
   test("v22: compaction folds tombstones in — serve unchanged, set empty, codes shrunk") {
-    val out = ExportOps.scratchDir("graft_tsspec2", "spec")
-    cleaned(out) {
+    ExportOps.withScratch("graft_tsspec2", "spec") { out =>
       val root = out.getAbsolutePath
       SimilarityOps.signCodes(emb).write.parquet(s"$root/codes")
       SimilarityOps.v22Tombstones(spark, d).write.parquet(s"$root/tombstones")

@@ -18,8 +18,7 @@ class TxTableSpec extends SparkSpec {
   /** A nation-partitioned customer snapshot at v1 and the q68 merge at
     * v2, vacuum deferred: e22's two-version table. */
   private def withMergedSnapshot[A](body: String => A): A = {
-    val out = ExportOps.scratchDir("graft_txunit_tt", "spec")
-    cleaned(out) {
+    ExportOps.withScratch("graft_txunit_tt", "spec") { out =>
       val root = s"$out/snap"
       spark.read.parquet(s"$d/customer.parquet")
         .select(col("c_custkey").as("k"), col("c_name").as("name"),
@@ -113,8 +112,7 @@ class TxTableSpec extends SparkSpec {
       assert(never.getMessage.contains("vacuumed or never committed"))
     }
     import spark.implicits._
-    val out = ExportOps.scratchDir("graft_txunit7", "spec")
-    cleaned(out) {
+    ExportOps.withScratch("graft_txunit7", "spec") { out =>
       val src = s"$out/src"
       Seq((1L, 0), (2L, 1)).toDF("k", "p").write.partitionBy("p").parquet(src)
       val cln = s"$out/cln"
@@ -135,8 +133,7 @@ class TxTableSpec extends SparkSpec {
 
   test("vacuum trims the manifest log to keepManifests, never the latest") {
     import spark.implicits._
-    val out = ExportOps.scratchDir("graft_txunit", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_txunit", "spec") { out =>
       val root = s"$out/t"
       Seq((1L, "a")).toDF("k", "v").write.parquet(root)
       TxTable.bootstrapIfNeeded(spark, root)
@@ -155,14 +152,12 @@ class TxTableSpec extends SparkSpec {
         TxTable.readVersion(spark, root, 2L)
       }
       assert(ex.getMessage.contains("vacuumed or never committed"))
-      ExportOps.deleteRecursively(out)
     }
   }
 
   test("listDataFiles skips hidden names at every level; vacuum leaves them alone") {
     import spark.implicits._
-    val out = ExportOps.scratchDir("graft_txunit2", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_txunit2", "spec") { out =>
       val root = s"$out/t"
       Seq((1L, 0), (2L, 1)).toDF("k", "p")
         .repartition(col("p")).write.partitionBy("p").parquet(root)
@@ -186,28 +181,24 @@ class TxTableSpec extends SparkSpec {
       assert(new java.io.File(hiddenDir, "part-x.parquet").exists())
       assert(new java.io.File(root, "_marker").exists())
       assert(TxTable.read(spark, root).count() === 2L)
-      ExportOps.deleteRecursively(out)
     }
   }
 
   test("read/liveFiles on an unregistered table fail loudly, not empty") {
     import spark.implicits._
-    val out = ExportOps.scratchDir("graft_txunit3", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_txunit3", "spec") { out =>
       val root = s"$out/t"
       Seq((1L, "a")).toDF("k", "v").write.parquet(root)
       val ex = intercept[IllegalArgumentException] {
         TxTable.read(spark, root)
       }
       assert(ex.getMessage.contains("bootstrap first"))
-      ExportOps.deleteRecursively(out)
     }
   }
 
   test("an empty-but-legal manifest serves an empty frame via the schema sidecar") {
     import spark.implicits._
-    val out = ExportOps.scratchDir("graft_txunit4", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_txunit4", "spec") { out =>
       val root = s"$out/t"
       // stageAndCommit records the schema sidecar; then a maintenance
       // step (e.g. a retention erasure expiring every partition) commits
@@ -222,14 +213,12 @@ class TxTableSpec extends SparkSpec {
       // the zero-file VERSION also time-travels as empty
       assert(TxTable.readVersion(spark, root,
         TxTable.currentVersion(spark, root)).count() === 0L)
-      ExportOps.deleteRecursively(out)
     }
   }
 
   test("a zero-file manifest without a schema sidecar fails with the TxTable story") {
     import spark.implicits._
-    val out = ExportOps.scratchDir("graft_txunit5", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_txunit5", "spec") { out =>
       val root = s"$out/t"
       Seq((1L, "a")).toDF("k", "v").write.parquet(root)
       TxTable.bootstrapIfNeeded(spark, root) // no sidecar written this path
@@ -237,14 +226,12 @@ class TxTableSpec extends SparkSpec {
       val ex = intercept[IllegalStateException] { TxTable.read(spark, root) }
       assert(ex.getMessage.contains("zero data files"),
         s"must explain the empty snapshot, got: ${ex.getMessage}")
-      ExportOps.deleteRecursively(out)
     }
   }
 
   test("readVersion after vacuum reports the retention contract, not file-not-found") {
     import spark.implicits._
-    val out = ExportOps.scratchDir("graft_txunit6", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_txunit6", "spec") { out =>
       val root = s"$out/t"
       // v1 = one row; v2 = a full replacement (new files) — then vacuum
       // deletes v1's data but RETAINS its manifest as commit history
@@ -265,7 +252,6 @@ class TxTableSpec extends SparkSpec {
       }
       assert(ex.getMessage.contains("deleted by vacuum"),
         s"got: ${ex.getMessage}")
-      ExportOps.deleteRecursively(out)
     }
   }
 }

@@ -37,8 +37,7 @@ class UpsertServeSpec extends SparkSpec {
   }
 
   test("upsertServe: only changed-key partitions rewritten; content exact") {
-    val out = ExportOps.scratchDir("graft_upsrv", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_upsrv", "spec") { out =>
       val serving = s"$out/serving"
       // bootstrap: 40 keys spread over all 8 hash partitions
       val b0 = (0L until 40L).map(k => (k, 1L, k * 10L))
@@ -68,13 +67,11 @@ class UpsertServeSpec extends SparkSpec {
         b1.find(_._1 == k).getOrElse((k, n, sm))
       }.sortBy(_._1)
       assert(got.toSeq === want)
-      ExportOps.deleteRecursively(out)
     }
   }
 
   test("upsertServe: no execution materializes the serving table to the driver") {
-    val out = ExportOps.scratchDir("graft_upsrvc", "spec")
-    ExportOps.withScratchCleanup(out) {
+    ExportOps.withScratch("graft_upsrvc", "spec") { out =>
       val serving = s"$out/serving"
       Relational.upsertServePartitioned(spark, serving,
         batchDf((0L until 40L).map(k => (k, 1L, k))), 0L,
@@ -116,7 +113,6 @@ class UpsertServeSpec extends SparkSpec {
         assert(bad.isEmpty,
           s"serving table materialized to the driver via: ${bad.map(_._1).toSeq}")
       } finally spark.listenerManager.unregister(listener)
-      ExportOps.deleteRecursively(out)
     }
   }
 }

@@ -14,8 +14,8 @@ import scala.jdk.CollectionConverters._
   * the rows Spark's own range sort returns (with the rule excluded) for
   * every order shape — asc/desc, nulls first/last, NaN, ±0.0, strings,
   * collations, several keys; streaming relations are left alone and the
-  * rule is idempotent; a `localizeAndDrop`'d gate result runs its action
-  * as one job with no exchange in its plan. */
+  * rule is idempotent; a `localize`d gate result runs its action as one
+  * job with no exchange in its plan. */
 class LocalSortSpec extends SparkSpec {
 
   private val ruleName = LocalSort(spark).ruleName
@@ -104,13 +104,10 @@ class LocalSortSpec extends SparkSpec {
     assert(rule(random) eq random)
   }
 
-  test("(c) a localizeAndDrop'd frame's noop write runs one job and plans no exchange") {
-    def gateResult(s: SparkSession): DataFrame = {
-      val scratch = java.nio.file.Files.createTempDirectory("graft_lsort").toFile
-      graft.ops.ExportOps.localizeAndDrop(
-        s.range(0, 50, 1, 4).select((col("id") * 37 % 50).as("k"), col("id")),
-        scratch, "k")
-    }
+  test("(c) a localized frame's noop write runs one job and plans no exchange") {
+    def gateResult(s: SparkSession): DataFrame =
+      graft.ops.ExportOps.localize(
+        s.range(0, 50, 1, 4).select((col("id") * 37 % 50).as("k"), col("id")), "k")
     def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
     val df = gateResult(spark)

@@ -81,7 +81,6 @@ class StreamGateSpec extends SparkSpec {
           seen.add(id -> b.select("m").distinct().collect().map(_.getInt(0)).toSeq)
           ()
         }, shards = None)(_.processAllAvailable())
-      ExportOps.deleteRecursively(g.dir)
     }
     import scala.jdk.CollectionConverters._
     assert(seen.asScala.toSeq.sortBy(_._1) ===
