@@ -21,8 +21,9 @@ import org.apache.spark.sql.types._
   */
 
 /** One-pass cosine similarity over two array<float>/array<double> columns.
-  * Accumulates dot and both norms in double in a single loop; returns 0.0
-  * for zero-norm inputs (matching VectorFunctions.cosine). Participates in
+  * Accumulates dot and both norms in double in a single loop; when either
+  * input has zero norm (the product of the two norms is 0.0) the result
+  * is 0.0, never NaN. Participates in
   * whole-stage codegen via [[doGenCode]] — this kernel is the inner loop of
   * every similarity query, and a CodegenFallback here would collapse the
   * whole containing stage to the interpreted path. */

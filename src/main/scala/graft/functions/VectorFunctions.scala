@@ -29,19 +29,6 @@ object VectorFunctions {
   /** L2 norm. */
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Cosine similarity; 0.0 when either vector has zero norm. */
-  def cosine(a: Column, b: Column): Column = {
-    val ad = toDouble(a)
-    val bd = toDouble(b)
-    val denom = l2Norm(ad) * l2Norm(bd)
-    when(denom === 0.0, lit(0.0)).otherwise(dot(ad, bd) / denom)
-  }
-
-  /** Squared euclidean distance. */
-  def sqDist(a: Column, b: Column): Column =
-    aggregate(zip_with(toDouble(a), toDouble(b), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x)
-
   /** Sign-bit signature against `planes` fixed hyperplanes: bit i is set when
     * dot(v, plane_i) >= 0. Deterministic planes are derived from the seed via
     * a splitmix64-style integer mix (no RNG state, stable across JVMs).

@@ -1023,8 +1023,10 @@ object ExportOps {
     *     the difference between minutes and days at scale.
     *
     * The surviving table must hash-match the oracle filtering the raw
-    * events by BOTH rules. Rewrite-then-swap per partition rides the same
-    * staged-directory discipline as q68's merge. */
+    * events by BOTH rules. The affected days' survivors land in one
+    * day-partitioned [[TxTable.stage]] (q68's merge promotes through the
+    * same step), and one manifest commit publishes retention and erasure
+    * together. */
   private def e15(s: SparkSession, d: String): DataFrame =
     withScratch("graft_retention", d) { out =>
       val root = s"$out/table"
@@ -1056,23 +1058,14 @@ object ExportOps {
     * scale property the value check can't see: partitions without a
     * target row keep their original files untouched. `root` must be a
     * `day=`-partitioned parquet table; it may live on any Hadoop
-    * filesystem (staging happens under the root, so no cross-FS rename). */
+    * filesystem (staging happens beside the root, so no cross-FS rename). */
   def retentionErase(s: SparkSession, root: String,
                      cutoff: String,
                      isTarget: org.apache.spark.sql.Column): Unit = {
-    // Hadoop FileSystem throughout (not java.io.File): this kernel's whole
-    // point is lake maintenance, and the lake lives on HDFS/S3A/ABFS — the
-    // same code path flipLatest and q68's staged swap already use. On
-    // local[*] the Path resolves to the local FS, so the gate is unchanged.
-    import org.apache.hadoop.fs.Path
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
     TxTable.bootstrapIfNeeded(s, root)
     // 1. retention: a MANIFEST-ONLY drop of the expired day partitions —
     //    no data read, no file touched; the expired files become invisible
-    //    at the single commit below and vacuum sweeps their directories.
-    //    (Even cheaper than the old direct directory delete, and crash-
-    //    safe: an aborted run leaves the old manifest serving everything.)
+    //    at the single commit below and vacuum sweeps their directories
     def dayOf(rel: String): Option[String] =
       "day=([^/]+)/".r.findFirstMatchIn(rel).map(_.group(1))
     val retained = TxTable.liveFiles(s, root)
@@ -1086,43 +1079,12 @@ object ExportOps {
       .filter(col("day") >= lit(cutoff)).filter(isTarget)
       .select(col("day").cast("string")).distinct()
       .collect().map(_.getString(0)) // bounded by the day count
-    // the per-partition rewrites write disjoint staging dirs — run them as
-    // concurrent Spark jobs (the v14-fits pattern); serialized they cost
-    // one tiny-job latency PER affected day. The pool is CAPPED (8): an
-    // unbounded Future.traverse would submit every affected partition's
-    // job at once — fine at day-count cardinality, a scheduler pile-up if
-    // a caller ever points this at a finer partition grain
-    val moved = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try Await.result(Future.traverse(affected.toSeq) { day => Future {
-        val pdir = new Path(rootPath, s"day=$day")
-        // stage under the TABLE root, not the scratch dir: rename is
-        // same-filesystem-only, and the dot prefix keeps Spark's file
-        // listing from ever seeing a half-written staged dir
-        val staged = new Path(rootPath, s".rewrite_$day.tmp")
-        // prune to this day's live files; the day column is directory-
-        // encoded, so the rewrite sees only the data columns
-        TxTable.read(s, root).filter(col("day") === lit(day))
-          .drop("day").filter(!isTarget)
-          .write.mode(SaveMode.Overwrite).parquet(staged.toString)
-        // survivors land BESIDE the old files (unique task-UUID names;
-        // nothing live is deleted here) — visibility is the commit below
-        val rels = fs.listStatus(staged)
-          .filter(_.getPath.getName.endsWith(".parquet")).toSeq
-          .map { f =>
-            val to = new Path(pdir, f.getPath.getName)
-            if (!fs.rename(f.getPath, to))
-              throw new java.io.IOException(s"staged promote failed for $to")
-            s"day=$day/${f.getPath.getName}"
-          }
-        fs.delete(staged, true)
-        rels
-      }}, Duration.Inf).flatten
-      finally pool.shutdown()
-    }
+    // the affected days' survivors land in ONE day-partitioned staged
+    // write (a day whose every row is a target lands no file), beside the
+    // old files — nothing live is deleted here
+    val moved = TxTable.stage(TxTable.read(s, root)
+      .filter(col("day").cast("string").isin(affected.toSeq: _*))
+      .filter(!isTarget), root, "day")
     // ONE atomic commit makes the whole maintenance (retention + every
     // erased partition) visible together — a crash anywhere above serves
     // the untouched pre-maintenance table; vacuum then deletes expired and
@@ -1135,100 +1097,35 @@ object ExportOps {
 
   // --------------------------------------- e12: versioned atomic publish
 
-  /** Lands `df` as `root/v=<version>/` WITHOUT making it visible — the
-    * data half of a publish. Visibility is the pointer flip below. */
-  def writeVersion(df: DataFrame, root: String, version: Long): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(s"$root/v=$version")
-
-  /** Atomically flips `root/LATEST` to `version` (temp file + rename —
-    * the metadata-only commit primitive q68's staged swap also relies
-    * on). Readers resolve the pointer before touching data, so a publish
-    * is all-or-nothing: a crash after [[writeVersion]] but before the
-    * flip leaves the previous version served, never a half-written mix —
-    * snapshot isolation for a parquet directory with no table format. */
-  def flipLatest(s: SparkSession, root: String, version: Long): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val dir = new org.apache.hadoop.fs.Path(root)
-    val fs = dir.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(root, s".LATEST.tmp.$version")
-    val out = fs.create(tmp, true)
-    try out.write(version.toString.getBytes("UTF-8")) finally out.close()
-    val target = new org.apache.hadoop.fs.Path(root, "LATEST")
-    fs.delete(target, false) // rename-over is not portable; delete+rename is
-    if (!fs.rename(tmp, target))
-      throw new java.io.IOException(s"pointer flip to v=$version failed")
-  }
-
-  /** Publish = land the data, then flip the pointer. */
-  def publishVersion(df: DataFrame, root: String, version: Long): Unit = {
-    writeVersion(df, root, version)
-    flipLatest(df.sparkSession, root, version)
-  }
-
-  /** Resolves `root/LATEST` and reads that version's parquet. */
-  def readPublished(s: SparkSession, root: String): DataFrame = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(root, "LATEST")
-    val fs = p.getFileSystem(conf)
-    val in = fs.open(p)
-    val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-            finally in.close()
-    Tables.readParquet(s, s"$root/v=$v")
-  }
-
-  /** e12: the versioned-publish cycle gated end-to-end — v1 lands a
-    * partial summary and publishes; v2 lands the full corpus summary and
-    * publishes; the gate reads THROUGH the pointer and must hash-match
-    * the v2 oracle. The crash-window invariant (data landed, pointer not
-    * yet flipped → v1 still served) is spec-pinned in
-    * [[graft.ops.ExportOpsSpec]]. At 100 TB this is the poor-man's
-    * snapshot isolation every pointer-based lake publish uses: readers
-    * never see a partial version because visibility is one atomic
-    * metadata rename, and old versions stay queryable for rollback. */
+  /** e12: the versioned-publish cycle gated end-to-end — v1 publishes a
+    * partial summary, v2 the full corpus summary, each as a full
+    * replacement through [[TxTable.stageAndCommit]]; the gate reads the
+    * latest manifest and must hash-match the v2 oracle. The crash-window
+    * invariant (data staged, manifest not yet committed → v1 still
+    * served) is spec-pinned in [[graft.ops.ExportOpsSpec]]. At 100 TB this
+    * is the snapshot isolation every log-structured lake publish gives:
+    * readers never see a partial version because visibility is one atomic
+    * manifest rename, and old versions stay readable for rollback until a
+    * vacuum retires them (this gate never vacuums). */
   private def e12(s: SparkSession, d: String): DataFrame =
     withScratch("graft_publish", d) { out =>
-      val root = out.getAbsolutePath
+      val root = s"$out/table"
       val docsT = Tables(s, d, "documents")
       def summary(df: DataFrame) = df.groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-      publishVersion(summary(docsT.filter(col("doc_id") % 2 === 0)), root, 1L)
-      publishVersion(summary(docsT), root, 2L)
-      localize(readPublished(s, root), "lang")
+      def publish(df: DataFrame) =
+        TxTable.stageAndCommit(df, root, append = false, vacuumNow = false)
+      publish(summary(docsT.filter(col("doc_id") % 2 === 0)))
+      publish(summary(docsT))
+      localize(TxTable.read(s, root), "lang")
     }
 
-  /** Write-audit-publish: stage the candidate version's data, audit the
-    * STAGED FILES (what readers would actually see — not the input plan,
-    * whose re-evaluation could differ), and flip the pointer only when
-    * zero rows violate. Returns whether it published. A failed audit
-    * leaves `LATEST` untouched and the staged `v=` directory quarantined
-    * on disk for debugging — readers resolve the pointer first, so an
-    * unflipped version is invisible to them by construction. */
-  def auditedPublish(df: DataFrame, root: String, version: Long,
-                     violation: org.apache.spark.sql.Column): Boolean = {
-    writeVersion(df, root, version)
-    val s = df.sparkSession
-    val bad = Tables.readParquet(s, s"$root/v=$version").filter(violation).count()
-    if (bad == 0L) { flipLatest(s, root, version); true } else false
-  }
-
-  /** e17: the WRITE-AUDIT-PUBLISH cycle gated end-to-end — the quality
-    * gate between e12's raw publish and production: v1 (a clean partial
-    * summary) publishes; v2 (the full summary with a PLANTED null
-    * sum_chars — the upstream-bug shape WAP exists to catch) fails its
-    * audit and must NOT become visible; v3 (the corrected full summary,
-    * now with a long-doc count column) passes and publishes. The gate
-    * reads through the pointer and must hash-match v3's oracle — if the
-    * poisoned v2 had flipped, or v3's flip had been skipped, the hash
-    * moves. The failed-audit pointer invariant (LATEST still serves v1
-    * between the v2 rejection and the v3 publish) is spec-pinned in
-    * ExportOpsR10Spec. At 100 TB the audit is one pushdown-filtered count
-    * over the staged files; the publish/reject decision is metadata-only
-    * either way. */
   /** PARTITION-LAYOUT migration (partition evolution): rewrite a table
     * into a new partitioning scheme under a staging path, then publish
     * with one directory rename — the source is never mutated and stays
-    * fully readable until the instant the destination appears (the
-    * e12/e17 publish discipline applied to re-layout). At 100 TB this is
+    * fully readable until the instant the destination appears. A layout
+    * has no versions, so the one rename is its whole commit; versioned
+    * tables commit through [[TxTable]]. At 100 TB this is
     * how a `day=` table becomes `day=/region=` when a second pruning
     * dimension starts paying for itself: one full rewrite (the honest,
     * unavoidable cost), zero unreadable windows, and the old layout
@@ -1306,17 +1203,41 @@ object ExportOps {
       localize(back, "k")
     }
 
+  /** e17: the WRITE-AUDIT-PUBLISH cycle gated end-to-end — the quality
+    * gate between e12's raw publish and production. Each candidate is
+    * [[TxTable.stage]]d (its files land in the table, invisible), the
+    * audit reads EXACTLY those staged files (what readers would see — not
+    * the input plan, whose re-evaluation could differ), and
+    * [[TxTable.commit]] publishes them only when zero rows violate. v1 (a
+    * clean partial summary) publishes; v2 (the full summary with a PLANTED
+    * null sum_chars — the upstream-bug shape WAP exists to catch) fails
+    * its audit and stays on disk as uncommitted files, which
+    * [[TxTable.read]] never serves; v3 (the corrected full summary, now
+    * with a long-doc count column) passes and publishes. The gate reads
+    * the latest manifest and must hash-match v3's oracle — if the poisoned
+    * v2 had committed, or v3's commit had been skipped, the hash moves.
+    * The failed-audit invariant (the version and served rows stay v1's
+    * between the v2 rejection and the v3 publish) is spec-pinned in
+    * ExportOpsR10Spec. At 100 TB the audit is one pushdown-filtered count
+    * over the staged files; the publish/reject decision is metadata-only
+    * either way. */
   private def e17(s: SparkSession, d: String): DataFrame =
     withScratch("graft_wap", d) { out =>
-      val root = out.getAbsolutePath
+      val root = s"$out/table"
       val docsT = Tables(s, d, "documents")
       def summary(df: DataFrame) = df.groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
           count(when(col("n_chars") >= 200, 1)).as("n_long_docs"))
       val violation = col("n_docs") <= 0 || col("sum_chars").isNull ||
         col("n_long_docs") > col("n_docs")
-      require(auditedPublish(
-        summary(docsT.filter(col("doc_id") % 2 === 0)), root, 1L, violation),
+      def publishIfClean(df: DataFrame): Boolean = {
+        val staged = TxTable.stage(df, root)
+        val clean = Tables.readParquet(s, staged.map(f => s"$root/$f"))
+          .filter(violation).count() == 0L
+        if (clean) TxTable.commit(s, root, staged)
+        clean
+      }
+      require(publishIfClean(summary(docsT.filter(col("doc_id") % 2 === 0))),
         "e17: the clean v1 must publish")
       // the poisoned candidate: one language's sum goes null upstream
       val firstLang = Tables.fixtureStat(d, "documents_min_lang") {
@@ -1324,63 +1245,25 @@ object ExportOps {
       }
       val poisoned = summary(docsT).withColumn("sum_chars",
         when(col("lang") === firstLang, lit(null)).otherwise(col("sum_chars")))
-      require(!auditedPublish(poisoned, root, 2L, violation),
-        "e17: the poisoned v2 must fail its audit")
-      require(auditedPublish(summary(docsT), root, 3L, violation),
-        "e17: the corrected v3 must publish")
-      localize(readPublished(s, root), "lang")
+      require(!publishIfClean(poisoned), "e17: the poisoned v2 must fail its audit")
+      require(publishIfClean(summary(docsT)), "e17: the corrected v3 must publish")
+      localize(TxTable.read(s, root), "lang")
     }
 
   // ----------------- e18: incremental snapshot consumption (table tail)
-
-  /** Records the table's current data files as snapshot `version`'s
-    * manifest (one row per file). Runs on the Hadoop FileSystem API (the
-    * e15 discipline — portable to HDFS/S3A). Each manifest is a FULL
-    * listing; increments are set differences between two manifests —
-    * simpler to reason about than delta manifests under concurrent
-    * writers, and still metadata-sized: the listing scales with file
-    * count, never data volume. */
-  def commitSnapshot(s: SparkSession, root: String, version: Long): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val data = new org.apache.hadoop.fs.Path(s"$root/data")
-    val fs = data.getFileSystem(conf)
-    val files = fs.listStatus(data).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toString).sorted
-    import s.implicits._
-    files.toDF("file").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/manifest/v=$version")
-  }
-
-  /** Files present in snapshot `to` but not in snapshot `from` (pass
-    * from = 0 for "since the beginning"). Both manifests are collected in
-    * one read and diffed on the driver: they are manifest-sized — the
-    * planner-side metadata read every incremental consumer performs
-    * (e14's argument: thousands of manifest rows vs billions of data
-    * rows) — and a distributed diff would shuffle the file paths. */
-  def newFilesSince(s: SparkSession, root: String,
-                    from: Long, to: Long): Seq[String] = {
-    val versions = if (from <= 0L) Seq(to) else Seq(to, from)
-    val rows = Tables.readParquet(s, versions.map(v => s"$root/manifest/v=$v"),
-        Map("basePath" -> s"$root/manifest"))
-      .select(col("file"), col("v").cast("long")).collect()
-    val (cur, prev) = rows.partition(_.getLong(1) == to)
-    val old = prev.map(_.getString(0)).toSet
-    cur.map(_.getString(0)).filterNot(old).distinct.sorted.toIndexedSeq
-  }
 
   /** e18: INCREMENTAL CONSUMPTION of an append-only table — the
     * downstream half of the lake contract, which no other e-gate covers:
     * e12/e17 publish snapshots, e14 plans scans from file stats; this is
     * the consumer that TAILS the table without streaming infrastructure
     * (the Iceberg incremental-read / Delta startingVersion shape). The
-    * producer appends two batches, committing a manifest snapshot after
-    * each; the consumer processes each increment's NEW FILES ONLY —
-    * discovered by manifest diff, never by re-listing or re-reading data
-    * — and folds algebraic partials (counts + DECIMAL sums, so fold
-    * order can't move the result) into its running aggregate. The served
-    * aggregate must hash-match the full-table oracle: nothing lost,
-    * nothing double-counted.
+    * producer appends two batches through [[TxTable.stageAndCommit]]; the
+    * consumer processes each increment's NEW FILES ONLY — the driver-side
+    * difference of the two versions' manifests, never a re-listing or a
+    * re-read of data — and folds algebraic partials (counts + DECIMAL
+    * sums, so fold order can't move the result) into its running
+    * aggregate. The served aggregate must hash-match the full-table
+    * oracle: nothing lost, nothing double-counted.
     *
     * At 100 TB this is the difference between an hourly downstream job
     * re-scanning the table (O(table) per run, unbounded growth) and
@@ -1389,93 +1272,54 @@ object ExportOps {
     * The new-files-only property is spec-pinned in ExportOpsR10Spec. */
   private def e18(s: SparkSession, d: String): DataFrame =
     withScratch("graft_increment", d) { out =>
-      val root = out.getAbsolutePath
+      val root = s"$out/table"
       val orders = Tables(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
-      def append(df: DataFrame): Unit =
-        df.write.mode(SaveMode.Append).parquet(s"$root/data")
-      def consume(from: Long, to: Long): Unit = {
-        val fresh = newFilesSince(s, root, from, to)
-        require(fresh.nonEmpty, s"e18: no new files in snapshot $from -> $to")
-        Tables.readParquet(s, fresh)
+      def append(df: DataFrame): Seq[String] = TxTable.filesOfVersion(s, root,
+        TxTable.stageAndCommit(df, root, append = true, vacuumNow = false))
+      def consume(fresh: Seq[String]): Unit = {
+        require(fresh.nonEmpty, "e18: no new files in the increment")
+        Tables.readParquet(s, fresh.map(f => s"$root/$f"))
           .groupBy(col("o_orderpriority"))
           .agg(count(lit(1)).as("n_orders"),
             sum(col("o_totalprice").cast("decimal(30,2)")).as("sum_price"))
-          .write.mode(SaveMode.Append).parquet(s"$root/partials")
+          .write.mode(SaveMode.Append).parquet(s"$out/partials")
       }
-      append(orders.filter(col("o_orderkey") % 3 =!= 0))
-      commitSnapshot(s, root, 1L)
-      consume(0L, 1L)
-      append(orders.filter(col("o_orderkey") % 3 === 0))
-      commitSnapshot(s, root, 2L)
-      consume(1L, 2L)
-      val served = Tables.readParquet(s, s"$root/partials")
+      val v1 = append(orders.filter(col("o_orderkey") % 3 =!= 0))
+      consume(v1)
+      val v2 = append(orders.filter(col("o_orderkey") % 3 === 0))
+      consume(v2.diff(v1))
+      val served = Tables.readParquet(s, s"$out/partials")
         .groupBy(col("o_orderpriority"))
         .agg(sum(col("n_orders")).as("n_orders"),
           sum(col("sum_price")).cast("double").as("sum_price"))
       localize(served, "o_orderpriority")
     }
 
-  /** Deletes every data file not referenced by a retained snapshot's
-    * manifest, then expires the non-retained manifests themselves. The
-    * cleanup half of the e12/e17/e18 snapshot story (Iceberg's
-    * expire-snapshots + remove-orphan-files): crashed or retried writers
-    * leave committed-to-disk-but-referenced-by-nothing files behind, and
-    * at 100 TB that debris is real money AND a correctness trap for any
-    * path-globbing reader. Listing and manifest reads are metadata-sized;
-    * deletes are bounded by the orphan count. Hadoop FS API throughout
-    * (the e15 discipline). Returns the deleted paths (sorted) so callers
-    * can log/audit the reclaim. */
-  def vacuum(s: SparkSession, root: String, retained: Seq[Long]): Seq[String] = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val data = new org.apache.hadoop.fs.Path(s"$root/data")
-    val fs = data.getFileSystem(conf)
-    val live = retained.flatMap(v =>
-      Tables.readParquet(s, s"$root/manifest/v=$v")
-        .collect().map(_.getString(0))).toSet
-    val orphans = fs.listStatus(data).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toString).filterNot(live).sorted
-    orphans.foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), false))
-    val mdir = new org.apache.hadoop.fs.Path(s"$root/manifest")
-    // tolerate non-numeric v= entries (a writer's leftover temp dir like
-    // "v=2.tmp"): a parse abort here would strand maintenance HALF-applied
-    // — data-file deletes above are already durable — so unparseable
-    // entries are skipped, never fatal and never deleted
-    if (fs.exists(mdir)) fs.listStatus(mdir).toSeq
-      .filter(_.getPath.getName.startsWith("v="))
-      .filter(st =>
-        scala.util.Try(st.getPath.getName.stripPrefix("v=").toLong)
-          .toOption.exists(v => !retained.contains(v)))
-      .foreach(st => fs.delete(st.getPath, true))
-    orphans
-  }
-
-  /** e20: VACUUM gated end-to-end — producer commits two snapshots, then
-    * a crashed retry re-writes batch 2's files WITHOUT committing (the
-    * debris shape vacuum exists for: present on disk, referenced by no
-    * manifest). Vacuum retaining snapshot 2 must delete exactly the
-    * debris; the gate then reads the data directory DIRECTLY (the
-    * path-globbing reader that debris poisons) and must hash-match the
-    * full-table oracle — surviving debris doubles batch 2's rows,
-    * over-deletion loses them, and either moves the hash. The
-    * referenced-files-untouched and idempotent-second-vacuum invariants
-    * are spec-pinned in ExportOpsR10Spec. */
+  /** e20: VACUUM gated end-to-end — the producer commits two appends
+    * through [[TxTable.stageAndCommit]], then a crashed retry writes batch
+    * 2's rows straight into the table root WITHOUT committing (the debris
+    * shape vacuum exists for: present on disk, referenced by no
+    * manifest). [[TxTable.vacuum]] must delete exactly the debris; the
+    * gate then reads the table directory DIRECTLY (the path-globbing
+    * reader that debris poisons) and must hash-match the full-table
+    * oracle — surviving debris doubles batch 2's rows, over-deletion loses
+    * them, and either moves the hash. The referenced-files-untouched and
+    * idempotent-second-vacuum invariants are spec-pinned in
+    * ExportOpsR10Spec. */
   private def e20(s: SparkSession, d: String): DataFrame =
     withScratch("graft_vacuum", d) { out =>
-      val root = out.getAbsolutePath
+      val root = s"$out/table"
       val orders = Tables(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
       val b1 = orders.filter(col("o_orderkey") % 3 =!= 0)
       val b2 = orders.filter(col("o_orderkey") % 3 === 0)
-      b1.write.mode(SaveMode.Append).parquet(s"$root/data")
-      commitSnapshot(s, root, 1L)
-      b2.write.mode(SaveMode.Append).parquet(s"$root/data")
-      commitSnapshot(s, root, 2L)
-      b2.write.mode(SaveMode.Append).parquet(s"$root/data")
-      val removed = vacuum(s, root, Seq(2L))
+      TxTable.stageAndCommit(b1, root, append = true, vacuumNow = false)
+      TxTable.stageAndCommit(b2, root, append = true, vacuumNow = false)
+      b2.write.mode(SaveMode.Append).parquet(root)
+      val removed = TxTable.vacuum(s, root)
       require(removed.nonEmpty, "e20: vacuum found no debris to remove")
-      val served = Tables.readParquet(s, s"$root/data")
+      val served = Tables.readParquet(s, root)
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"),
           sum(col("o_totalprice").cast("decimal(30,2)")).cast("double")
@@ -1748,7 +1592,7 @@ object ExportOps {
     * files staged beside the originals, ONE manifest commit flips
     * visibility, and the pre-compaction version stays readable until
     * vacuum — readers concurrent with the compaction see old or new,
-    * never a mix (the e12 pointer guarantee, now for layout
+    * never a mix (e12's publish guarantee, now for layout
     * maintenance). In-gate requires pin the mechanics: ≥32 files
     * before, ≤8 after, both versions serving identical row counts.
     * The oracle pins content invariance — compaction may change layout,
@@ -2047,7 +1891,7 @@ object ExportOps {
         |SELECT p, n_rows, sum_bal_cents, version FROM a2
         |ORDER BY version, p""".stripMargin,
     // what must be served after the WAP cycle is exactly v3's corrected
-    // full summary — a flipped v2 or an unflipped v3 both move this hash
+    // full summary — a committed v2 or an uncommitted v3 both move this hash
     "e17_audited_publish" ->
       """SELECT lang, count(1) AS n_docs,
         |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
@@ -2181,7 +2025,7 @@ object ExportOps {
       """SELECT lang, count(1) AS n_docs,
         |  CAST(sum(n_chars) AS BIGINT) AS sum_chars
         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    // the pointer must serve v2 == the full-corpus summary (same shape
+    // the latest manifest must serve v2 == the full-corpus summary (same shape
     // as e04's content-invariance oracle)
     "e12_versioned_publish" ->
       """SELECT lang, count(1) AS n_docs,

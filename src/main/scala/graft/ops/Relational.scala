@@ -1672,10 +1672,10 @@ object Relational {
     * driver collect) prune the snapshot scan to the touched partitions
     * (PartitionFilters in the plan, spec-pinned), the q66 kernel merges
     * only those rows, and the commit is the [[TxTable]] manifest protocol:
-    * executors write the merged partitions to a staging dir, the driver
-    * moves the files in beside the old ones with metadata-only renames,
-    * flips visibility with ONE atomic manifest commit, then vacuums the
-    * superseded files. Untouched partitions are never read, never
+    * [[TxTable.stage]] writes the merged partitions and moves their files
+    * in beside the old ones with metadata-only renames, ONE atomic
+    * manifest commit flips visibility, then vacuum deletes the superseded
+    * files. Untouched partitions are never read, never
     * rewritten — byte-identical after the merge (spec-pinned) — and a
     * crash at any instant leaves the table serving a complete old or new
     * version, never a mix and never a vanished partition
@@ -1701,36 +1701,15 @@ object Relational {
     // p rides along as a payload column: every change row carries its own
     // partition value, so latest-per-key keeps it without a join
     val merged = upsertMerge(touched, changes, payloadCols :+ "p")
-    val snapPath = new org.apache.hadoop.fs.Path(snapDir)
-    val fs = snapPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val stagePath = new org.apache.hadoop.fs.Path(snapDir + ".stage")
-    merged.write.mode(SaveMode.Overwrite).partitionBy("p")
-      .parquet(stagePath.toString)
     // crash-safe commit (the r11 verdict's `weak`): the merged files land
-    // NEXT TO the old ones (unique task-UUID names; no live file is ever
-    // deleted or renamed here), visibility flips with ONE manifest commit,
-    // and the superseded files vacuum afterwards. A crash at any instant
-    // serves either the old or the new version — never a mix, never a
-    // vanished partition (CrashSafeSwapSpec injects failures at each step).
-    val moved = affected.flatMap { pv =>
-      val stagedDir = new org.apache.hadoop.fs.Path(stagePath, s"p=$pv")
-      // a partition whose every key tombstoned has no staged output: its
-      // old files simply drop out of the manifest below
-      if (!fs.exists(stagedDir)) Nil
-      else {
-        val dst = new org.apache.hadoop.fs.Path(snapPath, s"p=$pv")
-        if (!fs.exists(dst)) fs.mkdirs(dst)
-        fs.listStatus(stagedDir).toSeq
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .map { f =>
-            val to = new org.apache.hadoop.fs.Path(dst, f.getPath.getName)
-            if (!fs.rename(f.getPath, to))
-              throw new java.io.IOException(s"staged promote failed for $to")
-            s"p=$pv/${f.getPath.getName}"
-          }
-      }
-    }
-    fs.delete(stagePath, true)
+    // NEXT TO the old ones (no live file is ever deleted or renamed here),
+    // visibility flips with ONE manifest commit, and the superseded files
+    // vacuum afterwards. A crash at any instant serves either the old or
+    // the new version — never a mix, never a vanished partition
+    // (CrashSafeSwapSpec injects failures at each step). A partition whose
+    // every key tombstoned stages no file: its old files simply drop out
+    // of the manifest below
+    val moved = TxTable.stage(merged, snapDir, "p")
     val carried = TxTable.liveFiles(s, snapDir)
       .filterNot(f => affected.exists(pv => f.startsWith(s"p=$pv/")))
     TxTable.commit(s, snapDir, carried ++ moved)
@@ -1767,8 +1746,6 @@ object Relational {
         // seq > 0 so change rows beat the landed snapshot's seq-0 rows on
         // every replay (the q69 idempotency discipline)
         lit(batchId + 1L).as("seq"), lit("U").as("op")): _*)
-    val servingPath = new org.apache.hadoop.fs.Path(servingDir)
-    val fs = servingPath.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (TxTable.currentVersion(s, servingDir) == 0L) {
       // bootstrap: the first batch IS the snapshot (update mode emits
       // every key it has seen, so batch 0 covers all its keys). It lands
@@ -1776,27 +1753,8 @@ object Relational {
       // crash mid-bootstrap leaves no manifest (readers fail loudly, and
       // a later attempt could otherwise register the partial table as
       // v1), and the foreachBatch redelivery of batch 0 simply redoes it
-      val stagePath = new org.apache.hadoop.fs.Path(servingDir + ".bootstrap")
-      fs.delete(stagePath, true) // a stale crashed attempt
-      changes.drop("seq", "op")
-        .write.partitionBy("p").parquet(stagePath.toString)
-      val moved = fs.listStatus(stagePath)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("p="))
-        .flatMap { dir =>
-          val dst = new org.apache.hadoop.fs.Path(
-            servingPath, dir.getPath.getName)
-          if (!fs.exists(dst)) fs.mkdirs(dst)
-          fs.listStatus(dir.getPath)
-            .filter(_.getPath.getName.endsWith(".parquet"))
-            .map { f =>
-              val to = new org.apache.hadoop.fs.Path(dst, f.getPath.getName)
-              if (!fs.rename(f.getPath, to))
-                throw new java.io.IOException(s"bootstrap move failed for $to")
-              s"${dir.getPath.getName}/${f.getPath.getName}"
-            }
-        }.toSeq
-      fs.delete(stagePath, true)
-      TxTable.commit(s, servingDir, moved)
+      TxTable.commit(s, servingDir,
+        TxTable.stage(changes.drop("seq", "op"), servingDir, "p"))
       // sweep a crashed earlier bootstrap's half-moved orphans
       TxTable.vacuum(s, servingDir)
     } else {

@@ -467,10 +467,10 @@ object TextOps {
   /** APPEND maintenance for the persisted RAG index — the d25/e07
     * staged-swap move applied to the postings layout, closing the r10
     * verdict's "t25 still rebuilds" gap. Arrival chunks route through the
-    * same fixed cell function, land in a staging directory partitioned by
-    * cell, and their files MOVE into the live cell directories with
-    * metadata-only renames (a cell the index has never seen appears as a
-    * new directory — no rebuild), becoming visible only through ONE
+    * same fixed cell function and land through one cell-partitioned
+    * [[TxTable.stage]]: their files MOVE into the live cell directories
+    * with metadata-only renames (a cell the index has never seen appears
+    * as a new directory — no rebuild), becoming visible only through ONE
     * [[TxTable]] manifest commit; the centroid routing table refreshes by
     * re-aggregating ONLY the affected cells' postings (a manifest-pruned
     * scan) and carrying every other centroid unchanged, committing through
@@ -479,44 +479,25 @@ object TextOps {
     * byte-identity, new-cell creation, and serve-equality with a
     * from-scratch rebuild). */
   def appendRagIndex(s: SparkSession, newChunks: DataFrame, root: String): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val stage = new org.apache.hadoop.fs.Path(s"$root/postings.stage")
-    val fs = stage.getFileSystem(conf)
-    TxTable.bootstrapIfNeeded(s, s"$root/postings")
-    assignCells(newChunks).write.partitionBy("cell").parquet(stage.toString)
-    val staged = fs.listStatus(stage)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-    val affected = staged
-      .map(_.getPath.getName.stripPrefix("cell=").toInt).sorted.toSeq
-    // append = move the staged files in beside the live ones (checked
+    val postings = s"$root/postings"
+    TxTable.bootstrapIfNeeded(s, postings)
+    // append = stage the arrivals' files in beside the live ones (checked
     // metadata renames; pre-existing files are never touched), then flip
     // visibility with ONE manifest commit — a crash mid-move leaves the
     // old manifest latest and the half-moved files invisible, and the
     // next append's vacuum sweeps such orphans (CrashSafeSwapSpec)
-    val moved = staged.toSeq.flatMap { dir =>
-      val live = new org.apache.hadoop.fs.Path(
-        s"$root/postings/${dir.getPath.getName}")
-      if (!fs.exists(live)) fs.mkdirs(live)
-      fs.listStatus(dir.getPath)
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .map { f =>
-          val to = new org.apache.hadoop.fs.Path(live, f.getPath.getName)
-          if (!fs.rename(f.getPath, to))
-            throw new java.io.IOException(s"staged append move failed for $to")
-          s"${dir.getPath.getName}/${f.getPath.getName}"
-        }
-    }
-    fs.delete(stage, true)
-    TxTable.commit(s, s"$root/postings",
-      TxTable.liveFiles(s, s"$root/postings") ++ moved)
-    TxTable.vacuum(s, s"$root/postings")
+    val moved = TxTable.stage(assignCells(newChunks), postings, "cell")
+    val affected = moved.map(_.takeWhile(_ != '/').stripPrefix("cell=").toInt)
+      .distinct.sorted
+    TxTable.commit(s, postings, TxTable.liveFiles(s, postings) ++ moved)
+    TxTable.vacuum(s, postings)
     // routing-table refresh: affected cells re-aggregate from their own
     // (pruned) postings; everything else carries. The refreshed table is
     // a full replacement, so it commits as new files + a manifest that
     // lists ONLY them, then vacuums the old generation — both versions
     // exist on disk until the atomic flip, zero unreadable windows (the
     // r11 ADVICE's delete-then-rename window closed).
-    val refreshed = centroidsOf(TxTable.read(s, s"$root/postings")
+    val refreshed = centroidsOf(TxTable.read(s, postings)
       .filter(col("cell").isin(affected.map(Int.box): _*)))
     // a pre-protocol index has no centroids manifest yet — register its
     // current files as v1 (same register-on-first-touch contract as

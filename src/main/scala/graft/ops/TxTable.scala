@@ -2,7 +2,7 @@ package graft.ops
 
 import scala.collection.mutable
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, PartitionDirectory, PartitionSpec, PartitioningAwareFileIndex}
@@ -11,19 +11,24 @@ import org.apache.spark.sql.functions.{array, col, explode, lit, when}
 import org.apache.spark.sql.types.{LongType, StructType}
 import graft.Tables
 
-/** Versioned-manifest commit protocol for parquet tables maintained by
-  * staged swaps — the crash-safety layer under [[Relational.mergePartitioned]]
-  * (q68/q98), [[TextOps.appendRagIndex]] (t30), and
-  * [[ExportOps.retentionErase]] (e15).
+/** The one commit protocol for graft's parquet tables: every staged
+  * write lands its files in a table through [[stage]] and makes them
+  * visible through [[commit]]. Its users: the partition-grain merge
+  * ([[Relational.mergePartitioned]], q68/q98), the RAG index append
+  * ([[TextOps.appendRagIndex]], t30), retention + erasure
+  * ([[ExportOps.retentionErase]], e15), whole-table publish (e12),
+  * write-audit-publish (e17: stage, audit the staged files, commit only
+  * when clean), incremental consumption (e18: the new files are the
+  * difference of two versions' manifests) and vacuum (e20), plus the
+  * flat maintenance kernels behind [[stageAndCommit]]. One log per table
+  * for publish, audit-then-publish, incremental reads and vacuum is the
+  * Delta Lake shape, rebuilt on nothing but the Hadoop FileSystem API.
   *
-  * The r11 verdict's one `weak`: those kernels committed with
-  * `delete(live); rename(staged, live)` per partition — a crash between
-  * the delete and the rename loses the partition, a crash mid-loop leaves
-  * a mixed-version snapshot, and a reader listing the table mid-swap can
-  * see a partition vanish. This object replaces that with the pointer
-  * protocol e12/e17 already use for whole-table publishes, applied at
-  * FILE grain (the Delta-log/Iceberg shape, rebuilt on nothing but the
-  * Hadoop FileSystem API):
+  * A commit that swapped directories (`delete(live); rename(staged,
+  * live)` per partition) could lose a partition to a crash between the
+  * delete and the rename, serve a mixed-version snapshot after a crash
+  * mid-loop, and show a reader listing the table mid-swap a vanished
+  * partition. The protocol here works at FILE grain instead:
   *
   *  - Data files live in their normal partition directories and are
   *    NEVER mutated: maintenance lands NEW files (unique names — Spark's
@@ -47,9 +52,10 @@ import graft.Tables
   *    manifest latest and every old file untouched — the table still
   *    serves the old version. A crash after leaves the new version
   *    serving with superseded files as invisible garbage.
-  *  - [[vacuum]] is the e20-style maintenance step: delete data files
-  *    the latest manifest no longer references (superseded versions and
-  *    aborted-commit orphans) and drop emptied partition directories.
+  *  - [[vacuum]] (e20) deletes the data files the latest manifest no
+  *    longer references (superseded versions, staged-but-uncommitted
+  *    files, a crashed writer's debris) and drops emptied partition
+  *    directories.
   *    After a vacuum, directory listing and manifest agree, so legacy
   *    `spark.read.parquet(dir)` reads stay equivalent on the happy path;
   *    crash recovery is always through the manifest.
@@ -187,13 +193,16 @@ object TxTable {
       ()
     }
 
+  /** Names Spark's file listing skips: markers, temps, stages. */
+  private def hidden(name: String): Boolean =
+    name.startsWith("_") || name.startsWith(".")
+
   /** Recursive listing of the table's visible parquet data files
     * (root-relative), skipping hidden (`_`/`.`) names at every level. */
   def listDataFiles(s: SparkSession, root: String): Seq[String] = {
     val (fs, rootPath) = fsOf(s, root)
     if (!fs.exists(rootPath)) return Nil
     val prefix = rootPath.toUri.getPath.stripSuffix("/") + "/"
-    def hidden(name: String) = name.startsWith("_") || name.startsWith(".")
     def walk(p: Path): Seq[String] =
       fs.listStatus(p).toSeq.filterNot(st => hidden(st.getPath.getName))
         .flatMap { st =>
@@ -437,36 +446,57 @@ object TxTable {
       throw new java.io.IOException(s"schema sidecar write failed for $root")
   }
 
-  /** Stage `df` as parquet beside `dir` and commit it through the
-    * manifest protocol — the shared shape of every FLAT (unpartitioned)
-    * table maintenance here: write to a `.stage` sibling, move the part
-    * files in with checked metadata renames (old files untouched), flip
-    * one manifest, vacuum. `append = true` keeps the current generation
-    * in the manifest (an append); `false` lists only the new files (a
-    * full replacement). A crash at any instant serves one complete
-    * version. Partitioned tables (cell=/p= layouts) keep their custom
-    * moves — their manifests carry per-partition paths. */
-  def stageAndCommit(df: DataFrame, dir: String, append: Boolean,
-                     vacuumNow: Boolean = true): Unit = {
-    val s = df.sparkSession
-    val (fs, dirPath) = fsOf(s, dir)
-    if (!fs.exists(dirPath)) fs.mkdirs(dirPath)
-    bootstrapIfNeeded(s, dir)
-    recordSchema(s, dir, df.schema) // lets an empty future version serve
-    val stage = new Path(dir + ".stage")
-    df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(stage.toString)
-    val moved = fs.listStatus(stage)
-      .filter(_.getPath.getName.endsWith(".parquet")).toSeq
-      .map { f =>
-        val to = new Path(dirPath, f.getPath.getName)
+  /** Lands `df`'s files in the table at `root` WITHOUT making them
+    * visible — the one promote step under every staged write here. `df` is
+    * written (partitioned by `partitionBy`, if any) to the `<root>.stage`
+    * sibling in overwrite mode, so a crashed attempt's leftovers go; every
+    * staged `.parquet` file then moves to the same relative path under
+    * `root` with one checked metadata rename (partition directories are
+    * created as needed, live files are never touched: Spark's task-UUID
+    * part names are unique), and the stage is deleted. Returns the moved
+    * files' root-relative paths; a partition the write left empty (every
+    * row deleted) simply has none. Visibility is the caller's [[commit]]:
+    * until then the files are invisible orphans that [[read]] never
+    * serves and [[vacuum]] sweeps. */
+  def stage(df: DataFrame, root: String, partitionBy: String*): Seq[String] = {
+    val (fs, rootPath) = fsOf(df.sparkSession, root)
+    val stagePath = new Path(root + ".stage")
+    df.write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*)
+      .parquet(stagePath.toString)
+    def promote(dir: Path, rel: String): Seq[String] = {
+      val (dirs, files) = fs.listStatus(dir).toSeq.partition(_.isDirectory)
+      val parquet = files.filter(_.getPath.getName.endsWith(".parquet"))
+      val dst = if (rel.isEmpty) rootPath else new Path(rootPath, rel)
+      if (parquet.nonEmpty) fs.mkdirs(dst)
+      parquet.map { f =>
+        val to = new Path(dst, f.getPath.getName)
         if (!fs.rename(f.getPath, to))
           throw new java.io.IOException(s"staged promote failed for $to")
-        f.getPath.getName
-      }
-    fs.delete(stage, true)
-    commit(s, dir, (if (append) liveFiles(s, dir) else Nil) ++ moved)
+        rel + f.getPath.getName
+      } ++ dirs.filterNot(d => hidden(d.getPath.getName))
+        .flatMap(d => promote(d.getPath, s"$rel${d.getPath.getName}/"))
+    }
+    val moved = promote(stagePath, "")
+    fs.delete(stagePath, true)
+    moved
+  }
+
+  /** [[stage]] `df` as `dir`'s files and commit them as the next version
+    * — the shared shape of every FLAT (unpartitioned) table write here:
+    * publish (`append = false`: the manifest lists only the new files, a
+    * full replacement) or append (`true`: the current generation stays
+    * listed). A crash at any instant serves one complete version. The
+    * schema sidecar is recorded first, so a later empty version can still
+    * serve. Returns the committed version. */
+  def stageAndCommit(df: DataFrame, dir: String, append: Boolean,
+                     vacuumNow: Boolean = true): Long = {
+    val s = df.sparkSession
+    bootstrapIfNeeded(s, dir)
+    recordSchema(s, dir, df.schema)
+    val moved = stage(df, dir)
+    val v = commit(s, dir, (if (append) liveFiles(s, dir) else Nil) ++ moved)
     if (vacuumNow) vacuum(s, dir)
+    v
   }
 
   /** SHALLOW CLONE (Delta `CREATE TABLE ... SHALLOW CLONE`): a new table
@@ -519,14 +549,17 @@ object TxTable {
     commit(s, root, files)
   }
 
-  /** e20-style maintenance: delete visible parquet files the latest
+  /** e20's maintenance step: delete visible parquet files the latest
     * manifest does not reference (superseded versions, aborted-commit
-    * orphans), drop partition directories that emptied, and trim all
-    * but the last `keepManifests` manifests. Callers run it AFTER a
-    * commit (the kernels here vacuum inline, so steady-state directory
-    * listings match the manifest); a deployment with long-running
-    * concurrent readers would defer it by a retention window instead —
-    * the standard log-structured-table contract.
+    * orphans, a crashed retry's debris), drop partition directories that
+    * emptied, and trim all but the last `keepManifests` manifests.
+    * Returns the deleted data files (root-relative, sorted) so a caller
+    * can audit the reclaim; a second vacuum returns none. Hidden names
+    * (a manifest's dot-temp, a crashed stage) are never its business.
+    * Callers run it AFTER a commit (the kernels here vacuum inline, so
+    * steady-state directory listings match the manifest); a deployment
+    * with long-running concurrent readers would defer it by a retention
+    * window instead — the standard log-structured-table contract.
     *
     * Retention contract: only the LATEST version's data files survive a
     * vacuum. The `keepManifests` retained older manifests are commit
@@ -535,18 +568,16 @@ object TxTable {
     * file-not-found. Time travel across versions therefore requires
     * deferring vacuum (e22's flow: commit, commit, read both, THEN
     * vacuum). */
-  def vacuum(s: SparkSession, root: String, keepManifests: Int = 10): Unit = {
+  def vacuum(s: SparkSession, root: String, keepManifests: Int = 10): Seq[String] = {
     val (fs, rootPath) = fsOf(s, root)
     val live = liveFiles(s, root).toSet
-    listDataFiles(s, root).filterNot(live.contains).foreach { rel =>
-      fs.delete(new Path(rootPath, rel), false)
-    }
+    val orphans = listDataFiles(s, root).filterNot(live.contains).sorted
+    orphans.foreach(rel => fs.delete(new Path(rootPath, rel), false))
     // drop partition dirs that now hold nothing visible
     def sweep(p: Path): Boolean = { // returns "directory is empty now"
       var remaining = 0
       fs.listStatus(p).foreach { st =>
-        val name = st.getPath.getName
-        if (name.startsWith("_") || name.startsWith(".")) remaining += 1
+        if (hidden(st.getPath.getName)) remaining += 1
         else if (st.isDirectory) {
           if (sweep(st.getPath)) fs.delete(st.getPath, true)
           else remaining += 1
@@ -555,8 +586,7 @@ object TxTable {
       remaining == 0
     }
     fs.listStatus(rootPath)
-      .filter(st => st.isDirectory && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
+      .filter(st => st.isDirectory && !hidden(st.getPath.getName))
       .foreach { st => if (sweep(st.getPath)) fs.delete(st.getPath, true) }
     val v = currentVersion(s, root)
     val tx = new Path(rootPath, TxDirName)
@@ -567,5 +597,6 @@ object TxTable {
         case _ => ()
       }
     }
+    orphans
   }
 }

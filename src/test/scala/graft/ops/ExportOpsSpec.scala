@@ -290,20 +290,22 @@ class ExportOpsSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   test("e12: readers never see a landed-but-unflipped version (crash window)") {
     import spark.implicits._
-    val root = tmp("graft_publish_spec")
-    ExportOps.publishVersion(Seq((1L, "a")).toDF("k", "v"), root, 1L)
-    // crash simulation: v2's data lands, the pointer flip never happens
-    ExportOps.writeVersion(Seq((2L, "b")).toDF("k", "v"), root, 2L)
-    val served = ExportOps.readPublished(spark, root)
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    assert(served.toSeq === Seq((1L, "a")),
-      "pointer must still serve v1 after an unflipped v2 landing")
-    // completing the publish makes v2 visible; v1 stays on disk (rollback)
-    ExportOps.flipLatest(spark, root, 2L)
-    val after = ExportOps.readPublished(spark, root)
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    assert(after.toSeq === Seq((2L, "b")))
-    assert(new java.io.File(root, "v=1").exists(), "old versions stay for rollback")
+    ExportOps.withScratch("graft_publish_spec", "spec") { out =>
+      val root = s"$out/table"
+      val v1 = TxTable.stageAndCommit(Seq((1L, "a")).toDF("k", "v"), root,
+        append = false, vacuumNow = false)
+      // crash simulation: v2's data lands, the manifest commit never happens
+      val staged = TxTable.stage(Seq((2L, "b")).toDF("k", "v"), root)
+      def served(df: org.apache.spark.sql.DataFrame) =
+        df.as[(Long, String)].collect().toSeq
+      assert(served(TxTable.read(spark, root)) === Seq((1L, "a")),
+        "the manifest must still serve v1 after an uncommitted v2 landing")
+      // completing the publish makes v2 visible; v1 stays readable (rollback)
+      TxTable.commit(spark, root, staged)
+      assert(served(TxTable.read(spark, root)) === Seq((2L, "b")))
+      assert(served(TxTable.readVersion(spark, root, v1)) === Seq((1L, "a")),
+        "old versions stay for rollback")
+    }
   }
 
 

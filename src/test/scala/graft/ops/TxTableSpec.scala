@@ -254,4 +254,44 @@ class TxTableSpec extends SparkSpec {
         s"got: ${ex.getMessage}")
     }
   }
+
+  test("stage lands files at their partition paths, invisible until commit") {
+    import spark.implicits._
+    ExportOps.withScratch("graft_txunit7", "spec") { out =>
+      val root = s"$out/t"
+      Seq((1L, 0), (2L, 1)).toDF("k", "p").write.partitionBy("p").parquet(root)
+      TxTable.bootstrapIfNeeded(spark, root)
+      // a crashed earlier attempt's stage: overwritten, never promoted
+      val crashed = new java.io.File(s"$root.stage/p=9")
+      crashed.mkdirs()
+      java.nio.file.Files.write(
+        new java.io.File(crashed, "part-crashed.parquet").toPath, Array[Byte](1))
+      val staged = TxTable.stage(Seq((3L, 1), (4L, 2)).toDF("k", "p"), root, "p")
+      assert(staged.map(_.takeWhile(_ != '/')).toSet === Set("p=1", "p=2"))
+      assert(staged.forall(f => new java.io.File(root, f).isFile), staged)
+      assert(!new java.io.File(s"$root.stage").exists(), "the stage must be deleted")
+      assert(!new java.io.File(root, "p=9").exists(), "crashed leftovers must not be promoted")
+      // staged-but-uncommitted files are on disk, never served
+      def keys() = TxTable.read(spark, root).select($"k").as[Long].collect().sorted.toSeq
+      assert(keys() === Seq(1L, 2L))
+      TxTable.commit(spark, root, TxTable.liveFiles(spark, root) ++ staged)
+      assert(keys() === Seq(1L, 2L, 3L, 4L))
+    }
+  }
+
+  test("a leftover manifest dot-temp breaks neither vacuum nor currentVersion and is kept") {
+    import spark.implicits._
+    ExportOps.withScratch("graft_txunit8", "spec") { out =>
+      val root = s"$out/t"
+      TxTable.stageAndCommit(Seq((1L, "a")).toDF("k", "v"), root, append = true)
+      val v = TxTable.currentVersion(spark, root)
+      // a writer that died between writing its manifest temp and the rename
+      val tmp = new java.io.File(root, s"_tx/.manifest-v${v + 1}.deadbeef.tmp")
+      java.nio.file.Files.writeString(tmp.toPath, "part-in-flight.parquet")
+      assert(TxTable.currentVersion(spark, root) === v)
+      assert(TxTable.vacuum(spark, root).isEmpty)
+      assert(tmp.exists(), "vacuum must not delete a manifest temp")
+      assert(TxTable.read(spark, root).as[(Long, String)].collect().toSeq === Seq((1L, "a")))
+    }
+  }
 }

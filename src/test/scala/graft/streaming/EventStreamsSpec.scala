@@ -3,6 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import graft.SparkSpec
+import graft.ops.ExportOps
 import graft.geotab.GeotabPipeline
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -133,32 +134,35 @@ class EventStreamsSpec extends SparkSpec {
     val d = "/root/testdata/sf0.001"
     val batchDf = graft.Tables(spark, d, "events")
     // file-stream source wants a directory; stage as one parquet file
-    val dir = java.nio.file.Files.createTempDirectory("graft-events-stream")
-    val stage = java.nio.file.Files.createTempDirectory("graft-events-stage")
-    batchDf.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-    val part = new java.io.File(stage.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    java.nio.file.Files.copy(part.toPath, dir.resolve("events.parquet"))
-    val streamDf = spark.readStream
-      .schema(batchDf.schema)
-      .parquet(dir.toString)
-    val q = EventStreams.tumblingCounts(streamDf, "1 hour", "0 seconds")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("file_stream_out").start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("file_stream_out")
-        .agg(sum($"n")).head().getLong(0)
-      // append mode emits only watermark-closed windows; the final
-      // (unclosed) hour stays in state — compare against batch minus it
-      val batchByHour = batchDf
-        .groupBy(date_trunc("hour", $"ts").as("h")).count()
-      val lastHour = batchByHour.agg(max($"h")).head().getTimestamp(0)
-      val expected = batchByHour.filter($"h" < lastHour)
-        .agg(sum($"count")).head().getLong(0)
-      assert(streamed === expected,
-        s"file-streamed total $streamed != batch total $expected")
-    } finally q.stop()
+    ExportOps.withScratch("graft_events_stream", "spec") { scratch =>
+      val dir = new java.io.File(scratch, "stream").toPath
+      val stage = new java.io.File(scratch, "stage").toString
+      batchDf.coalesce(1).write.mode("overwrite").parquet(stage)
+      val part = new java.io.File(stage).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.createDirectories(dir)
+      java.nio.file.Files.copy(part.toPath, dir.resolve("events.parquet"))
+      val streamDf = spark.readStream
+        .schema(batchDf.schema)
+        .parquet(dir.toString)
+      val q = EventStreams.tumblingCounts(streamDf, "1 hour", "0 seconds")
+        .writeStream.outputMode("append").format("memory")
+        .queryName("file_stream_out").start()
+      try {
+        q.processAllAvailable()
+        val streamed = spark.table("file_stream_out")
+          .agg(sum($"n")).head().getLong(0)
+        // append mode emits only watermark-closed windows; the final
+        // (unclosed) hour stays in state — compare against batch minus it
+        val batchByHour = batchDf
+          .groupBy(date_trunc("hour", $"ts").as("h")).count()
+        val lastHour = batchByHour.agg(max($"h")).head().getTimestamp(0)
+        val expected = batchByHour.filter($"h" < lastHour)
+          .agg(sum($"count")).head().getLong(0)
+        assert(streamed === expected,
+          s"file-streamed total $streamed != batch total $expected")
+      } finally q.stop()
+    }
   }
 
   test("geotab pipeline runs unchanged on a stream with stream-static joins") {
@@ -172,21 +176,23 @@ class EventStreamsSpec extends SparkSpec {
       prefix = "", now = lit(ts("2026-01-01 12:00:00")))
     val features = GeotabPipeline.featuresFlat(devices, in.toDF(), drivers, cfg)
     val sink = new EventStreams.MemorySink
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val q = EventStreams.start(EventStreams.featureWriter(features, sink), dir)
-    try {
-      in.addData(
-        Info("d1", ts("2026-01-01 11:30:00"), 39.7, -104.9, 100.0, 90.0, "drv1", true, "g1"),
-        Info("dX", ts("2026-01-01 11:30:00"), 0, 0, 0, 0, "drv1", true, "g1"), // no device
-        Info("d1", ts("2026-01-01 09:00:00"), 1, 1, 1, 1, "drv1", true, "g1")) // stale
-      q.processAllAvailable()
-      val rows = sink.batches.flatten
-      assert(rows.length === 1, s"expected exactly the fresh d1 feature, got ${rows.length}")
-      val r = rows.head
-      assert(r.getAs[String]("id") === "geotab-d1")
-      assert(r.getAs[String]("driver_username") === "jdoe")
-      assert(math.abs(r.getAs[Double]("speed_ms") - 27.7778) < 1e-9)
-    } finally q.stop()
+    ExportOps.withScratch("graft_ckpt", "spec") { ckpt =>
+      val dir = ckpt.toString
+      val q = EventStreams.start(EventStreams.featureWriter(features, sink), dir)
+      try {
+        in.addData(
+          Info("d1", ts("2026-01-01 11:30:00"), 39.7, -104.9, 100.0, 90.0, "drv1", true, "g1"),
+          Info("dX", ts("2026-01-01 11:30:00"), 0, 0, 0, 0, "drv1", true, "g1"), // no device
+          Info("d1", ts("2026-01-01 09:00:00"), 1, 1, 1, 1, "drv1", true, "g1")) // stale
+        q.processAllAvailable()
+        val rows = sink.batches.flatten
+        assert(rows.length === 1, s"expected exactly the fresh d1 feature, got ${rows.length}")
+        val r = rows.head
+        assert(r.getAs[String]("id") === "geotab-d1")
+        assert(r.getAs[String]("driver_username") === "jdoe")
+        assert(math.abs(r.getAs[Double]("speed_ms") - 27.7778) < 1e-9)
+      } finally q.stop()
+    }
   }
 
   test("streaming CoT XML sink emits byte-identical events to the batch conversion") {
@@ -199,22 +205,24 @@ class EventStreamsSpec extends SparkSpec {
       "speed_ms", "course", "vin")
     val flatStream = in.toDS().toDF(cols: _*)
     val sink = new EventStreams.MemorySink
-    val dir = java.nio.file.Files.createTempDirectory("graft-cot-ckpt").toString
-    val q = EventStreams.start(
-      EventStreams.featureWriter(GeotabPipeline.cotXml(flatStream), sink), dir)
-    val data = Seq(
-      ("geotab-d1", ts("2026-01-01 11:30:00"), 39.7, -104.9, "Truck <One> & \"Co\"", 27.7778, 90.0, "V1"),
-      ("geotab-d2", ts("2026-01-01 11:45:00"), 40.0, -105.3, "Plain", 0.0, 359.9, "V2"))
-    try {
-      in.addData(data: _*)
-      q.processAllAvailable()
-      val streamed = sink.batches.flatten
-        .map(r => r.getAs[String]("id") -> r.getAs[String]("cot_xml")).toMap
-      val batch = GeotabPipeline.cotXml(data.toDF(cols: _*))
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      assert(streamed === batch, "stream and batch CoT XML must be byte-identical")
-      assert(streamed("geotab-d1").contains("callsign=\"Truck &lt;One&gt; &amp; &quot;Co&quot;\""))
-      assert(streamed("geotab-d1").contains("stale=\"2026-01-01T12:30:00Z\""))
-    } finally q.stop()
+    ExportOps.withScratch("graft_cot_ckpt", "spec") { ckpt =>
+      val dir = ckpt.toString
+      val q = EventStreams.start(
+        EventStreams.featureWriter(GeotabPipeline.cotXml(flatStream), sink), dir)
+      val data = Seq(
+        ("geotab-d1", ts("2026-01-01 11:30:00"), 39.7, -104.9, "Truck <One> & \"Co\"", 27.7778, 90.0, "V1"),
+        ("geotab-d2", ts("2026-01-01 11:45:00"), 40.0, -105.3, "Plain", 0.0, 359.9, "V2"))
+      try {
+        in.addData(data: _*)
+        q.processAllAvailable()
+        val streamed = sink.batches.flatten
+          .map(r => r.getAs[String]("id") -> r.getAs[String]("cot_xml")).toMap
+        val batch = GeotabPipeline.cotXml(data.toDF(cols: _*))
+          .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+        assert(streamed === batch, "stream and batch CoT XML must be byte-identical")
+        assert(streamed("geotab-d1").contains("callsign=\"Truck &lt;One&gt; &amp; &quot;Co&quot;\""))
+        assert(streamed("geotab-d1").contains("stale=\"2026-01-01T12:30:00Z\""))
+      } finally q.stop()
+    }
   }
 }

@@ -7,6 +7,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.SparkSpec
+import graft.ops.ExportOps
 import graft.geotab.GeotabPipeline
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -123,19 +124,21 @@ class HttpFeatureSinkSpec extends SparkSpec {
         prefix = "", now = lit(java.sql.Timestamp.valueOf("2026-01-01 12:00:00")))
       val features = GeotabPipeline.featuresFlat(devices, in.toDF(), drivers, cfg)
       val sink = new FeatureCollectionHttpSink(stub.url, nBuckets = 1)
-      val dir = java.nio.file.Files.createTempDirectory("graft-http-ckpt").toString
-      val q = EventStreams.start(EventStreams.featureWriter(features, sink), dir)
-      try {
-        in.addData(Info("d1", java.sql.Timestamp.valueOf("2026-01-01 11:30:00"),
-          39.7, -104.9, 100.0, 90.0, "drv1", true, "g1"))
-        q.processAllAvailable()
-        in.addData(Info("d1", java.sql.Timestamp.valueOf("2026-01-01 11:45:00"),
-          39.8, -104.8, 50.0, 91.0, "drv1", true, "g1"))
-        q.processAllAvailable()
-        assert(stub.bodies.size === 2, s"one POST per micro-batch: ${stub.bodies.size}")
-        assert(stub.bodies.asScala.forall(_.contains("\"type\":\"FeatureCollection\"")))
-        assert(stub.headers.asScala.toSet.size === 2, "distinct batch ids in headers")
-      } finally q.stop()
+      ExportOps.withScratch("graft_http_ckpt", "spec") { ckpt =>
+        val dir = ckpt.toString
+        val q = EventStreams.start(EventStreams.featureWriter(features, sink), dir)
+        try {
+          in.addData(Info("d1", java.sql.Timestamp.valueOf("2026-01-01 11:30:00"),
+            39.7, -104.9, 100.0, 90.0, "drv1", true, "g1"))
+          q.processAllAvailable()
+          in.addData(Info("d1", java.sql.Timestamp.valueOf("2026-01-01 11:45:00"),
+            39.8, -104.8, 50.0, 91.0, "drv1", true, "g1"))
+          q.processAllAvailable()
+          assert(stub.bodies.size === 2, s"one POST per micro-batch: ${stub.bodies.size}")
+          assert(stub.bodies.asScala.forall(_.contains("\"type\":\"FeatureCollection\"")))
+          assert(stub.headers.asScala.toSet.size === 2, "distinct batch ids in headers")
+        } finally q.stop()
+      }
     } finally stub.stop()
   }
 

@@ -142,10 +142,13 @@ def main(sf_dir, out_dir, only, json_out=None):
 
 # Gates whose fingerprints differ between two Bench runs of identical code
 # (ROADMAP Direction 4): at sf0.1 between bench_r20c and bench_r21_base, and
-# at sf0.01 between two REPS=1 runs of each of two commits. A fingerprint
-# diff on one of these is not evidence of a plan change.
-DRIFTING = {"c04", "d06", "d14", "d22", "d25", "d28", "e01", "e03", "e08",
-            "e13", "e14", "e21", "e24", "g18", "q73", "q98", "v09", "v11"}
+# at sf0.01 between two REPS=1 runs of each of two commits; d26's
+# shuffle_bytes at sf0.01 depend on the gates run before it in a pass
+# (64452 when run alone on either of two commits, 66197 in one Bench pass).
+# A fingerprint diff on one of these is not evidence of a plan change.
+DRIFTING = {"c04", "d06", "d14", "d22", "d25", "d26", "d28", "e01", "e03",
+            "e08", "e13", "e14", "e21", "e24", "g18", "q73", "q98", "v09",
+            "v11"}
 
 
 def fingerprint_diffs(old, new):
