@@ -99,4 +99,39 @@ class ExportOpsR10Spec extends SparkSpec {
         .collect().toSet === Set((1L, "a"), (2L, "b"), (3L, "c")))
     }
   }
+
+  test("e20: vacuum tolerates non-numeric v= manifest debris") {
+    import spark.implicits._
+    ExportOps.withScratch("graft_vac_tmp", "spec") { out =>
+      val root = s"$out/table"
+      TxTable.stageAndCommit(Seq((1L, "a")).toDF("k", "v"), root,
+        append = true, vacuumNow = false)
+      TxTable.stageAndCommit(Seq((2L, "b")).toDF("k", "v"), root,
+        append = true, vacuumNow = false)
+      // a writer's leftovers in the manifest log: names that start like a
+      // version but are not one. The parse must skip them — an abort here
+      // would strand maintenance half-applied (orphan deletes durable,
+      // manifest trimming not run)
+      val tmpDir = new java.io.File(root, "_tx/manifest-v1.tmp")
+      tmpDir.mkdirs()
+      java.nio.file.Files.writeString(
+        new java.io.File(tmpDir, "marker").toPath, "in-flight")
+      val junk = new java.io.File(root, "_tx/manifest-vjunk.txt")
+      java.nio.file.Files.writeString(junk.toPath, "part-in-flight.parquet")
+      val v = TxTable.currentVersion(spark, root)
+      assert(v >= 2L)
+      val removed = TxTable.vacuum(spark, root, keepManifests = 1)
+      assert(removed.isEmpty)
+      // the unparseable entries are neither fatal nor deleted; the trim
+      // pass still ran past them
+      assert(new java.io.File(tmpDir, "marker").exists())
+      assert(junk.exists())
+      assert(new java.io.File(root, s"_tx/manifest-v$v.txt").exists())
+      assert(!new java.io.File(root, s"_tx/manifest-v${v - 1}.txt").exists(),
+        "manifest trimming must still run past the debris")
+      assert(TxTable.currentVersion(spark, root) === v)
+      assert(TxTable.read(spark, root).as[(Long, String)]
+        .collect().toSet === Set((1L, "a"), (2L, "b")))
+    }
+  }
 }
